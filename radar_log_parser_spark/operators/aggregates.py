@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from radar_log_parser_spark.config import ConfigSpec, summary_pairs
+from radar_log_parser_spark.session import local_frame
 
 def _ord():
     """Scan-order key: reproduces the reference's issueContent string order
@@ -366,9 +367,7 @@ def summary_frame(
         (iname, cfg.issues[iname].grouped, int(cfg.priority.get(iname, 0)))
         for iname in sorted(cfg.issues)
     ]
-    issues_dim = spark.createDataFrame(
-        issues_rows, "issue string, grouped boolean, priority int"
-    )
+    issues_dim = local_frame(spark, issues_rows, "issue string, grouped boolean, priority int")
     base = sources_df.select("source").crossJoin(F.broadcast(issues_dim))
 
     ts = cfg.general.timestamp

@@ -646,6 +646,11 @@ WHERE round(list_sum(list_transform(list_zip(a.embedding, b.embedding),
 EMB_LSH_BANDS = 8
 EMB_LSH_BITS = 4  # per band → 32 hyperplanes total
 
+
+class MissingEmbeddingError(LookupError):
+    """A band entry's vec_id has no row in the broadcast embedding matrix."""
+
+
 # Deterministic GAUSSIAN hyperplanes from a fixed-seed PRNG: both engines
 # embed the SAME literal arrays (repr(float) round-trips the exact double in
 # Python, Spark and DuckDB), so the signature (and therefore the output) is
@@ -769,7 +774,15 @@ def _emb_bucket_verify_factory(emb_bc, thr: float):
         band = tbl.column("band")[0].as_py()
         o = np.argsort(vid)  # ascending → upper triangle ⟺ a_id < b_id
         vid, sig = vid[o], sig[o]
-        Eb = E[np.searchsorted(ids_s, vid)]  # (k, d) gather
+        pos = np.minimum(np.searchsorted(ids_s, vid), len(ids_s) - 1)
+        # searchsorted lands an absent id on its neighbour's row: check the
+        # gather, or that id would verify against the wrong vector
+        if not np.array_equal(ids_s[pos], vid):
+            missing = vid[ids_s[pos] != vid]
+            raise MissingEmbeddingError(
+                f"vec_id(s) not in the embedding matrix: {missing[:10].tolist()}"
+            )
+        Eb = E[pos]  # (k, d) gather
         nrm2 = np.zeros(k, dtype=np.float64)
         for i in range(Eb.shape[1]):
             nrm2 = nrm2 + Eb[:, i] * Eb[:, i]

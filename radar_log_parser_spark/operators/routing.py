@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from radar_log_parser_spark.config import ConfigSpec
+from radar_log_parser_spark.session import local_frame
 
 ORD_COLS = ("proc_rank", "line_no", "match_pos")
 
@@ -63,7 +64,7 @@ def issue_process_map(spark: SparkSession, cfg: ConfigSpec) -> DataFrame:
         spec = cfg.issues[iname]
         for rank, proc in enumerate(sorted(spec.specific_process)):
             rows.append((iname, proc, rank, spec.grouped))
-    return spark.createDataFrame(rows, "issue string, process string, proc_rank int, grouped boolean")
+    return local_frame(spark, rows, "issue string, process string, proc_rank int, grouped boolean")
 
 
 def scoped_direct(

@@ -15,12 +15,19 @@ Iceberg (same layout via a catalog table; requires the iceberg-spark
 runtime jar — absent in this sandbox, so it is feature-gated, not assumed).
 
 Partitioning at scale:
-  - `parsed` and routed row-level checkpoints are repartitioned by
-    hash(doc_id) (the Iceberg `bucket(N, doc_id)` equivalent) — uniform
-    regardless of source skew, and co-locates every per-doc operation.
-  - sinks partitioned by low-cardinality keys (source/process) get a salt
-    column derived from doc_id so one hot source cannot serialize the write
+  - `parsed` and routed row-level checkpoints are hash-partitioned on
+    doc_id, so every row of one doc_id lands in one file and every per-doc
+    operation is co-located, uniform regardless of source skew.
+  - sinks clustered by a low-cardinality key (source) hash on
+    (source, pmod(xxhash64(doc_id), SALT_MOD)): the salt spreads one hot
+    source over up to SALT_MOD partitions, so it cannot serialize the write
     (salted repartition; AQE skew handling covers the joins).
+  - Neither shuffle fixes a partition count. AQE sizes each one from the
+    stage's bytes (spark.sql.shuffle.partitions is the upper bound and
+    advisoryPartitionSizeInBytes the target), so a small stage writes a few
+    files instead of one near-empty file per bucket, and a large one still
+    fans out. The hash keys alone carry the co-location guarantees.
+    Iceberg mode keeps the explicit `bucket(N, doc_id)` partition spec.
 """
 
 from __future__ import annotations
@@ -39,23 +46,26 @@ from radar_log_parser_spark.config import ConfigSpec
 from radar_log_parser_spark.functions.parse import parse_stage
 from radar_log_parser_spark.operators import aggregates as agg
 from radar_log_parser_spark.operators import routing
+from radar_log_parser_spark.session import local_frame
 
 ENGINE_VERSION = "0.1.0"
 
 SALT_MOD = 16
 
 
-def salted_repartition(df: DataFrame, key: str, buckets: int, salt_mod: int = SALT_MOD) -> DataFrame:
+def salted_repartition(
+    df: DataFrame, key: str, buckets: int | None = None, salt_mod: int = SALT_MOD
+) -> DataFrame:
     """Repartition by (key, salt) for LOW-CARDINALITY keys (source/process):
     plain repartition(key) sends a hot source's entire shard to ONE task —
     at 10^12 rows a 90%-hot source serializes the write. The salt (a stable
     hash of doc_id mod salt_mod) fans each key over up to salt_mod tasks
     while keeping rows of one (key, salt) cell co-located, so per-source
     consumers still prune. (North rule: 'salted repartition for
-    source-skewed shards'.)"""
-    return df.repartition(
-        buckets, F.col(key), F.pmod(F.xxhash64("doc_id"), F.lit(salt_mod))
-    )
+    source-skewed shards'.) buckets=None leaves the partition count to AQE,
+    which coalesces it to the data size; an explicit count is kept as is."""
+    cols = (F.col(key), F.pmod(F.xxhash64("doc_id"), F.lit(salt_mod)))
+    return df.repartition(*cols) if buckets is None else df.repartition(buckets, *cols)
 
 
 def _fingerprint(*parts: str) -> str:
@@ -240,6 +250,10 @@ class Pipeline:
     checkpoint=False runs the whole plan lazily in one Spark job chain
     (bench mode); checkpoint=True materializes each stage with lineage for
     resumability (production mode, north rule).
+
+    buckets sets only N of the Iceberg `bucket(N, doc_id)` partition spec
+    (default: spark.sql.shuffle.partitions). Parquet stage writes take
+    their partition count from AQE (see the module docstring).
     """
 
     ROW_SINKS = ("specific_issues", "other_routed", "grouped_routed", "events", "severity")
@@ -285,11 +299,14 @@ class Pipeline:
         bucket_by: str | None = None,
         salted_by: str | None = None,
     ) -> DataFrame:
-        """bucket_by: high-cardinality cluster key (hash buckets — the
-        parquet equivalent of Iceberg's bucket(N, doc_id); Iceberg mode
-        declares the real thing in the table spec instead).
+        """bucket_by: high-cardinality cluster key (doc_id), hash-partitioned
+        so that each key's rows share one file — the parquet counterpart of
+        Iceberg's bucket(N, doc_id), which Iceberg mode declares in the
+        table spec instead.
         salted_by: LOW-cardinality cluster key (source) — salted so a hot
-        source cannot serialize the stage write (see salted_repartition)."""
+        source cannot serialize the stage write (see salted_repartition).
+        Neither fixes a partition count: AQE coalesces the shuffle to the
+        stage's size, so a small stage writes a few files, not N."""
         fp = _fingerprint(self._root_fp, name, *parents)
         if self.ckpt is None:
             return build()
@@ -299,9 +316,9 @@ class Pipeline:
             return self.ckpt.read(name)
         df = build()
         if salted_by is not None:
-            df = salted_repartition(df, salted_by, self.buckets)
+            df = salted_repartition(df, salted_by)
         elif bucket_by is not None and self.ckpt.fmt != "iceberg":
-            df = df.repartition(self.buckets, F.col(bucket_by))
+            df = df.repartition(F.col(bucket_by))
         m = self.ckpt.write(name, df, fp, parents, buckets=self.buckets)
         self.metrics.append(m)
         return self.ckpt.read(name)
@@ -409,7 +426,9 @@ class Pipeline:
 
         # the Q1 keep-set is config-sized: collect it ONCE and re-plan it as
         # a literal frame, so the N broadcast-join consumers below don't each
-        # schedule their own keep-set job over the parsed frame. LAZY +
+        # schedule their own keep-set job over the parsed frame. A local
+        # frame, not createDataFrame: its broadcast is built on the driver,
+        # with no job and no Python worker round trip per consumer. LAZY +
         # memoized: on a fully-checkpointed resume no stage build runs, so
         # the keep-set scan must not be scheduled at all (ADVICE r2).
         _kept_memo: list = []
@@ -419,7 +438,7 @@ class Pipeline:
                 s = time.monotonic()
                 kept_src = routing.kept_processes(parsed)
                 _kept_memo.append(
-                    spark.createDataFrame(kept_src.collect(), kept_src.schema)
+                    local_frame(spark, kept_src.collect(), kept_src.schema)
                 )
                 self.timings["kept"] = round(time.monotonic() - s, 2)
             return _kept_memo[0]

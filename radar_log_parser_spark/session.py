@@ -9,7 +9,38 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# share of the host's (or the container's) memory the driver heap takes
+# when SPARK_DRIVER_MEM is unset; the rest is left to Python workers, the
+# page cache and the JVM's off-heap arenas
+HEAP_FRACTION = 0.4
+MAX_HEAP_GIB = 48
+
+
+def _host_mem_bytes() -> int:
+    """The smaller of physical memory and the cgroup memory limit."""
+    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in ("/sys/fs/cgroup/memory.max", "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                v = f.read().strip()
+        except OSError:
+            continue
+        if v.isdigit():  # cgroup v2 reads "max" when unlimited
+            mem = min(mem, int(v))
+    return mem
+
+
+def default_driver_mem() -> str:
+    """SPARK_DRIVER_MEM, else HEAP_FRACTION of the host's memory in whole
+    GiB (at least 1, at most MAX_HEAP_GIB)."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    gib = int(_host_mem_bytes() * HEAP_FRACTION) >> 30
+    return f"{min(max(gib, 1), MAX_HEAP_GIB)}g"
 
 
 def get_spark(
@@ -22,6 +53,7 @@ def get_spark(
     master = master or f"local[{cpus}]"
     n_threads = int(master[6:-1]) if master.startswith("local[") and master[6:-1].isdigit() else cpus
     shuffle_partitions = shuffle_partitions or max(2 * n_threads, 8)
+    heap = default_driver_mem()
     b = (
         SparkSession.builder.master(master)
         .appName(app)
@@ -32,15 +64,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", heap)
         # pre-size the heap: lazy growth under G1 causes multi-x run-to-run
         # variance on batch workloads (measured 17s..46s for one job)
         .config(
             "spark.driver.extraJavaOptions",
-            os.environ.get(
-                "SPARK_DRIVER_JAVA_OPTS",
-                f"-Xms{os.environ.get('SPARK_DRIVER_MEM', '48g')}",
-            ),
+            os.environ.get("SPARK_DRIVER_JAVA_OPTS", f"-Xms{heap}"),
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "64m")
@@ -61,3 +90,37 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
+    """A small driver-side table as a `LocalRelation` (plans show
+    `LocalTableScan`): broadcasting it needs no Spark job and no Python
+    worker, where `createDataFrame(list)` plans a Python RDD scan that
+    re-runs on Python workers every time a consuming plan runs.
+
+    Values travel as named parameter markers, so strings from YAML configs
+    or collected rows need no quoting. (Positional `?` markers bind out of
+    order in VALUES lists of three or more rows on Spark 4.1.)
+
+    `schema` is a DDL string or a StructType. Every column is cast to its
+    declared type and is nullable, as with `createDataFrame(rows, ddl)`:
+    one trailing all-NULL row, cut by the LIMIT, keeps the columns
+    nullable and gives an empty `rows` its types."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    names = [f"c{i}" for i in range(len(schema.fields))]
+    cols = ", ".join(
+        f"CAST({c} AS {f.dataType.simpleString()}) AS `{f.name.replace('`', '``')}`"
+        for c, f in zip(names, schema.fields)
+    )
+    args: dict = {}
+    values = []
+    for i, row in enumerate(rows):
+        keys = [f"p{i}_{j}" for j in range(len(names))]
+        args.update(zip(keys, row, strict=True))
+        values.append("(" + ", ".join(":" + k for k in keys) + ")")
+    values.append("(" + ", ".join(["NULL"] * len(names)) + ")")
+    return spark.sql(
+        f"SELECT {cols} FROM VALUES {', '.join(values)} AS t({', '.join(names)}) LIMIT {len(values) - 1}",
+        args=args,
+    )

@@ -18,8 +18,9 @@ real deployment the same call shapes run against any Hadoop-compatible FS
 (gs:// via the GCS connector); nothing here is data-plane, so it stays
 driver-side Python by design — no Spark job is ever scheduled for catalog
 traffic. `catalog_df` exposes the map as a (bucket, config) DataFrame for
-joins/audits; it is createDataFrame over a config-sized list, the same
-small-dimension pattern the pipeline uses for keep-sets.
+joins/audits; it is a driver-local frame over a config-sized list
+(`session.local_frame`), the same small-dimension pattern the pipeline
+uses for keep-sets.
 
 Documented deviations from the reference (fail-fast over fail-silent,
 consistent with the repo-wide Q11 inversion):
@@ -43,6 +44,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import ConfigError, ConfigSpec, load_config
+from ..session import local_frame
 
 # the reference hides its own app-infrastructure buckets from the catalog
 # (main.go:38, app_specific_buckets); callers pass their deployment's set.
@@ -104,7 +106,7 @@ class ConfigCatalog:
         rows = [
             (b, c) for b, cfgs in self.fill_config_map().items() for c in cfgs
         ]
-        return spark.createDataFrame(rows, "bucket string, config string")
+        return local_frame(spark, rows, "bucket string, config string")
 
     # -- S7: CRUD ------------------------------------------------------------
     def upload(

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from radar_log_parser_spark.codec import Vocab
+from radar_log_parser_spark.session import local_frame
 
 _ALLOWED_EXT = (".txt", ".gz")
 
@@ -132,7 +133,7 @@ def ingest_text_logs(
     for sid, cnt in counts:
         offsets.append((sid, acc))
         acc += cnt
-    off_df = spark.createDataFrame(offsets or [(0, 0)], "split_id int, off long")
+    off_df = local_frame(spark, offsets or [(0, 0)], "split_id int, off long")
     from pyspark.sql import Window as W
 
     w = W.partitionBy("split_id").orderBy("mid")

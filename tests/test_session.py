@@ -1,0 +1,97 @@
+"""session.py: the driver heap default, and driver-local dimension tables
+(`local_frame`) — schema and value round trips, the plans that use them,
+and a source guard that keeps Python-RDD scans of driver lists out of the
+package."""
+
+from __future__ import annotations
+
+import ast
+import os
+import re
+
+from pyspark.sql.types import LongType, StructType
+
+from radar_log_parser_spark import session
+from radar_log_parser_spark.session import local_frame
+
+PKG_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "radar_log_parser_spark"
+)
+
+
+def test_default_driver_mem_fits_the_host(monkeypatch):
+    monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+    gib = int(session.default_driver_mem().removesuffix("g"))
+    assert 1 <= gib <= max(1, session._host_mem_bytes() >> 30)
+    monkeypatch.setenv("SPARK_DRIVER_MEM", "5g")
+    assert session.default_driver_mem() == "5g"
+
+
+def test_local_frame_empty_keeps_schema(spark):
+    ddl = "issue string, n bigint, grouped boolean"
+    df = local_frame(spark, [], ddl)
+    assert df.collect() == []
+    assert df.schema == StructType.fromDDL(ddl)
+
+
+def test_local_frame_bigint_stays_bigint(spark):
+    df = local_frame(spark, [(1,), (2,), (2**40,)], "n bigint")
+    assert df.schema["n"].dataType == LongType()
+    assert [r["n"] for r in df.collect()] == [1, 2, 2**40]
+
+
+def test_local_frame_names_round_trip(spark):
+    names = ["it's", "`tick`", "a:b", ":p0_0", "?", "back\\slash", "", None]
+    df = local_frame(spark, [(n, i) for i, n in enumerate(names)], "name string, i int")
+    assert [(r["name"], r["i"]) for r in df.collect()] == [(n, i) for i, n in enumerate(names)]
+    assert df.schema == StructType.fromDDL("name string, i int")
+
+
+def _scan_leaves(df) -> list[str]:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return re.findall(r"(LocalTableScan|Scan ExistingRDD)\s*\[([^\]]*)\]", plan)
+
+
+def _cols(attrs: str) -> tuple[str, ...]:
+    return tuple(re.sub(r"#\d+L?$", "", a.strip()) for a in attrs.split(","))
+
+
+def test_bench_plans_use_local_tables(pipeline_result):
+    """The keep-set, the issue→process map and the issues dimension are
+    LocalTableScans; the only RDD scans left are the pipeline's own
+    localCheckpoint blocks (parsed and the slim scope)."""
+    materialized = {
+        tuple(pipeline_result.sinks[n].columns) for n in ("parsed", "scoped_slim")
+    }
+    for name in ("specific_issues", "scoped", "summary"):
+        leaves = _scan_leaves(pipeline_result.sinks[name])
+        assert any(kind == "LocalTableScan" for kind, _ in leaves), name
+        rdd_scans = [_cols(a) for kind, a in leaves if kind == "Scan ExistingRDD"]
+        assert all(c in materialized for c in rdd_scans), (name, rdd_scans)
+
+
+_COLUMNAR = re.compile(r"^(pd|pandas|pa|pyarrow)\.|\.(to_pandas|toPandas|to_arrow|toArrow)\(\)$")
+
+
+def test_no_create_dataframe_over_python_lists():
+    """`createDataFrame(list)` plans a Python RDD scan that re-runs on
+    Python workers every time a consuming plan runs; small driver tables
+    go through `local_frame`. Only pandas or Arrow tables may be passed."""
+    bad = []
+    for root, _dirs, names in os.walk(PKG_DIR):
+        for name in names:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "createDataFrame"
+                ):
+                    arg = ast.unparse(node.args[0]) if node.args else ""
+                    if not _COLUMNAR.search(arg):
+                        bad.append(f"{os.path.relpath(path, PKG_DIR)}:{node.lineno} {arg}")
+    assert not bad, bad
