@@ -58,6 +58,7 @@ def main(argv: list[str] | None = None) -> int:
             res.sinks[name].write.mode("overwrite").parquet(f"{args.sinks_dir}/{name}")
     report = {
         "wall_s": round(time.monotonic() - t0, 2),
+        "codegen_compiles": pipe.codegen_compiles,
         "stages": [
             {"stage": m.stage, "rows": m.rows, "files": m.files,
              "resumed": m.resumed, "wall_s": round(m.wall_s, 2)}

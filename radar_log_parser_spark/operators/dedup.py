@@ -861,7 +861,12 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     test corpora (n ≤ 2000), where deeper buckets would leave qualifying
     pairs unmeasurable. pytest measures recall against the exact baseline
     at sf0.001 AND sf0.01; the DuckDB oracle runs the SAME deterministic
-    planes, so the driver check is a full value match."""
+    planes, so the driver check is a full value match.
+
+    Eager driver collect: building the DataFrame, not collecting it, runs
+    a Spark job that pulls the whole embedding table to the driver
+    (`toArrow()`) and broadcasts it, so the driver holds an n×d float64
+    matrix (n vectors of EMB_DIM) before any action is called."""
     # r6 restructure (guide §2.3/§2.4, worked example §8): the r5 plan
     # carried BOTH 64-float embeddings + norms through every band-colliding
     # row into a dropDuplicates shuffle — measured 105M pre-dedup rows ×

@@ -199,7 +199,12 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors to cells, probe the IVF_PROBES nearest cells per query, rank
     within probed candidates. Full DuckDB oracle (the md5 seed family and
     left-fold dot products are bit-identical cross-engine); pytest
-    additionally measures recall vs the exact top-k."""
+    additionally measures recall vs the exact top-k.
+
+    Eager driver collect: building the DataFrame, not collecting it, runs
+    Spark jobs that compute the centroids and pull them to the driver
+    (`toArrow()`) for a broadcast, so the driver holds a K×d float64
+    matrix (K = IVF_K cells) before any action is called."""
     emb = _emb(spark, sf_dir)
     centroids = ivf_centroids(emb)
     # assignment via the vectorized kernel (see _ivf_assign_factory): the

@@ -46,7 +46,7 @@ from radar_log_parser_spark.config import ConfigSpec
 from radar_log_parser_spark.functions.parse import parse_stage
 from radar_log_parser_spark.operators import aggregates as agg
 from radar_log_parser_spark.operators import routing
-from radar_log_parser_spark.session import local_frame
+from radar_log_parser_spark.session import codegen_compiles, local_frame
 
 ENGINE_VERSION = "0.1.0"
 
@@ -344,6 +344,7 @@ class Pipeline:
         spark = self.spark
         cfg = self.cfg
         self.timings: dict[str, float] = {}
+        compiles0 = codegen_compiles(spark)
         t0 = time.monotonic()
 
         raw = spark.read.parquet(self.input_path)
@@ -581,5 +582,8 @@ class Pipeline:
             finally:
                 pool.shutdown(wait=False)
         self.timings["fanout_jobs"] = round(time.monotonic() - t_fan, 2)
+        # classes compiled while the run's jobs ran: 0 when the driver has
+        # already run the same plans (see session.get_spark's codegen cache)
+        self.codegen_compiles = codegen_compiles(spark) - compiles0
 
         return PipelineResult(sinks=dict(row_sinks), metrics=self.metrics)

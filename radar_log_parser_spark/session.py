@@ -84,12 +84,34 @@ def get_spark(
         # keeps the agg hash-based at any corpus size (keys/task stays
         # O(issues × buckets/task), independent of total rows).
         .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
+        # generated classes are cached in the driver JVM, least recently
+        # used out first, in this many entries (default 100, which Guava
+        # splits into 4 segments that evict on their own). One pass of the
+        # 30 bench queries uses about 350 classes and one checkpointed
+        # pipeline run about 107, so at 100 every warm run evicted classes
+        # before their next use and paid codegen, janino compile and JIT
+        # warm-up again: 353 compiles per warm query pass and 84 per warm
+        # pipeline run with its sink writes (perfbench, local[2]), against
+        # 0-4 and 0 at 1024. The headroom covers a driver that runs both
+        # workloads' plans and more, as the test suite does. The cache
+        # grows with the number of distinct plan shapes, not with repeat
+        # runs. Static: read once, when the JVM compiles its first plan.
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes the driver JVM has compiled so far (Spark's
+    CodegenMetrics compile-time histogram count). JVM-wide, so a delta
+    also counts plans other threads compiled meanwhile; reading it runs
+    no Spark job."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
