@@ -140,9 +140,8 @@ def run_pipeline_bench(
             # multi-×, and SEVEN consumers re-read those blocks per run — on
             # this DRAM-bandwidth-capped host (and on any real cluster's
             # memory bus) trading cheap per-core decompression for bytes
-            # moved is the right side of the trade. RLPS_RDD_COMPRESS=false
-            # for the A/B.
-            "spark.rdd.compress": os.environ.get("RLPS_RDD_COMPRESS", "true"),
+            # moved is the right side of the trade.
+            "spark.rdd.compress": "true",
             # one file per input split: the fixture's part files are ~0.5 MB
             # compressed (tokens compress hard) but decode to ~50× that; the
             # default 64m/4m packing would fuse them into a handful of
@@ -161,7 +160,7 @@ def run_pipeline_bench(
 
 
 
-    def once(run_logs: str = logs, run_cfg=cfg, run_vocab=vocab) -> float:
+    def once(run_logs: str = logs, run_cfg=cfg, run_vocab=vocab) -> tuple[float, dict]:
         # flush pending Python-side garbage OUTSIDE the timed window: the
         # previous run's thousands of py4j-backed Column/DataFrame objects
         # otherwise get collected mid-run, and every free is a py4j
@@ -194,9 +193,8 @@ def run_pipeline_bench(
         pipe = Pipeline(spark, run_cfg, run_vocab, run_logs, checkpoint=False)
         res = pipe.run(job_factory=sink_jobs)
         dt = time.monotonic() - t0
-        print(json.dumps({"phase_timings": pipe.timings}), file=sys.stderr)
         res.sinks["parsed"].unpersist(blocking=True)
-        return dt
+        return dt, pipe.timings
 
     if small_dry and n_rows >= 4 * 2_000_000:
         dry_dir, _ = _pipeline_fixture(sf, n_rows=max(2_000_000, n_rows // 4))
@@ -205,7 +203,7 @@ def run_pipeline_bench(
         once(run_logs=os.path.join(dry_dir, "logs.parquet"))
     else:
         once()  # dry (JIT/codegen)
-    runs = [once() for _ in range(repeats)]
+    runs, phases = zip(*(once() for _ in range(repeats)))
     dt = min(runs)
     spark.stop()
     return {
@@ -214,6 +212,8 @@ def run_pipeline_bench(
         "pipeline_rows_per_sec": round(n_rows / dt, 1),
         "pipeline_runs_sec": [round(r, 3) for r in runs],
         "pipeline_spread_sec": round(max(runs) - min(runs), 3),
+        # Pipeline.timings of each timed run, in run order
+        "pipeline_phases": list(phases),
         "cpus": cpus,
     }
 
@@ -405,7 +405,6 @@ def run_scaling(
     sf_dir: str,
     levels: tuple[int, int] = SCALING_LEVELS,
     rounds: int = 6,
-    ckpt: str = "lc",
     n_rows: int | None = None,
     write_md: bool = True,
 ) -> dict:
@@ -414,9 +413,7 @@ def run_scaling(
     different times is meaningless. Instead the levels are INTERLEAVED —
     each round runs N then 4N back-to-back — and efficiency is computed per
     round. Reported: the best round (least-noise-contaminated) AND the
-    median of the best 3 rounds (the claim must not rest on one round).
-    ckpt selects the parse-stage materialization (lc = serialized
-    localCheckpoint, parquet = columnar scratch — see pipeline.py)."""
+    median of the best 3 rounds (the claim must not rest on one round)."""
     n_rows = n_rows or SCALING_ROWS
     # pre-generate the shared fixture so no level pays generation
     _pipeline_fixture(_sf_of(sf_dir), n_rows=n_rows)
@@ -427,22 +424,15 @@ def run_scaling(
         _pipeline_fixture(_sf_of(sf_dir), n_rows=max(2_000_000, n_rows // 4))
 
     def one(cpus: int) -> dict:
-        # slim-scope materialization + rdd.compress are pipeline DEFAULTS
-        # now (see Pipeline.run / run_pipeline_bench) — the scaling legs run
-        # the same configuration every other bench entry runs
-        env = dict(os.environ, RLPS_BENCH_CKPT=ckpt)
+        # the scaling legs run the same configuration every other bench
+        # entry runs (see Pipeline.run / run_pipeline_bench)
         out = subprocess.run(
             [sys.executable, os.path.abspath(__file__), "--pipeline-only",
              "--cpus", str(cpus), "--sf-dir", sf_dir,
              "--rows", str(n_rows), "--repeats", "1", "--small-dry"],
-            capture_output=True, text=True, check=True, cwd=REPO, env=env,
+            capture_output=True, text=True, check=True, cwd=REPO,
         )
-        r = json.loads(out.stdout.strip().splitlines()[-1])
-        # keep the timed run's phase breakdown for the evidence trail
-        phases = [ln for ln in out.stderr.splitlines() if "phase_timings" in ln]
-        if phases:
-            r["phases"] = json.loads(phases[-1])["phase_timings"]
-        return r
+        return json.loads(out.stdout.strip().splitlines()[-1])
 
     pairs = []
     for i in range(rounds):
@@ -471,8 +461,9 @@ def run_scaling(
             "host_mem_ratio": round(host_mem, 2),
             "host_normalized": round(eff / (host_ratio / (n4 / n)), 3),
             "eff_vs_mem_ceiling": round(eff / (host_mem / (n4 / n)), 3),
-            "phases_n": rn.get("phases", {}),
-            "phases_4n": r4.get("phases", {}),
+            # the timed run's phase breakdown, for the evidence trail
+            "phases_n": rn["pipeline_phases"][-1],
+            "phases_4n": r4["pipeline_phases"][-1],
         })
         print(json.dumps({"round": i, **pairs[-1]}), file=sys.stderr)
     best = max(pairs, key=lambda p: p["efficiency"])
@@ -482,7 +473,6 @@ def run_scaling(
     report = {
         "rows": n_rows,
         "levels": [n, n4],
-        "ckpt": ckpt,
         "rounds": pairs,
         "best_round": best,
         "scaling_efficiency": eff,
@@ -574,7 +564,7 @@ def _write_baseline_md(sf_dir, report, n, n4):
         "(4m/4m maxPartitionBytes/openCost over a 257-file fixture — "
         "preserves the splits >> cores invariant a 100 TB scan has), parse "
         "via mapInArrow + RE2 kernels, parsed-stage materialization = "
-        f"{'SERIALIZED eager localCheckpoint' if report.get('ckpt', 'lc') == 'lc' else 'parquet scratch (column-pruned consumers)'} "
+        "SERIALIZED eager localCheckpoint "
         "with spark.rdd.compress=true (lz4 over the serialized blocks — "
         "multi-× fewer bytes re-read by the seven consumers, the lever on "
         "a bandwidth-capped host), slim-scope materialization for the "
@@ -595,13 +585,12 @@ def main():
     ap.add_argument("--rows", type=int, default=None)
     ap.add_argument("--repeats", type=int, default=2)
     ap.add_argument("--rounds", type=int, default=6)
-    ap.add_argument("--ckpt", default="lc", choices=["lc", "parquet"])
     ap.add_argument("--no-md", action="store_true")
     ap.add_argument("--small-dry", action="store_true")
     args = ap.parse_args()
     if args.scaling:
         print(json.dumps(run_scaling(
-            args.sf_dir, rounds=args.rounds, ckpt=args.ckpt,
+            args.sf_dir, rounds=args.rounds,
             n_rows=args.rows, write_md=not args.no_md)))
     elif args.pipeline_only:
         print(json.dumps(run_pipeline_bench(

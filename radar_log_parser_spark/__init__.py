@@ -8,11 +8,11 @@ This engine re-expresses the same declarative query (a YAML config of named
 regex patterns) as a distributed Spark DataFrame plan over an Iceberg/parquet
 table of pre-tokenized log lines ``(doc_id, tokens, n_tok, source)``:
 
-  read → decode (Arrow pandas UDF) → match all patterns (one vectorized
-  pass) → route to per-category sinks → aggregate → write, with per-stage
+  read → decode + match all patterns (one vectorized Arrow UDF pass) →
+  route to per-category sinks → aggregate → write, with per-stage
   checkpoints, lineage and metrics for resumable restart.
 
-Everything after the two pandas UDFs (decode, match) is pure DataFrame API —
+Everything after the Arrow UDF (decode + match) is pure DataFrame API —
 no per-row Python in the hot path.
 """
 

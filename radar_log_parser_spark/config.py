@@ -22,7 +22,7 @@ import yaml
 # Go's regexp is RE2: no backreferences, no lookaround (SURVEY.md §5).
 # Python `re` is a superset, so any RE2-subset pattern behaves identically.
 # Lint: reject constructs outside the RE2 subset so configs stay portable
-# across the oracle (Python re), the engine (pandas str / Python re inside
+# across the oracle (Python re), the engine (RE2 kernels / Python re inside
 # Arrow batches) and SQL engines (Spark/Java regex, DuckDB/RE2).
 _NON_RE2 = re.compile(r"\(\?[=!<]|\(\?P=|\\[1-9]")
 

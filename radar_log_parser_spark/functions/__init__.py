@@ -1,2 +1,2 @@
 """Vectorized functions: the engine's only Python-on-rows surface (Arrow
-pandas UDFs) plus JVM-side column helpers."""
+UDFs) plus JVM-side column helpers."""

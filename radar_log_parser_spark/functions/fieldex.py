@@ -90,7 +90,7 @@ _PLANS: dict[int, tuple[ConfigSpec, FieldPlan]] = {}
 
 
 def field_plan(cfg: ConfigSpec) -> FieldPlan:
-    # keyed by id(cfg) but retains cfg (same rationale as parse._COMPILED)
+    # keyed by id(cfg) but retains cfg (same rationale as parse_arrow._COMPILED)
     ent = _PLANS.get(id(cfg))
     if ent is None or ent[0] is not cfg:
         ent = (cfg, FieldPlan(cfg))
@@ -288,52 +288,3 @@ def extract_field_columns(
         )
     return out
 
-
-def extract_field_rows(
-    plan: FieldPlan,
-    texts: list[str],
-    proc_hits: list[list[str]],
-    ngrp_lists: dict[str, list[list[str]]],
-) -> list[list]:
-    """Pure-Python twin of extract_field_columns for the mapInPandas
-    fallback: per pair, a list of {'n','j'} dicts (None = no hits).
-    proc_hits is the per-line matched-process-name list (the `procs`
-    column); ngrp_lists the per-line match-substring lists per issue."""
-    n = len(texts)
-    out: list[list] = [[None] * n for _ in range(plan.n_pairs)]
-
-    pat_cache: dict[str, list] = {}
-    for pat, w in plan.grouped_work.items():
-        crgx = w["crgx"]
-        shared: list = [None] * n
-        union = w["procs"]
-        for i, procs in enumerate(proc_hits):
-            if not any(p in union for p in procs):
-                continue
-            c, j = _finditer_join(crgx, texts[i])
-            if c:
-                shared[i] = {"n": c, "j": j}
-        pat_cache[pat] = shared
-        for k in w["ks"]:
-            elig_set = set(plan.pair_info[k][2])
-            col = out[k]
-            for i, procs in enumerate(proc_hits):
-                if shared[i] is not None and any(p in elig_set for p in procs):
-                    col[i] = shared[i]
-
-    for (iname, _pat), w in plan.ngrp_work.items():
-        lists = ngrp_lists.get(iname)
-        if lists is None:
-            continue
-        crgx = w["crgx"]
-        for i, subs in enumerate(lists):
-            if not subs:
-                continue
-            hits: list[str] = []
-            for s in subs:
-                hits.extend(m.group(0) for m in crgx.finditer(s))
-            if hits:
-                v = {"n": len(hits), "j": "\n".join(hits)}
-                for k in w["ks"]:
-                    out[k][i] = v
-    return out

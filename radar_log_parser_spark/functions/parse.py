@@ -9,12 +9,9 @@ input is read and decoded exactly once, embarrassingly parallel, no shuffle.
 Everything downstream of this stage is pure DataFrame API (joins, groupBys,
 min_by/max_by) — no per-row Python (BASELINE.json input_hint).
 
-Two implementations behind ``parse_stage``:
-  impl="arrow" (default) — mapInArrow + RE2 C++ kernels, Python only on
-      hit rows (functions/parse_arrow.py). RE2 is the reference's Go
-      regexp engine, so dialect parity is exact.
-  impl="pandas" — mapInPandas + Python re (portability fallback and A/B
-      baseline; ~2.5× slower).
+The pass is a mapInArrow over RE2 C++ kernels, with Python only on hit rows
+(functions/parse_arrow.py). RE2 is the reference's Go regexp engine, so
+dialect parity is exact.
 
 Output schema: flat per-issue array columns (functions/schema.py) —
   procs/events        matching pattern names per line       (F1, F9)
@@ -25,182 +22,27 @@ Output schema: flat per-issue array columns (functions/schema.py) —
 
 from __future__ import annotations
 
-import re
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from radar_log_parser_spark.codec import Vocab
-from radar_log_parser_spark.config import (
-    LOG_LEVELS,
-    ConfigSpec,
-    severity_pattern,
-)
-from radar_log_parser_spark.functions.schema import (
-    parsed_schema,
-)
+from radar_log_parser_spark.config import ConfigSpec
+from radar_log_parser_spark.functions.parse_arrow import match_batch_arrow
+from radar_log_parser_spark.functions.schema import parsed_schema
 
 
-class CompiledConfig:
-    """All config patterns compiled once per executor process (Python re).
-
-    Compiled with re.ASCII: the reference's Go regexp (RE2) treats
-    \\d/\\w/\\b/\\s as ASCII-only, as do the Arrow RE2 kernels, Spark's Java
-    regex and DuckDB — Python is the lone Unicode-default engine in the
-    chain, and on non-ASCII log content its wider classes would silently
-    diverge from every other path (ADVICE r3). ASCII mode pins all five
-    engines to one semantic."""
-
-    def __init__(self, cfg: ConfigSpec):
-        A = re.ASCII
-        self.procs = sorted((n, re.compile(r, A)) for n, r in cfg.specific_process.items())
-        self.events = sorted((n, re.compile(r, A)) for n, r in cfg.important_events.items())
-        self.ngrp = sorted(
-            (n, re.compile(s.regex, A))
-            for n, s in cfg.issues.items()
-            if not s.grouped and s.regex
-        )
-        self.grp = sorted(
-            (n, re.compile(s.grouping, A))
-            for n, s in cfg.issues.items()
-            if s.grouped and s.grouping
-        )
-        self.sev = {
-            platform: [
-                (level, re.compile(severity_pattern(platform, level), A))
-                for level in LOG_LEVELS[platform]
-            ]
-            for platform in LOG_LEVELS
-        }
-
-
-# keyed by id(cfg) but the entry RETAINS cfg (see parse_arrow.py: prevents
-# address reuse after GC from serving stale compiled patterns)
-_COMPILED: dict[int, tuple[ConfigSpec, CompiledConfig]] = {}
-
-
-def _compiled(cfg: ConfigSpec) -> CompiledConfig:
-    ent = _COMPILED.get(id(cfg))
-    if ent is None or ent[0] is not cfg:
-        ent = (cfg, CompiledConfig(cfg))
-        _COMPILED[id(cfg)] = ent
-    return ent[1]
-
-
-def _decode_batch(tokens: pd.Series, vocab_arr: np.ndarray) -> pd.Series:
-    """Vectorized decode: np fancy-index per row + C-level join."""
-    out = np.empty(len(tokens), dtype=object)
-    join = " ".join
-    for i, arr in enumerate(tokens.values):
-        out[i] = join(vocab_arr[np.asarray(arr, dtype=np.int64)])
-    return pd.Series(out, index=tokens.index)
-
-
-def _match_batch(pdf: pd.DataFrame, cfg: ConfigSpec, vocab_arr: np.ndarray) -> pd.DataFrame:
-    cc = _compiled(cfg)
-    n = len(pdf)
-    text = _decode_batch(pdf["tokens"], vocab_arr)
-    st = text.str
-    tn = text.values
-
-    def names_arrays(patterns) -> list[list[str]]:
-        out: list[list[str]] = [[] for _ in range(n)]
-        for name, rgx in patterns:
-            hits = st.contains(rgx, regex=True).to_numpy()
-            for i in np.flatnonzero(hits):
-                out[i].append(name)
-        return out
-
-    data: dict = {
-        "doc_id": pdf["doc_id"],
-        "source": pdf["source"],
-        "line_no": pdf["doc_id"].str.rsplit("-", n=1).str[-1].astype(np.int64),
-        "tokens": pdf["tokens"],
-        "n_tok": pdf["n_tok"],
-        "text": text,
-        "procs": names_arrays(cc.procs),
-        "events": names_arrays(cc.events),
-    }
-
-    sev_levels: list[list[str]] = [[] for _ in range(n)]
-    sev_counts: list[list[int]] = [[] for _ in range(n)]
-    src = pdf["source"].to_numpy()
-    for platform in sorted({p for p in np.unique(src) if p in cc.sev}):
-        rows = np.flatnonzero(src == platform)
-        sub = text.iloc[rows]
-        for level, rgx in cc.sev[platform]:
-            counts = sub.str.count(rgx).to_numpy()
-            for j, c in zip(rows, counts):
-                if c:
-                    sev_levels[j].append(level)
-                    sev_counts[j].append(int(c))
-    data["sev_levels"] = sev_levels
-    data["sev_counts"] = sev_counts
-
-    ngrp_lists: dict[str, list[list[str]]] = {}
-    for iname, rgx in cc.ngrp:
-        col: list[list[str]] = [[] for _ in range(n)]
-        hits = st.contains(rgx, regex=True).to_numpy()
-        for i in np.flatnonzero(hits):
-            col[i] = [m.group(0) for m in rgx.finditer(tn[i])]
-        ngrp_lists[iname] = col
-        data[f"ngrp__{iname}"] = col
-
-    for iname, rgx in cc.grp:
-        col = [[] for _ in range(n)]
-        hits = st.contains(rgx, regex=True).to_numpy()
-        for i in np.flatnonzero(hits):
-            m = rgx.search(tn[i])
-            if m is not None:
-                col[i] = [g if g is not None else "" for g in m.groups()]
-        data[f"grp__{iname}"] = col
-
-    # per-line field hits (A4/F5) — same parse-time extraction as the Arrow
-    # path (functions/fieldex.py); struct cells as {'n','j'} dicts
-    from radar_log_parser_spark.functions.fieldex import (
-        extract_field_rows,
-        field_plan,
-    )
-    from radar_log_parser_spark.functions.schema import fld_cols
-
-    fld = extract_field_rows(field_plan(cfg), list(tn), data["procs"], ngrp_lists)
-    for c, col_vals in zip(fld_cols(cfg), fld):
-        data[c] = col_vals
-
-    return pd.DataFrame(data)
-
-
-def parse_stage(df: DataFrame, cfg: ConfigSpec, vocab: Vocab, impl: str = "arrow") -> DataFrame:
+def parse_stage(df: DataFrame, cfg: ConfigSpec, vocab: Vocab) -> DataFrame:
     """input table (doc_id, tokens, n_tok, source) → parsed_schema(cfg).
 
     The vocabulary ships to executors once as a Spark broadcast
     (SURVEY.md §7: decode must not join against a vocab table).
     """
-    sc = df.sparkSession.sparkContext
-    schema = parsed_schema(cfg)
-    if impl == "arrow":
-        import pyarrow as pa
+    vocab_b = df.sparkSession.sparkContext.broadcast(list(vocab.id_to_token))
 
-        from radar_log_parser_spark.functions.parse_arrow import match_batch_arrow
+    def run_arrow(batches):
+        varr = pa.array(vocab_b.value, pa.string())
+        for batch in batches:
+            if batch.num_rows:
+                yield match_batch_arrow(batch, cfg, varr)
 
-        vocab_b = sc.broadcast(list(vocab.id_to_token))
-
-        def run_arrow(batches):
-            varr = pa.array(vocab_b.value, pa.string())
-            for batch in batches:
-                if batch.num_rows:
-                    yield match_batch_arrow(batch, cfg, varr)
-
-        return df.mapInArrow(run_arrow, schema=schema)
-
-    vocab_np_b = sc.broadcast(np.array(vocab.id_to_token, dtype=object))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        arr = vocab_np_b.value
-        for pdf in batches:
-            if len(pdf):
-                yield _match_batch(pdf, cfg, arr)
-
-    return df.mapInPandas(run, schema=schema)
+    return df.mapInArrow(run_arrow, schema=parsed_schema(cfg))

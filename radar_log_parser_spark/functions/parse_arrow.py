@@ -12,7 +12,6 @@ Python touches only HIT rows (building the per-row match lists) — on real
 logs a few percent of rows — so per-row Python cost scales with matches,
 not input size. Output is the flat per-issue-column schema of
 functions/schema.py (no map columns: 3× cheaper to materialize and prune).
-The pandas implementation in parse.py is the portability fallback.
 """
 
 from __future__ import annotations
@@ -194,8 +193,7 @@ def match_batch_arrow(batch: pa.RecordBatch, cfg: ConfigSpec, vocab_pa: pa.Array
     text = decode_tokens(tokens, vocab_pa)
     # digits after the LAST '-' (ingest writes {line:06d}, which grows past 6
     # digits beyond 1M lines/file — a fixed {6} here silently truncated the
-    # ordinal and corrupted every order-sensitive aggregate; parity with the
-    # pandas path's rsplit("-", 1))
+    # ordinal and corrupted every order-sensitive aggregate)
     line_no = pc.extract_regex(doc_id, r"-(?P<ln>\d+)$").field(0).cast(pa.int64())
 
     txt_np: np.ndarray | None = None  # materialized lazily, only if hits exist

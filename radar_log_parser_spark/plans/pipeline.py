@@ -38,6 +38,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -356,31 +357,15 @@ class Pipeline:
             bucket_by="doc_id",
         )
         if self.ckpt is None:
-            # unchechpointed (bench) mode: the parse UDF feeds five sinks —
+            # uncheckpointed (bench) mode: the parse UDF feeds five sinks —
             # materialize it once, EAGERLY, so the concurrent consumers
             # below never race to compute the same partition twice.
-            # Two strategies, both SERIALIZED (deserialized wide rows blow
-            # the storage pool and triple-vary build/read times under
-            # eviction — measured 10→59→21s builds; serialized: stable 7-8s
-            # builds, 0.5s reads):
-            #   lc      — row-format RDD blocks (default)
-            #   parquet — columnar scratch file: consumers get COLUMN
-            #             PRUNING (the token arrays are only read by the 3
-            #             sinks that carry them, not by the aggregates) at
-            #             the cost of one disk round-trip
-            if os.environ.get("RLPS_BENCH_CKPT", "lc") == "parquet":
-                scratch = os.path.join(
-                    os.environ.get("RLPS_SCRATCH", "/tmp"),
-                    f"rlps_parsed_{os.getpid()}",
-                )
-                parsed.write.mode("overwrite").parquet(scratch)
-                parsed = spark.read.parquet(scratch)
-            else:
-                from pyspark import StorageLevel
-
-                parsed = parsed.localCheckpoint(
-                    eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-                )
+            # SERIALIZED row blocks: deserialized wide rows blow the storage
+            # pool and triple-vary build/read times under eviction (measured
+            # 10→59→21s builds; serialized: stable 7-8s builds, 0.5s reads).
+            parsed = parsed.localCheckpoint(
+                eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
+            )
         self.timings["parse_materialize"] = round(time.monotonic() - t0, 2)
         t_fan = time.monotonic()  # the overlapped fan-out window opens here
 
@@ -488,16 +473,14 @@ class Pipeline:
         # sparse fld{k} struct columns. The projection drops
         # tokens/n_tok/doc_id/process entirely and nulls text on
         # everything but grouped matches. Checkpoint mode gets pruning
-        # from parquet; in
-        # bench mode the slim frame is materialized (serialized eager
-        # localCheckpoint) by DEFAULT: the summary DAG's three aggregate
-        # subtrees otherwise re-derive it from the fat parsed blocks —
-        # 3 full-row decodes of memory traffic, the resource the 4N leg is
-        # ceiling-bound on (A/B: summary job 186→85 s at 16 cores,
-        # BENCH/BASELINE.md). RLPS_BENCH_SLIM=off restores the lazy form
-        # for A/B. The materialization runs in the MAIN thread but the
-        # tier-0/1 jobs above are already draining in the pool underneath
-        # it — the window is overlapped, not serial.
+        # from parquet; in bench mode the slim frame is materialized
+        # (serialized eager localCheckpoint): the summary DAG's three
+        # aggregate subtrees otherwise re-derive it from the fat parsed
+        # blocks — 3 full-row decodes of memory traffic, the resource the
+        # 4N leg is ceiling-bound on (A/B: summary job 186→85 s at 16
+        # cores, BENCH/BASELINE.md). The materialization runs in the MAIN
+        # thread but the tier-0/1 jobs above are already draining in the
+        # pool underneath it — the window is overlapped, not serial.
         from radar_log_parser_spark.functions.schema import fld_cols
 
         # match_arr itself stays behind: the aggregates only need the match
@@ -517,9 +500,7 @@ class Pipeline:
             "grp_arr",
             *fld_cols(cfg),
         )
-        if self.ckpt is None and os.environ.get("RLPS_BENCH_SLIM", "lc") == "lc":
-            from pyspark import StorageLevel
-
+        if self.ckpt is None:
             s = time.monotonic()
             scope_slim = scope_slim.localCheckpoint(
                 eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK

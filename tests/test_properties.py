@@ -5,6 +5,7 @@
   - sum-of-grouped-counts == grouped Number (analyzeLog.go:258-264)
   - non-grouped Number counts duplicates while the match set dedups
   - config lint rejects non-RE2 patterns
+  - every parsed line agrees with the oracle's per-line regex semantics
 """
 
 from __future__ import annotations
@@ -109,18 +110,55 @@ def test_quirk_q1_lonelyproc_dropped(pipeline_result):
     assert {"CameraService", "AudioFlinger"} <= procs
 
 
-def test_arrow_pandas_parse_parity(spark, cfg, vocab, fx):
-    """The Arrow/RE2 hot path and the pandas/Python-re fallback must produce
-    identical parse output (dialect parity within the RE2-linted subset)."""
+def test_parse_matches_oracle_per_line(spark, cfg, vocab, fx, corpus):
+    """Every line of the Arrow/RE2 parse output on the unit fixture agrees
+    with the oracle's Go-regexp semantics (go_findall, re.ASCII): the
+    line ordinal, the decoded text, the matching process and event names, each non-grouped
+    issue's match substrings in order, each grouped issue's first-match
+    capture groups, the severity levels with their match counts, and each
+    summary field's hits (Q10: a grouped issue's field scans the line when
+    it matched one of the issue's processes, a non-grouped issue's field
+    scans its match substrings)."""
+    import re
+
+    from radar_log_parser_spark.config import LOG_LEVELS, severity_pattern, summary_pairs
     from radar_log_parser_spark.functions.parse import parse_stage
+    from radar_log_parser_spark.functions.schema import fld_cols
+    from radar_log_parser_spark.sources.fixtures import doc_id
+    from tests.oracle import go_findall
 
-    def snapshot(impl):
-        df = parse_stage(spark.read.parquet(fx.logs_path), cfg, vocab, impl=impl)
-        cols = [c for c in df.columns if c not in ("tokens", "n_tok")]
-        rows = df.select(*cols).collect()
-        return sorted(
-            tuple(tuple(v) if isinstance(v, list) else v for v in r)
-            for r in rows
-        )
+    ngrp = {n: s.regex for n, s in cfg.issues.items() if not s.grouped and s.regex}
+    grp = {n: s.grouping for n, s in cfg.issues.items() if s.grouped and s.grouping}
+    rows = parse_stage(spark.read.parquet(fx.logs_path), cfg, vocab).collect()
+    assert len(rows) == sum(len(lines) for lines in corpus.values())
 
-    assert snapshot("arrow") == snapshot("pandas")
+    def names(patterns: dict[str, str], text: str) -> list[str]:
+        return sorted(n for n, p in patterns.items() if go_findall(p, text))
+
+    for r in rows:
+        assert r["doc_id"] == doc_id(r["source"], r["line_no"])
+        text = corpus[r["source"]][r["line_no"]]
+        assert r["text"] == text, r["doc_id"]
+        assert r["procs"] == names(cfg.specific_process, text), r["doc_id"]
+        assert r["events"] == names(cfg.important_events, text), r["doc_id"]
+        for n, p in ngrp.items():
+            assert r[f"ngrp__{n}"] == go_findall(p, text), (r["doc_id"], n)
+        for n, p in grp.items():
+            m = re.search(p, text, re.ASCII)
+            want = [g or "" for g in m.groups()] if m else []
+            assert r[f"grp__{n}"] == want, (r["doc_id"], n)
+        sev = [
+            (lv, len(go_findall(severity_pattern(r["source"], lv), text)))
+            for lv in LOG_LEVELS.get(r["source"], [])
+        ]
+        sev = [(lv, c) for lv, c in sev if c]
+        assert list(zip(r["sev_levels"], r["sev_counts"])) == sev, r["doc_id"]
+        for col, (iname, _f, pat) in zip(fld_cols(cfg), summary_pairs(cfg)):
+            issue = cfg.issues[iname]
+            if issue.grouped:
+                scoped = any(p in r["procs"] for p in issue.specific_process)
+                hits = go_findall(pat, text) if scoped else []
+            else:
+                hits = [h for m in go_findall(issue.regex, text) for h in go_findall(pat, m)]
+            got = r[col] and (r[col]["n"], r[col]["j"])
+            assert got == ((len(hits), "\n".join(hits)) if hits else None), (r["doc_id"], col)

@@ -17,10 +17,10 @@ def _has_iceberg(spark) -> bool:
 
 
 def test_line_no_beyond_1m_parity(spark, cfg, vocab):
-    """Ordinals past 10^6 overflow the {line:06d} format to 7 digits; both
-    parse impls must read the FULL trailing number (the Arrow path used to
-    keep only the last 6 digits — silent corruption of every order-
-    sensitive aggregate exactly at target scale)."""
+    """Ordinals past 10^6 overflow the {line:06d} format to 7 digits; the
+    parse must read the FULL trailing number (it used to keep only the last
+    6 digits — silent corruption of every order-sensitive aggregate exactly
+    at target scale)."""
     from radar_log_parser_spark.functions.parse import parse_stage
 
     line = "06-15 14:23:07.123 1234 5678 E CameraService: Connection timeout after 3000 ms code=17"
@@ -33,11 +33,8 @@ def test_line_no_beyond_1m_parity(spark, cfg, vocab):
     df = spark.createDataFrame(
         rows, "doc_id string, tokens array<int>, n_tok int, source string"
     )
-    for impl in ("arrow", "pandas"):
-        got = sorted(
-            r["line_no"] for r in parse_stage(df, cfg, vocab, impl=impl).collect()
-        )
-        assert got == sorted(ordinals), impl
+    got = sorted(r["line_no"] for r in parse_stage(df, cfg, vocab).collect())
+    assert got == sorted(ordinals)
 
 
 def test_grouped_sink_typed_group_columns(pipeline_result, cfg):

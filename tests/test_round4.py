@@ -61,12 +61,11 @@ def test_anchor_full_line_passthrough_keeps_flags():
 NON_ASCII_LINE = "proc died pid=١٢٣"  # Arabic-Indic digits: \d in Unicode, not in RE2
 
 
-@pytest.mark.parametrize("impl", ["arrow", "pandas"])
-def test_parse_ascii_class_parity(spark, impl):
-    """A '\\d+'-style pattern must NOT match Arabic-Indic digits in either
-    parse implementation — Go regexp (the reference), RE2 kernels, Spark's
-    Java regex and DuckDB all treat \\d as ASCII-only; Python's Unicode
-    default was the odd one out (ADVICE r3)."""
+def test_parse_ascii_class_parity(spark):
+    """A '\\d+'-style pattern must NOT match Arabic-Indic digits in the
+    parse — Go regexp (the reference), RE2 kernels, Spark's Java regex and
+    DuckDB all treat \\d as ASCII-only; Python's Unicode default was the
+    odd one out (ADVICE r3)."""
     from radar_log_parser_spark.codec import Vocab
     from radar_log_parser_spark.functions.parse import parse_stage
 
@@ -91,7 +90,7 @@ def test_parse_ascii_class_parity(spark, impl):
             },
         }
     )
-    parsed = parse_stage(df, cfg, vocab, impl=impl)
+    parsed = parse_stage(df, cfg, vocab)
     hits = {
         r["doc_id"]: r["ngrp__Death"]
         for r in parsed.select("doc_id", "ngrp__Death").collect()

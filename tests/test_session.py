@@ -1,7 +1,8 @@
 """session.py: the driver heap default, driver-local dimension tables
 (`local_frame`) — schema and value round trips, the plans that use them,
-and a source guard that keeps Python-RDD scans of driver lists out of the
-package — and the codegen cache size: a warm rerun compiles no classes."""
+source guards that keep Python-RDD scans of driver lists and env-var
+switches out of the package — and the codegen cache size: a warm rerun
+compiles no classes."""
 
 from __future__ import annotations
 
@@ -71,6 +72,15 @@ def test_bench_plans_use_local_tables(pipeline_result):
         assert all(c in materialized for c in rdd_scans), (name, rdd_scans)
 
 
+def _package_modules():
+    for root, _dirs, names in os.walk(PKG_DIR):
+        for name in sorted(names):
+            if name.endswith(".py"):
+                path = os.path.join(root, name)
+                with open(path) as f:
+                    yield os.path.relpath(path, PKG_DIR), ast.parse(f.read(), path)
+
+
 _COLUMNAR = re.compile(r"^(pd|pandas|pa|pyarrow)\.|\.(to_pandas|toPandas|to_arrow|toArrow)\(\)$")
 
 
@@ -79,22 +89,33 @@ def test_no_create_dataframe_over_python_lists():
     Python workers every time a consuming plan runs; small driver tables
     go through `local_frame`. Only pandas or Arrow tables may be passed."""
     bad = []
-    for root, _dirs, names in os.walk(PKG_DIR):
-        for name in names:
-            if not name.endswith(".py"):
-                continue
-            path = os.path.join(root, name)
-            with open(path) as f:
-                tree = ast.parse(f.read(), path)
-            for node in ast.walk(tree):
-                if (
-                    isinstance(node, ast.Call)
-                    and isinstance(node.func, ast.Attribute)
-                    and node.func.attr == "createDataFrame"
-                ):
-                    arg = ast.unparse(node.args[0]) if node.args else ""
-                    if not _COLUMNAR.search(arg):
-                        bad.append(f"{os.path.relpath(path, PKG_DIR)}:{node.lineno} {arg}")
+    for rel, tree in _package_modules():
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+            ):
+                arg = ast.unparse(node.args[0]) if node.args else ""
+                if not _COLUMNAR.search(arg):
+                    bad.append(f"{rel}:{node.lineno} {arg}")
+    assert not bad, bad
+
+
+def test_only_session_reads_the_environment():
+    """Settled experiments are code, not env switches: outside the
+    deployment settings in `session.py`, no package module reads
+    `os.environ` or `os.getenv`."""
+    bad = [
+        f"{rel}:{node.lineno}"
+        for rel, tree in _package_modules()
+        if rel != "session.py"
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Attribute)
+        and node.attr in ("environ", "getenv")
+        and isinstance(node.value, ast.Name)
+        and node.value.id == "os"
+    ]
     assert not bad, bad
 
 

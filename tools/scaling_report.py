@@ -199,7 +199,7 @@ def main() -> None:
         "",
         "**Campaign scheduling (r5c)**: rounds are LAUNCHED only when the "
         "host's 1-minute load average is below 2 (up to a bounded wait, "
-        "then launched regardless — tools/campaign_r5c.sh). This is a "
+        "then launched regardless — tools/campaign_r5c.sh, commit 3a5cda5). This is a "
         "STARTING-CONDITION gate decided before each measurement begins; "
         "it cannot bias the efficiency estimator — cleanliness is still "
         "decided exclusively by the pre-registered calibration filter "
