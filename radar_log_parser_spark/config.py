@@ -126,8 +126,8 @@ class ConfigSpec:
             _lint_pattern(f"IssuesGeneralFields.OtherFields.{fname}", rgx)
         for iname, issue in self.issues.items():
             # the aggregation order key packs proc_rank into bits 53..62 of
-            # one BIGINT (aggregates._ord: proc_rank < 2^10) — an issue with
-            # ≥1024 processes would overflow the packed key mid-aggregate
+            # one BIGINT (aggregates._line_ord: proc_rank < 2^10) — an issue
+            # with ≥1024 processes would overflow the packed key mid-aggregate
             # (ANSI ARITHMETIC_OVERFLOW) instead of failing clearly; bound
             # it here at config load
             if len(issue.specific_process) > 1023:
@@ -162,8 +162,8 @@ def summary_pairs(cfg: ConfigSpec) -> list[tuple[str, str, str]]:
     """(issue, field, pattern) triples in (issue asc, field asc) order — the
     STATIC field catalog every consumer shares: the parse stage extracts one
     per-line hit column per pair (functions/fieldex.py), the fused summary
-    and `field_contents` aggregate those columns by position k, and the
-    assembly (`summary_frame`) renders them. The order is deterministic so
+    (`aggregates.summary_aggregate`) aggregates those columns by position
+    k, and the assembly (`summary_frame`) renders them. The order is deterministic so
     positional column names (schema.fld_col) mean the same pair everywhere."""
     pairs: list[tuple[str, str, str]] = []
     for iname in sorted(cfg.issues):

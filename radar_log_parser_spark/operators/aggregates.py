@@ -6,12 +6,12 @@ the reference's implicit string-scan order (SURVEY.md §2.4). Spark performs
 partial (map-side) aggregation for all of these automatically, so skewed
 sources do not concentrate pre-aggregation rows on one reducer.
 
-Field contents (A4/F5) are computed distributed: per-row
-``regexp_extract_all`` (JVM, codegen) → sum of counts + order-preserving
-collect. This equals the reference's findall-over-joined-content
-(getFieldContent, analyzeLog.go:305-313) because field patterns cannot match
-across line boundaries (config lint guarantees the RE2 subset; `.`/char
-classes do not cross `\n`).
+Field contents (A4/F5) aggregate the per-line hits that the parse pass
+extracts (functions/fieldex.py): sum of counts + order-preserving collect.
+This equals the reference's findall-over-joined-content (getFieldContent,
+analyzeLog.go:305-313) because field patterns cannot match across line
+boundaries (config lint guarantees the RE2 subset; `.`/char classes do not
+cross `\n`).
 """
 
 from __future__ import annotations
@@ -22,43 +22,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from radar_log_parser_spark.config import ConfigSpec, summary_pairs
+from radar_log_parser_spark.functions.schema import fld_col, fld_cols
 from radar_log_parser_spark.session import local_frame
 
-def _ord():
-    """Scan-order key: reproduces the reference's issueContent string order
-    (process blocks name-asc per Q3, lines by ordinal, matches left-to-right).
+
+def _line_ord():
+    """Scan-order key of a line: reproduces the reference's issueContent
+    string order (process blocks name-asc per Q3, lines by ordinal; matches
+    within a line stay in array order).
 
     Packed into ONE BIGINT — min_by/max_by over a struct key drops the
     aggregate into interpreted struct ordering (measured ~5× slower).
     Bounds: proc_rank < 2^10 processes/issue, line_no < 2^33 lines/file,
-    match_pos < 2^20 matches/line; ConfigSpec.validate() rejects issues
-    with >1023 processes (config.py, the ">= 1024 processes" lint), and
-    the reference's own input cap (10 MiB uploads) keeps files far under
-    2^33 lines."""
-    return (
-        F.col("proc_rank").cast("long") * F.lit(1 << 53)
-        + F.col("line_no") * F.lit(1 << 20)
-        + F.col("match_pos")
-    )
-
-
-def _line_ord():
+    and the low 20 bits stay free for a match position; ConfigSpec.validate()
+    rejects issues with >1023 processes (config.py, the ">= 1024 processes"
+    lint), and the reference's own input cap (10 MiB uploads) keeps files
+    far under 2^33 lines."""
     return F.col("proc_rank").cast("long") * F.lit(1 << 53) + F.col("line_no") * F.lit(1 << 20)
-
-
-def other_issue_aggs(other_routed: DataFrame) -> DataFrame:
-    """A1 + A5 for non-grouped issues: Number counts ALL matches including
-    duplicates (analyzeLog.go:271-278); LogLevel comes from the FIRST match
-    substring (go:285), Timestamp from the LAST (go:299).
-
-    Standalone operator form (property-tested); the pipeline's summary path
-    computes the same quantities inside the fused summary_aggregate."""
-    return other_routed.groupBy("source", "issue").agg(
-        F.count("*").alias("number"),
-        F.min_by("match", _ord()).alias("first_match"),
-        F.max_by("match", _ord()).alias("last_match"),
-        F.count_distinct("match").alias("n_distinct"),
-    )
 
 
 def other_issue_match_sets(other_routed: DataFrame) -> DataFrame:
@@ -74,60 +54,6 @@ def grouped_counts(grouped_routed: DataFrame) -> DataFrame:
     return grouped_routed.groupBy("source", "issue", "group_key", "details").agg(
         F.count("*").alias("count")
     )
-
-
-def grouped_totals(grouped_routed: DataFrame) -> DataFrame:
-    """A3 issue total = sum of tuple counts = matched-line count
-    (analyzeLog.go:258-264), plus the LAST matching line for the grouped
-    Timestamp/LogLevel extracts (last_matches, analyzeLog.go:204-221).
-    Standalone form; the pipeline summary uses summary_aggregate."""
-    return grouped_routed.groupBy("source", "issue").agg(
-        F.count("*").alias("number"),
-        F.max_by("text", _line_ord()).alias("last_line"),
-    )
-
-
-def with_field_hits(cfg: ConfigSpec, scope: DataFrame) -> DataFrame:
-    """JVM twin of the PARSE-TIME per-line field extraction
-    (functions/fieldex.py): derives the fld{k} struct<n,j> columns at line
-    grain with `regexp_extract_all`. The pipeline gets these columns free
-    from parse_stage; this twin serves callers holding a scope frame built
-    without them (tests, ad-hoc frames) and doubles as the
-    parity-testable JVM expression of the extraction semantics. Quirk Q10
-    preserved: grouped pairs scan the row's full `text` (every scoped
-    line, matching or not); non-grouped pairs scan each MATCH SUBSTRING
-    in order, zero-hit substrings contributing nothing."""
-    from radar_log_parser_spark.functions.schema import fld_col
-
-    cols = []
-    for k, (iname, fname, pat) in enumerate(summary_pairs(cfg)):
-        if cfg.issues[iname].grouped:
-            hits = F.when(
-                F.col("grouped") & (F.col("issue") == iname),
-                F.regexp_extract_all("text", F.lit(pat), 0),
-            )
-        else:
-            # flatten preserves (match_pos, hit) order — identical to the
-            # per-subject join since "\n" separates both levels
-            hits = F.when(
-                ~F.col("grouped") & (F.col("issue") == iname),
-                F.flatten(
-                    F.transform(
-                        "match_arr",
-                        lambda m: F.regexp_extract_all(m, F.lit(pat), 0),
-                    )
-                ),
-            )
-        cols.append(
-            F.when(
-                F.size(hits) > 0,
-                F.struct(
-                    F.size(hits).cast("int").alias("n"),
-                    F.array_join(hits, "\n").alias("j"),
-                ),
-            ).alias(fld_col(k, iname, fname))
-        )
-    return scope.select("*", *cols)
 
 
 def line_grain_hit_agg(
@@ -162,8 +88,6 @@ def line_grain_hit_agg(
     issue appears once per (proc_rank) copy with distinct packed ords —
     the reference renders it once per process block (quirk Q3 order).
     """
-    from radar_log_parser_spark.functions.schema import fld_col
-
     row_ord = _line_ord().alias("ord")
     bucket = F.floor(F.col("line_no") / F.lit(65536)).alias("line_bucket")
     per_row = rows.select(
@@ -229,45 +153,37 @@ def line_grain_hit_agg(
     return lvl1.groupBy("source", "issue").agg(*aggs2)
 
 
-def field_contents(cfg: ConfigSpec, scope: DataFrame) -> DataFrame:
-    """A4/F5 per-issue field extraction → (source, issue, field, n, joined).
-    Standalone form: the shared line-grain builder (`line_grain_hit_agg`,
-    also the engine of the fused pipeline summary) unpivoted with `stack`.
-    Accepts a scope with or without the parse-time fld columns (the JVM
-    twin derives them when absent)."""
-    pairs = _summary_pairs(cfg)
-    if not pairs:
-        return None  # type: ignore[return-value]
+def slim_scope(cfg: ConfigSpec, scope: DataFrame) -> DataFrame:
+    """The one input form of `summary_aggregate`: the routed scope cut to
+    its aggregation keys (source, issue, proc_rank, grouped, line_no) and
+    line-local scalars.
 
-    from radar_log_parser_spark.functions.schema import fld_cols
-
-    if fld_cols(cfg)[0] not in scope.columns:
-        scope = with_field_hits(cfg, scope)
-    lvl2 = line_grain_hit_agg(scope, pairs)
-
-    stack_args = ", ".join(
-        f"'{fname}', N{k}, J{k}" for k, (_i, fname, _p) in enumerate(pairs)
+    Field scanning needs no text here (the fld{k} hit columns come from
+    the parse pass), so `text` survives only on grouped MATCHING rows, for
+    the last-line Timestamp/LogLevel extract. match_arr is reduced to its
+    count and first/last substring (it is in scan order); match_sets, the
+    one consumer of the full arrays, reads the fat scope. try_: ANSI
+    element_at throws on the empty arrays of non-matching lines, and the
+    projection evaluates every row."""
+    return scope.select(
+        "source", "issue", "proc_rank", "grouped", "line_no",
+        F.when(
+            F.col("grouped") & (F.size(F.coalesce(F.col("grp_arr"), F.array())) > 0),
+            F.col("text"),
+        ).alias("text"),
+        F.size(F.coalesce(F.col("match_arr"), F.array())).alias("n_ng"),
+        F.try_element_at("match_arr", F.lit(1)).alias("first_m"),
+        F.try_element_at("match_arr", F.lit(-1)).alias("last_m"),
+        "grp_arr",
+        *fld_cols(cfg),
     )
-    return (
-        lvl2.select(
-            "source", "issue",
-            F.expr(f"stack({len(pairs)}, {stack_args}) as (field, n, joined)"),
-        )
-        # null n = pair belongs to a different issue; 0 = issue scoped but the
-        # field never hit (the reference renders those as "0 :  " downstream)
-        .filter(F.col("n") > 0)
-    )
-
-
-# canonical (issue, field, pattern) catalog — see config.summary_pairs
-_summary_pairs = summary_pairs
 
 
 def summary_aggregate(cfg: ConfigSpec, scope_slim: DataFrame) -> DataFrame:
     """ONE two-level aggregation producing EVERYTHING the summary needs per
     (source, issue): the non-grouped totals + first/last match (A1/A5), the
     grouped totals + last matching line (A3), and every field's count +
-    ordered joined content (A4/F5) — in a SINGLE pass over the slim scope.
+    ordered joined content (A4/F5) — in a SINGLE pass over `slim_scope`.
 
     r3 ran four scans over the materialized slim blocks; at 32M rows the
     summary job was the fan-out straggler and scaled worst 4→16 cores
@@ -275,49 +191,25 @@ def summary_aggregate(cfg: ConfigSpec, scope_slim: DataFrame) -> DataFrame:
     aggregation. r5: the aggregation runs at LINE GRAIN over PARSE-TIME
     hit columns (functions/fieldex.py) — no subject explode/union, no
     regex, and no full-text traffic left in this job; the field machinery
-    lives in the shared `line_grain_hit_agg` builder (also the engine of
-    the standalone `field_contents`).
+    lives in `line_grain_hit_agg`.
 
     first/last selections merge across the two levels by carrying the
     packed scan-order key next to each partial min_by/max_by: the key is
     unique per slim row within (source, issue), so lvl2's
     min_by(partial_value, partial_key) reproduces the global selection.
-    Non-grouped first/last are line-local projections (match_arr is in
-    scan order, so the issue's first match is element 1 of the minimal
-    line's array and the last is element -1 of the maximal line's).
+    Non-grouped first/last are the line-local first_m/last_m: the issue's
+    first match is the minimal line's first and the last is the maximal
+    line's last.
     """
-    pairs = _summary_pairs(cfg)
-    from radar_log_parser_spark.functions.schema import fld_cols
-
-    if pairs and fld_cols(cfg)[0] not in scope_slim.columns:
-        scope_slim = with_field_hits(cfg, scope_slim)
-
-    if "n_ng" in scope_slim.columns:
-        # pipeline slim scope: match_arr already reduced to the three
-        # line-local scalars the aggregation needs (pipeline.py) — the
-        # materialized blocks never carry the substrings
-        n_ng = F.col("n_ng")
-        first_m, last_m = F.col("first_m"), F.col("last_m")
-    else:
-        n_ng = F.size(F.coalesce(F.col("match_arr"), F.array()))
-        # try_: ANSI element_at throws on the empty arrays of non-matching
-        # lines (the values are only consumed where ng_ord is non-null,
-        # but the projection evaluates every row)
-        first_m = F.try_element_at("match_arr", F.lit(1))
-        last_m = F.try_element_at("match_arr", F.lit(-1))
     is_match = F.size(F.coalesce(F.col("grp_arr"), F.array())) > 0
-    ng_ord = F.when(~F.col("grouped") & (n_ng > 0), _line_ord())
+    ng_ord = F.when(~F.col("grouped") & (F.col("n_ng") > 0), _line_ord())
     g_ord = F.when(F.col("grouped") & is_match, _line_ord())
 
     return line_grain_hit_agg(
         scope_slim,
-        pairs,
+        summary_pairs(cfg),
         extra_row_cols=(
-            n_ng.alias("n_ng"),
-            F.col("grouped"),
-            first_m.alias("first_m"),
-            last_m.alias("last_m"),
-            F.col("text"),
+            "n_ng", "grouped", "first_m", "last_m", "text",
             ng_ord.alias("ng_ord"),
             g_ord.alias("g_ord"),
         ),
@@ -362,7 +254,7 @@ def summary_frame(
     RE2-subset ASCII semantics, so the extracts agree with the Python
     oracle on any content (ADVICE r3: \\d/\\w/\\b are ASCII everywhere
     now). Content never touches the driver unless the caller collects."""
-    pairs = _summary_pairs(cfg)
+    pairs = summary_pairs(cfg)
     issues_rows = [
         (iname, cfg.issues[iname].grouped, int(cfg.priority.get(iname, 0)))
         for iname in sorted(cfg.issues)

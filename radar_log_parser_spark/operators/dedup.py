@@ -176,11 +176,28 @@ def minhash_signatures(exploded: DataFrame, perms: int = MINHASH_PERMS) -> DataF
     return wide.select("doc_id", F.array(*[f"h{i}" for i in range(perms)]).alias("sig"))
 
 
+def _band_pairs(entries: DataFrame) -> DataFrame:
+    """Candidate pairs of a band table (doc_id, band, bh): every doc pair
+    sharing a (band, bh) bucket, once. The shuffle is O(n·bands); only
+    colliding candidates are verified."""
+    a = entries.alias("a")
+    b = entries.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bh") == F.col("b.bh"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
+        .dropDuplicates()
+    )
+
+
 def lsh_candidate_pairs(sigs: DataFrame, bands: int = LSH_BANDS) -> DataFrame:
-    """Band the signature, bucket-join within (band_idx, band_hash).
-    The shuffle is O(n·bands); only colliding candidates are verified."""
+    """Band the signature, bucket-join within (band, band hash)."""
     rows_per_band = MINHASH_PERMS // bands
-    band_entries = sigs.select(
+    return _band_pairs(sigs.select(
         "doc_id",
         F.posexplode(
             F.array(*[
@@ -190,20 +207,33 @@ def lsh_candidate_pairs(sigs: DataFrame, bands: int = LSH_BANDS) -> DataFrame:
                 ])
                 for b in range(bands)
             ])
-        ).alias("band_idx", "band_hash"),
-    )
-    a = band_entries.alias("a")
-    b = band_entries.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        .dropDuplicates()
-    )
+        ).alias("band", "bh"),
+    ))
+
+
+def _jaccard_verify(base: DataFrame, cand: DataFrame) -> DataFrame:
+    """Exact shingle-Jaccard verify of candidate pairs (a_id, b_id) over
+    `base` (doc_id, text): keeps pairs at ≥ JACCARD_NUM/JACCARD_DEN.
+
+    Verifies on STRING shingle arrays: array_intersect's hash-set kernel
+    over (w1,w2,w3) STRUCT elements measured 4.3 s min with 27 s GC
+    outliers vs a stable 1.8-2.0 s over plain strings at the sf1like
+    scale — struct equality/hashing inside the set build dominates and
+    allocates heavily. The struct↔string bijection (words are space-free)
+    makes the inter/uni sizes identical either way, so the cheaper element
+    type wins; construction cost of shingles_col's interpreted
+    per-element concat is noise next to the intersect."""
+    sh = base.select("doc_id", shingles_col().alias("sh"))
+    a = sh.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("a_sh"))
+    b = sh.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("b_sh"))
+    verified = cand.join(a, "a_id").join(b, "b_id")
+    inter = F.size(F.array_intersect("a_sh", "b_sh"))
+    uni = F.size("a_sh") + F.size("b_sh") - inter
+    return verified.select(
+        "a_id", "b_id",
+        inter.cast("long").alias("inter"),
+        uni.cast("long").alias("uni"),
+    ).filter(F.col("inter") * JACCARD_DEN >= JACCARD_NUM * F.col("uni"))
 
 
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -222,26 +252,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").cast("long").alias("doc_id"), "text"
     )
     sigs = minhash_signatures(shingle_strings_exploded(base))
-    cand = lsh_candidate_pairs(sigs)
-    # verify on STRING shingle arrays: array_intersect's hash-set kernel
-    # over (w1,w2,w3) STRUCT elements measured 4.3 s min with 27 s GC
-    # outliers vs a stable 1.8-2.0 s over plain strings at the sf1like
-    # scale — struct equality/hashing inside the set build dominates and
-    # allocates heavily. The struct↔string bijection (words are
-    # space-free) makes the inter/uni sizes identical either way, so the
-    # cheaper element type wins; construction cost of shingles_col's
-    # interpreted per-element concat is noise next to the intersect.
-    sh = base.select("doc_id", shingles_col().alias("sh"))
-    a = sh.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("a_sh"))
-    b = sh.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("b_sh"))
-    verified = cand.join(a, "a_id").join(b, "b_id")
-    inter = F.size(F.array_intersect("a_sh", "b_sh"))
-    uni = F.size("a_sh") + F.size("b_sh") - inter
-    return verified.select(
-        "a_id", "b_id",
-        inter.cast("long").alias("inter"),
-        uni.cast("long").alias("uni"),
-    ).filter(F.col("inter") * JACCARD_DEN >= JACCARD_NUM * F.col("uni"))
+    return _jaccard_verify(base, lsh_candidate_pairs(sigs))
 
 
 # --- MinHash+LSH, cross-engine hash family (oracle-checkable) ---------------
@@ -272,32 +283,24 @@ MD5_LINEAR = [
 del _rng
 
 
-def md5_base_hash(col):
-    """First 15 hex digits of md5 as a 60-bit BIGINT — computable
-    bit-identically in DuckDB (`('0x'||substr(md5(x),1,15))::BIGINT`).
-
-    r6: the hex→int step is a 15-digit shift-add parse instead of
-    `F.conv(hex, 16, 10)` — conv's generic radix machinery measured ~3×
-    the cost of computing the md5 itself (4.4 s vs 1.5 s over 2.4M
-    shingles), the parse is plain codegen'd arithmetic (1.0 s), and the
-    value is the same function of the input (verified: 0 mismatches over
-    the full 2.4M-shingle bench corpus).
-
-    High-volume call sites should NOT use this single-expression form:
-    the 15 digit extractions each reference the md5 subexpression, and
-    when the surrounding stage falls out of whole-stage codegen (or CSE
-    does not fire) the md5 is re-evaluated per digit. Project the md5
-    string in its own select first and parse with `_md5_hex15_parse` —
-    CollapseProject refuses to inline a non-cheap expression referenced
-    15×, so the boundary guarantees ONE md5 per row (measured 1.83 s →
-    0.79 s over the 2.6M-shingle sf1like explode)."""
-    return _md5_hex15_parse(F.md5(col))
-
-
 def _md5_hex15_parse(m_col):
     """Shift-add parse of the first 15 hex digits of an md5 STRING column
-    into a 60-bit BIGINT. Pass an already-projected md5 column (see
-    md5_base_hash docstring) so the md5 evaluates once per row."""
+    into a 60-bit BIGINT — computable bit-identically in DuckDB
+    (`('0x'||substr(md5(x),1,15))::BIGINT`).
+
+    r6: the shift-add parse replaced `F.conv(hex, 16, 10)` — conv's generic
+    radix machinery measured ~3× the cost of computing the md5 itself
+    (4.4 s vs 1.5 s over 2.4M shingles), the parse is plain codegen'd
+    arithmetic (1.0 s), and the value is the same function of the input
+    (verified: 0 mismatches over the full 2.4M-shingle bench corpus).
+
+    Pass an md5 column already projected in its own select: the 15 digit
+    extractions each reference `m_col`, and when the surrounding stage
+    falls out of whole-stage codegen (or CSE does not fire) an inline md5
+    is re-evaluated per digit. CollapseProject refuses to inline a
+    non-cheap expression referenced 15×, so the select boundary
+    guarantees ONE md5 per row (measured 1.83 s → 0.79 s over the
+    2.6M-shingle sf1like explode)."""
     acc = None
     for i in range(1, 16):
         a = F.ascii(F.substring(m_col, i, 1))
@@ -327,7 +330,7 @@ def q_dedup_minhash_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.select(
         F.col("doc_id").cast("long").alias("doc_id"), "text"
     )
-    # md5 in its OWN projection, parsed in the next (see md5_base_hash
+    # md5 in its OWN projection, parsed in the next (see _md5_hex15_parse
     # docstring): the boundary pins one md5 evaluation per shingle —
     # CollapseProject will not inline a non-cheap expr referenced 15×
     ex = (
@@ -357,32 +360,7 @@ def q_dedup_minhash_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
             ])
         ).alias("band", "bh"),
     )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        .dropDuplicates()
-    )
-    # STRING shingle arrays for the verify — see q_dedup_minhash_lsh: the
-    # struct-element array_intersect measured 2-7× slower with GC-driven
-    # outliers; the string↔struct bijection keeps inter/uni identical.
-    sh = base.select("doc_id", shingles_col().alias("sh"))
-    va = sh.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("a_sh"))
-    vb = sh.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("b_sh"))
-    verified = cand.join(va, "a_id").join(vb, "b_id")
-    inter = F.size(F.array_intersect("a_sh", "b_sh"))
-    uni = F.size("a_sh") + F.size("b_sh") - inter
-    return verified.select(
-        "a_id", "b_id",
-        inter.cast("long").alias("inter"),
-        uni.cast("long").alias("uni"),
-    ).filter(F.col("inter") * JACCARD_DEN >= JACCARD_NUM * F.col("uni"))
+    return _jaccard_verify(base, _band_pairs(bands))
 
 
 _MD5_AB_VALUES = ", ".join(
@@ -460,10 +438,13 @@ def _simhash_from_hashes(spark: SparkSession, docs: DataFrame, hb: DataFrame) ->
     form's aggregate is 21 plain long sums — well inside codegen — and
     the 60-term unpack lives in a separate post-agg projection.)
     Capacity: _SIMHASH_MAX_SHINGLES distinct shingles per document,
-    enforced with a loud raise_error sized so the packed sums themselves
-    can never hit ANSI long overflow first (see the constant); a
-    million-distinct-shingle document means many megabytes of text in
-    one row — re-shard upstream rather than silently truncate."""
+    enforced with a loud, named raise_error after the aggregation. The
+    named error fires first only below 2^21 distinct shingles per
+    document: from 2^21 up the packed sum itself passes 2^63 − 1 and ANSI
+    aborts the aggregate with a generic ARITHMETIC_OVERFLOW before the
+    guard runs — still loud, but not named. A million-distinct-shingle
+    document means many megabytes of text in one row — re-shard upstream
+    rather than silently truncate."""
     packs = []
     for j in range(_SIMHASH_PACKS):
         p = None
@@ -547,7 +528,7 @@ def q_dedup_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(F.size(F.split("text", " ")) >= 3)
     )
     # md5 projected alone, parsed in the next select — one md5/shingle
-    # (see md5_base_hash docstring)
+    # (see _md5_hex15_parse docstring)
     hb = sh.select("doc_id", F.md5(F.col("shingle")).alias("m")).select(
         "doc_id", _md5_hex15_parse(F.col("m")).alias("h")
     )
@@ -671,23 +652,12 @@ EMB_PLANES = [
 del _rng_p
 
 
-def _plane_dot(col, plane: list[float]):
-    return F.aggregate(
-        F.zip_with(
-            col,
-            F.array(*[F.lit(v) for v in plane]),
-            lambda x, y: x.cast("double") * y,
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _emb_sig_map(it):
     """Vectorized hyperplane-signature kernel (mapInArrow, guide §4.2):
     packs the 8 per-band 4-bit sign keys into ONE long per vector.
 
-    Bit-identical to the JVM fold `_plane_dot(...) >= 0` (verified
+    Bit-identical to a JVM left fold of `zip_with(vec, plane, x*y)`
+    tested `>= 0` (verified
     exhaustively on the bench corpus — 0 mismatches over 20k vectors):
     the loop accumulates `acc = acc + E[:, i] * p[i]` dimension by
     dimension, the same left-fold order and IEEE-754 double ops as the

@@ -25,7 +25,6 @@ from pyspark.sql import Window as W
 
 from radar_log_parser_spark.operators.dedup import (
     _SHINGLE_SQL,
-    md5_base_hash,
     shingle_structs,
 )
 from radar_log_parser_spark.operators.logquery import QuerySpec, _docs, _docs_par
@@ -208,7 +207,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 15-term shift-add parse that double site drops the stage out of
     # codegen and re-evaluates md5 per digit (measured 1.8 s vs 0.2 s
     # here). conv is one compact expression, immune to that blow-up; the
-    # shift-add parse (dedup.md5_base_hash) wins only on the high-volume
+    # shift-add parse (dedup._md5_hex15_parse) wins only on the high-volume
     # single-site explode paths.
     base_hash = F.conv(
         F.substring(

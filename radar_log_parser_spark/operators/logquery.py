@@ -41,15 +41,6 @@ def _docs_par(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _read_par(spark, f"{sf_dir}/documents.parquet")
 
 
-def fan_out(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Round-robin repartition to the session's default parallelism, used
-    ahead of row-EXPANDING chains (shingle explode, bit expansion, pairwise
-    scoring): a low-split source (one small parquet file here; one cold
-    region at 100 TB) would otherwise run the whole expansion on the few
-    scan tasks. The shuffle moves only the narrow pre-expansion rows."""
-    return df.repartition(spark.sparkContext.defaultParallelism)
-
-
 def _read_par(spark: SparkSession, path: str) -> DataFrame:
     """Read a parquet table, fanning out to the session's parallelism when
     the FILE LAYOUT cannot deliver it (r6; guide §2.5 input skew: "one
@@ -277,7 +268,7 @@ def q_field_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the reference's '<n> :  <joined>' cell, split into typed columns).
 
     Two-level ordered aggregation (same bucket scheme as the engine-side
-    aggregates.field_contents): a single collect_list+sort per source would
+    aggregates.line_grain_hit_agg): a single collect_list+sort per source would
     funnel every match of a source through ONE reducer's sort buffer — the
     scale-killer at 100×. Level 1 buckets by doc_id div 65536 and builds
     per-bucket joined strings in parallel (pre-joined per row, so the sorted

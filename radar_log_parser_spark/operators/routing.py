@@ -140,37 +140,35 @@ def other_routed(scope: DataFrame) -> DataFrame:
     )
 
 
-def grouped_routed(scope: DataFrame, cfg: ConfigSpec | None = None) -> DataFrame:
+def grouped_routed(scope: DataFrame, cfg: ConfigSpec) -> DataFrame:
     """F4 grouped routed rows: first grouping match per line; group 1 is the
     key, groups 2.. the detail tuple (reference: fillGroupDetails,
     analyzeLog.go:233-257; the ≥2-capture-group gate is enforced at parse
     time and by config validation).
 
-    With `cfg`, every NAMED capture group across the grouped issues is also
-    projected as a typed `g_<Name>` column (F10 — the reference renders
-    named groups as report columns, analyzeLog.go:201-203 /
-    details.html:101-108); a row of a different issue holds null. The
-    statically-known names come from IssueSpec.group_names()."""
+    Every NAMED capture group across the grouped issues is also projected
+    as a typed `g_<Name>` column (F10 — the reference renders named groups
+    as report columns, analyzeLog.go:201-203 / details.html:101-108); a
+    row of a different issue holds null. The statically-known names come
+    from IssueSpec.group_names()."""
     rows = scope.filter(F.col("grouped") & (F.size("grp_arr") > 0))
-    named_cols = []
-    if cfg is not None:
-        merged: dict[str, object] = {}
-        for iname in sorted(cfg.issues):
-            spec = cfg.issues[iname]
-            if not spec.grouped:
+    merged: dict[str, object] = {}
+    for iname in sorted(cfg.issues):
+        spec = cfg.issues[iname]
+        if not spec.grouped:
+            continue
+        names = spec.group_names()
+        for gi in range(1, len(names)):
+            nm = names[gi]
+            if not nm:
                 continue
-            names = spec.group_names()
-            for gi in range(1, len(names)):
-                nm = names[gi]
-                if not nm:
-                    continue
-                e = F.when(
-                    F.col("issue") == F.lit(iname), F.element_at("grp_arr", gi)
-                )
-                # at most one issue's when() fires per row, so a shared name
-                # across issues coalesces safely
-                merged[nm] = e if nm not in merged else F.coalesce(merged[nm], e)
-        named_cols = [v.alias(f"g_{k}") for k, v in sorted(merged.items())]
+            e = F.when(
+                F.col("issue") == F.lit(iname), F.element_at("grp_arr", gi)
+            )
+            # at most one issue's when() fires per row, so a shared name
+            # across issues coalesces safely
+            merged[nm] = e if nm not in merged else F.coalesce(merged[nm], e)
+    named_cols = [v.alias(f"g_{k}") for k, v in sorted(merged.items())]
     return rows.select(
         "source", "issue", "process", "proc_rank", "doc_id", "line_no",
         "tokens", "text",
@@ -192,10 +190,10 @@ def other_matches(scope: DataFrame) -> DataFrame:
 
 
 def grouped_matches(scope: DataFrame) -> DataFrame:
-    """Aggregation-width F4 rows (text kept: grouped_totals needs the last
-    matching line for the summary's Timestamp/LogLevel extracts)."""
+    """Aggregation-width F4 rows: the group key and detail tuple of every
+    grouped matching line, without the row payload."""
     return scope.filter(F.col("grouped") & (F.size("grp_arr") > 0)).select(
-        "source", "issue", "proc_rank", "line_no", "text",
+        "source", "issue", "proc_rank", "line_no",
         F.element_at("grp_arr", 1).alias("group_key"),
         F.expr("slice(grp_arr, 2, size(grp_arr) - 1)").alias("details"),
     )

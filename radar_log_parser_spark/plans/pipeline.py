@@ -464,42 +464,13 @@ class Pipeline:
         ready("other_routed", other)
         ready("grouped_routed", grouped)
 
-        # Aggregation reads a SLIM scope: every aggregate keys on
-        # (source, issue, proc_rank, line_no) plus the match arrays, and
-        # needs `text` only on grouped MATCHING rows (grouped_totals' /
-        # the fused summary's last-line extract) — field scanning no
-        # longer needs any text because the per-line hits are extracted
-        # at PARSE time (functions/fieldex.py, r5) and ride along as the
-        # sparse fld{k} struct columns. The projection drops
-        # tokens/n_tok/doc_id/process entirely and nulls text on
-        # everything but grouped matches. Checkpoint mode gets pruning
-        # from parquet; in bench mode the slim frame is materialized
-        # (serialized eager localCheckpoint): the summary DAG's three
-        # aggregate subtrees otherwise re-derive it from the fat parsed
-        # blocks — 3 full-row decodes of memory traffic, the resource the
-        # 4N leg is ceiling-bound on (A/B: summary job 186→85 s at 16
-        # cores, BENCH/BASELINE.md). The materialization runs in the MAIN
-        # thread but the tier-0/1 jobs above are already draining in the
-        # pool underneath it — the window is overlapped, not serial.
-        from radar_log_parser_spark.functions.schema import fld_cols
-
-        # match_arr itself stays behind: the aggregates only need the match
-        # COUNT and the first/last substring per line (line-local
-        # projections — match_arr is in scan order), so the slim blocks
-        # carry 3 scalars instead of every substring. match_sets, the one
-        # consumer of the full arrays, reads the fat scope directly.
-        scope_slim = scope.select(
-            "source", "issue", "proc_rank", "grouped", "line_no",
-            F.when(
-                F.col("grouped") & (F.size(F.coalesce(F.col("grp_arr"), F.array())) > 0),
-                F.col("text"),
-            ).alias("text"),
-            F.size(F.coalesce(F.col("match_arr"), F.array())).alias("n_ng"),
-            F.try_element_at("match_arr", F.lit(1)).alias("first_m"),
-            F.try_element_at("match_arr", F.lit(-1)).alias("last_m"),
-            "grp_arr",
-            *fld_cols(cfg),
-        )
+        # Aggregation reads the slim scope (agg.slim_scope). Checkpoint mode
+        # gets column pruning from parquet; bench mode materializes it, or the
+        # summary DAG's aggregate subtrees each re-derive it from the fat
+        # parsed blocks (A/B: summary job 186→85 s at 16 cores,
+        # BENCH/BASELINE.md). The tier-0/1 jobs above keep draining in the
+        # pool underneath this materialization.
+        scope_slim = agg.slim_scope(cfg, scope)
         if self.ckpt is None:
             s = time.monotonic()
             scope_slim = scope_slim.localCheckpoint(

@@ -7,12 +7,13 @@ from __future__ import annotations
 import pytest
 
 from radar_log_parser_spark.config import ConfigError, parse_config
+from radar_log_parser_spark.functions.schema import fld_cols
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_lint_rejects_1024_processes():
-    """aggregates._ord packs proc_rank into 10 bits — an issue with >=1024
+    """aggregates._line_ord packs proc_rank into 10 bits — an issue with >=1024
     processes must fail at config load, not as ARITHMETIC_OVERFLOW
     mid-aggregate (ADVICE r2)."""
     raw = {
@@ -55,6 +56,7 @@ def test_summary_is_distributed(spark):
     scales with the corpus (r4: the aggregates fused into ONE two-level
     pass over the slim scope)."""
     from radar_log_parser_spark.operators.aggregates import (
+        slim_scope,
         summary_aggregate,
         summary_frame,
     )
@@ -70,16 +72,19 @@ def test_summary_is_distributed(spark):
         }
     )
     sources = spark.createDataFrame([("s1",), ("s2",)], "source string")
-    # slim-scope rows: matches in scan order are "boom level=E xa" (line 10),
-    # then "boom xb", "boom 12:34" (line 11, left-to-right)
-    slim = spark.createDataFrame(
+    # scope rows: matches in scan order are "boom level=E xa" (line 10),
+    # then "boom xb", "boom 12:34" (line 11, left-to-right); the parse
+    # pass's field hits ride along in the fld column
+    scope = spark.createDataFrame(
         [
-            ("s1", "I1", 0, False, 10, None, ["boom level=E xa"], None),
-            ("s1", "I1", 0, False, 11, None, ["boom xb", "boom 12:34"], None),
+            ("s1", "I1", 0, False, 10, "l10", ["boom level=E xa"], None, (1, "xa")),
+            ("s1", "I1", 0, False, 11, "l11", ["boom xb", "boom 12:34"], None, (1, "xb")),
         ],
         "source string, issue string, proc_rank int, grouped boolean, "
-        "line_no long, text string, match_arr array<string>, grp_arr array<string>",
+        "line_no long, text string, match_arr array<string>, grp_arr array<string>, "
+        f"{fld_cols(cfg)[0]} struct<n:int,j:string>",
     )
+    slim = slim_scope(cfg, scope)
     df = summary_frame(spark, cfg, sources, summary_aggregate(cfg, slim))
     rows = {(r["source"], r["issue"]): r for r in df.collect()}
     r1 = rows[("s1", "I1")]

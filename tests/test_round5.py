@@ -87,7 +87,7 @@ def test_lint_allows_ascii_case_insensitive_and_plain_non_ascii():
 
 
 # --- ADVICE r4 (low): md5-LSH base hash must be 60-bit -----------------------
-def test_md5_base_hash_width(spark):
+def test_md5_hex15_parse_width(spark):
     """At 28 bits, ~16k distinct shingles guaranteed birthday collisions
     that biased EVERY permutation; the base is now 15 hex digits (60 bits)
     and the permutation family hashes both 30-bit halves."""
@@ -97,7 +97,7 @@ def test_md5_base_hash_width(spark):
 
     assert all(len(t) == 3 for t in dedup.MD5_LINEAR)  # Carter-Wegman triples
     df = spark.createDataFrame([("abc",), ("xyz shingle",)], "s string").select(
-        dedup.md5_base_hash(F.col("s")).alias("h")
+        dedup._md5_hex15_parse(F.md5(F.col("s"))).alias("h")
     )
     vals = [r["h"] for r in df.collect()]
     assert all(0 <= v < (1 << 60) for v in vals)

@@ -1,14 +1,15 @@
 """session.py: the driver heap default, driver-local dimension tables
 (`local_frame`) — schema and value round trips, the plans that use them,
-source guards that keep Python-RDD scans of driver lists and env-var
-switches out of the package — and the codegen cache size: a warm rerun
-compiles no classes."""
+source guards that keep Python-RDD scans of driver lists, env-var
+switches and unreferenced definitions out of the package — and the
+codegen cache size: a warm rerun compiles no classes."""
 
 from __future__ import annotations
 
 import ast
 import os
 import re
+from collections import Counter
 
 from pyspark.sql.types import LongType, StructType
 
@@ -16,9 +17,8 @@ from radar_log_parser_spark import session
 from radar_log_parser_spark.session import local_frame
 from test_dedup_similarity import SF_DIR
 
-PKG_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "radar_log_parser_spark"
-)
+REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG_DIR = os.path.join(REPO_DIR, "radar_log_parser_spark")
 
 
 def test_default_driver_mem_fits_the_host(monkeypatch):
@@ -72,13 +72,15 @@ def test_bench_plans_use_local_tables(pipeline_result):
         assert all(c in materialized for c in rdd_scans), (name, rdd_scans)
 
 
-def _package_modules():
-    for root, _dirs, names in os.walk(PKG_DIR):
+def _modules(top: str = PKG_DIR, recurse: bool = True):
+    for root, dirs, names in os.walk(top):
         for name in sorted(names):
             if name.endswith(".py"):
                 path = os.path.join(root, name)
                 with open(path) as f:
-                    yield os.path.relpath(path, PKG_DIR), ast.parse(f.read(), path)
+                    yield os.path.relpath(path, top), ast.parse(f.read(), path)
+        if not recurse:
+            dirs.clear()
 
 
 _COLUMNAR = re.compile(r"^(pd|pandas|pa|pyarrow)\.|\.(to_pandas|toPandas|to_arrow|toArrow)\(\)$")
@@ -89,7 +91,7 @@ def test_no_create_dataframe_over_python_lists():
     Python workers every time a consuming plan runs; small driver tables
     go through `local_frame`. Only pandas or Arrow tables may be passed."""
     bad = []
-    for rel, tree in _package_modules():
+    for rel, tree in _modules():
         for node in ast.walk(tree):
             if (
                 isinstance(node, ast.Call)
@@ -108,7 +110,7 @@ def test_only_session_reads_the_environment():
     `os.environ` or `os.getenv`."""
     bad = [
         f"{rel}:{node.lineno}"
-        for rel, tree in _package_modules()
+        for rel, tree in _modules()
         if rel != "session.py"
         for node in ast.walk(tree)
         if isinstance(node, ast.Attribute)
@@ -117,6 +119,35 @@ def test_only_session_reads_the_environment():
         and node.value.id == "os"
     ]
     assert not bad, bad
+
+
+def _referenced_names(tree):
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            yield node.id
+        elif isinstance(node, ast.Attribute):
+            yield node.attr
+        elif isinstance(node, ast.alias):
+            yield node.name.rsplit(".", 1)[-1]
+
+
+def test_no_unreferenced_package_definitions():
+    """Every top-level function and class in the package is referenced by
+    name from some module of the package, the tests, perfbench, tools or
+    the root scripts, its own definition aside. Code that nothing calls
+    is deleted, not kept as a second form."""
+    trees = [t for _rel, t in _modules(REPO_DIR, recurse=False)]
+    for sub in ("radar_log_parser_spark", "tests", "perfbench", "tools"):
+        trees += [t for _rel, t in _modules(os.path.join(REPO_DIR, sub))]
+    refs = Counter(n for t in trees for n in _referenced_names(t))
+    dead = [
+        f"{rel}:{node.lineno} {node.name}"
+        for rel, tree in _modules()
+        for node in tree.body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        and refs[node.name] == sum(1 for n in _referenced_names(node) if n == node.name)
+    ]
+    assert not dead, dead
 
 
 def test_warm_pipeline_run_compiles_no_classes(spark, cfg, vocab, fx, tmp_path):
