@@ -119,31 +119,6 @@ def ivf_centroids(emb: DataFrame, k: int = IVF_K) -> DataFrame:
     )
 
 
-def ivf_assignments(emb: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Assign every vector to its nearest centroid (max cosine) via a
-    broadcast join + max_by argmax — no window, so no sort shuffle: the
-    n×K scored rows collapse to one row per vector in the map-side partial
-    aggregation (scored rows for a vector never leave its partition). At
-    scale the output is written partitioned by cell so probes touch only
-    matching files.
-
-    Reference form (kept as the correctness twin for pytest): the
-    production query uses `_ivf_assign_factory` — the interpreted n×K
-    `_dot` folds with the embedding payload riding every scored row were
-    the dominant cost of the IVF query (2.2 s of its 1.6-2.2 s wall at
-    the 20k-vector scale; guide §4.2)."""
-    cos = _dot(F.col("embedding"), F.col("c_emb")) / (F.col("nrm") * F.col("c_nrm"))
-    scored = emb.join(F.broadcast(centroids)).select(
-        "vec_id", "embedding", "nrm", "cell", cos.alias("cos")
-    )
-    return scored.groupBy("vec_id").agg(
-        # argmax by cosine, deterministic min-cell tiebreak
-        F.max_by("cell", F.struct(F.col("cos"), (-F.col("cell")).alias("nc"))).alias("cell"),
-        F.first("embedding").alias("embedding"),
-        F.first("nrm").alias("nrm"),
-    )
-
-
 def _ivf_assign_factory(cent_bc):
     """Vectorized nearest-centroid assignment (mapInArrow, guide §4.2):
     one kernel call scores a whole batch against the K-row broadcast
@@ -151,8 +126,9 @@ def _ivf_assign_factory(cent_bc):
     embedding column passes through the kernel untouched (original
     float32 values), so no re-attach join is needed downstream.
 
-    Bit-identity with `ivf_assignments` (same argument as the dedup
-    kernels): the batch-vs-centroid dots accumulate
+    Bit-identity with the JVM form, a broadcast join of the centroids
+    and a `max_by` argmax (`tests/test_round6.py::ivf_assignments`; same
+    argument as the dedup kernels): the batch-vs-centroid dots accumulate
     `acc + E[:, i] ⊗ C[:, i]` dimension by dimension — the exact
     left-fold order of `_dot`'s F.aggregate — the vector norms fold the
     same way as `_norm_col` before one correctly-rounded sqrt, and the
@@ -210,8 +186,8 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # assignment via the vectorized kernel (see _ivf_assign_factory): the
     # K-row centroid table is collected once (cell-ascending — kernel
     # argmax tiebreak relies on this order) and broadcast; the n×K
-    # scoring never exists as Spark rows. `ivf_assignments` is the
-    # retained JVM twin pytest pins the kernel against.
+    # scoring never exists as Spark rows. Its JVM twin, which pytest pins
+    # the kernel against, is tests/test_round6.py::ivf_assignments.
     import numpy as np
 
     crows = centroids.orderBy("cell").toArrow()

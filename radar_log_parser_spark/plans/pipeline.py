@@ -5,10 +5,10 @@ Each checkpointed stage writes
     <work_dir>/<stage>/            parquet data (+ _SUCCESS from Spark)
     <work_dir>/<stage>/_lineage.json
 with a content fingerprint chaining (engine version, config hash, vocab
-hash, input path, parent fingerprints). On restart, a stage whose lineage
-fingerprint matches is READ instead of recomputed — killing the job after
-stage k and rerunning reproduces byte-identical final sinks without redoing
-stages ≤ k (north-rule resumability requirement).
+hash, input path, input fingerprint, parent fingerprints). On restart, a
+stage whose lineage fingerprint matches is READ instead of recomputed —
+killing the job after stage k and rerunning reproduces byte-identical final
+sinks without redoing stages ≤ k (north-rule resumability requirement).
 
 Storage format is switchable: parquet (default, always available) or
 Iceberg (same layout via a catalog table; requires the iceberg-spark
@@ -81,6 +81,24 @@ def _config_hash(cfg: ConfigSpec) -> str:
     return _fingerprint(repr(cfg))
 
 
+def input_fingerprint(spark: SparkSession, path: str) -> str:
+    """The input's content fingerprint, read on the driver with no Spark
+    job: the relative path, size and modification time of every file under
+    `path` (or of `path` itself), listed through Hadoop's FileSystem, so any
+    scheme Spark reads is covered. A new file at the same path changes it,
+    and no stage resumes over rows of the old input."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    root = fs.makeQualified(hpath).toString().rstrip("/")
+    files = fs.listFiles(hpath, True)
+    parts = []
+    while files.hasNext():
+        st = files.next()
+        rel = st.getPath().toString()[len(root) :].lstrip("/")
+        parts.append(f"{rel}\t{st.getLen()}\t{st.getModificationTime()}")
+    return _fingerprint(*sorted(parts))
+
+
 @dataclass
 class StageMetrics:
     stage: str
@@ -109,6 +127,9 @@ class Checkpointer:
     def __init__(self, spark: SparkSession, work_dir: str, fmt: str = "parquet"):
         self.spark = spark
         self.work_dir = work_dir
+        # recorded in every `_lineage.json`; `Pipeline` sets it to its
+        # input's content fingerprint
+        self.input_fp = ""
         if fmt == "iceberg" and not self._iceberg_available():
             raise RuntimeError(
                 "iceberg requested but iceberg-spark runtime not on the "
@@ -223,6 +244,7 @@ class Checkpointer:
                     "stage": stage,
                     "fingerprint": fingerprint,
                     "parents": parents,
+                    "input_fingerprint": self.input_fp,
                     "engine_version": ENGINE_VERSION,
                     "format": self.fmt,
                     "rows": metrics.rows,
@@ -283,11 +305,17 @@ class Pipeline:
         vocab_fp = hashlib.sha256(
             "\x00".join(vocab.id_to_token).encode()
         ).hexdigest()[:16]
+        # input CONTENT fingerprint: a new file at the same input path must
+        # invalidate every checkpoint; only checkpointed runs need it
+        self.input_fp = input_fingerprint(spark, input_path) if checkpoint else ""
+        if self.ckpt is not None:
+            self.ckpt.input_fp = self.input_fp
         self._root_fp = _fingerprint(
             ENGINE_VERSION,
             _config_hash(cfg),
             vocab_fp,
             input_path,
+            self.input_fp,
         )
         self.metrics: list[StageMetrics] = []
 

@@ -43,6 +43,24 @@ def default_driver_mem() -> str:
     return f"{min(max(gib, 1), MAX_HEAP_GIB)}g"
 
 
+def worker_daemon(master: str) -> str | None:
+    """`radar_log_parser_spark.daemon` (see its docstring) when a Python
+    worker can import this package as it starts, else None for Spark's own
+    daemon. The worker imports the package before any task has shipped a
+    `--py-files` archive, so that holds only when the package was loaded
+    from a plain directory that is the working directory or an entry of
+    `PYTHONPATH`, and only on a local master, whose workers share the
+    driver's working directory and environment; on a cluster the driver
+    cannot tell."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    if not (master == "local" or master.startswith("local[")) or not os.path.isdir(root):
+        return None
+    dirs = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    if os.path.realpath(root) in {os.path.realpath(d) for d in dirs if d}:
+        return "radar_log_parser_spark.daemon"
+    return None
+
+
 def get_spark(
     app: str = "radar_log_parser_spark",
     master: str | None = None,
@@ -98,6 +116,9 @@ def get_spark(
         # runs. Static: read once, when the JVM compiles its first plan.
         .config("spark.sql.codegen.cache.maxEntries", "1024")
     )
+    daemon = worker_daemon(master)
+    if daemon is not None:
+        b = b.config("spark.python.daemon.module", daemon)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

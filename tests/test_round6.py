@@ -294,6 +294,25 @@ def test_simhash_packed_equals_bit_expansion(spark):
     assert got == ref and got
 
 
+def ivf_assignments(emb, centroids):
+    """The IVF kernel's JVM reference: assign every vector to its nearest
+    centroid (max cosine) with a broadcast join and a `max_by` argmax,
+    min cell on ties. The production query runs `_ivf_assign_factory`
+    instead: these interpreted n×K `_dot` folds, with the embedding
+    riding every scored row, were most of the IVF query's time."""
+    from radar_log_parser_spark.operators.dedup import _dot
+
+    cos = _dot(F.col("embedding"), F.col("c_emb")) / (F.col("nrm") * F.col("c_nrm"))
+    scored = emb.join(F.broadcast(centroids)).select(
+        "vec_id", "embedding", "nrm", "cell", cos.alias("cos")
+    )
+    return scored.groupBy("vec_id").agg(
+        F.max_by("cell", F.struct(F.col("cos"), (-F.col("cell")).alias("nc"))).alias("cell"),
+        F.first("embedding").alias("embedding"),
+        F.first("nrm").alias("nrm"),
+    )
+
+
 def test_ivf_assign_kernel_equals_jvm_twin(spark):
     """The vectorized nearest-centroid kernel must reproduce the JVM
     broadcast-join + max_by argmax assignment for EVERY vector (cells,
@@ -304,7 +323,6 @@ def test_ivf_assign_kernel_equals_jvm_twin(spark):
     from radar_log_parser_spark.operators.similarity import (
         _emb,
         _ivf_assign_factory,
-        ivf_assignments,
         ivf_centroids,
     )
 

@@ -1,19 +1,29 @@
 """session.py: the driver heap default, driver-local dimension tables
 (`local_frame`) — schema and value round trips, the plans that use them,
 source guards that keep Python-RDD scans of driver lists, env-var
-switches and unreferenced definitions out of the package — and the
-codegen cache size: a warm rerun compiles no classes."""
+switches and unreferenced definitions out of the package — the codegen
+cache size: a warm rerun compiles no classes — and the Python worker
+daemon: workers import pyspark from site-packages with no zipimporter,
+and a `spark-submit --py-files` job keeps Spark's own daemon."""
 
 from __future__ import annotations
 
 import ast
+import json
 import os
 import re
+import shutil
+import site
+import subprocess
+import sys
+import zipfile
+import zipimport
 from collections import Counter
 
+import pytest
 from pyspark.sql.types import LongType, StructType
 
-from radar_log_parser_spark import session
+from radar_log_parser_spark import daemon, session
 from radar_log_parser_spark.session import local_frame
 from test_dedup_similarity import SF_DIR
 
@@ -183,3 +193,143 @@ def test_warm_query_pass_compiles_no_classes(spark):
             s.spark(spark, SF_DIR).collect()
         compiles.append(session.codegen_compiles(spark) - before)
     assert compiles[1] == 0, compiles
+
+
+def test_package_root_is_import_free():
+    """`python -m radar_log_parser_spark.daemon` imports the package root
+    before the daemon drops Spark's archives from the path, so the root may
+    hold only a docstring, `__future__` imports and constant assignments:
+    anything else could load pyspark from `pyspark.zip` first."""
+    ((_rel, tree),) = [m for m in _modules(recurse=False) if m[0] == "__init__.py"]
+    bad = [
+        f"__init__.py:{node.lineno} {ast.unparse(node)[:60]}"
+        for i, node in enumerate(tree.body)
+        if not (
+            (i == 0 and isinstance(node, ast.Expr) and isinstance(node.value, ast.Constant))
+            or (isinstance(node, ast.ImportFrom) and node.module == "__future__")
+            or (isinstance(node, (ast.Assign, ast.AnnAssign)) and isinstance(node.value, ast.Constant))
+        )
+    ]
+    assert not bad, bad
+
+
+def test_worker_imports_pyspark_from_site_packages(spark):
+    """A Python worker of a `get_spark` session holds no zipimporter, so the
+    `importlib.invalidate_caches()` each task calls re-reads no archive.
+    Under Spark's own daemon a worker held 16, over `pyspark.zip`, the
+    py4j zip and the `spark-core` jar."""
+
+    def probe(batches):
+        import sys
+        import zipimport
+
+        import pyarrow as pa
+        import pyspark
+
+        for _ in batches:
+            pass
+        n = sum(isinstance(v, zipimport.zipimporter) for v in sys.path_importer_cache.values())
+        yield pa.RecordBatch.from_pydict({"zips": [n], "pyspark": [pyspark.__file__]})
+
+    (row,) = spark.range(1, numPartitions=1).mapInArrow(probe, "zips long, pyspark string").collect()
+    assert row.zips == 0
+    assert any(row.pyspark.startswith(d + os.sep) for d in site.getsitepackages()), row.pyspark
+
+
+def _spark_layout(tmp_path, zipped_version: str) -> tuple[list[str], str]:
+    """Spark's three archives, with `zipped_version` in `pyspark.zip`, and
+    a site-packages dir holding pyspark 4.1.2 and py4j."""
+    lib = tmp_path / "lib"
+    lib.mkdir()
+    files = {
+        "pyspark.zip": {"pyspark/__init__.py": "", "pyspark/version.py": f"__version__: str = '{zipped_version}'\n"},
+        "py4j-0.10.9.9-src.zip": {"py4j/__init__.py": ""},
+        "spark-core_2.13-4.1.2.jar": {"org/apache/spark/A.class": ""},
+    }
+    for name, members in files.items():
+        with zipfile.ZipFile(lib / name, "w") as z:
+            for member, text in members.items():
+                z.writestr(member, text)
+    sp = tmp_path / "site-packages"
+    for rel, text in {"pyspark/__init__.py": "", "pyspark/version.py": "__version__: str = '4.1.2'\n", "py4j/__init__.py": ""}.items():
+        (sp / rel).parent.mkdir(parents=True, exist_ok=True)
+        (sp / rel).write_text(text)
+    return [str(lib / name) for name in files], str(sp)
+
+
+@pytest.mark.parametrize("zipped, dropped", [("4.1.2", True), ("4.0.0", False)])
+def test_daemon_drops_archives_only_for_the_same_pyspark(monkeypatch, tmp_path, zipped, dropped):
+    archives, sp = _spark_layout(tmp_path, zipped)
+    path = [str(tmp_path), *archives, sp]
+    cache = {a: zipimport.zipimporter(a) for a in archives}
+    cache[os.path.join(archives[0], "pyspark")] = zipimport.zipimporter(os.path.join(archives[0], "pyspark"))
+    monkeypatch.setattr(sys, "path", list(path))
+    monkeypatch.setattr(sys, "path_importer_cache", dict(cache))
+    daemon.drop_spark_archives()
+    if dropped:
+        assert sys.path == [str(tmp_path), sp]
+        assert not any(isinstance(v, zipimport.zipimporter) for v in sys.path_importer_cache.values())
+    else:
+        assert sys.path == path
+        assert all(sys.path_importer_cache.get(k) is v for k, v in cache.items())
+
+
+def test_worker_daemon_needs_a_local_master_and_an_importable_package(monkeypatch, tmp_path):
+    monkeypatch.delenv("PYTHONPATH", raising=False)
+    monkeypatch.chdir(REPO_DIR)
+    assert session.worker_daemon("local[2]") == "radar_log_parser_spark.daemon"
+    assert session.worker_daemon("spark://host:7077") is None
+    monkeypatch.chdir(tmp_path)
+    assert session.worker_daemon("local[2]") is None
+    monkeypatch.setenv("PYTHONPATH", REPO_DIR)
+    assert session.worker_daemon("local[2]") == "radar_log_parser_spark.daemon"
+
+
+_PY_FILES_JOB = """
+import json
+
+from radar_log_parser_spark.session import get_spark
+
+spark = get_spark(master="local[2]")
+
+
+def double(batches):
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    import radar_log_parser_spark
+
+    for b in batches:
+        yield pa.RecordBatch.from_pydict(
+            {"id": pc.multiply(b.column(0), 2), "pkg": [radar_log_parser_spark.__file__] * b.num_rows}
+        )
+
+
+rows = spark.range(100).mapInArrow(double, "id long, pkg string").collect()
+print(json.dumps({
+    "daemon": spark.sparkContext.getConf().get("spark.python.daemon.module"),
+    "ids": sorted(r.id for r in rows),
+    "pkgs": sorted({r.pkg for r in rows}),
+}))
+spark.stop()
+"""
+
+
+def test_py_files_job_keeps_the_stock_daemon(tmp_path):
+    """`spark-submit --py-files` ships the package to a worker with each
+    task, after the daemon has started, so the daemon cannot import it:
+    `get_spark` must leave Spark's daemon in place, and the job's Arrow
+    UDF runs. Run from a directory outside the repo, without PYTHONPATH."""
+    shutil.make_archive(str(tmp_path / "pkg"), "zip", REPO_DIR, "radar_log_parser_spark")
+    (tmp_path / "job.py").write_text(_PY_FILES_JOB)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEM"] = "1g"
+    p = subprocess.run(
+        [os.path.join(os.environ["SPARK_HOME"], "bin", "spark-submit"), "--py-files", "pkg.zip", "job.py"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert p.returncode == 0, p.stderr[-3000:]
+    out = json.loads(p.stdout.strip().splitlines()[-1])
+    assert out["daemon"] is None
+    assert out["ids"] == [2 * i for i in range(100)]
+    assert len(out["pkgs"]) == 1 and "pkg.zip" in out["pkgs"][0], out["pkgs"]
