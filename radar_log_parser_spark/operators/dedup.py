@@ -163,17 +163,27 @@ WHERE len(list_intersect(a.sh, b.sh)) * {JACCARD_DEN}
 
 
 # --- MinHash + LSH: the scale path ------------------------------------------
-def minhash_signatures(exploded: DataFrame, perms: int = MINHASH_PERMS) -> DataFrame:
-    """(doc_id, shingle) rows → (doc_id, sig array<int>). One groupBy with
-    map-side partial aggregation; the hash family is murmur3 seeded by the
-    permutation index — all JVM-side. (r6: takes the exploded shingle rows
-    directly — see shingle_strings_exploded — instead of re-exploding a
-    materialized array column.)"""
-    aggs = [
-        F.min(F.hash("shingle", F.lit(i))).alias(f"h{i}") for i in range(perms)
-    ]
-    wide = exploded.groupBy("doc_id").agg(*aggs)
-    return wide.select("doc_id", F.array(*[f"h{i}" for i in range(perms)]).alias("sig"))
+def minhash_bands(hashed: DataFrame, perm, perms: int, bands: int, band_key) -> DataFrame:
+    """(doc_id, per-shingle hash columns) rows → band table (doc_id, band,
+    bh), the one signature-and-band plan of both MinHash hash families.
+    ONE groupBy(doc_id) of `perms` min-aggregates `perm(i)` (map-side
+    partial aggregation), then `bands` band keys `band_key(rows...)` over
+    consecutive signature rows, posexploded."""
+    wide = hashed.groupBy("doc_id").agg(
+        *[F.min(perm(i)).alias(f"h{i}") for i in range(perms)]
+    )
+    rows_per_band = perms // bands
+    return wide.select(
+        "doc_id",
+        F.posexplode(
+            F.array(*[
+                band_key(*[
+                    F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)
+                ])
+                for b in range(bands)
+            ])
+        ).alias("band", "bh"),
+    )
 
 
 def _band_pairs(entries: DataFrame) -> DataFrame:
@@ -192,23 +202,6 @@ def _band_pairs(entries: DataFrame) -> DataFrame:
         .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
         .dropDuplicates()
     )
-
-
-def lsh_candidate_pairs(sigs: DataFrame, bands: int = LSH_BANDS) -> DataFrame:
-    """Band the signature, bucket-join within (band, band hash)."""
-    rows_per_band = MINHASH_PERMS // bands
-    return _band_pairs(sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[
-                F.hash(*[
-                    F.element_at("sig", b * rows_per_band + r + 1)
-                    for r in range(rows_per_band)
-                ])
-                for b in range(bands)
-            ])
-        ).alias("band", "bh"),
-    ))
 
 
 def _jaccard_verify(base: DataFrame, cand: DataFrame) -> DataFrame:
@@ -251,8 +244,14 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.select(
         F.col("doc_id").cast("long").alias("doc_id"), "text"
     )
-    sigs = minhash_signatures(shingle_strings_exploded(base))
-    return _jaccard_verify(base, lsh_candidate_pairs(sigs))
+    bands = minhash_bands(
+        shingle_strings_exploded(base),
+        lambda i: F.hash("shingle", F.lit(i)),
+        MINHASH_PERMS,
+        LSH_BANDS,
+        F.hash,
+    )
+    return _jaccard_verify(base, _band_pairs(bands))
 
 
 # --- MinHash+LSH, cross-engine hash family (oracle-checkable) ---------------
@@ -319,10 +318,11 @@ def q_dedup_minhash_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     murmur3 path); the 16 permutations derive from that single 60-bit base
     hash as (A_i·hi + B_i·lo + C_i) mod P integer arithmetic over the two
     30-bit halves, identical in DuckDB (see MD5_LINEAR block).
-    Plan shape is identical to the production path: explode shingles → 16
-    min-aggregates (map-side partial agg) → 4-row band arrays → band-bucket
-    equi-join on the band's row array → verify colliding candidates with
-    exact Jaccard. Shuffle O(n·bands); never all-pairs."""
+    The plan is the production path's (`minhash_bands`, `_band_pairs`,
+    `_jaccard_verify`): explode shingles → 16 min-aggregates → 4-row band
+    arrays → band-bucket equi-join on the band's row array → exact-Jaccard
+    verify of the colliding candidates. Shuffle O(n·bands); never
+    all-pairs."""
     docs = _docs_par(spark, sf_dir).filter(F.size(F.split("text", " ")) >= 3)
     # r6: no materialization — shingling is fully codegen now (see
     # q_dedup_minhash_lsh for the measured localCheckpoint pathology this
@@ -345,21 +345,8 @@ def q_dedup_minhash_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
         lo = F.col("h").bitwiseAND(F.lit(MD5_LO_MASK))
         return (F.lit(a) * hi + F.lit(b) * lo + F.lit(c)) % F.lit(MD5_P)
 
-    wide = ex.groupBy("doc_id").agg(
-        *[F.min(perm(i)).alias(f"h{i}") for i in range(MD5_PERMS)]
-    )
-    rows_per_band = MD5_PERMS // MD5_BANDS
-    bands = wide.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[
-                F.array(*[
-                    F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)
-                ])
-                for b in range(MD5_BANDS)
-            ])
-        ).alias("band", "bh"),
-    )
+    # a band's key is its row array itself (DuckDB joins on the same list)
+    bands = minhash_bands(ex, perm, MD5_PERMS, MD5_BANDS, F.array)
     return _jaccard_verify(base, _band_pairs(bands))
 
 
@@ -410,13 +397,11 @@ _SIMHASH_FIELD_BITS = 21  # per-bit count field stride in the packed sums
 _SIMHASH_FIELDS = 64 // _SIMHASH_FIELD_BITS  # counts per packed long (3)
 _SIMHASH_PACKS = SIMHASH_BITS // _SIMHASH_FIELDS  # packed columns (20)
 # Documents with more distinct shingles than this cap fail LOUDLY via the
-# guard below. The cap must sit well under the point where the packed SUM
-# itself overflows a signed long — max sum ≈ nsh · 2^(2·FIELD_BITS) for
-# 3 fields — or ANSI mode aborts the aggregate with a generic
-# ARITHMETIC_OVERFLOW before the guard can name the problem (the r6a
-# 16-bit/4-field layout did exactly that from 2^15 shingles up, HALF its
-# nominal 2^16-1 capacity). 21-bit strides keep sums < 2^62 up to this
-# 2^20-1 cap — 2× margin — while widening the legal domain 16×.
+# guard below. 21-bit strides keep every count field exact and the packed
+# sums < 2^62 up to this 2^20-1 cap — 2× margin; past 2^21 shingles a sum
+# leaves the signed long and its try_sum turns NULL, still behind the
+# guard (the r6a 16-bit/4-field layout's plain sums ANSI-aborted with a
+# generic ARITHMETIC_OVERFLOW from 2^15 shingles up, before its guard).
 _SIMHASH_MAX_SHINGLES = (1 << 20) - 1
 
 
@@ -439,12 +424,11 @@ def _simhash_from_hashes(spark: SparkSession, docs: DataFrame, hb: DataFrame) ->
     the 60-term unpack lives in a separate post-agg projection.)
     Capacity: _SIMHASH_MAX_SHINGLES distinct shingles per document,
     enforced with a loud, named raise_error after the aggregation. The
-    named error fires first only below 2^21 distinct shingles per
-    document: from 2^21 up the packed sum itself passes 2^63 − 1 and ANSI
-    aborts the aggregate with a generic ARITHMETIC_OVERFLOW before the
-    guard runs — still loud, but not named. A million-distinct-shingle
-    document means many megabytes of text in one row — re-shard upstream
-    rather than silently truncate."""
+    packed sums are `try_sum`s: from 2^21 shingles up a sum passes 2^63 − 1
+    and turns NULL instead of aborting the aggregate with a generic
+    ARITHMETIC_OVERFLOW, so the named guard fires at any document size. A
+    million-distinct-shingle document means many megabytes of text in one
+    row — re-shard upstream rather than silently truncate."""
     packs = []
     for j in range(_SIMHASH_PACKS):
         p = None
@@ -459,7 +443,7 @@ def _simhash_from_hashes(spark: SparkSession, docs: DataFrame, hb: DataFrame) ->
         packs.append(p)
     wide = hb.groupBy("doc_id").agg(
         F.count("*").alias("nsh"),
-        *[F.sum(packs[j]).alias(f"p{j}") for j in range(_SIMHASH_PACKS)],
+        *[F.try_sum(packs[j]).alias(f"p{j}") for j in range(_SIMHASH_PACKS)],
     )
     bitsum = None
     for j in range(_SIMHASH_PACKS):
@@ -628,10 +612,6 @@ EMB_LSH_BANDS = 8
 EMB_LSH_BITS = 4  # per band → 32 hyperplanes total
 
 
-class MissingEmbeddingError(LookupError):
-    """A band entry's vec_id has no row in the broadcast embedding matrix."""
-
-
 # Deterministic GAUSSIAN hyperplanes from a fixed-seed PRNG: both engines
 # embed the SAME literal arrays (repr(float) round-trips the exact double in
 # Python, Spark and DuckDB), so the signature (and therefore the output) is
@@ -654,7 +634,9 @@ del _rng_p
 
 def _emb_sig_map(it):
     """Vectorized hyperplane-signature kernel (mapInArrow, guide §4.2):
-    packs the 8 per-band 4-bit sign keys into ONE long per vector.
+    packs the 8 per-band 4-bit sign keys into ONE long per vector and
+    passes the embedding column through untouched, so the band entries
+    carry their own vectors into the bucket kernel.
 
     Bit-identical to a JVM left fold of `zip_with(vec, plane, x*y)`
     tested `>= 0` (verified
@@ -690,24 +672,27 @@ def _emb_sig_map(it):
                 key |= (acc >= 0.0).astype(np.int64) << b
             sig |= key << (EMB_LSH_BITS * t)
         yield pa.RecordBatch.from_arrays(
-            [vid, pa.array(sig)], ["vec_id", "sig"]
+            [vid, pa.array(sig), batch.column("embedding")],
+            ["vec_id", "sig", "embedding"],
         )
 
 
-def _emb_bucket_verify_factory(emb_bc, thr: float):
+def _emb_bucket_verify_factory(thr: float):
     """Per-BUCKET pair generation + exact-cosine verify in one vectorized
-    Arrow kernel (groupBy(band, key).applyInArrow; guide §8: every stage
-    but the last operates on a lightweight proxy). The input is the NARROW
-    band-entry table (vec_id, sig, band, key — one (band, key) bucket per
-    call, n·bands rows total across buckets); the ~n²/2^bits-per-bucket
-    candidate pairs are generated AND verified inside numpy, so the pair
-    stream never crosses a serialization boundary at all. (The
-    alternatives both lose: attaching embeddings by broadcast join pushes
-    every pair through an interpreted JVM fold — 18 s at the 82.5M-pair
-    bench scale — and streaming the narrow pairs into a mapInArrow verify
-    pays ~26 s of pure JVM→Arrow boundary for the same rows, measured
-    with a passthrough kernel.) Output is only the prefiltered survivors;
-    round(·,6) + the final threshold stay in Spark expressions.
+    Arrow kernel (groupBy(band, key).applyInArrow). The input is the
+    band-entry table (vec_id, sig, embedding, band, key — one (band, key)
+    bucket per call, n·bands rows total across buckets): each vector
+    crosses the UDF boundary once per band, inside the bucket that uses
+    it, so the kernel reads the bucket's vectors from its own rows and no
+    driver or broadcast state exists. The ~n²/2^bits-per-bucket candidate
+    pairs are generated AND verified inside numpy, so the pair stream
+    never crosses a serialization boundary at all. (The alternatives both
+    lose: attaching embeddings to the pairs by join pushes every pair
+    through an interpreted JVM fold — 18 s at the 82.5M-pair bench scale —
+    and streaming the narrow pairs into a mapInArrow verify pays ~26 s of
+    pure JVM→Arrow boundary for the same rows, measured with a passthrough
+    kernel.) Output is only the prefiltered survivors; round(·,6) + the
+    final threshold stay in Spark expressions.
 
     The emitted pair set is IDENTICAL to the band equi-join + first-band
     filter: within a bucket of band t every a<b pair collides by
@@ -738,21 +723,19 @@ def _emb_bucket_verify_factory(emb_bc, thr: float):
         k = tbl.num_rows
         if k < 2:
             return empty
-        ids_s, E = emb_bc.value  # ids_s: SORTED vec_ids; E: (n, d) f64
         vid = tbl.column("vec_id").to_numpy(zero_copy_only=False)
         sig = tbl.column("sig").to_numpy(zero_copy_only=False)
+        E = (
+            tbl.column("embedding")
+            .combine_chunks()
+            .flatten()
+            .to_numpy(zero_copy_only=False)
+            .reshape(k, -1)
+            .astype(np.float64)
+        )
         band = tbl.column("band")[0].as_py()
         o = np.argsort(vid)  # ascending → upper triangle ⟺ a_id < b_id
-        vid, sig = vid[o], sig[o]
-        pos = np.minimum(np.searchsorted(ids_s, vid), len(ids_s) - 1)
-        # searchsorted lands an absent id on its neighbour's row: check the
-        # gather, or that id would verify against the wrong vector
-        if not np.array_equal(ids_s[pos], vid):
-            missing = vid[ids_s[pos] != vid]
-            raise MissingEmbeddingError(
-                f"vec_id(s) not in the embedding matrix: {missing[:10].tolist()}"
-            )
-        Eb = E[pos]  # (k, d) gather
+        vid, sig, Eb = vid[o], sig[o], E[o]
         nrm2 = np.zeros(k, dtype=np.float64)
         for i in range(Eb.shape[1]):
             nrm2 = nrm2 + Eb[:, i] * Eb[:, i]
@@ -833,10 +816,9 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     at sf0.001 AND sf0.01; the DuckDB oracle runs the SAME deterministic
     planes, so the driver check is a full value match.
 
-    Eager driver collect: building the DataFrame, not collecting it, runs
-    a Spark job that pulls the whole embedding table to the driver
-    (`toArrow()`) and broadcasts it, so the driver holds an n×d float64
-    matrix (n vectors of EMB_DIM) before any action is called."""
+    Building the DataFrame runs no Spark job beyond the parquet read's
+    own, and the driver holds no vectors: each band entry carries its
+    vector to its bucket's kernel call."""
     # r6 restructure (guide §2.3/§2.4, worked example §8): the r5 plan
     # carried BOTH 64-float embeddings + norms through every band-colliding
     # row into a dropDuplicates shuffle — measured 105M pre-dedup rows ×
@@ -844,8 +826,9 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bench). Now:
     #   1. the 32 hyperplane signs are computed by the vectorized Arrow
     #      kernel `_emb_sig_map` (bit-identical left fold — see its
-    #      docstring) and packed into ONE long per vector, so band
-    #      entries are NARROW (vec_id, sig, band, key) — no payload;
+    #      docstring) and packed into ONE long per vector; the band entries
+    #      (vec_id, sig, embedding, band, key) are n·bands rows, each with
+    #      its own vector — never one row per candidate pair;
     #   2. the band buckets go STRAIGHT into the per-bucket Arrow kernel
     #      (_emb_bucket_verify_factory): pair generation, first-colliding-
     #      band dedup (one XOR + nibble tests on the packed sigs — exactly
@@ -854,17 +837,15 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     #      pair stream never exists as Spark rows (the r6a broadcast-join
     #      attach paid an 18 s interpreted-fold stage over 82.5M pairs;
     #      a narrow-pair mapInArrow verify paid ~26 s of pure JVM→Arrow
-    #      boundary for the same rows — measured with a passthrough);
-    #   3. the embedding matrix rides ONE broadcast into the kernel (the
-    #      same driver-collected relation a F.broadcast attach would ship;
-    #      at 100-TB scale the broadcast is replaced by slicing the attach
-    #      per guide §8.4 — the bucket-kernel shape is unchanged).
+    #      boundary for the same rows — measured with a passthrough).
     # Output contract identical: same candidate set (collide in ≥1 band),
     # one row per pair, bit-identical cosines.
     emb = _read_par(spark, f"{sf_dir}/embeddings.parquet").select(
         F.col("vec_id").cast("long").alias("vec_id"), "embedding"
     )
-    sigs = emb.mapInArrow(_emb_sig_map, "vec_id long, sig long")
+    sigs = emb.mapInArrow(
+        _emb_sig_map, "vec_id long, sig long, embedding array<float>"
+    )
     nibbles = F.array(*[
         F.shiftright("sig", EMB_LSH_BITS * t)
         .bitwiseAND(F.lit((1 << EMB_LSH_BITS) - 1))
@@ -872,26 +853,8 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         for t in range(EMB_LSH_BANDS)
     ])
     entries = sigs.select(
-        "vec_id", "sig", F.posexplode(nibbles).alias("band", "key")
+        "vec_id", "sig", "embedding", F.posexplode(nibbles).alias("band", "key")
     )
-    import numpy as np
-
-    rows = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .select(F.col("vec_id").cast("long").alias("vec_id"), "embedding")
-        .toArrow()
-    )
-    ids = rows.column("vec_id").to_numpy(zero_copy_only=False)
-    E = (
-        rows.column("embedding")
-        .combine_chunks()
-        .flatten()
-        .to_numpy(zero_copy_only=False)
-        .reshape(len(ids), EMB_DIM)
-        .astype(np.float64)
-    )
-    order = np.argsort(ids)
-    emb_bc = spark.sparkContext.broadcast((ids[order], E[order]))
     # The prefilter threshold handed to the kernel is STRICTLY weaker than
     # the rounded test — round6(x) >= 0.45 requires x >= 0.4499995 - 1ulp,
     # far above 0.449999 — so it drops no qualifying pair; round(·,6) and
@@ -909,7 +872,7 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified = entries.repartition(P, "band", "key").groupBy(
         "band", "key"
     ).applyInArrow(
-        _emb_bucket_verify_factory(emb_bc, COSINE_THRESHOLD - 1e-6),
+        _emb_bucket_verify_factory(COSINE_THRESHOLD - 1e-6),
         "a_id long, b_id long, cos_raw double",
     )
     return verified.select(

@@ -25,15 +25,6 @@ from pyspark.sql import types as T
 
 from radar_log_parser_spark.operators.logquery import QuerySpec, _docs
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("media", T.BinaryType(), False),
-        T.StructField("media_type", T.StringType(), False),
-        T.StructField("n_bytes", T.LongType(), False),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),

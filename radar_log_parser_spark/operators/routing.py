@@ -23,8 +23,6 @@ from pyspark.sql import functions as F
 from radar_log_parser_spark.config import ConfigSpec
 from radar_log_parser_spark.session import local_frame
 
-ORD_COLS = ("proc_rank", "line_no", "match_pos")
-
 
 def kept_processes(parsed: DataFrame) -> DataFrame:
     """Q1 keep rule: a process exists only if its pattern matched >1 line in

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from radar_log_parser_spark.operators.dedup import _dot, _norm_col
+from radar_log_parser_spark.operators.dedup import _dot, _md5_hex15_parse, _norm_col
 from radar_log_parser_spark.operators.logquery import QuerySpec, _read_par
 
 TOP_K = 5
@@ -79,14 +79,15 @@ SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id FROM (
 """
 
 
-def _seed_hash(col):
-    """Deterministic uniform sample key, computable bit-identically in
-    DuckDB (`('0x'||substr(md5(vec_id::VARCHAR),1,15))::BIGINT`) — the same
-    cross-engine md5 family as the dedup operators, which is what gives the
-    IVF query a full oracle row (r3: rows-only)."""
-    return F.conv(
-        F.substring(F.md5(col.cast("string")), 1, 15), 16, 10
-    ).cast("long")
+def _seed_hash(emb: DataFrame) -> DataFrame:
+    """`emb` plus `seed`, a deterministic uniform sample key computable
+    bit-identically in DuckDB (`('0x'||substr(md5(vec_id::VARCHAR),1,15))::BIGINT`)
+    — the same cross-engine md5 family and parser as the dedup operators,
+    which is what gives the IVF query a full oracle row (r3: rows-only).
+    The md5 is projected in its own select (see `_md5_hex15_parse`)."""
+    return emb.withColumn("seed", F.md5(F.col("vec_id").cast("string"))).withColumn(
+        "seed", _md5_hex15_parse(F.col("seed"))
+    )
 
 
 def ivf_centroids(emb: DataFrame, k: int = IVF_K) -> DataFrame:
@@ -102,13 +103,14 @@ def ivf_centroids(emb: DataFrame, k: int = IVF_K) -> DataFrame:
     # partition spec instead of warning about an undefined one (r3's
     # partitionBy(lit(0)) was folded away — verified; the warning stayed)
     return (
-        emb.orderBy(_seed_hash(F.col("vec_id")), F.asc("vec_id"))
+        _seed_hash(emb)
+        .orderBy("seed", "vec_id")
         .limit(k)
         .select(
             F.row_number()
             .over(
                 W.partitionBy(F.pmod(F.col("vec_id"), F.lit(1))).orderBy(
-                    _seed_hash(F.col("vec_id")), F.asc("vec_id")
+                    "seed", "vec_id"
                 )
             )
             .cast("long")

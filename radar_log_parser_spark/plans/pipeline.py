@@ -524,18 +524,18 @@ class Pipeline:
         # every token array and text string just to list a handful of
         # sources; the parquet scan reads the dictionary-encoded source
         # column alone (parse preserves source 1:1, so the sets are equal).
-        summary = agg.summary_frame(
-            spark,
-            cfg,
-            raw.select("source").distinct(),
-            agg.summary_aggregate(cfg, scope_slim),
+        summary = self._stage(
+            "summary",
+            lambda: agg.summary_frame(
+                spark,
+                cfg,
+                raw.select("source").distinct(),
+                agg.summary_aggregate(cfg, scope_slim),
+            ),
+            parents=["scoped"],
         )
         if self.ckpt is not None:
-            fp = _fingerprint(self._root_fp, "summary", "other_routed", "grouped_routed")
-            self.metrics.append(self.ckpt.write("summary", summary, fp, ["other_routed", "grouped_routed", "scoped"]))
-            summary = self.ckpt.read("summary").orderBy(
-                "source", F.desc("priority"), F.asc("issue")
-            )
+            summary = summary.orderBy("source", F.desc("priority"), F.asc("issue"))
         ready("summary", summary)
 
         grouped_issues = self._stage(

@@ -112,30 +112,27 @@ def test_dedup_cluster_invariants(spark):
     assert any(len(v) > 1 for v in by_cluster.values())
 
 
-def test_emb_bucket_kernel_rejects_absent_vec_id():
-    """A band entry whose vec_id is not in the broadcast matrix must raise,
-    not verify against the neighbouring row that searchsorted lands on."""
-    import numpy as np
-    import pyarrow as pa
-    import pytest
+def _jobs_run(spark, build, group):
+    """Spark jobs started while `build()` runs, counted under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group, False)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    from radar_log_parser_spark.operators.dedup import (
-        MissingEmbeddingError,
-        _emb_bucket_verify_factory,
+
+def test_emb_lsh_build_runs_no_extra_jobs(spark):
+    """Building `q_dedup_embedding_lsh` runs no more Spark jobs than reading
+    the embeddings table does: nothing is collected to the driver or
+    broadcast before an action is called."""
+    from radar_log_parser_spark.operators import dedup
+
+    read = _jobs_run(
+        spark, lambda: spark.read.parquet(f"{SF_DIR}/embeddings.parquet"), "read-embeddings"
     )
-
-    class _BC:  # stand-in for the Spark broadcast handle
-        value = (np.array([0, 2, 4], dtype=np.int64), np.eye(3, dtype=np.float64))
-
-    verify = _emb_bucket_verify_factory(_BC(), 0.2)
-    for absent in (3, 9):  # between two ids, and past the last one
-        tbl = pa.table({
-            "vec_id": pa.array([0, 2, absent], pa.int64()),
-            "sig": pa.array([0, 0, 0], pa.int64()),
-            "band": pa.array([1, 1, 1], pa.int32()),
-            "key": pa.array([0, 0, 0], pa.int32()),
-        })
-        with pytest.raises(MissingEmbeddingError, match=str(absent)):
-            verify(tbl)
-    present = verify(tbl.slice(0, 2))
-    assert present.num_rows == 0  # orthogonal vectors: no pair survives
+    build = _jobs_run(
+        spark, lambda: dedup.q_dedup_embedding_lsh(spark, SF_DIR), "build-emb-lsh"
+    )
+    assert build <= read, (build, read)

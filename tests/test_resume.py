@@ -49,7 +49,7 @@ def test_checkpoint_resume(spark, cfg, vocab, fx, tmp_path):
     # Third run: everything resumes; byte-equal sinks.
     p3 = Pipeline(spark, cfg, vocab, fx.logs_path, work_dir=work, checkpoint=True)
     r3 = p3.run()
-    assert all(m.resumed for m in r3.metrics if m.stage != "summary")
+    assert all(m.resumed for m in r3.metrics)
     assert _summary_rows(r3) == s1
 
 

@@ -55,9 +55,11 @@ def test_minhash_string_verify_equals_struct_verify(spark):
     from radar_log_parser_spark.operators.dedup import (
         JACCARD_DEN,
         JACCARD_NUM,
+        LSH_BANDS,
+        MINHASH_PERMS,
+        _band_pairs,
         _docs_par,
-        lsh_candidate_pairs,
-        minhash_signatures,
+        minhash_bands,
         shingle_strings_exploded,
         shingle_structs,
     )
@@ -70,9 +72,13 @@ def test_minhash_string_verify_equals_struct_verify(spark):
 
     docs = _docs_par(spark, SF_DIR).filter(F.size(F.split("text", " ")) >= 3)
     base = docs.select(F.col("doc_id").cast("long").alias("doc_id"), "text")
-    cand = lsh_candidate_pairs(
-        minhash_signatures(shingle_strings_exploded(base))
-    )
+    cand = _band_pairs(minhash_bands(
+        shingle_strings_exploded(base),
+        lambda i: F.hash("shingle", F.lit(i)),
+        MINHASH_PERMS,
+        LSH_BANDS,
+        F.hash,
+    ))
     sh = base.select("doc_id", shingle_structs().alias("sh"))
     a = sh.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("a_sh"))
     b = sh.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("b_sh"))
@@ -120,7 +126,9 @@ def test_emb_bucket_kernel_equals_join_form(spark):
     emb = _read_par(spark, f"{SF_DIR_MID}/embeddings.parquet").select(
         F.col("vec_id").cast("long").alias("vec_id"), "embedding"
     )
-    sigs = emb.mapInArrow(_emb_sig_map, "vec_id long, sig long")
+    sigs = emb.mapInArrow(
+        _emb_sig_map, "vec_id long, sig long, embedding array<float>"
+    ).select("vec_id", "sig")
     nibbles = F.array(*[
         F.shiftright("sig", EMB_LSH_BITS * t)
         .bitwiseAND(F.lit((1 << EMB_LSH_BITS) - 1))
@@ -194,24 +202,26 @@ def test_emb_bucket_kernel_blocking_invariant():
     rng = random.Random(0xBEEF)
     k, d = 700, 16  # k chosen so block = 2^15 // 700 = 46 → many blocks
     ids = sorted(rng.sample(range(10_000), k))
-    E = np.array(
+    E = np.array(  # float32 values, as the embedding column holds them
         [[rng.gauss(0, 1) for _ in range(d)] for _ in range(k)],
-        dtype=np.float64,
-    )
+        dtype=np.float32,
+    ).astype(np.float64)
     sig = np.array([rng.randrange(1 << 32) for _ in range(k)], dtype=np.int64)
     band = 3
     thr = 0.2
 
-    class _BC:  # stand-in for the Spark broadcast handle
-        value = (np.array(ids, dtype=np.int64), E)
-
+    # rows in descending vec_id order: the kernel sorts them, vectors included
     tbl = pa.table({
-        "vec_id": pa.array(np.array(ids, dtype=np.int64)),
-        "sig": pa.array(sig),
+        "vec_id": pa.array(np.array(ids[::-1], dtype=np.int64)),
+        "sig": pa.array(sig[::-1]),
+        "embedding": pa.ListArray.from_arrays(
+            pa.array(np.arange(0, (k + 1) * d, d, dtype=np.int32)),
+            pa.array(E[::-1].ravel().astype(np.float32)),
+        ),
         "band": pa.array([band] * k, pa.int32()),
         "key": pa.array([7] * k, pa.int32()),
     })
-    got = _emb_bucket_verify_factory(_BC(), thr)(tbl)
+    got = _emb_bucket_verify_factory(thr)(tbl)
     got_set = {
         (a, b): c
         for a, b, c in zip(
@@ -371,6 +381,21 @@ def test_simhash_overflow_guard(spark):
     docs = spark.range(1).select(F.col("id").alias("doc_id"))
     hb = spark.range(_SIMHASH_MAX_SHINGLES + 1).select(
         F.lit(0).cast("long").alias("doc_id"), F.xxhash64("id").alias("h")
+    )
+    with pytest.raises(Exception, match="packed-count overflow"):
+        _simhash_from_hashes(spark, docs, hb).collect()
+
+
+def test_simhash_guard_fires_before_sum_overflow(spark):
+    """From 2^21 shingles of an all-ones hash the packed sums pass
+    2^63 − 1: the named guard must still be the error raised, not ANSI's
+    generic ARITHMETIC_OVERFLOW from the aggregate."""
+    from radar_log_parser_spark.operators.dedup import _simhash_from_hashes
+
+    docs = spark.range(1).select(F.col("id").alias("doc_id"))
+    hb = spark.range((1 << 21) + 1).select(
+        F.lit(0).cast("long").alias("doc_id"),
+        F.lit((1 << 60) - 1).cast("long").alias("h"),
     )
     with pytest.raises(Exception, match="packed-count overflow"):
         _simhash_from_hashes(spark, docs, hb).collect()

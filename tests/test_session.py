@@ -141,21 +141,36 @@ def _referenced_names(tree):
             yield node.name.rsplit(".", 1)[-1]
 
 
+def _defined_names(node):
+    """Names a top-level statement defines: a function or class, or the
+    plain-name targets of an assignment."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [node.name]
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign):
+        targets = [node.target]
+    else:
+        return []
+    return [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+
+
 def test_no_unreferenced_package_definitions():
-    """Every top-level function and class in the package is referenced by
-    name from some module of the package, the tests, perfbench, tools or
-    the root scripts, its own definition aside. Code that nothing calls
-    is deleted, not kept as a second form."""
+    """Every top-level function, class and assigned name in the package is
+    referenced by name from some module of the package, the tests,
+    perfbench, tools or the root scripts, its own definition aside. Code
+    and constants that nothing uses are deleted, not kept as a second
+    form."""
     trees = [t for _rel, t in _modules(REPO_DIR, recurse=False)]
     for sub in ("radar_log_parser_spark", "tests", "perfbench", "tools"):
         trees += [t for _rel, t in _modules(os.path.join(REPO_DIR, sub))]
     refs = Counter(n for t in trees for n in _referenced_names(t))
     dead = [
-        f"{rel}:{node.lineno} {node.name}"
+        f"{rel}:{node.lineno} {name}"
         for rel, tree in _modules()
         for node in tree.body
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-        and refs[node.name] == sum(1 for n in _referenced_names(node) if n == node.name)
+        for name in _defined_names(node)
+        if refs[name] == sum(1 for n in _referenced_names(node) if n == name)
     ]
     assert not dead, dead
 
