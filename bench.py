@@ -8,11 +8,11 @@ pipeline (parse→route→aggregate, the north-rule metric in sequences/sec)
 over a deterministic scaled tokenized-logs fixture cached under
 .bench_cache/.
 
---scaling: runs the pipeline at local[N] and local[4N] (default 4/16, see
-SCALING_LEVELS) on the SAME input via subprocesses, computes throughput
-scaling efficiency (thr@4N / thr@N) / 4, and prints the report JSON
-(per-round lines go to stderr). tools/scaling_report.py turns such reports
-into BENCH/BASELINE.md (north-rule evidence) and applies the gate.
+--pipeline-only: the end-to-end leg alone, in this process.
+
+The N vs 4N-core scaling campaign (`--scaling`) lives in git history at
+commit 811a626; tools/scaling_report.py turns its logs into
+BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
@@ -105,20 +105,11 @@ def run_pipeline_bench(
     cpus: int,
     n_rows: int | None = None,
     repeats: int = 2,
-    small_dry: bool = False,
 ) -> dict:
     """Pipeline-only measurement in a clean JVM: warm (sampled parse) →
     untimed dry run → `repeats` timed runs, report the MINIMUM (the sandbox
     VM shows multi-× CPU-steal noise; min is the standard noise-robust
-    estimator for throughput).
-
-    small_dry runs the dry (JIT/codegen warm-up) pass over a 1/4-size
-    fixture: generated code is shaped by schema + operators, not by the
-    input file list, so a smaller-input run compiles the classes the big
-    run reuses at a fraction of the warm-up wall (matters for the scaling
-    campaign, where every second of the 4-core leg is expensive). 1/4 (not
-    smaller) keeps AQE's runtime join/partition decisions — which ARE
-    size-shaped — close enough to the full-size plan's."""
+    estimator for throughput)."""
     from radar_log_parser_spark.codec import Vocab
     from radar_log_parser_spark.config import load_config
     from radar_log_parser_spark.functions.parse import parse_stage
@@ -159,9 +150,7 @@ def run_pipeline_bench(
         spark.read.parquet(logs).sample(0.05, seed=1), cfg, vocab
     ).write.format("noop").mode("overwrite").save()
 
-
-
-    def once(run_logs: str = logs, run_cfg=cfg, run_vocab=vocab) -> tuple[float, dict]:
+    def once() -> tuple[float, dict]:
         # flush pending Python-side garbage OUTSIDE the timed window: the
         # previous run's thousands of py4j-backed Column/DataFrame objects
         # otherwise get collected mid-run, and every free is a py4j
@@ -191,19 +180,13 @@ def run_pipeline_bench(
                 return df.collect
             return None
 
-        pipe = Pipeline(spark, run_cfg, run_vocab, run_logs, checkpoint=False)
+        pipe = Pipeline(spark, cfg, vocab, logs, checkpoint=False)
         res = pipe.run(job_factory=sink_jobs)
         dt = time.monotonic() - t0
         res.sinks["parsed"].unpersist(blocking=True)
         return dt, pipe.timings
 
-    if small_dry and n_rows >= 4 * 2_000_000:
-        dry_dir, _ = _pipeline_fixture(sf, n_rows=max(2_000_000, n_rows // 4))
-        # same pool_rows/seed → identical vocab + config; only the log
-        # volume differs, which generated code does not depend on
-        once(run_logs=os.path.join(dry_dir, "logs.parquet"))
-    else:
-        once()  # dry (JIT/codegen)
+    once()  # dry (JIT/codegen)
     runs, phases = zip(*(once() for _ in range(repeats)))
     dt = min(runs)
     spark.stop()
@@ -306,204 +289,17 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
     }
 
 
-SCALING_ROWS = 32_000_000  # larger input for scaling runs: amortizes the
-# fixed per-job driver cost (scheduling, planning, collects) so the
-# measurement reflects the parallel fraction, as a real cluster-size
-# comparison would. 32M (up from r2's 16M) moves the measurement CLOSER to
-# the north rule's 10^12-row regime, where the serial driver prefix is
-# noise — the Amdahl fit of the r2 evidence (P≈784 core-s, S≈39 s at 16M)
-# shows the serial share, not the plan, capped efficiency at ~0.75
-
-# N=4 / 4N=16 cores — the levels the round-2 evidence was judged at, kept
-# (not retreated further): the VM advertises 32 CPUs but its hypervisor
-# budget is ~4-8 sustained cores, so wall@16 carries CPU-steal noise
-# round-to-round (measured: wall@4 stable 227-235 s, wall@16 swings
-# 88→233 s for the identical job). The campaign answers noise with
-# repetition — interleaved rounds, per-round host calibration, and
-# median-of-best-3 reported alongside the best round.
-SCALING_LEVELS = (4, 16)
-
-
-def _mem_burn(n: int) -> float:
-    """Memory-bandwidth-bound worker: repeated large-array copies (48 MB >>
-    LLC) — the resource profile Spark scans/shuffles stress, which the
-    pure-CPU md5 burn does not."""
-    import numpy as np
-
-    a = np.empty(48 * 1024 * 1024, dtype=np.uint8)
-    a[:] = 7
-    s = 0.0
-    for _ in range(n):
-        s += float(a.copy()[0])
-    return s
-
-
-def _calibrate_host_mem(n: int, n4: int) -> float:
-    """Second per-round control: aggregate MEMORY-BANDWIDTH throughput at 4N
-    vs N processes. A real N→4N-executor cluster brings 4× DRAM channels;
-    this single shared-memory VM saturates far below 4× — the ceiling that
-    bounds any scan/shuffle-heavy Spark stage here. Reported per round
-    beside the pure-CPU ceiling so the gap between the job's efficiency and
-    1.0 can be decomposed into host-imposed vs plan-imposed parts."""
-    import multiprocessing as mp
-
-    reps = 10
-
-    def thr(procs: int) -> float:
-        with mp.Pool(procs) as p:
-            t0 = time.monotonic()
-            p.map(_mem_burn, [reps] * procs)
-            return procs * reps / (time.monotonic() - t0)
-
-    # ORDER-BIAS FIX (discovered 2026-08-18, r5c): the original one-shot
-    # `thr(n4) / thr(n)` measured the 4N leg COLD — first-touch page
-    # faults plus page-cache reclaim pressure left by the preceding Spark
-    # legs — and the N leg warm. Reproduced on this host: back-to-back
-    # probe calls climbed 29 → 91 → 287 agg-units at 4 procs (10×
-    # warm-up), so the cold-first ratio collapsed to ~0.13 regardless of
-    # actual host state; every host_mem_ratio recorded before this fix is
-    # unattributable. Fix: pay the warm-up untimed, then ALTERNATE the
-    # levels and take best-of-3 per level — a ceiling estimate immune to
-    # both the warm-up ramp and monotone drift during the probe.
-    thr(n)
-    thr(n4)
-    ts_n: list[float] = []
-    ts_n4: list[float] = []
-    for _ in range(3):
-        ts_n4.append(thr(n4))
-        ts_n.append(thr(n))
-    return max(ts_n4) / max(ts_n)
-
-
-def _cpu_burn(n: int) -> str:
-    import hashlib
-    h = hashlib.md5()
-    for _ in range(n):
-        h.update(b"x" * 1000)
-    return h.hexdigest()
-
-
-def _calibrate_host(n: int, n4: int) -> float:
-    """Pure-CPU control experiment, run back-to-back with each round: the
-    ratio of aggregate multiprocessing throughput at 4N vs N processes.
-    On ideal hardware this is 4.0; on this sandbox VM it drifts between
-    ~2.5 and ~3.8 minute-to-minute (CPU steal). The per-round value is the
-    host-imposed ceiling the same round's Spark measurement ran under."""
-    import multiprocessing as mp
-
-    work = 120_000
-
-    def thr(procs: int) -> float:
-        with mp.Pool(procs) as p:
-            t0 = time.monotonic()
-            p.map(_cpu_burn, [work] * (procs * 4))
-            return procs * 4 * work / (time.monotonic() - t0)
-
-    return thr(n4) / thr(n)
-
-
-def run_scaling(
-    sf_dir: str,
-    levels: tuple[int, int] = SCALING_LEVELS,
-    rounds: int = 6,
-    n_rows: int | None = None,
-) -> dict:
-    """Two-cluster-size evidence under a NOISY host: the sandbox VM's
-    effective CPU drifts over tens of minutes, so measuring N and 4N at
-    different times is meaningless. Instead the levels are INTERLEAVED —
-    each round runs N then 4N back-to-back — and efficiency is computed per
-    round. Reported: the best round (least-noise-contaminated) AND the
-    median of the best 3 rounds (the claim must not rest on one round)."""
-    n_rows = n_rows or SCALING_ROWS
-    # pre-generate the shared fixture so no level pays generation
-    _pipeline_fixture(_sf_of(sf_dir), n_rows=n_rows)
-    n, n4 = levels
-
-    # pre-generate the small dry-run fixture too (shared by both levels)
-    if n_rows >= 4 * 2_000_000:
-        _pipeline_fixture(_sf_of(sf_dir), n_rows=max(2_000_000, n_rows // 4))
-
-    def one(cpus: int) -> dict:
-        # the scaling legs run the same configuration every other bench
-        # entry runs (see Pipeline.run / run_pipeline_bench)
-        out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--pipeline-only",
-             "--cpus", str(cpus), "--sf-dir", sf_dir,
-             "--rows", str(n_rows), "--repeats", "1", "--small-dry"],
-            capture_output=True, text=True, check=True, cwd=REPO,
-        )
-        return json.loads(out.stdout.strip().splitlines()[-1])
-
-    pairs = []
-    for i in range(rounds):
-        host_ratio = _calibrate_host(n, n4)  # host CPU ceiling, THIS round
-        host_mem = _calibrate_host_mem(n, n4)  # host DRAM ceiling
-        try:
-            rn = one(n)
-            r4 = one(n4)
-        except subprocess.CalledProcessError as e:
-            # a leg died (transient JVM/env failure under heavy steal) —
-            # log it and DROP the round rather than killing the campaign;
-            # a partial round must never contribute an efficiency number
-            print(json.dumps({
-                "round": i, "leg_failed": True,
-                "stderr_tail": (e.stderr or "")[-2000:],
-            }), file=sys.stderr)
-            continue
-        eff = (r4["pipeline_rows_per_sec"] / rn["pipeline_rows_per_sec"]) / (n4 / n)
-        pairs.append({
-            "thr_n": rn["pipeline_rows_per_sec"],
-            "thr_4n": r4["pipeline_rows_per_sec"],
-            "wall_n": rn["pipeline_seconds"],
-            "wall_4n": r4["pipeline_seconds"],
-            "efficiency": round(eff, 3),
-            "host_cpu_ratio": round(host_ratio, 2),
-            "host_mem_ratio": round(host_mem, 2),
-            "host_normalized": round(eff / (host_ratio / (n4 / n)), 3),
-            "eff_vs_mem_ceiling": round(eff / (host_mem / (n4 / n)), 3),
-            # the timed run's phase breakdown, for the evidence trail
-            "phases_n": rn["pipeline_phases"][-1],
-            "phases_4n": r4["pipeline_phases"][-1],
-        })
-        print(json.dumps({"round": i, **pairs[-1]}), file=sys.stderr)
-    best = max(pairs, key=lambda p: p["efficiency"])
-    best3 = sorted((p["efficiency"] for p in pairs), reverse=True)[:3]
-    median_best3 = best3[len(best3) // 2] if best3 else 0.0
-    eff = best["efficiency"]
-    report = {
-        "rows": n_rows,
-        "levels": [n, n4],
-        "rounds": pairs,
-        "best_round": best,
-        "scaling_efficiency": eff,
-        "median_best3": round(median_best3, 3),
-        # the GATE keys on median-of-best-3, not the max: the max over
-        # noisy rounds is an upward-biased estimator under CPU-steal drift
-        # (ADVICE r3) — the best round is reported as supporting context
-        "gate": "median_best3 >= 0.8",
-        "passes": median_best3 >= 0.8,
-    }
-    return report
-
-
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8)))
-    ap.add_argument("--scaling", action="store_true")
     ap.add_argument("--pipeline-only", action="store_true")
     ap.add_argument("--rows", type=int, default=None)
     ap.add_argument("--repeats", type=int, default=2)
-    ap.add_argument("--rounds", type=int, default=6)
-    ap.add_argument("--small-dry", action="store_true")
     args = ap.parse_args()
-    if args.scaling:
-        print(json.dumps(run_scaling(
-            args.sf_dir, rounds=args.rounds, n_rows=args.rows)))
-    elif args.pipeline_only:
+    if args.pipeline_only:
         print(json.dumps(run_pipeline_bench(
-            args.sf_dir, args.cpus, args.rows, args.repeats,
-            small_dry=args.small_dry)))
+            args.sf_dir, args.cpus, args.rows, args.repeats)))
     else:
         print(json.dumps(run_bench(args.sf_dir, args.cpus)))
 

@@ -18,10 +18,11 @@ ONCE per line inside the embarrassingly-parallel parse pass:
 Extraction batches by UNIQUE pattern (the bench catalog reuses one Pid
 pattern across 9 issues): each unique grouped pattern runs once over the
 union of its issues' eligible lines; per-pair columns then mask the shared
-result. Match/non-match prefilters run in Arrow C++ RE2 kernels; the hit
-rows' detail work is Python `finditer` with re.ASCII — the same
-engine-pinning contract as the rest of the parse kernel (ADVICE r3: RE2,
-Go, Java, DuckDB and Python-ASCII agree on the linted subset).
+result. Every extraction goes through `findall`, the one place that picks
+the engine: RE2's `findall_kernel`, or Python `finditer` with re.ASCII
+when the kernel is unsound — the same engine-pinning contract as the rest
+of the parse kernel (ADVICE r3: RE2, Go, Java, DuckDB and Python-ASCII
+agree on the linted subset).
 
 Output per pair k (order = config.summary_pairs): struct<n:int, j:string>,
 NULL when the line has no hits for that pair — so the fan-out summary is
@@ -44,63 +45,35 @@ HIT_TYPE = pa.struct([pa.field("n", pa.int32(), False), pa.field("j", pa.string(
 class FieldPlan:
     """Compiled extraction plan: pairs grouped by unique work unit.
 
-    grouped_work: {pattern: (crgx, [proc_name, ...] union, [pair_k, ...])}
-        plus per-pair eligibility proc-name tuples for masking.
-    ngrp_work: {(issue, pattern): (crgx, [pair_k, ...])}
+    grouped_work: {pattern: {crgx, procs: proc-name union,
+        ks: [(pair_k, the pair's own proc names), ...]}}
+    ngrp_work: {(issue, pattern): {crgx, ks: [pair_k, ...]}}
     """
 
     def __init__(self, cfg: ConfigSpec):
         self.pairs = summary_pairs(cfg)
         self.n_pairs = len(self.pairs)
-        # pair_k -> ('g', pattern, proc_names) | ('n', issue, pattern)
-        self.pair_info: list[tuple] = []
         self.grouped_work: dict[str, dict] = {}
         self.ngrp_work: dict[tuple[str, str], dict] = {}
         for k, (iname, _fname, pat) in enumerate(self.pairs):
             spec = cfg.issues[iname]
             if spec.grouped:
                 procs = tuple(sorted(spec.specific_process))
-                self.pair_info.append(("g", pat, procs))
                 w = self.grouped_work.setdefault(
-                    pat, {**_compiled_work(pat), "procs": set(), "ks": []}
+                    pat, {"crgx": re.compile(pat, re.ASCII), "procs": set(), "ks": []}
                 )
                 w["procs"].update(procs)
-                w["ks"].append(k)
+                w["ks"].append((k, procs))
             else:
-                self.pair_info.append(("n", iname, pat))
                 w = self.ngrp_work.setdefault(
-                    (iname, pat), {**_compiled_work(pat), "ks": []}
+                    (iname, pat), {"crgx": re.compile(pat, re.ASCII), "ks": []}
                 )
                 w["ks"].append(k)
 
 
-def _compiled_work(pat: str) -> dict:
-    """Per-unique-pattern kernel plan. The findall_kernel fast path is
-    unsound for patterns that can match the empty string (GlobalReplace
-    and finditer disagree on zero-width advancement) — those keep the
-    pure-finditer path; no linted catalog pattern matches empty."""
-    crgx = re.compile(pat, re.ASCII)
-    return {
-        "crgx": crgx,
-        "can_empty": crgx.search("") is not None,
-    }
-
-
-_PLANS: dict[int, tuple[ConfigSpec, FieldPlan]] = {}
-
-
-def field_plan(cfg: ConfigSpec) -> FieldPlan:
-    # keyed by id(cfg) but retains cfg (same rationale as parse_arrow._COMPILED)
-    ent = _PLANS.get(id(cfg))
-    if ent is None or ent[0] is not cfg:
-        ent = (cfg, FieldPlan(cfg))
-        _PLANS[id(cfg)] = ent
-    return ent[1]
-
-
-def _finditer_join(crgx: re.Pattern, s: str) -> tuple[int, str]:
-    ms = [m.group(0) for m in crgx.finditer(s)]
-    return len(ms), "\n".join(ms)
+def list_array(counts: np.ndarray, values, value_type) -> pa.ListArray:
+    offsets = np.concatenate(([0], np.cumsum(counts))).astype(np.int32)
+    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(values, value_type))
 
 
 _SENT = "\x00"
@@ -114,12 +87,8 @@ def findall_kernel(sub: pa.Array, pat: str) -> tuple[np.ndarray, pa.ListArray]:
     Mechanism: GlobalReplace each match with NUL + itself + NUL (RE2
     rewrite "\\0" = the whole match), split on NUL — every odd segment is
     a match (2n+1 segments for n matches; adjacent matches contribute an
-    empty even segment, preserving the arithmetic). Callers must exclude
-    patterns that can match empty (zero-width advancement differs) and
-    strings containing NUL (sentinel collision) — see _compiled_work /
-    the has_nul guards at the call sites."""
-    if isinstance(sub, pa.ChunkedArray):
-        sub = sub.combine_chunks()
+    empty even segment, preserving the arithmetic). Only `findall` calls
+    it, after excluding the two unsound inputs."""
     marked = pc.replace_substring_regex(sub, pat, replacement=f"{_SENT}\\0{_SENT}")
     parts = pc.split_pattern(marked, _SENT)
     if isinstance(parts, pa.ChunkedArray):
@@ -135,13 +104,48 @@ def findall_kernel(sub: pa.Array, pat: str) -> tuple[np.ndarray, pa.ListArray]:
     return n_m, pa.ListArray.from_arrays(pa.array(moffs), matches_flat)
 
 
+def findall(sub: pa.Array, crgx: re.Pattern) -> tuple[np.ndarray, pa.ListArray]:
+    """Every non-overlapping match of `crgx` per string of `sub`, in scan
+    order, as (counts, list<matches>) — the one place that picks the
+    engine.
+
+    `findall_kernel` keeps the whole extraction in RE2 C++ (profile: the
+    old per-hit-row finditer loop was ~25% of parse wall, and field
+    patterns like a bare Pid '\\d{4,5}' hit most lines). It is unsound for
+    a pattern that can match the empty string (GlobalReplace and finditer
+    disagree on zero-width advancement) and for an array holding the NUL
+    sentinel; then Python finditer (re.ASCII) runs on the rows RE2 says
+    match. No linted catalog pattern matches empty."""
+    if isinstance(sub, pa.ChunkedArray):
+        sub = sub.combine_chunks()
+    if crgx.search("") is None and not pc.any(pc.match_substring(sub, _SENT)).as_py():
+        return findall_kernel(sub, crgx.pattern)
+    hits = pc.match_substring_regex(sub, crgx.pattern).to_numpy(zero_copy_only=False)
+    idx = np.flatnonzero(hits)
+    counts = np.zeros(len(sub), dtype=np.int64)
+    values: list[str] = []
+    for i, s in zip(idx, pc.take(sub, pa.array(idx, pa.int64())).to_pylist()):
+        ms = [m.group(0) for m in crgx.finditer(s)]
+        counts[i] = len(ms)
+        values.extend(ms)
+    return counts, list_array(counts, values, pa.string())
+
+
+def _any_of(masks: dict[str, np.ndarray], names, n: int) -> np.ndarray:
+    out = np.zeros(n, dtype=bool)
+    for name in names:
+        m = masks.get(name)
+        if m is not None:
+            out |= m
+    return out
+
+
 def extract_field_columns(
     plan: FieldPlan,
     n: int,
     text_pa: pa.Array,
-    texts_np,  # () -> np.ndarray of the decoded line texts (lazy)
     proc_masks: dict[str, np.ndarray],
-    ngrp_matches: dict[str, tuple[np.ndarray, list[str]]],
+    ngrp_matches: dict[str, tuple[np.ndarray, pa.Array]],
 ) -> list[pa.StructArray]:
     """One struct<n,j> array per summary pair, order = plan.pairs.
 
@@ -155,107 +159,40 @@ def extract_field_columns(
     valid = [np.zeros(n, dtype=bool) for _ in range(plan.n_pairs)]
 
     # grouped pairs: one extraction per unique pattern over the UNION of its
-    # issues' eligible lines; per-pair masks select from the shared result.
-    # The extraction itself is findall_kernel (RE2 C++): Python touches only
-    # rows whose text contains the NUL sentinel, or empty-matching patterns
-    # (profile: the old per-hit-row finditer loop was ~25% of parse wall,
-    # and field patterns like a bare Pid '\\d{4,5}' hit most lines).
-    nul_mask: np.ndarray | None = None
-
-    def nuls() -> np.ndarray:
-        nonlocal nul_mask
-        if nul_mask is None:
-            nul_mask = pc.match_substring(text_pa, _SENT).to_numpy(zero_copy_only=False)
-        return nul_mask
-
-    for pat, w in plan.grouped_work.items():
-        union = np.zeros(n, dtype=bool)
-        for p in w["procs"]:
-            m = proc_masks.get(p)
-            if m is not None:
-                union |= m
-        idx = np.flatnonzero(union)
+    # issues' eligible lines; per-pair masks select from the shared result
+    for w in plan.grouped_work.values():
+        idx = np.flatnonzero(_any_of(proc_masks, w["procs"], n))
         if not len(idx):
             continue
+        n_m, lists = findall(pc.take(text_pa, pa.array(idx, pa.int64())), w["crgx"])
+        hit = n_m > 0
         pat_n = np.zeros(n, dtype=np.int32)
         pat_j = np.full(n, None, dtype=object)
-        if w["can_empty"]:
-            py_idx = idx
-        else:
-            ker_idx = idx[~nuls()[idx]]
-            py_idx = idx[nuls()[idx]]
-            if len(ker_idx):
-                n_m, lists = findall_kernel(
-                    pc.take(text_pa, pa.array(ker_idx, pa.int64())), pat
-                )
-                joined = pc.binary_join(lists, "\n").to_numpy(zero_copy_only=False)
-                hit = n_m > 0
-                pat_n[ker_idx] = n_m
-                pat_j[ker_idx[hit]] = joined[hit]
-        if len(py_idx):
-            tn = texts_np()
-            crgx = w["crgx"]
-            for i in py_idx:
-                c, j = _finditer_join(crgx, tn[i])
-                if c:
-                    pat_n[i] = c
-                    pat_j[i] = j
-        pat_valid = pat_n > 0
-        for k in w["ks"]:
-            elig = np.zeros(n, dtype=bool)
-            for p in plan.pair_info[k][2]:
-                m = proc_masks.get(p)
-                if m is not None:
-                    elig |= m
-            sel = pat_valid & elig
+        pat_n[idx] = n_m
+        pat_j[idx[hit]] = pc.binary_join(lists, "\n").to_numpy(zero_copy_only=False)[hit]
+        for k, procs in w["ks"]:
+            sel = (pat_n > 0) & _any_of(proc_masks, procs, n)
             n_cols[k][sel] = pat_n[sel]
             j_cols[k][sel] = pat_j[sel]
             valid[k] |= sel
 
     # non-grouped pairs: subjects are the issue's match substrings, hits
     # joined flat in (match_pos, hit) order — identical to the old
-    # per-subject join since zero-hit subjects contribute nothing.
-    # Kernel path: the field pattern runs over the FLAT substring array in
-    # RE2 (count + first-match extract); Python finditer only on
-    # multi-hit substrings; the per-row join of non-empty per-substring
-    # results is a binary_join over a rebuilt list array.
-    flat_cache: dict[str, tuple[pa.Array, bool]] = {}
+    # per-subject join since zero-hit subjects contribute nothing. The
+    # field pattern runs over the FLAT substring array; the per-row join
+    # of non-empty per-substring results is a binary_join over a rebuilt
+    # list array.
     for (iname, _pat), w in plan.ngrp_work.items():
         ent = ngrp_matches.get(iname)
         if ent is None:
             continue
-        counts, values = ent
-        if not len(values):
+        counts, flat = ent
+        if not len(flat):
             continue
-        offsets = np.concatenate(([0], np.cumsum(counts))).astype(np.int64)
-        flat_nul = None
-        if not w["can_empty"]:
-            ent_f = flat_cache.get(iname)
-            if ent_f is None:
-                flat = (
-                    values
-                    if isinstance(values, pa.Array)
-                    else pa.array(values, pa.string())
-                )
-                flat_nul = bool(pc.any(pc.match_substring(flat, _SENT)).as_py())
-                ent_f = flat_cache[iname] = (flat, flat_nul)
-            flat, flat_nul = ent_f
-        if w["can_empty"] or flat_nul:
-            vals_py = values.to_pylist() if isinstance(values, pa.Array) else values
-            crgx = w["crgx"]
-            for i in np.flatnonzero(counts):
-                hits: list[str] = []
-                for s in vals_py[offsets[i]:offsets[i + 1]]:
-                    hits.extend(m.group(0) for m in crgx.finditer(s))
-                if hits:
-                    for k in w["ks"]:
-                        n_cols[k][i] = len(hits)
-                        j_cols[k][i] = "\n".join(hits)
-                        valid[k][i] = True
-            continue
-        n_f, lists = findall_kernel(flat, w["crgx"].pattern)
+        n_f, lists = findall(flat, w["crgx"])
         if not n_f.any():
             continue
+        offsets = np.concatenate(([0], np.cumsum(counts))).astype(np.int64)
         j_subs = pc.binary_join(lists, "\n").to_numpy(zero_copy_only=False)
         # per-row totals + ordered join of the hit substrings' results
         ccum = np.concatenate(([0], np.cumsum(n_f))).astype(np.int64)
@@ -263,11 +200,8 @@ def extract_field_columns(
         nz = n_f > 0
         zcum = np.concatenate(([0], np.cumsum(nz))).astype(np.int64)
         row_nz = zcum[offsets[1:]] - zcum[offsets[:-1]]
-        sel = j_subs[nz]
-        off2 = np.concatenate(([0], np.cumsum(row_nz))).astype(np.int32)
         joined = pc.binary_join(
-            pa.ListArray.from_arrays(pa.array(off2), pa.array(sel, pa.string())),
-            "\n",
+            list_array(row_nz, j_subs[nz], pa.string()), "\n"
         ).to_numpy(zero_copy_only=False)
         rows_hit = np.flatnonzero(row_n)
         for k in w["ks"]:
@@ -287,4 +221,3 @@ def extract_field_columns(
             )
         )
     return out
-

@@ -7,6 +7,8 @@ engine as the reference's Go ``regexp`` (golden dialect parity for free):
   match      match_substring_regex / count_substring_regex    (RE2)
   extract    extract_regex (first match, named groups,        (RE2)
              non-participating group → "" like Go)
+  findall    fieldex.findall: every match per row             (RE2; Python
+             finditer on hit rows where the RE2 form is unsound)
 
 Python touches only HIT rows (building the per-row match lists) — on real
 logs a few percent of rows — so per-row Python cost scales with matches,
@@ -30,10 +32,10 @@ from radar_log_parser_spark.config import (
     severity_pattern,
 )
 from radar_log_parser_spark.functions.fieldex import (
-    _SENT,
+    FieldPlan,
     extract_field_columns,
-    field_plan,
-    findall_kernel,
+    findall,
+    list_array,
 )
 from radar_log_parser_spark.functions.schema import parsed_arrow_schema
 
@@ -67,25 +69,24 @@ _RGX_META = set("\\.^$*+?{}[]()|")
 
 
 class ArrowCompiledConfig:
-    """Pattern strings for RE2 kernels + Python-compiled fallbacks for the
-    hit-row detail work. Built once per executor process."""
+    """The one compiled form of a config, built once per executor process:
+    pattern strings for the RE2 kernels, each name pattern's literal
+    needle, the Python-compiled patterns for the hit-row detail work, and
+    the field-extraction plan."""
 
     def __init__(self, cfg: ConfigSpec):
         self.procs = sorted(cfg.specific_process.items())
         self.events = sorted(cfg.important_events.items())
-        # Python fallbacks compile with re.ASCII so the hit-row detail work
+        self.needles = {
+            pat: literal_line_pattern(pat) for _n, pat in self.procs + self.events
+        }
+        # Python patterns compile with re.ASCII so the hit-row detail work
         # agrees with the RE2 kernels that selected the hits: RE2 (and Go,
         # Java, DuckDB) treat \d/\w/\b as ASCII-only; Python's Unicode
         # default would extract MORE matches than RE2 flagged on non-ASCII
         # content (ADVICE r3)
         self.ngrp = sorted(
-            (
-                n,
-                s.regex,
-                re.compile(s.regex, re.ASCII),
-                re.compile(s.regex, re.ASCII).search("") is not None,
-                literal_line_pattern(s.regex),
-            )
+            (n, re.compile(s.regex, re.ASCII), literal_line_pattern(s.regex))
             for n, s in cfg.issues.items()
             if not s.grouped and s.regex
         )
@@ -96,8 +97,8 @@ class ArrowCompiledConfig:
             c = re.compile(s.grouping, re.ASCII)
             # pyarrow extract_regex needs every group named; Go SubexpNames
             # allows unnamed → those fall back to Python re on hit rows only
-            all_named = len(c.groupindex) == c.groups
-            self.grp.append((n, s.grouping, c, all_named))
+            self.grp.append((n, c, len(c.groupindex) == c.groups))
+        self.fields = FieldPlan(cfg)
         self.sev: dict[str, dict] = {}
         for platform, levels in LOG_LEVELS.items():
             rgx = LOG_LEVELS_RGX[platform]
@@ -143,10 +144,10 @@ def decode_tokens(tokens: pa.Array, vocab_pa: pa.Array) -> pa.Array:
     return pc.binary_join(lists, " ")
 
 
-def _name_masks(text: pa.Array, patterns) -> dict[str, np.ndarray]:
+def _name_masks(text: pa.Array, patterns, needles) -> dict[str, np.ndarray]:
     out: dict[str, np.ndarray] = {}
     for name, pat in patterns:
-        lit = literal_line_pattern(pat)
+        lit = needles[pat]
         hit = (
             pc.match_substring(text, lit)
             if lit is not None
@@ -173,15 +174,6 @@ def _lists_from_masks(masks: dict[str, np.ndarray], patterns, n: int) -> pa.Arra
     return pa.ListArray.from_arrays(pa.array(offsets), pa.array(values, pa.string()))
 
 
-def _name_lists(text: pa.Array, patterns, n: int) -> pa.Array:
-    return _lists_from_masks(_name_masks(text, patterns), patterns, n)
-
-
-def _list_array(counts: np.ndarray, values: list, value_type) -> pa.Array:
-    offsets = np.concatenate(([0], np.cumsum(counts))).astype(np.int32)
-    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(values, value_type))
-
-
 def match_batch_arrow(batch: pa.RecordBatch, cfg: ConfigSpec, vocab_pa: pa.Array) -> pa.RecordBatch:
     cc = compiled(cfg)
     n = batch.num_rows
@@ -196,21 +188,13 @@ def match_batch_arrow(batch: pa.RecordBatch, cfg: ConfigSpec, vocab_pa: pa.Array
     # ordinal and corrupted every order-sensitive aggregate)
     line_no = pc.extract_regex(doc_id, r"-(?P<ln>\d+)$").field(0).cast(pa.int64())
 
-    txt_np: np.ndarray | None = None  # materialized lazily, only if hits exist
-
-    def texts() -> np.ndarray:
-        nonlocal txt_np
-        if txt_np is None:
-            txt_np = text.to_numpy(zero_copy_only=False)
-        return txt_np
-
     # proc hit masks are retained: the per-line field extraction below
     # reuses them as eligibility prefilters for grouped-issue pairs
-    proc_masks = _name_masks(text, cc.procs)
+    proc_masks = _name_masks(text, cc.procs, cc.needles)
     cols: list[pa.Array] = [
         doc_id, source, line_no, tokens, n_tok, text,
         _lists_from_masks(proc_masks, cc.procs, n),
-        _name_lists(text, cc.events, n),
+        _lists_from_masks(_name_masks(text, cc.events, cc.needles), cc.events, n),
     ]
 
     # severity, platform(=source)-dependent → parallel (levels, counts).
@@ -258,25 +242,13 @@ def match_batch_arrow(batch: pa.RecordBatch, cfg: ConfigSpec, vocab_pa: pa.Array
         flat_counts = np.concatenate(ent_cnts)[order]
     else:
         flat_levels, flat_counts = [], []
-    cols.append(_list_array(sev_counts, flat_levels, pa.string()))
-    cols.append(_list_array(sev_counts, flat_counts, pa.int32()))
+    cols.append(list_array(sev_counts, flat_levels, pa.string()))
+    cols.append(list_array(sev_counts, flat_counts, pa.int32()))
 
     # non-grouped issues (FindAllString semantics: ALL match substrings per
-    # row, in order) — findall_kernel keeps the whole extraction in RE2
-    # C++; Python finditer only for empty-matching patterns or batches
-    # whose text contains the NUL sentinel. counts+values retained per
+    # row, in order, via fieldex.findall). counts+values retained per
     # issue: the field extraction below scans these exact substrings as
     # its non-grouped subjects.
-    batch_nul: bool | None = None
-
-    def has_nul() -> bool:
-        nonlocal batch_nul
-        if batch_nul is None:
-            batch_nul = bool(
-                pc.any(pc.match_substring(text, _SENT)).as_py()
-            )
-        return batch_nul
-
     batch_newline: bool | None = None
 
     def has_newline() -> bool:
@@ -285,43 +257,27 @@ def match_batch_arrow(batch: pa.RecordBatch, cfg: ConfigSpec, vocab_pa: pa.Array
             batch_newline = bool(pc.any(pc.match_substring(text, "\n")).as_py())
         return batch_newline
 
-    ngrp_matches: dict[str, tuple[np.ndarray, object]] = {}
-    for iname, pat, crgx, can_empty, lit in cc.ngrp:
+    ngrp_matches: dict[str, tuple[np.ndarray, pa.Array]] = {}
+    for iname, crgx, lit in cc.ngrp:
         if lit is not None and not has_newline():
             # full-line-containment idiom on one-line rows: at most one
             # match and it is the WHOLE row — containment mask + filter,
             # no regex at all
             hit = pc.match_substring(text, lit)
             counts = hit.to_numpy(zero_copy_only=False).astype(np.int64)
-            offs = np.concatenate(([0], np.cumsum(counts))).astype(np.int32)
-            lists = pa.ListArray.from_arrays(pa.array(offs), pc.filter(text, hit))
-            ngrp_matches[iname] = (counts, lists.values)
-            cols.append(lists)
-        elif can_empty or has_nul():
-            counts = np.zeros(n, dtype=np.int64)
-            values: list[str] = []
-            hits = pc.match_substring_regex(text, pat).to_numpy(zero_copy_only=False)
-            idx = np.flatnonzero(hits)
-            if len(idx):
-                tn = texts()
-                for i in idx:
-                    ms = [m.group(0) for m in crgx.finditer(tn[i])]
-                    counts[i] = len(ms)
-                    values.extend(ms)
-            ngrp_matches[iname] = (counts, values)
-            cols.append(_list_array(counts, values, pa.string()))
+            lists = list_array(counts, pc.filter(text, hit), pa.string())
         else:
-            counts, lists = findall_kernel(text, pat)
-            ngrp_matches[iname] = (counts, lists.values)
-            cols.append(lists)
+            counts, lists = findall(text, crgx)
+        ngrp_matches[iname] = (counts, lists.values)
+        cols.append(lists)
 
     # grouped issues: first-match capture tuple per row (Go
     # FindStringSubmatch); Arrow extract_regex when all groups are named
-    for iname, pat, crgx, all_named in cc.grp:
+    for iname, crgx, all_named in cc.grp:
         counts = np.zeros(n, dtype=np.int64)
         values: list[str] = []
         if all_named:
-            ext = pc.extract_regex(text, pat)
+            ext = pc.extract_regex(text, crgx.pattern)
             valid = ext.is_valid().to_numpy(zero_copy_only=False)
             idx = np.flatnonzero(valid)
             if len(idx):
@@ -333,23 +289,19 @@ def match_batch_arrow(batch: pa.RecordBatch, cfg: ConfigSpec, vocab_pa: pa.Array
                 # row-major (row, group) flattening, no per-row Python
                 values = np.stack(fields, axis=1)[idx].ravel()
         else:
-            hits = pc.match_substring_regex(text, pat).to_numpy(zero_copy_only=False)
+            hits = pc.match_substring_regex(text, crgx.pattern).to_numpy(zero_copy_only=False)
             idx = np.flatnonzero(hits)
-            if len(idx):
-                tn = texts()
-                for i in idx:
-                    m = crgx.search(tn[i])
-                    if m is None:
-                        continue
-                    counts[i] = crgx.groups
-                    values.extend(g if g is not None else "" for g in m.groups())
-        cols.append(_list_array(counts, values, pa.string()))
+            for i, s in zip(idx, pc.take(text, pa.array(idx, pa.int64())).to_pylist()):
+                m = crgx.search(s)
+                if m is None:
+                    continue
+                counts[i] = crgx.groups
+                values.extend(g if g is not None else "" for g in m.groups())
+        cols.append(list_array(counts, values, pa.string()))
 
     # per-line field hits (A4/F5) — extracted HERE, in the embarrassingly-
     # parallel pass, instead of per scoped subject row inside the fan-out
     # window (see functions/fieldex.py for the rationale and semantics)
-    cols.extend(
-        extract_field_columns(field_plan(cfg), n, text, texts, proc_masks, ngrp_matches)
-    )
+    cols.extend(extract_field_columns(cc.fields, n, text, proc_masks, ngrp_matches))
 
     return pa.RecordBatch.from_arrays(cols, schema=parsed_arrow_schema(cfg))

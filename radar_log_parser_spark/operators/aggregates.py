@@ -56,103 +56,6 @@ def grouped_counts(grouped_routed: DataFrame) -> DataFrame:
     )
 
 
-def line_grain_hit_agg(
-    rows: DataFrame,
-    pairs: list[tuple[str, str, str]],
-    extra_row_cols: tuple = (),
-    extra_aggs1: tuple = (),
-    extra_aggs2: tuple = (),
-) -> DataFrame:
-    """THE shared two-level ordered field aggregation, at LINE GRAIN over
-    parse-time hit columns (r5: this replaced a subject-grain version that
-    re-ran every field regex per scoped subject row INSIDE the fan-out
-    window — measured 75-85% of the fused summary job's wall at 32M rows,
-    in the worst-scaling, most DRAM-exposed stage; see functions/fieldex).
-    Input `rows` is a slim-scope-grain frame (source, issue, proc_rank,
-    line_no) carrying the fld{k} struct<n,j> columns; output is one row
-    per (source, issue) with N{k} (hit count) and J{k} (scan-ordered
-    newline-joined hits) per (issue, field) pair, plus the caller's extra
-    lvl2 aggregates.
-
-    Two-level ordered aggregation: a single collect_list+sort per
-    (source, issue) would funnel every match through ONE reducer. Level 1
-    buckets by (proc_rank, line_no div 65536) — consistent with the scan
-    order — and builds per-bucket strings in parallel; level 2 merges the
-    few bucket strings in order.
-
-    Scalar packed sort key: sorting structs that CONTAIN nested data drops
-    the sort into interpreted ordering (measured: it dominated the whole
-    pipeline). The per-line hits are ALREADY one pre-joined string from
-    the parse pass, so the sorted structs are (bigint, string):
-    binary-comparable, codegen'd. A line under two kept processes of one
-    issue appears once per (proc_rank) copy with distinct packed ords —
-    the reference renders it once per process block (quirk Q3 order).
-    """
-    row_ord = _line_ord().alias("ord")
-    bucket = F.floor(F.col("line_no") / F.lit(65536)).alias("line_bucket")
-    per_row = rows.select(
-        "source", "issue", "proc_rank",
-        *extra_row_cols,
-        row_ord, bucket,
-        *[
-            F.col(fld_col(k, iname, fname)).alias(f"h{k}")
-            for k, (iname, fname, _p) in enumerate(pairs)
-        ],
-    )
-
-    aggs1 = list(extra_aggs1)
-    for k in range(len(pairs)):
-        h = F.col(f"h{k}")
-        # h is null on rows of other issues and on zero-hit lines (the
-        # parse extraction only materializes n > 0); coalesce to 0 so the
-        # count never depends on null-skipping sum semantics
-        aggs1.append(F.sum(F.coalesce(h["n"], F.lit(0))).alias(f"n{k}"))
-        # collect_list skips nulls, so only owning, matching lines enter
-        # the sort buffer
-        aggs1.append(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                h.isNotNull(),
-                                F.struct(F.col("ord"), h["j"].alias("s")),
-                            )
-                        )
-                    ),
-                    lambda s: s["s"],
-                ),
-                "\n",
-            ).alias(f"j{k}")
-        )
-    lvl1 = per_row.groupBy("source", "issue", "proc_rank", "line_bucket").agg(*aggs1)
-
-    aggs2 = list(extra_aggs2)
-    for k in range(len(pairs)):
-        aggs2.append(F.sum(F.col(f"n{k}")).alias(f"N{k}"))
-        # zero-hit buckets must not contribute empty lines to the join
-        aggs2.append(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                F.col(f"n{k}") > 0,
-                                F.struct(
-                                    "proc_rank", "line_bucket",
-                                    F.col(f"j{k}").alias("jp"),
-                                ),
-                            )
-                        )
-                    ),
-                    lambda s: s["jp"],
-                ),
-                "\n",
-            ).alias(f"J{k}")
-        )
-    return lvl1.groupBy("source", "issue").agg(*aggs2)
-
-
 def slim_scope(cfg: ConfigSpec, scope: DataFrame) -> DataFrame:
     """The one input form of `summary_aggregate`: the routed scope cut to
     its aggregation keys (source, issue, proc_rank, grouped, line_no) and
@@ -190,8 +93,26 @@ def summary_aggregate(cfg: ConfigSpec, scope_slim: DataFrame) -> DataFrame:
     (memory-bandwidth-bound re-reads). r4 fused them into one grouped
     aggregation. r5: the aggregation runs at LINE GRAIN over PARSE-TIME
     hit columns (functions/fieldex.py) — no subject explode/union, no
-    regex, and no full-text traffic left in this job; the field machinery
-    lives in `line_grain_hit_agg`.
+    regex, and no full-text traffic left in this job. This replaced a
+    subject-grain version that re-ran every field regex per scoped
+    subject row INSIDE the fan-out window — measured 75-85% of the fused
+    summary job's wall at 32M rows, in the worst-scaling, most
+    DRAM-exposed stage. The output has N{k} (hit count) and J{k}
+    (scan-ordered newline-joined hits) per (issue, field) pair k.
+
+    Two-level ordered aggregation: a single collect_list+sort per
+    (source, issue) would funnel every match through ONE reducer. Level 1
+    buckets by (proc_rank, line_no div 65536) — consistent with the scan
+    order — and builds per-bucket strings in parallel; level 2 merges the
+    few bucket strings in order.
+
+    Scalar packed sort key: sorting structs that CONTAIN nested data drops
+    the sort into interpreted ordering (measured: it dominated the whole
+    pipeline). The per-line hits are ALREADY one pre-joined string from
+    the parse pass, so the sorted structs are (bigint, string):
+    binary-comparable, codegen'd. A line under two kept processes of one
+    issue appears once per (proc_rank) copy with distinct packed ords —
+    the reference renders it once per process block (quirk Q3 order).
 
     first/last selections merge across the two levels by carrying the
     packed scan-order key next to each partial min_by/max_by: the key is
@@ -201,36 +122,90 @@ def summary_aggregate(cfg: ConfigSpec, scope_slim: DataFrame) -> DataFrame:
     first match is the minimal line's first and the last is the maximal
     line's last.
     """
+    pairs = summary_pairs(cfg)
     is_match = F.size(F.coalesce(F.col("grp_arr"), F.array())) > 0
     ng_ord = F.when(~F.col("grouped") & (F.col("n_ng") > 0), _line_ord())
     g_ord = F.when(F.col("grouped") & is_match, _line_ord())
-
-    return line_grain_hit_agg(
-        scope_slim,
-        summary_pairs(cfg),
-        extra_row_cols=(
-            "n_ng", "grouped", "first_m", "last_m", "text",
-            ng_ord.alias("ng_ord"),
-            g_ord.alias("g_ord"),
-        ),
-        extra_aggs1=(
-            F.sum(F.when(~F.col("grouped"), F.col("n_ng")).otherwise(0)).alias("o_num1"),
-            F.min("ng_ord").alias("o_ford1"),
-            F.min_by("first_m", "ng_ord").alias("o_first1"),
-            F.max("ng_ord").alias("o_lord1"),
-            F.max_by("last_m", "ng_ord").alias("o_last1"),
-            F.sum(F.when(F.col("g_ord").isNotNull(), 1).otherwise(0)).alias("g_num1"),
-            F.max("g_ord").alias("g_lord1"),
-            F.max_by("text", "g_ord").alias("g_last1"),
-        ),
-        extra_aggs2=(
-            F.sum("o_num1").alias("o_number"),
-            F.min_by("o_first1", "o_ford1").alias("first_match"),
-            F.max_by("o_last1", "o_lord1").alias("last_match"),
-            F.sum("g_num1").alias("g_number"),
-            F.max_by("g_last1", "g_lord1").alias("last_line"),
-        ),
+    row_ord = _line_ord().alias("ord")
+    bucket = F.floor(F.col("line_no") / F.lit(65536)).alias("line_bucket")
+    per_row = scope_slim.select(
+        "source", "issue", "proc_rank",
+        "n_ng", "grouped", "first_m", "last_m", "text",
+        ng_ord.alias("ng_ord"),
+        g_ord.alias("g_ord"),
+        row_ord, bucket,
+        *[
+            F.col(fld_col(k, iname, fname)).alias(f"h{k}")
+            for k, (iname, fname, _p) in enumerate(pairs)
+        ],
     )
+
+    aggs1 = [
+        F.sum(F.when(~F.col("grouped"), F.col("n_ng")).otherwise(0)).alias("o_num1"),
+        F.min("ng_ord").alias("o_ford1"),
+        F.min_by("first_m", "ng_ord").alias("o_first1"),
+        F.max("ng_ord").alias("o_lord1"),
+        F.max_by("last_m", "ng_ord").alias("o_last1"),
+        F.sum(F.when(F.col("g_ord").isNotNull(), 1).otherwise(0)).alias("g_num1"),
+        F.max("g_ord").alias("g_lord1"),
+        F.max_by("text", "g_ord").alias("g_last1"),
+    ]
+    for k in range(len(pairs)):
+        h = F.col(f"h{k}")
+        # h is null on rows of other issues and on zero-hit lines (the
+        # parse extraction only materializes n > 0); coalesce to 0 so the
+        # count never depends on null-skipping sum semantics
+        aggs1.append(F.sum(F.coalesce(h["n"], F.lit(0))).alias(f"n{k}"))
+        # collect_list skips nulls, so only owning, matching lines enter
+        # the sort buffer
+        aggs1.append(
+            F.array_join(
+                F.transform(
+                    F.array_sort(
+                        F.collect_list(
+                            F.when(
+                                h.isNotNull(),
+                                F.struct(F.col("ord"), h["j"].alias("s")),
+                            )
+                        )
+                    ),
+                    lambda s: s["s"],
+                ),
+                "\n",
+            ).alias(f"j{k}")
+        )
+    lvl1 = per_row.groupBy("source", "issue", "proc_rank", "line_bucket").agg(*aggs1)
+
+    aggs2 = [
+        F.sum("o_num1").alias("o_number"),
+        F.min_by("o_first1", "o_ford1").alias("first_match"),
+        F.max_by("o_last1", "o_lord1").alias("last_match"),
+        F.sum("g_num1").alias("g_number"),
+        F.max_by("g_last1", "g_lord1").alias("last_line"),
+    ]
+    for k in range(len(pairs)):
+        aggs2.append(F.sum(F.col(f"n{k}")).alias(f"N{k}"))
+        # zero-hit buckets must not contribute empty lines to the join
+        aggs2.append(
+            F.array_join(
+                F.transform(
+                    F.array_sort(
+                        F.collect_list(
+                            F.when(
+                                F.col(f"n{k}") > 0,
+                                F.struct(
+                                    "proc_rank", "line_bucket",
+                                    F.col(f"j{k}").alias("jp"),
+                                ),
+                            )
+                        )
+                    ),
+                    lambda s: s["jp"],
+                ),
+                "\n",
+            ).alias(f"J{k}")
+        )
+    return lvl1.groupBy("source", "issue").agg(*aggs2)
 
 
 def summary_frame(

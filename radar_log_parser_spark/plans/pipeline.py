@@ -541,7 +541,7 @@ class Pipeline:
         grouped_issues = self._stage(
             "grouped_issues",
             lambda: agg.grouped_counts(routing.grouped_matches(scope_slim)),
-            parents=["grouped_routed"],
+            parents=["scoped"],
         )
         ready("grouped_issues", grouped_issues)
         ready(

@@ -6,7 +6,7 @@ streaming here is the INGEST surface only: new tokenized-sequence files
 landing in a directory flow through the identical parse stage
 (mapInArrow works on streaming DataFrames) into streaming sinks.
 
-Batch/stream parity: `parse_stream` reuses parse_stage verbatim, so any
+Batch/stream parity: the stream runs parse_stage verbatim, so any
 golden-verified batch semantics hold per micro-batch. Order-sensitive
 aggregates (first/last, A5) are only defined per completed log, hence they
 stay in the batch layer; streaming exposes the order-free ones (counts,
@@ -22,24 +22,25 @@ from pyspark.sql import functions as F
 from radar_log_parser_spark.codec import Vocab
 from radar_log_parser_spark.config import ConfigSpec
 from radar_log_parser_spark.functions.parse import parse_stage
-from radar_log_parser_spark.sources.fixtures import ARROW_SCHEMA  # noqa: F401
 
 
 INPUT_DDL = "doc_id string, tokens array<int>, n_tok int, source string"
+EVENTS_DDL = (
+    "event_id long, ts timestamp, user_id long, event_type string, "
+    "value double, props string"
+)
 
 
-def read_stream(spark: SparkSession, path: str, max_files_per_trigger: int = 8) -> DataFrame:
+def read_stream(
+    spark: SparkSession, path: str, ddl: str = INPUT_DDL, max_files_per_trigger: int = 8
+) -> DataFrame:
+    """A parquet file stream of `ddl` rows (INPUT_DDL: the tokenized log
+    table; EVENTS_DDL: the events table)."""
     return (
-        spark.readStream.schema(INPUT_DDL)
+        spark.readStream.schema(ddl)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .parquet(path)
     )
-
-
-def parse_stream(stream: DataFrame, cfg: ConfigSpec, vocab: Vocab) -> DataFrame:
-    """Identical plan to the batch parse stage — mapInArrow is
-    streaming-compatible."""
-    return parse_stage(stream, cfg, vocab)
 
 
 def severity_counts_stream(parsed: DataFrame) -> DataFrame:
@@ -50,22 +51,6 @@ def severity_counts_stream(parsed: DataFrame) -> DataFrame:
         F.explode(F.arrays_zip("sev_levels", "sev_counts")).alias("s"),
     ).select("source", F.col("s.sev_levels").alias("level"), F.col("s.sev_counts").alias("n"))
     return sev.groupBy("source", "level").agg(F.sum("n").alias("n_matches"))
-
-
-EVENTS_DDL = (
-    "event_id long, ts timestamp, user_id long, event_type string, "
-    "value double, props string"
-)
-
-
-def read_events_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int = 8
-) -> DataFrame:
-    return (
-        spark.readStream.schema(EVENTS_DDL)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(path)
-    )
 
 
 def windowed_event_counts_stream(
@@ -92,17 +77,15 @@ def windowed_event_counts_stream(
     )
 
 
-def run_windowed_available_now(
-    spark: SparkSession,
-    events_path: str,
-    checkpoint_dir: str,
-    query_name: str = "windowed_events",
-):
-    """Catch-up run of the watermarked window rollup (Trigger.AvailableNow);
-    append mode emits only watermark-finalized windows."""
-    counts = windowed_event_counts_stream(read_events_stream(spark, events_path))
+def _available_now(
+    spark: SparkSession, counts: DataFrame, mode: str, query_name: str, checkpoint_dir: str
+) -> DataFrame:
+    """Catch-up run (Trigger.AvailableNow): process everything currently
+    in the stream's source, then stop — the streaming analog of a
+    resumable batch; the stream checkpoint carries offsets across
+    restarts. The result lands in the memory table `query_name`."""
     q = (
-        counts.writeStream.outputMode("append")
+        counts.writeStream.outputMode(mode)
         .format("memory")
         .queryName(query_name)
         .option("checkpointLocation", checkpoint_dir)
@@ -111,6 +94,18 @@ def run_windowed_available_now(
     )
     q.awaitTermination()
     return spark.table(query_name)
+
+
+def run_windowed_available_now(
+    spark: SparkSession,
+    events_path: str,
+    checkpoint_dir: str,
+    query_name: str = "windowed_events",
+):
+    """Catch-up run of the watermarked window rollup; append mode emits
+    only watermark-finalized windows."""
+    counts = windowed_event_counts_stream(read_stream(spark, events_path, EVENTS_DDL))
+    return _available_now(spark, counts, "append", query_name, checkpoint_dir)
 
 
 def run_available_now(
@@ -121,18 +116,8 @@ def run_available_now(
     checkpoint_dir: str,
     query_name: str = "severity_counts",
 ):
-    """Catch-up run: process everything currently in `input_path` then stop
-    (Trigger.AvailableNow) — the streaming analog of a resumable batch; the
-    stream checkpoint carries offsets across restarts."""
-    parsed = parse_stream(read_stream(spark, input_path), cfg, vocab)
-    counts = severity_counts_stream(parsed)
-    q = (
-        counts.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Catch-up run of the severity rollup over `input_path`."""
+    parsed = parse_stage(read_stream(spark, input_path), cfg, vocab)
+    return _available_now(
+        spark, severity_counts_stream(parsed), "complete", query_name, checkpoint_dir
     )
-    q.awaitTermination()
-    return spark.table(query_name)

@@ -11,9 +11,11 @@
 from __future__ import annotations
 
 import pytest
+import yaml
 
 from radar_log_parser_spark.codec import Vocab
 from radar_log_parser_spark.config import ConfigError, parse_config
+from radar_log_parser_spark.sources.fixtures import FIXTURE_CONFIG_YAML
 
 
 def test_codec_roundtrip(corpus):
@@ -112,55 +114,112 @@ def test_quirk_q1_lonelyproc_dropped(pipeline_result):
     assert {"CameraService", "AudioFlinger"} <= procs
 
 
-def test_parse_matches_oracle_per_line(spark, cfg, vocab, fx, corpus):
-    """Every line of the Arrow/RE2 parse output on the unit fixture agrees
-    with the oracle's Go-regexp semantics (go_findall, re.ASCII): the
-    line ordinal, the decoded text, the matching process and event names, each non-grouped
-    issue's match substrings in order, each grouped issue's first-match
-    capture groups, the severity levels with their match counts, and each
-    summary field's hits (Q10: a grouped issue's field scans the line when
-    it matched one of the issue's processes, a non-grouped issue's field
-    scans its match substrings)."""
+# Inputs no catalog or fixture line has: non-grouped regexes that can
+# match empty (\d*) or take alternatives, and empty-matchable fields on a
+# grouped (Ee) and on non-grouped issues (Ex, Oh)
+EDGE_CONFIG_YAML = FIXTURE_CONFIG_YAML.replace(
+    "Issues:\n",
+    """\
+Issues:
+  Digits:
+    specific_process:
+      CameraService: '(?m)^.*CameraService.*$'
+    regex: '\\d*'
+    detailing_mode: 'separate'
+    additional_fields:
+      Ex: 'x*'
+  CodeOrTimeout:
+    specific_process:
+      AudioFlinger: '(?m)^.*AudioFlinger.*$'
+    regex: 'code=\\d+|timeout'
+    detailing_mode: 'separate'
+    additional_fields:
+      Oh: 'o*'
+""",
+).replace(
+    "    grouping: 'underrun on",
+    "    additional_fields:\n      Ee: 'e*'\n    grouping: 'underrun on",
+)
+
+
+def _check_parsed_line(r, text: str, cfg) -> None:
+    """One parse output row against the oracle's Go-regexp semantics."""
     import re
 
     from radar_log_parser_spark.config import LOG_LEVELS, severity_pattern, summary_pairs
-    from radar_log_parser_spark.functions.parse import parse_stage
     from radar_log_parser_spark.functions.schema import fld_cols
     from radar_log_parser_spark.sources.fixtures import doc_id
     from tests.oracle import go_findall
 
-    ngrp = {n: s.regex for n, s in cfg.issues.items() if not s.grouped and s.regex}
-    grp = {n: s.grouping for n, s in cfg.issues.items() if s.grouped and s.grouping}
-    rows = parse_stage(spark.read.parquet(fx.logs_path), cfg, vocab).collect()
-    assert len(rows) == sum(len(lines) for lines in corpus.values())
-
-    def names(patterns: dict[str, str], text: str) -> list[str]:
+    def names(patterns: dict[str, str]) -> list[str]:
         return sorted(n for n, p in patterns.items() if go_findall(p, text))
 
-    for r in rows:
-        assert r["doc_id"] == doc_id(r["source"], r["line_no"])
-        text = corpus[r["source"]][r["line_no"]]
-        assert r["text"] == text, r["doc_id"]
-        assert r["procs"] == names(cfg.specific_process, text), r["doc_id"]
-        assert r["events"] == names(cfg.important_events, text), r["doc_id"]
-        for n, p in ngrp.items():
-            assert r[f"ngrp__{n}"] == go_findall(p, text), (r["doc_id"], n)
-        for n, p in grp.items():
-            m = re.search(p, text, re.ASCII)
+    assert r["doc_id"] == doc_id(r["source"], r["line_no"])
+    assert r["text"] == text, r["doc_id"]
+    assert r["procs"] == names(cfg.specific_process), r["doc_id"]
+    assert r["events"] == names(cfg.important_events), r["doc_id"]
+    for n, s in cfg.issues.items():
+        if not s.grouped and s.regex:
+            assert r[f"ngrp__{n}"] == go_findall(s.regex, text), (r["doc_id"], n)
+        if s.grouped and s.grouping:
+            m = re.search(s.grouping, text, re.ASCII)
             want = [g or "" for g in m.groups()] if m else []
             assert r[f"grp__{n}"] == want, (r["doc_id"], n)
-        sev = [
-            (lv, len(go_findall(severity_pattern(r["source"], lv), text)))
-            for lv in LOG_LEVELS.get(r["source"], [])
-        ]
-        sev = [(lv, c) for lv, c in sev if c]
-        assert list(zip(r["sev_levels"], r["sev_counts"])) == sev, r["doc_id"]
-        for col, (iname, _f, pat) in zip(fld_cols(cfg), summary_pairs(cfg)):
-            issue = cfg.issues[iname]
-            if issue.grouped:
-                scoped = any(p in r["procs"] for p in issue.specific_process)
-                hits = go_findall(pat, text) if scoped else []
-            else:
-                hits = [h for m in go_findall(issue.regex, text) for h in go_findall(pat, m)]
-            got = r[col] and (r[col]["n"], r[col]["j"])
-            assert got == ((len(hits), "\n".join(hits)) if hits else None), (r["doc_id"], col)
+    sev = [
+        (lv, len(go_findall(severity_pattern(r["source"], lv), text)))
+        for lv in LOG_LEVELS.get(r["source"], [])
+    ]
+    sev = [(lv, c) for lv, c in sev if c]
+    assert list(zip(r["sev_levels"], r["sev_counts"])) == sev, r["doc_id"]
+    for col, (iname, _f, pat) in zip(fld_cols(cfg), summary_pairs(cfg)):
+        issue = cfg.issues[iname]
+        if issue.grouped:
+            scoped = any(p in r["procs"] for p in issue.specific_process)
+            hits = go_findall(pat, text) if scoped else []
+        else:
+            hits = [h for m in go_findall(issue.regex, text) for h in go_findall(pat, m)]
+        got = r[col] and (r[col]["n"], r[col]["j"])
+        assert got == ((len(hits), "\n".join(hits)) if hits else None), (r["doc_id"], col)
+
+
+def test_parse_matches_oracle_per_line(spark, cfg, vocab, fx, corpus):
+    """Every line of the Arrow/RE2 parse output agrees with the oracle's
+    Go-regexp semantics (go_findall, re.ASCII): the line ordinal, the
+    decoded text, the matching process and event names, each non-grouped
+    issue's match substrings in order, each grouped issue's first-match
+    capture groups, the severity levels with their match counts, and each
+    summary field's hits (Q10: a grouped issue's field scans the line when
+    it matched one of the issue's processes, a non-grouped issue's field
+    scans its match substrings).
+
+    Two cases: the unit fixture through the Spark parse stage, and an edge
+    corpus through the kernel in 256-row batches. The edge corpus holds a
+    NUL (the kernel's findall sentinel) in every 7th line; it runs under
+    the unit config and under EDGE_CONFIG_YAML's empty-matchable patterns,
+    so the Python finditer fallback is checked on both of its triggers."""
+    import pyarrow as pa
+
+    from radar_log_parser_spark.functions.parse import parse_stage
+    from radar_log_parser_spark.functions.parse_arrow import match_batch_arrow
+    from radar_log_parser_spark.sources.fixtures import corpus_to_table, generate_corpus
+
+    rows = parse_stage(spark.read.parquet(fx.logs_path), cfg, vocab).collect()
+    assert len(rows) == sum(len(lines) for lines in corpus.values())
+    for r in rows:
+        _check_parsed_line(r, corpus[r["source"]][r["line_no"]], cfg)
+
+    edge = generate_corpus(n_rows=600, seed=11)
+    for lines in edge.values():
+        for j in range(0, len(lines), 7):
+            k = len(lines[j]) // 2
+            lines[j] = lines[j][:k] + "\x00" + lines[j][k:]
+    edge_vocab = Vocab.build([ln for lines in edge.values() for ln in lines])
+    vocab_pa = pa.array(edge_vocab.id_to_token, pa.string())
+    table = corpus_to_table(edge, edge_vocab)
+    for edge_cfg in (cfg, parse_config(yaml.safe_load(EDGE_CONFIG_YAML))):
+        out = pa.Table.from_batches(
+            [match_batch_arrow(b, edge_cfg, vocab_pa) for b in table.to_batches(256)]
+        )
+        assert out.num_rows == sum(len(lines) for lines in edge.values())
+        for r in out.to_pylist():
+            _check_parsed_line(r, edge[r["source"]][r["line_no"]], edge_cfg)

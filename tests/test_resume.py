@@ -28,6 +28,17 @@ def test_checkpoint_resume(spark, cfg, vocab, fx, tmp_path):
     assert {"parsed", "specific_issues", "scoped", "other_routed",
             "grouped_routed", "events", "severity", "grouped_issues",
             "summary"} <= executed
+    # each stage's lineage names the stage it reads
+    parents = {
+        "parsed": ["input"],
+        **dict.fromkeys(("events", "severity", "specific_issues", "scoped"), ["parsed"]),
+        **dict.fromkeys(
+            ("other_routed", "grouped_routed", "summary", "grouped_issues"), ["scoped"]
+        ),
+    }
+    for stage, want in parents.items():
+        with open(os.path.join(work, stage, "_lineage.json")) as f:
+            assert json.load(f)["parents"] == want, stage
 
     # Simulate a crash AFTER "scoped": delete every later checkpoint.
     for stage in ("other_routed", "grouped_routed", "events", "severity",

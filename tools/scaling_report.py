@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Assemble BENCH/BASELINE.md (north-rule two-cluster-size evidence) from
 one or more scaling-campaign logs (the per-round JSON lines bench.py
---scaling prints to stderr). Merging several campaigns is legitimate —
+--scaling prints to stderr; the campaign is in git history at commit
+811a626, since it needs 16 cores). Merging several campaigns is legitimate —
 every round is the same code, input and levels; campaigns are split only
 so a transient leg failure can't destroy hours of evidence.
 
@@ -31,7 +32,7 @@ ROWS = 32_000_000
 CLEAN_LO, CLEAN_HI = 3.0, 4.4
 
 # FILTER AMENDMENT (2026-08-18, documented with reproduction — see
-# bench.py:_calibrate_host_mem): the DRAM control's one-shot
+# bench.py:_calibrate_host_mem at commit 811a626): the DRAM control's one-shot
 # `thr(4N)/thr(N)` was discovered to be ORDER-BIASED — the 4N leg ran
 # cold (first-touch page faults + page-cache reclaim left by the
 # preceding Spark legs) and the N leg warm. Back-to-back probe calls on
