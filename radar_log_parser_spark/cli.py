@@ -5,11 +5,14 @@
     spark-submit --py-files pkg.zip cli.py \
         --config fixtures/config.yaml --vocab fixtures/vocab.json \
         --input /data/logs.parquet --work-dir /data/work \
-        --sinks-dir /data/sinks [--resume] [--master local[32]]
+        --sinks-dir /data/sinks [--master local[32]]
 
 Runs the checkpointed pipeline (resume is automatic: stages whose lineage
-fingerprint matches are read, not recomputed) and writes every sink as
-parquet under --sinks-dir.
+fingerprint matches are read, not recomputed). With --sinks-dir the seven
+sink stages are checkpointed in place as <sinks-dir>/<sink>/, each with its
+`_lineage.json`, so they resume like the other stages; `parsed` and
+`scoped` stay under --work-dir. The eighth sink, `match_sets`, is not a
+stage and is written there on every run.
 """
 
 from __future__ import annotations
@@ -28,7 +31,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--work-dir", required=True, help="checkpoint dir")
     ap.add_argument("--sinks-dir", default=None, help="write final sinks here")
     ap.add_argument("--master", default=None)
-    ap.add_argument("--no-checkpoint", action="store_true")
     ap.add_argument("--format", default="parquet", choices=["parquet", "iceberg"])
     args = ap.parse_args(argv)
 
@@ -48,14 +50,13 @@ def main(argv: list[str] | None = None) -> int:
         vocab,
         args.input,
         work_dir=args.work_dir,
-        checkpoint=not args.no_checkpoint,
+        checkpoint=True,
         fmt=args.format,
+        sinks_dir=args.sinks_dir,
     )
     res = pipe.run()
     if args.sinks_dir:
-        for name in ("specific_issues", "other_routed", "grouped_routed",
-                     "events", "severity", "grouped_issues", "match_sets", "summary"):
-            res.sinks[name].write.mode("overwrite").parquet(f"{args.sinks_dir}/{name}")
+        res.sinks["match_sets"].write.mode("overwrite").parquet(f"{args.sinks_dir}/match_sets")
     report = {
         "wall_s": round(time.monotonic() - t0, 2),
         "codegen_compiles": pipe.codegen_compiles,

@@ -4,11 +4,16 @@ checkpoints, lineage + metrics, and resumable restart.
 Each checkpointed stage writes
     <work_dir>/<stage>/            parquet data (+ _SUCCESS from Spark)
     <work_dir>/<stage>/_lineage.json
-with a content fingerprint chaining (engine version, config hash, vocab
-hash, input path, input fingerprint, parent fingerprints). On restart, a
-stage whose lineage fingerprint matches is READ instead of recomputed —
-killing the job after stage k and rerunning reproduces byte-identical final
-sinks without redoing stages ≤ k (north-rule resumability requirement).
+with a content fingerprint chaining (code fingerprint, config hash, vocab
+hash, input path, input fingerprint, stage name, parent names). The code
+fingerprint hashes the package's own sources and the pyspark and pyarrow
+versions, so an upgrade recomputes every stage. On restart, a stage whose
+lineage fingerprint matches is READ instead of recomputed — killing the job
+after stage k and rerunning reproduces byte-identical final sinks without
+redoing stages ≤ k (north-rule resumability requirement). The manifest also
+records the stage's schema, so every read-back is a plain scan that runs no
+Spark job. Given a sinks dir, the sink stages are checkpointed as
+<sinks_dir>/<sink>/ instead: each sink is written once, with its lineage.
 
 Storage format is switchable: parquet (default, always available) or
 Iceberg (same layout via a catalog table; requires the iceberg-spark
@@ -32,7 +37,9 @@ Partitioning at scale:
 
 from __future__ import annotations
 
+import functools
 import hashlib
+import importlib.resources
 import json
 import os
 import time
@@ -41,6 +48,7 @@ from dataclasses import dataclass, field
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from radar_log_parser_spark.codec import Vocab
 from radar_log_parser_spark.config import ConfigSpec
@@ -48,8 +56,6 @@ from radar_log_parser_spark.functions.parse import parse_stage
 from radar_log_parser_spark.operators import aggregates as agg
 from radar_log_parser_spark.operators import routing
 from radar_log_parser_spark.session import codegen_compiles, local_frame
-
-ENGINE_VERSION = "0.1.0"
 
 SALT_MOD = 16
 
@@ -75,6 +81,29 @@ def _fingerprint(*parts: str) -> str:
         h.update(p.encode())
         h.update(b"\x00")
     return h.hexdigest()[:24]
+
+
+def _py_sources(root, prefix: str = ""):
+    """`<relative path>\x00<source>` of every `.py` under a `Traversable`."""
+    for child in root.iterdir():
+        if child.is_dir():
+            yield from _py_sources(child, f"{prefix}{child.name}/")
+        elif child.name.endswith(".py"):
+            yield f"{prefix}{child.name}\x00{child.read_text()}"
+
+
+@functools.cache
+def code_fingerprint() -> str:
+    """The code every stage's output depends on, hashed once per process on
+    the driver: the package's own sources, read through its module loader
+    (so a package imported from a `--py-files` zip hashes the same), and the
+    pyspark and pyarrow versions (RE2 ships inside pyarrow). Any edit to the
+    package recomputes every stage."""
+    import pyarrow
+    import pyspark
+
+    pkg = importlib.resources.files("radar_log_parser_spark")
+    return _fingerprint(*sorted(_py_sources(pkg)), pyspark.__version__, pyarrow.__version__)
 
 
 def _config_hash(cfg: ConfigSpec) -> str:
@@ -120,13 +149,27 @@ class Checkpointer:
     runtime jar is a plain maven artifact absent from this sandbox
     (verified: no network, no jar on the classpath), so construction fails
     FAST without it — the parquet path is the explicit fallback, never a
-    silent substitution."""
+    silent substitution.
+
+    sinks_dir puts the sink stages (`Pipeline.ROW_SINKS + AGG_SINKS`) at
+    <sinks_dir>/<sink>/ in place of <work_dir>/<sink>/; the other stages
+    stay under the work dir. Iceberg's sinks are the catalog's tables, so
+    it takes no sinks dir."""
 
     CATALOG = "rlps_ckpt"
 
-    def __init__(self, spark: SparkSession, work_dir: str, fmt: str = "parquet"):
+    def __init__(
+        self,
+        spark: SparkSession,
+        work_dir: str,
+        fmt: str = "parquet",
+        sinks_dir: str | None = None,
+    ):
+        if fmt == "iceberg" and sinks_dir is not None:
+            raise ValueError("iceberg sinks are the catalog's tables; sinks_dir needs fmt='parquet'")
         self.spark = spark
         self.work_dir = work_dir
+        self.sinks_dir = sinks_dir
         # recorded in every `_lineage.json`; `Pipeline` sets it to its
         # input's content fingerprint
         self.input_fp = ""
@@ -161,6 +204,8 @@ class Checkpointer:
     def path(self, stage: str) -> str:
         if self.fmt == "iceberg":
             return os.path.join(self.work_dir, "stages", stage)
+        if self.sinks_dir is not None and stage in Pipeline.ROW_SINKS + Pipeline.AGG_SINKS:
+            return os.path.join(self.sinks_dir, stage)
         return os.path.join(self.work_dir, stage)
 
     def _lineage_path(self, stage: str) -> str:
@@ -182,9 +227,13 @@ class Checkpointer:
             return False
 
     def read(self, stage: str) -> DataFrame:
+        """The stage's table; parquet takes its schema from `_lineage.json`,
+        so the read runs no schema-inference job."""
         if self.fmt == "iceberg":
             return self.spark.read.table(self._table(stage))
-        return self.spark.read.parquet(self.path(stage))
+        with open(self._lineage_path(stage)) as f:
+            schema = StructType.fromJson(json.load(f)["schema"])
+        return self.spark.read.schema(schema).parquet(self.path(stage))
 
     def _write_data(self, stage: str, df: DataFrame, buckets: int) -> None:
         if self.fmt == "iceberg":
@@ -245,12 +294,13 @@ class Checkpointer:
                     "fingerprint": fingerprint,
                     "parents": parents,
                     "input_fingerprint": self.input_fp,
-                    "engine_version": ENGINE_VERSION,
+                    "code_fingerprint": code_fingerprint(),
                     "format": self.fmt,
                     "rows": metrics.rows,
                     "files": metrics.files,
                     "per_file_rows": metrics.per_file_rows,
                     "wall_s": round(metrics.wall_s, 3),
+                    "schema": df.schema.jsonValue(),
                 },
                 f,
                 indent=1,
@@ -277,6 +327,9 @@ class Pipeline:
     buckets sets only N of the Iceberg `bucket(N, doc_id)` partition spec
     (default: spark.sql.shuffle.partitions). Parquet stage writes take
     their partition count from AQE (see the module docstring).
+
+    sinks_dir (checkpoint mode only) checkpoints the sink stages there, see
+    `Checkpointer`.
     """
 
     ROW_SINKS = ("specific_issues", "other_routed", "grouped_routed", "events", "severity")
@@ -292,13 +345,16 @@ class Pipeline:
         checkpoint: bool = False,
         fmt: str = "parquet",
         buckets: int | None = None,
+        sinks_dir: str | None = None,
     ):
+        if sinks_dir is not None and not checkpoint:
+            raise ValueError("sinks_dir holds checkpointed sink stages; it needs checkpoint=True")
         self.spark = spark
         self.cfg = cfg
         self.vocab = vocab
         self.input_path = input_path
         self.checkpoint = checkpoint
-        self.ckpt = Checkpointer(spark, work_dir, fmt) if checkpoint else None
+        self.ckpt = Checkpointer(spark, work_dir, fmt, sinks_dir) if checkpoint else None
         self.buckets = buckets or int(spark.conf.get("spark.sql.shuffle.partitions"))
         # vocab CONTENT hash: a changed vocab of identical size must
         # invalidate every checkpoint (decoded text changes everywhere)
@@ -311,7 +367,7 @@ class Pipeline:
         if self.ckpt is not None:
             self.ckpt.input_fp = self.input_fp
         self._root_fp = _fingerprint(
-            ENGINE_VERSION,
+            code_fingerprint(),
             _config_hash(cfg),
             vocab_fp,
             input_path,

@@ -5,8 +5,14 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
+import sys
+import zipfile
 
-from radar_log_parser_spark.plans.pipeline import Pipeline
+import pytest
+
+from radar_log_parser_spark.plans import pipeline
+from radar_log_parser_spark.plans.pipeline import Checkpointer, Pipeline
 
 
 def _summary_rows(res):
@@ -123,13 +129,88 @@ def test_input_change_invalidates_checkpoint(spark, cfg, vocab, fx, tmp_path):
             assert json.load(f)["input_fingerprint"] == p2.input_fp, m.stage
 
 
+def test_code_change_invalidates_checkpoint(spark, cfg, vocab, fx, tmp_path, monkeypatch):
+    """Checkpoints written by other code must NOT resume: every stage
+    recomputes and the sinks equal a fresh run's. Every `_lineage.json`
+    records the code fingerprint."""
+    work = str(tmp_path / "ckpt_code")
+    Pipeline(spark, cfg, vocab, fx.logs_path, work_dir=work, checkpoint=True).run()
+
+    monkeypatch.setattr(pipeline, "code_fingerprint", lambda: "edited-package")
+    r2 = Pipeline(spark, cfg, vocab, fx.logs_path, work_dir=work, checkpoint=True).run()
+    assert not any(m.resumed for m in r2.metrics), [m.stage for m in r2.metrics if m.resumed]
+    fresh = Pipeline(
+        spark, cfg, vocab, fx.logs_path, work_dir=str(tmp_path / "fresh_code"), checkpoint=True
+    )
+    assert _sink_rows(r2) == _sink_rows(fresh.run())
+    for m in r2.metrics:
+        with open(os.path.join(work, m.stage, "_lineage.json")) as f:
+            assert json.load(f)["code_fingerprint"] == "edited-package", m.stage
+
+
+def test_code_fingerprint_is_the_same_from_a_zip(tmp_path):
+    """`spark-submit --py-files` imports the package from a zip; its code
+    fingerprint equals the one of the source tree (no Spark session)."""
+    import radar_log_parser_spark
+
+    pkg = os.path.dirname(radar_log_parser_spark.__file__)
+    archive = tmp_path / "pkg.zip"
+    with zipfile.ZipFile(archive, "w") as zf:
+        for root, _dirs, names in os.walk(pkg):
+            for name in names:
+                full = os.path.join(root, name)
+                zf.write(full, os.path.relpath(full, os.path.dirname(pkg)))
+    probe = (
+        "from radar_log_parser_spark.plans import pipeline as p;"
+        "print(p.__file__); print(p.code_fingerprint())"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe],
+        env={**os.environ, "PYTHONPATH": str(archive)},
+        cwd=tmp_path,
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.split()
+    assert out[0].startswith(str(archive)), out[0]
+    assert out[1] == pipeline.code_fingerprint()
+
+
+def test_stage_reads_run_no_job(spark, cfg, vocab, fx, tmp_path):
+    """A stage read takes its schema from `_lineage.json`: no Spark job,
+    and the schema Spark would have inferred from the files. The sink
+    stages are read from the sinks dir."""
+    sinks = str(tmp_path / "sinks")
+    pipe = Pipeline(
+        spark, cfg, vocab, fx.logs_path, work_dir=str(tmp_path / "ckpt_reads"),
+        checkpoint=True, sinks_dir=sinks,
+    )
+    res = pipe.run()
+    stages = [m.stage for m in res.metrics]
+    assert sorted(os.listdir(sinks)) == sorted(Pipeline.ROW_SINKS + Pipeline.AGG_SINKS)
+    sc = spark.sparkContext
+    sc.setJobGroup("stage-reads", "Checkpointer.read of every stage")
+    try:
+        schemas = {s: pipe.ckpt.read(s).schema for s in stages}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("stage-reads")) == []
+    for s in stages:
+        assert schemas[s] == spark.read.parquet(pipe.ckpt.path(s)).schema, s
+
+
+def test_iceberg_refuses_sinks_dir(spark, tmp_path):
+    """Iceberg's sinks are the catalog's tables: a sinks dir is refused
+    before the runtime-jar check."""
+    with pytest.raises(ValueError, match="sinks_dir"):
+        Checkpointer(spark, str(tmp_path / "ice"), fmt="iceberg", sinks_dir=str(tmp_path / "s"))
+
+
 def test_checkpointer_write_signature_is_stable():
     """perfbench's traced run wraps `Checkpointer.write` as
     `(stage, df, fingerprint, parents, buckets=32)`; the input fingerprint
     is a `Checkpointer` attribute, not an argument."""
     import inspect
-
-    from radar_log_parser_spark.plans.pipeline import Checkpointer
 
     params = list(inspect.signature(Checkpointer.write).parameters)
     assert params == ["self", "stage", "df", "fingerprint", "parents", "buckets"]
