@@ -20,6 +20,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import subprocess
 import sys
 import time
@@ -106,10 +107,13 @@ def run_pipeline_bench(
     n_rows: int | None = None,
     repeats: int = 2,
 ) -> dict:
-    """Pipeline-only measurement in a clean JVM: warm (sampled parse) →
-    untimed dry run → `repeats` timed runs, report the MINIMUM (the sandbox
-    VM shows multi-× CPU-steal noise; min is the standard noise-robust
-    estimator for throughput)."""
+    """The cli's pipeline run measured in a clean JVM: warm (sampled parse)
+    → untimed dry run → `repeats` timed runs, report the MINIMUM (the
+    sandbox VM shows multi-× CPU-steal noise; min is the standard
+    noise-robust estimator for throughput). Each run is what `cli.py
+    --sinks-dir` does: the checkpointed `Pipeline` with its sink stages in
+    the sinks dir, plus the `match_sets` write. Every run starts from an
+    empty work dir and sinks dir; a reused one would resume every stage."""
     from radar_log_parser_spark.codec import Vocab
     from radar_log_parser_spark.config import load_config
     from radar_log_parser_spark.functions.parse import parse_stage
@@ -127,13 +131,6 @@ def run_pipeline_bench(
             # no UI listener: AppStatusListener bookkeeping is driver-serial
             # overhead a headless bench run never reads
             "spark.ui.enabled": "false",
-            # compress the materialized (localCheckpoint) blocks: the parsed
-            # rows are token arrays + templated strings that lz4 shrinks
-            # multi-×, and SEVEN consumers re-read those blocks per run — on
-            # this DRAM-bandwidth-capped host (and on any real cluster's
-            # memory bus) trading cheap per-core decompression for bytes
-            # moved is the right side of the trade.
-            "spark.rdd.compress": "true",
             # one file per input split: the fixture's part files are ~0.5 MB
             # compressed (tokens compress hard) but decode to ~50× that; the
             # default 64m/4m packing would fuse them into a handful of
@@ -149,6 +146,8 @@ def run_pipeline_bench(
     parse_stage(
         spark.read.parquet(logs).sample(0.05, seed=1), cfg, vocab
     ).write.format("noop").mode("overwrite").save()
+    run_dir = os.path.join(CACHE, "pipeline_run")
+    sinks = os.path.join(run_dir, "sinks")
 
     def once() -> tuple[float, dict]:
         # flush pending Python-side garbage OUTSIDE the timed window: the
@@ -158,36 +157,22 @@ def run_pipeline_bench(
         # phase is active when gc triggers
         import gc
 
+        shutil.rmtree(run_dir, ignore_errors=True)
         gc.collect()
         t0 = time.monotonic()
+        pipe = Pipeline(
+            spark, cfg, vocab, logs,
+            work_dir=os.path.join(run_dir, "work"), checkpoint=True, sinks_dir=sinks,
+        )
+        res = pipe.run()
+        res.sinks["match_sets"].write.mode("overwrite").parquet(os.path.join(sinks, "match_sets"))
+        return time.monotonic() - t0, pipe.timings
 
-        # every sink write + aggregate collect is an independent job over
-        # the materialized parse stage: the pipeline submits each to its
-        # ONE concurrent pool the moment that sink's inputs are
-        # materialized (dependency-tiered fan-out — see Pipeline.run), so
-        # the keep-set collect and the slim materialization overlap the
-        # sink jobs instead of serializing in front of them
-        def sink_jobs(name, df):
-            if name in ("specific_issues", "other_routed", "grouped_routed",
-                        "events", "severity", "summary"):
-                # the summary materializes as a SINK WRITE like the rest —
-                # a production job writes the report table; collecting it
-                # would pull the unbounded joined-field strings through
-                # the driver (the measured 30-60 s serial tail this
-                # replaced)
-                return df.write.format("noop").mode("overwrite").save
-            if name == "grouped_issues":
-                return df.collect
-            return None
-
-        pipe = Pipeline(spark, cfg, vocab, logs, checkpoint=False)
-        res = pipe.run(job_factory=sink_jobs)
-        dt = time.monotonic() - t0
-        res.sinks["parsed"].unpersist(blocking=True)
-        return dt, pipe.timings
-
-    once()  # dry (JIT/codegen)
-    runs, phases = zip(*(once() for _ in range(repeats)))
+    try:
+        once()  # dry (JIT/codegen)
+        runs, phases = zip(*(once() for _ in range(repeats)))
+    finally:
+        shutil.rmtree(run_dir, ignore_errors=True)
     dt = min(runs)
     spark.stop()
     return {
@@ -205,7 +190,6 @@ def run_pipeline_bench(
 def run_bench(sf_dir: str, cpus: int) -> dict:
     from radar_log_parser_spark.codec import Vocab
     from radar_log_parser_spark.config import load_config
-    from radar_log_parser_spark.plans.pipeline import Pipeline
     from radar_log_parser_spark.session import get_spark
 
     import __spark_entry__ as entry
@@ -263,7 +247,7 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
     out = subprocess.run(
         [sys.executable, os.path.abspath(__file__), "--pipeline-only",
          "--cpus", str(cpus), "--sf-dir", sf_dir, "--repeats", "3"],
-        capture_output=True, text=True, check=True, cwd=REPO,
+        stdout=subprocess.PIPE, text=True, check=True, cwd=REPO,
     )
     pipe = json.loads(out.stdout.strip().splitlines()[-1])
     timings["log_pipeline_e2e"] = pipe["pipeline_seconds"]

@@ -45,7 +45,6 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -60,19 +59,16 @@ from radar_log_parser_spark.session import codegen_compiles, local_frame
 SALT_MOD = 16
 
 
-def salted_repartition(
-    df: DataFrame, key: str, buckets: int | None = None, salt_mod: int = SALT_MOD
-) -> DataFrame:
+def salted_repartition(df: DataFrame, key: str) -> DataFrame:
     """Repartition by (key, salt) for LOW-CARDINALITY keys (source/process):
     plain repartition(key) sends a hot source's entire shard to ONE task —
     at 10^12 rows a 90%-hot source serializes the write. The salt (a stable
-    hash of doc_id mod salt_mod) fans each key over up to salt_mod tasks
+    hash of doc_id mod SALT_MOD) fans each key over up to SALT_MOD tasks
     while keeping rows of one (key, salt) cell co-located, so per-source
     consumers still prune. (North rule: 'salted repartition for
-    source-skewed shards'.) buckets=None leaves the partition count to AQE,
-    which coalesces it to the data size; an explicit count is kept as is."""
-    cols = (F.col(key), F.pmod(F.xxhash64("doc_id"), F.lit(salt_mod)))
-    return df.repartition(*cols) if buckets is None else df.repartition(buckets, *cols)
+    source-skewed shards'.) The partition count is left to AQE, which
+    coalesces it to the data size."""
+    return df.repartition(F.col(key), F.pmod(F.xxhash64("doc_id"), F.lit(SALT_MOD)))
 
 
 def _fingerprint(*parts: str) -> str:
@@ -318,18 +314,16 @@ class PipelineResult:
 
 
 class Pipeline:
-    """Compile the config into the full dataflow and run it.
+    """Compile the config into the full dataflow and run it. Every stage is
+    checkpointed under work_dir with its lineage, and a rerun reads each
+    stage whose fingerprint still matches instead of recomputing it
+    (production mode, north rule).
 
-    checkpoint=False runs the whole plan lazily in one Spark job chain
-    (bench mode); checkpoint=True materializes each stage with lineage for
-    resumability (production mode, north rule).
+    checkpoint=True is the only mode. The parameter stays because existing
+    callers pass it (the benchmark harness among them); checkpoint=False
+    raises ValueError instead of being silently ignored.
 
-    buckets sets only N of the Iceberg `bucket(N, doc_id)` partition spec
-    (default: spark.sql.shuffle.partitions). Parquet stage writes take
-    their partition count from AQE (see the module docstring).
-
-    sinks_dir (checkpoint mode only) checkpoints the sink stages there, see
-    `Checkpointer`.
+    sinks_dir checkpoints the sink stages there, see `Checkpointer`.
     """
 
     ROW_SINKS = ("specific_issues", "other_routed", "grouped_routed", "events", "severity")
@@ -341,31 +335,29 @@ class Pipeline:
         cfg: ConfigSpec,
         vocab: Vocab,
         input_path: str,
-        work_dir: str | None = None,
-        checkpoint: bool = False,
+        work_dir: str,
+        checkpoint: bool = True,
         fmt: str = "parquet",
-        buckets: int | None = None,
         sinks_dir: str | None = None,
     ):
-        if sinks_dir is not None and not checkpoint:
-            raise ValueError("sinks_dir holds checkpointed sink stages; it needs checkpoint=True")
+        if not checkpoint:
+            raise ValueError("the pipeline always checkpoints its stages; pass checkpoint=True")
         self.spark = spark
         self.cfg = cfg
         self.vocab = vocab
         self.input_path = input_path
-        self.checkpoint = checkpoint
-        self.ckpt = Checkpointer(spark, work_dir, fmt, sinks_dir) if checkpoint else None
-        self.buckets = buckets or int(spark.conf.get("spark.sql.shuffle.partitions"))
+        self.ckpt = Checkpointer(spark, work_dir, fmt, sinks_dir)
+        # N of Iceberg's bucket(N, doc_id) partition spec; parquet stage
+        # writes take their partition count from AQE (module docstring)
+        self.buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
         # vocab CONTENT hash: a changed vocab of identical size must
         # invalidate every checkpoint (decoded text changes everywhere)
         vocab_fp = hashlib.sha256(
             "\x00".join(vocab.id_to_token).encode()
         ).hexdigest()[:16]
         # input CONTENT fingerprint: a new file at the same input path must
-        # invalidate every checkpoint; only checkpointed runs need it
-        self.input_fp = input_fingerprint(spark, input_path) if checkpoint else ""
-        if self.ckpt is not None:
-            self.ckpt.input_fp = self.input_fp
+        # invalidate every checkpoint
+        self.input_fp = self.ckpt.input_fp = input_fingerprint(spark, input_path)
         self._root_fp = _fingerprint(
             code_fingerprint(),
             _config_hash(cfg),
@@ -393,8 +385,6 @@ class Pipeline:
         Neither fixes a partition count: AQE coalesces the shuffle to the
         stage's size, so a small stage writes a few files, not N."""
         fp = _fingerprint(self._root_fp, name, *parents)
-        if self.ckpt is None:
-            return build()
         if self.ckpt.is_complete(name, fp):
             m = StageMetrics(stage=name, fingerprint=fp, resumed=True)
             self.metrics.append(m)
@@ -409,23 +399,17 @@ class Pipeline:
         return self.ckpt.read(name)
 
     # -- the graph ----------------------------------------------------------
-    def run(self, job_factory=None) -> PipelineResult:
-        """job_factory: optional callable(name, df) -> thunk | None, called
-        for each sink AT THE MOMENT that sink's inputs are materialized; a
-        returned thunk (e.g. a sink write) is submitted to ONE shared pool
-        immediately. The fan-out is therefore DEPENDENCY-TIERED instead of
-        driver-sequenced: sinks that need only the parsed blocks (events,
-        severity) execute UNDERNEATH the Q1 keep-set collect, the per-issue
-        sinks execute underneath the slim-scope materialization, and only
-        the aggregate consumers wait for the slim blocks. Driver-sequenced
-        materialization is pure anti-scale — the old kept→slim serial
-        window cost 36–53 s at BOTH scaling levels (r5 campaign phase
-        data), an Amdahl-dominant serial fraction at 16 cores while the
-        4-core leg hid it under saturation. Within the final tier the
-        fused summary — the measured fan-out straggler — is submitted
-        FIRST (LPT order): under FIFO job scheduling its tasks win ties,
-        so the long job spans the whole window instead of draining alone
-        in the tail."""
+    def run(self) -> PipelineResult:
+        """Run (or resume) every stage in dependency order: parse, the
+        parsed-only sinks, the keep-set routing, then the aggregates. Each
+        stage is written before the next one starts, and each later stage
+        reads its parents back from their checkpoints. Returns the eight
+        sinks: the seven sink stages plus `match_sets`, which is a lazy
+        frame over the `scoped` checkpoint that the caller writes.
+
+        `timings` records, in seconds: `parse_materialize` (the parsed
+        stage), `kept` (the keep-set collect; absent when every stage that
+        needs it resumed) and `plan_build` (every stage after `parsed`)."""
         spark = self.spark
         cfg = self.cfg
         self.timings: dict[str, float] = {}
@@ -440,47 +424,9 @@ class Pipeline:
             parents=["input"],
             bucket_by="doc_id",
         )
-        if self.ckpt is None:
-            # uncheckpointed (bench) mode: the parse UDF feeds five sinks —
-            # materialize it once, EAGERLY, so the concurrent consumers
-            # below never race to compute the same partition twice.
-            # SERIALIZED row blocks: deserialized wide rows blow the storage
-            # pool and triple-vary build/read times under eviction (measured
-            # 10→59→21s builds; serialized: stable 7-8s builds, 0.5s reads).
-            parsed = parsed.localCheckpoint(
-                eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-            )
         self.timings["parse_materialize"] = round(time.monotonic() - t0, 2)
-        t_fan = time.monotonic()  # the overlapped fan-out window opens here
+        t_build = time.monotonic()
 
-        # ONE shared pool for every sink job; sinks are handed to it the
-        # moment their inputs are materialized (dependency tiers), so the
-        # keep-set collect and the slim materialization below never leave
-        # the cluster idle.
-        from concurrent.futures import ThreadPoolExecutor
-
-        pool = ThreadPoolExecutor(max_workers=12) if job_factory else None
-        futs = []
-        row_sinks: dict[str, DataFrame] = {}
-
-        def ready(name: str, df: DataFrame) -> None:
-            row_sinks[name] = df
-            if pool is None:
-                return
-            thunk = job_factory(name, df)
-            if thunk is None:
-                return
-
-            def go(thunk=thunk, name=name):
-                s = time.monotonic()
-                r = thunk()
-                self.timings[f"job_{name}"] = round(time.monotonic() - s, 2)
-                return r
-
-            futs.append(pool.submit(go))
-
-        # ---- tier 0: parsed-only sinks, submitted BEFORE the keep-set
-        # collect so they execute underneath it
         events = self._stage(
             "events", lambda: routing.events_sink(parsed), parents=["parsed"]
         )
@@ -490,9 +436,6 @@ class Pipeline:
             parents=["parsed"],
             salted_by="source",
         )
-        ready("parsed", parsed)
-        ready("events", events)
-        ready("severity", severity)
 
         # the Q1 keep-set is config-sized: collect it ONCE and re-plan it as
         # a literal frame, so the N broadcast-join consumers below don't each
@@ -515,8 +458,6 @@ class Pipeline:
 
         ipmap = routing.issue_process_map(spark, cfg)
 
-        # ---- tier 1: keep-set consumers (the kept() collect runs here in
-        # the main thread, underneath the tier-0 jobs)
         specific = self._stage(
             "specific_issues",
             lambda: routing.specific_issues(parsed, kept()),
@@ -543,43 +484,25 @@ class Pipeline:
             parents=["scoped"],
             bucket_by="doc_id",
         )
-        ready("specific_issues", specific)
-        ready("scoped", scope)
-        ready("other_routed", other)
-        ready("grouped_routed", grouped)
 
-        # Aggregation reads the slim scope (agg.slim_scope). Checkpoint mode
-        # gets column pruning from parquet; bench mode materializes it, or the
-        # summary DAG's aggregate subtrees each re-derive it from the fat
-        # parsed blocks (A/B: summary job 186→85 s at 16 cores,
-        # BENCH/BASELINE.md). The tier-0/1 jobs above keep draining in the
-        # pool underneath this materialization.
+        # The aggregates read the slim projection of the `scoped`
+        # checkpoint (agg.slim_scope): the parquet scan reads only the
+        # columns it keeps (never tokens or doc_id), so it needs no
+        # materialization of its own.
         scope_slim = agg.slim_scope(cfg, scope)
-        if self.ckpt is None:
-            s = time.monotonic()
-            scope_slim = scope_slim.localCheckpoint(
-                eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-            )
-            self.timings["slim_materialize"] = round(time.monotonic() - s, 2)
-        self._scope_slim = scope_slim
-        ready("scoped_slim", scope_slim)
 
-        # ---- tier 2: slim-scope consumers, straggler (summary) FIRST
         # Distributed summary (A8): one lazy DataFrame whose DAG is a SINGLE
         # fused two-level aggregation over the slim scope (summary
         # aggregate: non-grouped totals + first/last, grouped totals + last
         # line, and every field's ordered content in one pass — r3 ran four
-        # slim scans and three joins here; the summary job was the fan-out
-        # straggler and its worst scaler). Assembly is one left join against
-        # the static (source × issue) base, formatted ENTIRELY JVM-side —
-        # nothing driver-side scales with the corpus (the r2 driver
-        # assembly was a 30-60 s serial tail and an OOM cliff at 10^12).
-        # The source dimension comes from the RAW parquet scan, not the
-        # materialized parsed blocks: row-format checkpoint blocks have no
-        # column pruning, so `parsed.select("source").distinct()` re-read
-        # every token array and text string just to list a handful of
-        # sources; the parquet scan reads the dictionary-encoded source
-        # column alone (parse preserves source 1:1, so the sets are equal).
+        # slim scans and three joins here). Assembly is one left join
+        # against the static (source × issue) base, formatted ENTIRELY
+        # JVM-side — nothing driver-side scales with the corpus (the r2
+        # driver assembly was a 30-60 s serial tail and an OOM cliff at
+        # 10^12). The source dimension comes from the RAW parquet scan, not
+        # the parsed checkpoint: the raw scan reads the dictionary-encoded
+        # source column alone (parse preserves source 1:1, so the sets are
+        # equal).
         summary = self._stage(
             "summary",
             lambda: agg.summary_frame(
@@ -589,37 +512,27 @@ class Pipeline:
                 agg.summary_aggregate(cfg, scope_slim),
             ),
             parents=["scoped"],
-        )
-        if self.ckpt is not None:
-            summary = summary.orderBy("source", F.desc("priority"), F.asc("issue"))
-        ready("summary", summary)
+        ).orderBy("source", F.desc("priority"), F.asc("issue"))
 
         grouped_issues = self._stage(
             "grouped_issues",
             lambda: agg.grouped_counts(routing.grouped_matches(scope_slim)),
             parents=["scoped"],
         )
-        ready("grouped_issues", grouped_issues)
-        ready(
-            "match_sets",
-            agg.other_issue_match_sets(routing.other_matches(scope)),
-        )
-
-        # plan_build = the main-thread define-and-materialize path (kept
-        # collect + slim materialization + stage builds); fanout_jobs = the
-        # whole overlapped window. plan_build ⊂ fanout_jobs now — the old
-        # serial layout paid them back-to-back.
-        self.timings["plan_build"] = round(time.monotonic() - t_fan, 2)
-
-        if pool is not None:
-            try:
-                for f in futs:
-                    f.result()
-            finally:
-                pool.shutdown(wait=False)
-        self.timings["fanout_jobs"] = round(time.monotonic() - t_fan, 2)
+        match_sets = agg.other_issue_match_sets(routing.other_matches(scope))
+        self.timings["plan_build"] = round(time.monotonic() - t_build, 2)
         # classes compiled while the run's jobs ran: 0 when the driver has
         # already run the same plans (see session.get_spark's codegen cache)
         self.codegen_compiles = codegen_compiles(spark) - compiles0
 
-        return PipelineResult(sinks=dict(row_sinks), metrics=self.metrics)
+        sinks = {
+            "specific_issues": specific,
+            "other_routed": other,
+            "grouped_routed": grouped,
+            "events": events,
+            "severity": severity,
+            "grouped_issues": grouped_issues,
+            "match_sets": match_sets,
+            "summary": summary,
+        }
+        return PipelineResult(sinks=sinks, metrics=self.metrics)

@@ -70,11 +70,24 @@ def golden():
 
 
 @pytest.fixture(scope="session")
-def pipeline_result(spark, cfg, vocab, fx):
+def pipeline_run(spark, cfg, vocab, fx, tmp_path_factory):
+    """The checkpointed pipeline on the unit fixture: its result, and the
+    frame each stage handed to `Checkpointer.write`."""
     from radar_log_parser_spark.plans.pipeline import Pipeline
 
-    res = Pipeline(spark, cfg, vocab, fx.logs_path, checkpoint=False).run()
-    # materialize the reused frames once for the whole test session
-    for name in ("other_routed", "grouped_routed"):
-        res.sinks[name] = res.sinks[name].persist()
-    return res
+    work = str(tmp_path_factory.mktemp("pipeline_ckpt"))
+    pipe = Pipeline(spark, cfg, vocab, fx.logs_path, work_dir=work, checkpoint=True)
+    written = {}
+    write = pipe.ckpt.write
+
+    def recording_write(stage, df, *args, **kw):
+        written[stage] = df
+        return write(stage, df, *args, **kw)
+
+    pipe.ckpt.write = recording_write
+    return pipe.run(), written
+
+
+@pytest.fixture(scope="session")
+def pipeline_result(pipeline_run):
+    return pipeline_run[0]

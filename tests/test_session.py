@@ -68,18 +68,22 @@ def _cols(attrs: str) -> tuple[str, ...]:
     return tuple(re.sub(r"#\d+L?$", "", a.strip()) for a in attrs.split(","))
 
 
-def test_bench_plans_use_local_tables(pipeline_result):
-    """The keep-set, the issue→process map and the issues dimension are
-    LocalTableScans; the only RDD scans left are the pipeline's own
-    localCheckpoint blocks (parsed and the slim scope)."""
-    materialized = {
-        tuple(pipeline_result.sinks[n].columns) for n in ("parsed", "scoped_slim")
-    }
-    for name in ("specific_issues", "scoped", "summary"):
-        leaves = _scan_leaves(pipeline_result.sinks[name])
-        assert any(kind == "LocalTableScan" for kind, _ in leaves), name
-        rdd_scans = [_cols(a) for kind, a in leaves if kind == "Scan ExistingRDD"]
-        assert all(c in materialized for c in rdd_scans), (name, rdd_scans)
+def test_bench_plans_use_local_tables(pipeline_run):
+    """The frames the routing and summary stages write read the keep-set,
+    the issue→process map and the issues dimension as LocalTableScans, and
+    no leaf is a Python RDD scan (`Scan ExistingRDD`)."""
+    _res, written = pipeline_run
+    keep_set = ("source", "process")
+    ipmap = ("issue", "process", "proc_rank", "grouped")
+    issues_dim = ("issue", "grouped", "priority")
+    for stage, tables in (
+        ("specific_issues", [keep_set]),
+        ("scoped", [keep_set, ipmap]),
+        ("summary", [issues_dim]),
+    ):
+        leaves = _scan_leaves(written[stage])
+        assert [a for kind, a in leaves if kind == "Scan ExistingRDD"] == [], stage
+        assert sorted(_cols(a) for kind, a in leaves if kind == "LocalTableScan") == sorted(tables), stage
 
 
 def _modules(top: str = PKG_DIR, recurse: bool = True):
