@@ -12,7 +12,8 @@ fingerprint matches are read, not recomputed). With --sinks-dir the seven
 sink stages are checkpointed in place as <sinks-dir>/<sink>/, each with its
 `_lineage.json`, so they resume like the other stages; `parsed` and
 `scoped` stay under --work-dir. The eighth sink, `match_sets`, is not a
-stage and is written there on every run.
+stage: it is read from the `other_routed` sink and written there on every
+run.
 """
 
 from __future__ import annotations

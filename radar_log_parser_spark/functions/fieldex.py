@@ -38,8 +38,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from radar_log_parser_spark.config import ConfigSpec, summary_pairs
-
-HIT_TYPE = pa.struct([pa.field("n", pa.int32(), False), pa.field("j", pa.string(), False)])
+from radar_log_parser_spark.functions.schema import HIT_TYPE
 
 
 class FieldPlan:

@@ -29,7 +29,6 @@ from radar_log_parser_spark.config import (
     LOG_LEVELS_MAP,
     LOG_LEVELS_RGX,
     ConfigSpec,
-    severity_pattern,
 )
 from radar_log_parser_spark.functions.fieldex import (
     FieldPlan,
@@ -114,7 +113,6 @@ class ArrowCompiledConfig:
                     "mode": "extract",
                     "pattern": combined,
                     "letters": letters,
-                    "per_level": {lv: severity_pattern(platform, lv) for lv in levels},
                 }
 
 

@@ -31,6 +31,7 @@ import re
 
 import pyarrow as pa
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from radar_log_parser_spark.config import ConfigSpec, summary_pairs
 
@@ -63,49 +64,34 @@ def fld_cols(cfg: ConfigSpec) -> list[str]:
     return [fld_col(k, i, f) for k, (i, f, _p) in enumerate(summary_pairs(cfg))]
 
 
-def parsed_schema(cfg: ConfigSpec) -> T.StructType:
-    fields = [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("source", T.StringType(), False),
-        T.StructField("line_no", T.LongType(), False),
-        T.StructField("tokens", T.ArrayType(T.IntegerType()), False),
-        T.StructField("n_tok", T.IntegerType(), False),
-        T.StructField("text", T.StringType(), False),
-        T.StructField("procs", T.ArrayType(T.StringType()), False),
-        T.StructField("events", T.ArrayType(T.StringType()), False),
-        T.StructField("sev_levels", T.ArrayType(T.StringType()), False),
-        T.StructField("sev_counts", T.ArrayType(T.IntegerType()), False),
-    ]
-    for n in ngrp_issue_names(cfg):
-        fields.append(T.StructField(ngrp_col(n), T.ArrayType(T.StringType()), False))
-    for n in grp_issue_names(cfg):
-        fields.append(T.StructField(grp_col(n), T.ArrayType(T.StringType()), False))
-    hit = T.StructType(
-        [T.StructField("n", T.IntegerType(), False), T.StructField("j", T.StringType(), False)]
-    )
-    for c in fld_cols(cfg):
-        fields.append(T.StructField(c, hit, True))
-    return T.StructType(fields)
+# struct<n,j>: the per-line hits of one summary pair (module docstring)
+HIT_TYPE = pa.struct([pa.field("n", pa.int32(), False), pa.field("j", pa.string(), False)])
 
 
 def parsed_arrow_schema(cfg: ConfigSpec) -> pa.Schema:
+    """The parsed stage's one schema declaration: the Arrow batches the
+    parse kernel returns, and (through `parsed_schema`) the Spark schema
+    that `mapInArrow` declares for them."""
+    strings = pa.list_(pa.string())
     fields = [
-        pa.field("doc_id", pa.string()),
-        pa.field("source", pa.string()),
-        pa.field("line_no", pa.int64()),
-        pa.field("tokens", pa.list_(pa.int32())),
-        pa.field("n_tok", pa.int32()),
-        pa.field("text", pa.string()),
-        pa.field("procs", pa.list_(pa.string())),
-        pa.field("events", pa.list_(pa.string())),
-        pa.field("sev_levels", pa.list_(pa.string())),
-        pa.field("sev_counts", pa.list_(pa.int32())),
+        ("doc_id", pa.string()),
+        ("source", pa.string()),
+        ("line_no", pa.int64()),
+        ("tokens", pa.list_(pa.int32())),
+        ("n_tok", pa.int32()),
+        ("text", pa.string()),
+        ("procs", strings),
+        ("events", strings),
+        ("sev_levels", strings),
+        ("sev_counts", pa.list_(pa.int32())),
+        *[(ngrp_col(n), strings) for n in ngrp_issue_names(cfg)],
+        *[(grp_col(n), strings) for n in grp_issue_names(cfg)],
     ]
-    for n in ngrp_issue_names(cfg):
-        fields.append(pa.field(ngrp_col(n), pa.list_(pa.string())))
-    for n in grp_issue_names(cfg):
-        fields.append(pa.field(grp_col(n), pa.list_(pa.string())))
-    hit = pa.struct([pa.field("n", pa.int32(), False), pa.field("j", pa.string(), False)])
-    for c in fld_cols(cfg):
-        fields.append(pa.field(c, hit, True))
-    return pa.schema(fields)
+    return pa.schema(
+        [pa.field(name, t, False) for name, t in fields]
+        + [pa.field(c, HIT_TYPE, True) for c in fld_cols(cfg)]
+    )
+
+
+def parsed_schema(cfg: ConfigSpec) -> T.StructType:
+    return from_arrow_schema(parsed_arrow_schema(cfg))

@@ -64,8 +64,8 @@ def slim_scope(cfg: ConfigSpec, scope: DataFrame) -> DataFrame:
     Field scanning needs no text here (the fld{k} hit columns come from
     the parse pass), so `text` survives only on grouped MATCHING rows, for
     the last-line Timestamp/LogLevel extract. match_arr is reduced to its
-    count and first/last substring (it is in scan order); match_sets, the
-    one consumer of the full arrays, reads the fat scope. try_: ANSI
+    count and first/last substring (it is in scan order); every match
+    substring reaches `match_sets` through the `other_routed` rows. try_: ANSI
     element_at throws on the empty arrays of non-matching lines, and the
     projection evaluates every row."""
     return scope.select(

@@ -495,17 +495,17 @@ FROM (
 
 
 # --- time-window rollup (hypertable-style, streaming-compatible shape) ------
-def q_window_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+def hourly_rollup(events: DataFrame) -> DataFrame:
     """Tumbling 1-hour event-time rollup per event_type: count + integral
-    value sum. The same plan shape runs over a stream with a watermark
-    (streaming/ingest.windowed_event_counts_stream); tumbling windows align
-    to the epoch in both engines, so DuckDB's date_trunc is the oracle.
-    At scale this is the standard pre-aggregation for telemetry dashboards:
-    map-side partial agg, shuffle keyed by (window, type) — uniform unless
-    one type dominates, which AQE skew-split covers."""
-    ev = _events(spark, sf_dir)
+    value sum. Tumbling windows align to the epoch, so DuckDB's date_trunc
+    is the oracle. The same plan runs over the events table
+    (`q_window_rollup`) and over a watermarked stream
+    (streaming/ingest.windowed_event_counts_stream). At scale this is the
+    standard pre-aggregation for telemetry dashboards: map-side partial
+    agg, shuffle keyed by (window, type) — uniform unless one type
+    dominates, which AQE skew-split covers."""
     return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        events.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count("*").cast("long").alias("n"),
             F.sum(F.round(F.col("value") * 100).cast("long")).alias("value_cents"),
@@ -517,6 +517,11 @@ def q_window_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value_cents",
         )
     )
+
+
+def q_window_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`hourly_rollup` over the events table."""
+    return hourly_rollup(_events(spark, sf_dir))
 
 
 Q_WINDOW_ROLLUP_SQL = """

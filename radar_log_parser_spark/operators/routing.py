@@ -1,14 +1,18 @@
-"""Routing: parsed rows → per-category sink DataFrames (fan-out).
+"""Routing: parsed rows → per-category sink DataFrames.
 
 One parsed DataFrame feeds several filtered writes (reference: the single
 ``FullDetails`` result object rendered as separate report views,
 analyzeLog.go:61-66 / report.html:53-97):
 
   specific_issues — per-process sub-logs            (F1, quirk Q1)
+  scoped_direct   — kept lines of each issue's processes (F2, quirk Q2)
   other_routed    — non-grouped issue match rows    (F3)
   grouped_routed  — grouped issue match rows        (F4)
   events          — important-event lines           (F9, quirks Q6/Q7)
   severity        — per-line severity classification (F8, quirk Q8)
+
+The F3/F4 rows are defined here once: the counts over them (the
+`match_sets` and `grouped_issues` aggregates) read these sinks back.
 
 Scale notes: the issue→process mapping and the Q1 keep-set are config-sized
 and per-(source,process) — both broadcast; the only shuffles in this module
@@ -173,27 +177,6 @@ def grouped_routed(scope: DataFrame, cfg: ConfigSpec) -> DataFrame:
         F.element_at("grp_arr", 1).alias("group_key"),
         F.expr("slice(grp_arr, 2, size(grp_arr) - 1)").alias("details"),
         *named_cols,
-    )
-
-
-def other_matches(scope: DataFrame) -> DataFrame:
-    """Aggregation-width F3 rows: `other_routed` minus the row-payload
-    columns (tokens/text/doc_id). The aggregates only key on these, so the
-    pipeline computes them from a SLIM scoped frame — materializing the fat
-    exploded frame just to aggregate it was the measured scale-killer."""
-    return scope.filter(~F.col("grouped")).select(
-        "source", "issue", "proc_rank", "line_no",
-        F.posexplode("match_arr").alias("match_pos", "match"),
-    )
-
-
-def grouped_matches(scope: DataFrame) -> DataFrame:
-    """Aggregation-width F4 rows: the group key and detail tuple of every
-    grouped matching line, without the row payload."""
-    return scope.filter(F.col("grouped") & (F.size("grp_arr") > 0)).select(
-        "source", "issue", "proc_rank", "line_no",
-        F.element_at("grp_arr", 1).alias("group_key"),
-        F.expr("slice(grp_arr, 2, size(grp_arr) - 1)").alias("details"),
     )
 
 

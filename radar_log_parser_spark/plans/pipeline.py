@@ -309,9 +309,6 @@ class PipelineResult:
     sinks: dict[str, DataFrame]
     metrics: list[StageMetrics]
 
-    def metric_rows(self) -> dict[str, int]:
-        return {m.stage: m.rows for m in self.metrics}
-
 
 class Pipeline:
     """Compile the config into the full dataflow and run it. Every stage is
@@ -405,7 +402,7 @@ class Pipeline:
         stage is written before the next one starts, and each later stage
         reads its parents back from their checkpoints. Returns the eight
         sinks: the seven sink stages plus `match_sets`, which is a lazy
-        frame over the `scoped` checkpoint that the caller writes.
+        frame over the `other_routed` checkpoint that the caller writes.
 
         `timings` records, in seconds: `parse_materialize` (the parsed
         stage), `kept` (the keep-set collect; absent when every stage that
@@ -485,41 +482,34 @@ class Pipeline:
             bucket_by="doc_id",
         )
 
-        # The aggregates read the slim projection of the `scoped`
-        # checkpoint (agg.slim_scope): the parquet scan reads only the
-        # columns it keeps (never tokens or doc_id), so it needs no
-        # materialization of its own.
-        scope_slim = agg.slim_scope(cfg, scope)
-
-        # Distributed summary (A8): one lazy DataFrame whose DAG is a SINGLE
-        # fused two-level aggregation over the slim scope (summary
-        # aggregate: non-grouped totals + first/last, grouped totals + last
-        # line, and every field's ordered content in one pass — r3 ran four
-        # slim scans and three joins here). Assembly is one left join
-        # against the static (source × issue) base, formatted ENTIRELY
-        # JVM-side — nothing driver-side scales with the corpus (the r2
-        # driver assembly was a 30-60 s serial tail and an OOM cliff at
-        # 10^12). The source dimension comes from the RAW parquet scan, not
-        # the parsed checkpoint: the raw scan reads the dictionary-encoded
-        # source column alone (parse preserves source 1:1, so the sets are
-        # equal).
+        # The summary reads the slim projection of the `scoped` checkpoint
+        # (agg.slim_scope): the parquet scan reads only the columns it keeps
+        # (never tokens or doc_id). Distributed summary (A8): a single fused
+        # two-level aggregation over that scan, assembled by one left join
+        # against the static (source × issue) base and formatted JVM-side,
+        # so nothing driver-side scales with the corpus. The source
+        # dimension comes from the raw parquet scan, which reads the
+        # dictionary-encoded source column alone (parse preserves source
+        # 1:1, so the sets are equal).
         summary = self._stage(
             "summary",
             lambda: agg.summary_frame(
                 spark,
                 cfg,
                 raw.select("source").distinct(),
-                agg.summary_aggregate(cfg, scope_slim),
+                agg.summary_aggregate(cfg, agg.slim_scope(cfg, scope)),
             ),
             parents=["scoped"],
         ).orderBy("source", F.desc("priority"), F.asc("issue"))
 
+        # the counts over the routed rows read the routed checkpoints they
+        # count; the scans keep only the aggregation keys
         grouped_issues = self._stage(
             "grouped_issues",
-            lambda: agg.grouped_counts(routing.grouped_matches(scope_slim)),
-            parents=["scoped"],
+            lambda: agg.grouped_counts(grouped),
+            parents=["grouped_routed"],
         )
-        match_sets = agg.other_issue_match_sets(routing.other_matches(scope))
+        match_sets = agg.other_issue_match_sets(other)
         self.timings["plan_build"] = round(time.monotonic() - t_build, 2)
         # classes compiled while the run's jobs ran: 0 when the driver has
         # already run the same plans (see session.get_spark's codegen cache)

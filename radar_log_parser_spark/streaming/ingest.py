@@ -6,7 +6,8 @@ streaming here is the INGEST surface only: new tokenized-sequence files
 landing in a directory flow through the identical parse stage
 (mapInArrow works on streaming DataFrames) into streaming sinks.
 
-Batch/stream parity: the stream runs parse_stage verbatim, so any
+Batch/stream parity: the stream runs parse_stage and the batch rollups
+(routing.severity_sink, logquery.hourly_rollup) verbatim, so any
 golden-verified batch semantics hold per micro-batch. Order-sensitive
 aggregates (first/last, A5) are only defined per completed log, hence they
 stay in the batch layer; streaming exposes the order-free ones (counts,
@@ -22,6 +23,8 @@ from pyspark.sql import functions as F
 from radar_log_parser_spark.codec import Vocab
 from radar_log_parser_spark.config import ConfigSpec
 from radar_log_parser_spark.functions.parse import parse_stage
+from radar_log_parser_spark.operators import routing
+from radar_log_parser_spark.operators.logquery import hourly_rollup
 
 
 INPUT_DDL = "doc_id string, tokens array<int>, n_tok int, source string"
@@ -29,52 +32,40 @@ EVENTS_DDL = (
     "event_id long, ts timestamp, user_id long, event_type string, "
     "value double, props string"
 )
+MAX_FILES_PER_TRIGGER = 8
+WATERMARK = "30 minutes"
 
 
-def read_stream(
-    spark: SparkSession, path: str, ddl: str = INPUT_DDL, max_files_per_trigger: int = 8
-) -> DataFrame:
+def read_stream(spark: SparkSession, path: str, ddl: str = INPUT_DDL) -> DataFrame:
     """A parquet file stream of `ddl` rows (INPUT_DDL: the tokenized log
-    table; EVENTS_DDL: the events table)."""
+    table; EVENTS_DDL: the events table), MAX_FILES_PER_TRIGGER files per
+    micro-batch."""
     return (
         spark.readStream.schema(ddl)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .option("maxFilesPerTrigger", str(MAX_FILES_PER_TRIGGER))
         .parquet(path)
     )
 
 
 def severity_counts_stream(parsed: DataFrame) -> DataFrame:
-    """Streaming severity rollup per (source, level) — update-mode safe
-    (associative count over the exploded severity column)."""
-    sev = parsed.select(
-        "source",
-        F.explode(F.arrays_zip("sev_levels", "sev_counts")).alias("s"),
-    ).select("source", F.col("s.sev_levels").alias("level"), F.col("s.sev_counts").alias("n"))
-    return sev.groupBy("source", "level").agg(F.sum("n").alias("n_matches"))
-
-
-def windowed_event_counts_stream(
-    events: DataFrame, watermark: str = "30 minutes"
-) -> DataFrame:
-    """Watermarked tumbling-window rollup — the streaming twin of the batch
-    `q_window_rollup` operator (same plan shape; tumbling windows align to
-    the epoch). The watermark bounds state: windows older than max(event
-    time) - 30 min are finalized and evicted, so state size is
-    O(active windows × types), not O(stream length) — the property that
-    lets this run forever against a 10^12-event firehose. Late events
-    within the watermark still merge into their window; later ones are
-    dropped (documented lateness contract)."""
+    """Streaming severity rollup per (source, level) over the batch
+    severity sink's rows — update-mode safe (associative sum)."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("value_cents"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"), "event_type", "n", "value_cents"
-        )
+        routing.severity_sink(parsed)
+        .groupBy("source", "level")
+        .agg(F.sum("n_matches").alias("n_matches"))
     )
+
+
+def windowed_event_counts_stream(events: DataFrame) -> DataFrame:
+    """The batch `logquery.hourly_rollup` over a watermarked stream. The
+    watermark bounds state: windows older than max(event time) - WATERMARK
+    are finalized and evicted, so state size is O(active windows × types),
+    not O(stream length) — the property that lets this run forever against
+    a 10^12-event firehose. Late events within the watermark still merge
+    into their window; later ones are dropped (documented lateness
+    contract)."""
+    return hourly_rollup(events.withWatermark("ts", WATERMARK))
 
 
 def _available_now(

@@ -38,9 +38,8 @@ def test_checkpoint_resume(spark, cfg, vocab, fx, tmp_path):
     parents = {
         "parsed": ["input"],
         **dict.fromkeys(("events", "severity", "specific_issues", "scoped"), ["parsed"]),
-        **dict.fromkeys(
-            ("other_routed", "grouped_routed", "summary", "grouped_issues"), ["scoped"]
-        ),
+        **dict.fromkeys(("other_routed", "grouped_routed", "summary"), ["scoped"]),
+        "grouped_issues": ["grouped_routed"],
     }
     for stage, want in parents.items():
         with open(os.path.join(work, stage, "_lineage.json")) as f:

@@ -146,8 +146,8 @@ def _referenced_names(tree):
 
 
 def _defined_names(node):
-    """Names a top-level statement defines: a function or class, or the
-    plain-name targets of an assignment."""
+    """Names a statement defines: a function or class, or the plain-name
+    targets of an assignment."""
     if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
         return [node.name]
     if isinstance(node, ast.Assign):
@@ -159,8 +159,23 @@ def _defined_names(node):
     return [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
 
 
+def _definitions(tree):
+    """(statement, name) of every top-level definition of a module, and of
+    every non-dunder method and class-level name of each of its classes."""
+    for node in tree.body:
+        for name in _defined_names(node):
+            yield node, name
+    for cls in ast.walk(tree):
+        if isinstance(cls, ast.ClassDef):
+            for node in cls.body:
+                for name in _defined_names(node):
+                    if not (name.startswith("__") and name.endswith("__")):
+                        yield node, name
+
+
 def test_no_unreferenced_package_definitions():
-    """Every top-level function, class and assigned name in the package is
+    """Every top-level function, class and assigned name in the package,
+    and every non-dunder method and class-level name of its classes, is
     referenced by name from some module of the package, the tests,
     perfbench, tools or the root scripts, its own definition aside. Code
     and constants that nothing uses are deleted, not kept as a second
@@ -172,8 +187,7 @@ def test_no_unreferenced_package_definitions():
     dead = [
         f"{rel}:{node.lineno} {name}"
         for rel, tree in _modules()
-        for node in tree.body
-        for name in _defined_names(node)
+        for node, name in _definitions(tree)
         if refs[name] == sum(1 for n in _referenced_names(node) if n == name)
     ]
     assert not dead, dead
