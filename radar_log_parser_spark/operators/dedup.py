@@ -13,6 +13,8 @@ included (explode + codegen'd bit-vote aggregates).
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -91,6 +93,19 @@ def shingle_strings_exploded(df: DataFrame, id_col: str = "doc_id"):
             " ", F.col("t")["0"], F.col("t")["1"], F.col("t")["2"]
         ).alias("shingle"),
     )
+
+
+def _shingled_docs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The one document read of the MinHash and SimHash queries: every
+    document as (doc_id long, text), and the ones with at least 3 words —
+    the only ones that carry a shingle. Not materialized: shingling is
+    fully codegen (see shingle_structs), so each consumer recomputes it —
+    the r5 localCheckpoint degraded repeat runs 1.8 → 4.3 → 11.5 s under
+    storage-pool eviction."""
+    docs = _docs_par(spark, sf_dir).select(
+        F.col("doc_id").cast("long").alias("doc_id"), "text"
+    )
+    return docs, docs.filter(F.size(F.split("text", " ")) >= 3)
 
 
 # --- exact dedup: hash-groupBy on content -----------------------------------
@@ -234,16 +249,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified by exact shingle Jaccard — same output contract as the exact
     baseline (rows-only driver check; pytest asserts equality with the
     exact pairs at this threshold)."""
-    docs = _docs_par(spark, sf_dir).filter(F.size(F.split("text", " ")) >= 3)
-    # r6: shingling is now FULLY CODEGEN (struct zip + distinct; strings
-    # built by concat_ws only after the explode — see shingle_structs), so
-    # recomputing it per consumer is cheaper than the r5 serialized
-    # localCheckpoint, whose storage-pool pressure made repeat runs
-    # degrade 1.8 → 4.3 → 11.5 s (blocks from run k evicting under run
-    # k+1). Three cheap recomputes, zero materialization state.
-    base = docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text"
-    )
+    _, base = _shingled_docs(spark, sf_dir)
     bands = minhash_bands(
         shingle_strings_exploded(base),
         lambda i: F.hash("shingle", F.lit(i)),
@@ -282,10 +288,11 @@ MD5_LINEAR = [
 del _rng
 
 
-def _md5_hex15_parse(m_col):
-    """Shift-add parse of the first 15 hex digits of an md5 STRING column
-    into a 60-bit BIGINT — computable bit-identically in DuckDB
-    (`('0x'||substr(md5(x),1,15))::BIGINT`).
+def md5_60(df: DataFrame, src, name: str) -> DataFrame:
+    """`df` plus `name`: the first 15 hex digits of md5(`src`) as a 60-bit
+    BIGINT — computable bit-identically in DuckDB
+    (`('0x'||substr(md5(x),1,15))::BIGINT`). The one cross-engine hash of
+    the md5 MinHash, the md5 SimHash and the IVF centroid seeds.
 
     r6: the shift-add parse replaced `F.conv(hex, 16, 10)` — conv's generic
     radix machinery measured ~3× the cost of computing the md5 itself
@@ -293,19 +300,20 @@ def _md5_hex15_parse(m_col):
     arithmetic (1.0 s), and the value is the same function of the input
     (verified: 0 mismatches over the full 2.4M-shingle bench corpus).
 
-    Pass an md5 column already projected in its own select: the 15 digit
-    extractions each reference `m_col`, and when the surrounding stage
+    The md5 is projected in its own select and parsed in the next: the 15
+    digit extractions each reference it, and when the surrounding stage
     falls out of whole-stage codegen (or CSE does not fire) an inline md5
     is re-evaluated per digit. CollapseProject refuses to inline a
     non-cheap expression referenced 15×, so the select boundary
     guarantees ONE md5 per row (measured 1.83 s → 0.79 s over the
     2.6M-shingle sf1like explode)."""
+    m = F.col(name)
     acc = None
     for i in range(1, 16):
-        a = F.ascii(F.substring(m_col, i, 1))
+        a = F.ascii(F.substring(m, i, 1))
         d = F.when(a >= 97, a - 87).otherwise(a - 48).cast("long")
         acc = d if acc is None else F.shiftleft(acc, 4) + d
-    return acc
+    return df.withColumn(name, F.md5(src)).withColumn(name, acc)
 
 
 def q_dedup_minhash_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -323,21 +331,8 @@ def q_dedup_minhash_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrays → band-bucket equi-join on the band's row array → exact-Jaccard
     verify of the colliding candidates. Shuffle O(n·bands); never
     all-pairs."""
-    docs = _docs_par(spark, sf_dir).filter(F.size(F.split("text", " ")) >= 3)
-    # r6: no materialization — shingling is fully codegen now (see
-    # q_dedup_minhash_lsh for the measured localCheckpoint pathology this
-    # replaces); three cheap recomputes instead
-    base = docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text"
-    )
-    # md5 in its OWN projection, parsed in the next (see _md5_hex15_parse
-    # docstring): the boundary pins one md5 evaluation per shingle —
-    # CollapseProject will not inline a non-cheap expr referenced 15×
-    ex = (
-        shingle_strings_exploded(base)
-        .select("doc_id", F.md5(F.col("shingle")).alias("m"))
-        .select("doc_id", _md5_hex15_parse(F.col("m")).alias("h"))
-    )
+    _, base = _shingled_docs(spark, sf_dir)
+    ex = md5_60(shingle_strings_exploded(base), F.col("shingle"), "h")
 
     def perm(i: int):
         a, b, c = MD5_LINEAR[i]
@@ -405,7 +400,7 @@ _SIMHASH_PACKS = SIMHASH_BITS // _SIMHASH_FIELDS  # packed columns (20)
 _SIMHASH_MAX_SHINGLES = (1 << 20) - 1
 
 
-def _simhash_from_hashes(spark: SparkSession, docs: DataFrame, hb: DataFrame) -> DataFrame:
+def _simhash_from_hashes(docs: DataFrame, hb: DataFrame) -> DataFrame:
     """(doc_id, h: 60-bit-usable BIGINT per shingle) → (doc_id, simhash).
 
     r6 packed-count form: per shingle row the 60 bit-tests are packed into
@@ -488,14 +483,11 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin sharing `_simhash_from_hashes` (identical plan, only the hash
     family differs), plus a property test that BOTH families put planted
     near-dups at low Hamming distance and random pairs far."""
-    docs = _docs_par(spark, sf_dir).select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text"
+    docs, base = _shingled_docs(spark, sf_dir)
+    hb = shingle_strings_exploded(base).select(
+        "doc_id", F.xxhash64("shingle").alias("h")
     )
-    sh = shingle_strings_exploded(
-        docs.filter(F.size(F.split("text", " ")) >= 3)
-    )
-    hb = sh.select("doc_id", F.xxhash64("shingle").alias("h"))
-    return _simhash_from_hashes(spark, docs, hb)
+    return _simhash_from_hashes(docs, hb)
 
 
 def q_dedup_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -505,18 +497,9 @@ def q_dedup_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 LSH, so DuckDB reproduces the fingerprints bit-identically and this
     query carries the FULL value-match oracle row for the SimHash
     algorithm. The xxhash64 twin is the benched production default."""
-    docs = _docs_par(spark, sf_dir).select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text"
-    )
-    sh = shingle_strings_exploded(
-        docs.filter(F.size(F.split("text", " ")) >= 3)
-    )
-    # md5 projected alone, parsed in the next select — one md5/shingle
-    # (see _md5_hex15_parse docstring)
-    hb = sh.select("doc_id", F.md5(F.col("shingle")).alias("m")).select(
-        "doc_id", _md5_hex15_parse(F.col("m")).alias("h")
-    )
-    return _simhash_from_hashes(spark, docs, hb)
+    docs, base = _shingled_docs(spark, sf_dir)
+    hb = md5_60(shingle_strings_exploded(base), F.col("shingle"), "h")
+    return _simhash_from_hashes(docs, hb)
 
 
 Q_DEDUP_SIMHASH_MD5_SQL = f"""
@@ -565,6 +548,55 @@ def _dot(a, b):
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
+
+
+# --- the numpy twins of _dot / _norm_col, shared by the vector kernels ------
+def f64_rows(col) -> np.ndarray:
+    """An Arrow list<float> column (array or chunked) as an (n, d) float64
+    matrix; float32→float64 widening is exact."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    flat = col.flatten().to_numpy(zero_copy_only=False)
+    return flat.reshape(len(col), -1 if len(col) else 0).astype(np.float64)
+
+
+def fold_dots(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """(n, d) × (m, d) → (n, m): every row of A dotted with every row of B,
+    bit-identical to `_dot`. The accumulator adds `A[:, i] ⊗ B[:, i]`
+    dimension by dimension — the exact left-fold order and IEEE-754 double
+    ops of `_dot`'s F.aggregate and of the DuckDB oracles' list_sum — so
+    the kernels that call it (`_emb_sig_map`, `_emb_bucket_verify_factory`,
+    `similarity._ivf_assign_factory`) reproduce the JVM and DuckDB folds
+    exactly, not approximately.
+
+    A's rows are tiled so each accumulator holds ~2^15 doubles (256 KB)
+    and the fold adds in place: the tile stays L2-resident through the
+    d-term fold. A 2 MB tile re-written per dimension turned the bucket
+    verify into ~64 full-tile DRAM round-trips (29 s for the whole query
+    against ~3 s tiled)."""
+    n, m = len(A), len(B)
+    out = np.empty((n, m), dtype=np.float64)
+    block = max(1, (1 << 15) // m)
+    tmp = np.empty((min(block, n), m), dtype=np.float64)
+    for s in range(0, n, block):
+        e = min(s + block, n)
+        acc = out[s:e]
+        acc[...] = 0.0
+        t_ = tmp[: e - s]
+        for i in range(A.shape[1]):
+            np.multiply.outer(A[s:e, i], B[:, i], out=t_)
+            acc += t_
+    return out
+
+
+def fold_norms(A: np.ndarray) -> np.ndarray:
+    """Row norms of an (n, d) matrix, bit-identical to `_norm_col`: the
+    same left fold of squares (see `fold_dots`), then one correctly-rounded
+    sqrt (np.sqrt ≡ Math.sqrt, both IEEE)."""
+    acc = np.zeros(len(A), dtype=np.float64)
+    for i in range(A.shape[1]):
+        acc += A[:, i] * A[:, i]
+    return np.sqrt(acc)
 
 
 def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -638,39 +670,18 @@ def _emb_sig_map(it):
     passes the embedding column through untouched, so the band entries
     carry their own vectors into the bucket kernel.
 
-    Bit-identical to a JVM left fold of `zip_with(vec, plane, x*y)`
-    tested `>= 0` (verified
-    exhaustively on the bench corpus — 0 mismatches over 20k vectors):
-    the loop accumulates `acc = acc + E[:, i] * p[i]` dimension by
-    dimension, the same left-fold order and IEEE-754 double ops as the
-    fold and as the DuckDB oracle's list_sum; float32→float64 widening is
-    exact. The 32-plane × 64-term JVM expression alternative overflows
-    janino (codegen compile failure → interpreted fallback, ~130 µs/row);
-    this kernel runs the whole batch through numpy at ~1 µs/row."""
-    import numpy as np
-    import pyarrow as pa
-
+    Bit j of the signature is `_dot(vec, EMB_PLANES[j]) >= 0`, computed by
+    `fold_dots` (bit-identical to the JVM left fold and the DuckDB
+    oracle's list_sum; `tests/test_round6.py` pins it against the fold).
+    The 32-plane × 64-term JVM expression alternative overflows janino
+    (codegen compile failure → interpreted fallback, ~130 µs/row); this
+    kernel runs the whole batch through numpy at ~1 µs/row."""
     P = np.array(EMB_PLANES, dtype=np.float64)
+    weights = np.left_shift(np.int64(1), np.arange(len(P), dtype=np.int64))
     for batch in it:
         vid = batch.column("vec_id")
-        n = len(vid)
-        E = (
-            batch.column("embedding")
-            .flatten()
-            .to_numpy(zero_copy_only=False)
-            .reshape(n, EMB_DIM)
-            .astype(np.float64)
-        )
-        sig = np.zeros(n, dtype=np.int64)
-        for t in range(EMB_LSH_BANDS):
-            key = np.zeros(n, dtype=np.int64)
-            for b in range(EMB_LSH_BITS):
-                p = P[t * EMB_LSH_BITS + b]
-                acc = np.zeros(n, dtype=np.float64)
-                for i in range(EMB_DIM):
-                    acc = acc + E[:, i] * p[i]
-                key |= (acc >= 0.0).astype(np.int64) << b
-            sig |= key << (EMB_LSH_BITS * t)
+        dots = fold_dots(f64_rows(batch.column("embedding")), P)
+        sig = (dots >= 0.0).astype(np.int64) @ weights
         yield pa.RecordBatch.from_arrays(
             [vid, pa.array(sig), batch.column("embedding")],
             ["vec_id", "sig", "embedding"],
@@ -699,22 +710,15 @@ def _emb_bucket_verify_factory(thr: float):
     construction, and the kernel keeps a pair only when every earlier
     band's 4-bit key differs (same XOR + nibble tests on the packed sigs).
 
-    Bit-identity of the cosine (same argument as _emb_sig_map): the dot
-    accumulates `acc = acc + E[:, i] ⊗ E[:, i]` dimension by dimension —
-    the exact left-fold order and IEEE-754 double ops of `_dot`'s
-    F.aggregate and of the DuckDB oracle's list_sum — the norms
-    accumulate the same fold before one correctly-rounded sqrt (np.sqrt ≡
-    Math.sqrt, both IEEE), float32→float64 widening is exact, and
-    cos = acc / (nrm_a * nrm_b) mirrors Divide(dot, Multiply(·,·)).
+    Bit-identity of the cosine: the dots and norms are `fold_dots` and
+    `fold_norms` (see there), and cos = dot / (nrm_a * nrm_b) mirrors
+    Divide(dot, Multiply(·,·)).
 
     Row-blocking bounds kernel memory to ~block×k doubles per bucket (a
     pathological hot bucket degrades to more blocks, never to a bigger
     allocation); production sizing keeps buckets bounded via EMB_LSH_BITS
     ≈ log2(n/β) — see q_dedup_embedding_lsh."""
     def _verify(tbl):
-        import numpy as np
-        import pyarrow as pa
-
         empty = pa.table({
             "a_id": pa.array([], pa.int64()),
             "b_id": pa.array([], pa.int64()),
@@ -725,44 +729,25 @@ def _emb_bucket_verify_factory(thr: float):
             return empty
         vid = tbl.column("vec_id").to_numpy(zero_copy_only=False)
         sig = tbl.column("sig").to_numpy(zero_copy_only=False)
-        E = (
-            tbl.column("embedding")
-            .combine_chunks()
-            .flatten()
-            .to_numpy(zero_copy_only=False)
-            .reshape(k, -1)
-            .astype(np.float64)
-        )
+        E = f64_rows(tbl.column("embedding"))
         band = tbl.column("band")[0].as_py()
         o = np.argsort(vid)  # ascending → upper triangle ⟺ a_id < b_id
         vid, sig, Eb = vid[o], sig[o], E[o]
-        nrm2 = np.zeros(k, dtype=np.float64)
-        for i in range(Eb.shape[1]):
-            nrm2 = nrm2 + Eb[:, i] * Eb[:, i]
-        nrm = np.sqrt(nrm2)
-        # Blocked upper-triangle fold. Block sizing is the whole game: the
-        # acc/tmp tiles must stay L2-resident through the 64-dim fold —
-        # a 2 MB tile re-written per dimension turns the fold into ~64
-        # full-tile DRAM round-trips (measured 29 s for the whole query);
-        # ~256 KB tiles with in-place accumulation run the same flops out
-        # of cache (~3 s). Sub-diagonal columns are skipped outright
-        # (upper triangle ⟺ a_id < b_id on the sorted vids).
+        nrm = fold_norms(Eb)
+        # Blocked upper triangle: each row block is one `fold_dots` tile
+        # (same ~2^15-double sizing), and sub-diagonal columns are skipped
+        # outright (upper triangle ⟺ a_id < b_id on the sorted vids).
         out_a: list = []
         out_b: list = []
         out_c: list = []
         nib_mask = (1 << EMB_LSH_BITS) - 1
-        block = max(1, (1 << 15) // k)  # ~256 KB f64 acc tile
-        tmp = np.empty((block, k), dtype=np.float64)
+        block = max(1, (1 << 15) // k)
         for s in range(0, k - 1, block):
             e = min(s + block, k)
             c0 = s + 1  # only columns > s can sit above the diagonal
-            bs, ncols = e - s, k - c0
-            acc = np.zeros((bs, ncols), dtype=np.float64)
-            t_ = tmp[:bs, :ncols]
-            for i in range(Eb.shape[1]):
-                np.multiply.outer(Eb[s:e, i], Eb[c0:, i], out=t_)
-                acc += t_
-            cos = acc / np.multiply.outer(nrm[s:e], nrm[c0:])
+            cos = fold_dots(Eb[s:e], Eb[c0:]) / np.multiply.outer(
+                nrm[s:e], nrm[c0:]
+            )
             keep = (np.arange(c0, k)[None, :] > np.arange(s, e)[:, None]) & (
                 cos >= thr
             )
@@ -825,8 +810,8 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~0.5 KB at the 20k-vector scale (≈130 s; 61% of the whole r5 driver
     # bench). Now:
     #   1. the 32 hyperplane signs are computed by the vectorized Arrow
-    #      kernel `_emb_sig_map` (bit-identical left fold — see its
-    #      docstring) and packed into ONE long per vector; the band entries
+    #      kernel `_emb_sig_map` (bit-identical left fold — see
+    #      `fold_dots`) and packed into ONE long per vector; the band entries
     #      (vec_id, sig, embedding, band, key) are n·bands rows, each with
     #      its own vector — never one row per candidate pair;
     #   2. the band buckets go STRAIGHT into the per-bucket Arrow kernel

@@ -12,8 +12,8 @@ operators/dedup.py where a cross-engine hash is needed).
 
 Scale design notes are on each operator; none is O(n²), none collects,
 and the only global-order dependence (sequence packing) uses the same
-two-phase distributed prefix sum as F12 (logquery.q_context_segments) —
-a global `sum over (order by)` window would funnel 10^12 rows through one
+two-phase distributed prefix sum as F12 (`logquery.exclusive_prefix_sum`)
+— a global `sum over (order by)` window would funnel 10^12 rows through one
 partition.
 """
 
@@ -21,13 +21,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
 from radar_log_parser_spark.operators.dedup import (
     _SHINGLE_SQL,
     shingle_structs,
 )
-from radar_log_parser_spark.operators.logquery import QuerySpec, _docs, _docs_par
+from radar_log_parser_spark.operators.logquery import (
+    QuerySpec,
+    _docs,
+    _docs_par,
+    exclusive_prefix_sum,
+)
 
 PACK_BUDGET = 256  # whitespace tokens per packed training sequence
 EVAL_MOD = 97  # doc_id % EVAL_MOD == 0 → the held-out "benchmark" set
@@ -48,41 +52,17 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     overflow their sequence, exactly like token-level packing with
     document boundaries kept.
 
-    Scale: the prefix sum is the F12 two-phase form — per-bucket partial
-    sums (bucket = doc_id div 2^20 → ~10^6 tiny rows at 10^12 docs), a
-    bounded single-partition running offset over the bucket table, then a
-    broadcast join back and an intra-bucket partitioned window. No global
-    window, no driver loop."""
+    Scale: the prefix sum is `logquery.exclusive_prefix_sum`, the F12
+    two-phase form — no global window, no driver loop."""
     docs = _docs_par(spark, sf_dir)
     toks = docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.size(F.split("text", " ")).cast("long").alias("n_tok"),
     )
-    bucket = (F.col("doc_id") / F.lit(1 << 20)).cast("long").alias("bucket")
-    per_bucket = toks.groupBy(bucket).agg(F.sum("n_tok").alias("c"))
-    # constant-valued but non-foldable partition key: keeps WindowExec off
-    # the "no partition defined" global path (see q_context_segments)
-    w_off = (
-        W.partitionBy(F.pmod(F.col("bucket"), F.lit(1)))
-        .orderBy("bucket")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    offsets = per_bucket.select(
-        "bucket", F.coalesce(F.sum("c").over(w_off), F.lit(0)).alias("offset")
-    )
-    w_intra = W.partitionBy("bucket").orderBy("doc_id").rowsBetween(
-        W.unboundedPreceding, -1
-    )
-    seq = (
-        toks.withColumn("bucket", bucket)
-        .join(F.broadcast(offsets), "bucket")
-        .withColumn(
-            "excl",
-            F.col("offset") + F.coalesce(F.sum("n_tok").over(w_intra), F.lit(0)),
-        )
-        # integer `div`, not float division+floor: the exclusive prefix at
-        # 10^12 docs exceeds double's 2^53 exact-integer range
-        .withColumn("seq_id", F.expr(f"excl div {PACK_BUDGET}"))
+    # integer `div`, not float division+floor: the exclusive prefix at
+    # 10^12 docs exceeds double's 2^53 exact-integer range
+    seq = exclusive_prefix_sum(toks, "n_tok").withColumn(
+        "seq_id", F.expr(f"excl div {PACK_BUDGET}")
     )
     return seq.groupBy("seq_id").agg(
         F.count("*").cast("long").alias("n_docs"),
@@ -207,7 +187,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 15-term shift-add parse that double site drops the stage out of
     # codegen and re-evaluates md5 per digit (measured 1.8 s vs 0.2 s
     # here). conv is one compact expression, immune to that blow-up; the
-    # shift-add parse (dedup._md5_hex15_parse) wins only on the high-volume
+    # shift-add parse (dedup.md5_60) wins only on the high-volume
     # single-site explode paths.
     base_hash = F.conv(
         F.substring(

@@ -101,7 +101,7 @@ SEVERITY_MAP = [  # event_type → level letter (broadcast enrich dictionary, F8
 PRIORITY = [("repeat_batch", 3), ("slow_op", 2), ("grouped_the", 2)]
 
 
-def _proc_union_sql(sf_dir: str) -> str:
+def _proc_union_sql() -> str:
     parts = [
         f"SELECT '{p}' AS process, doc_id FROM documents WHERE regexp_matches(text, '{rx}')"
         for p, rx in sorted(PROCS.items())
@@ -318,16 +318,15 @@ WHERE len(hits) > 0 GROUP BY source
 
 
 # --- F8: severity classification via broadcast dictionary join -------------
-def _severity_level_col():
-    """The severity dictionary as a literal MAP lookup (r6, guide §2.4):
-    the dictionary is a handful of fixed pairs, so the broadcast-hash-join
-    (driver createDataFrame + broadcast exchange + join — measured ~1 s of
-    fixed overhead per run) is replaced by a codegen'd map literal. Keys
-    are unique, so `element_at` ≡ the inner join (null → unmatched row)."""
-    pairs: list = []
-    for et, lvl in SEVERITY_MAP:
-        pairs += [F.lit(et), F.lit(lvl)]
-    return F.element_at(F.create_map(*pairs), F.col("event_type"))
+def literal_lookup(pairs, key: str):
+    """`pairs` (a fixed key → value dictionary) looked up at column `key`
+    as a literal MAP (r6, guide §2.4): the dictionary is a handful of fixed
+    pairs, so the broadcast-hash-join (driver createDataFrame + broadcast
+    exchange + join — measured ~1 s of fixed overhead per run) is replaced
+    by a codegen'd map literal. Keys are unique, so `element_at` ≡ the
+    join (null ⟺ no dictionary row)."""
+    kv = [F.lit(x) for pair in pairs for x in pair]
+    return F.element_at(F.create_map(*kv), F.col(key))
 
 
 def q_severity_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -337,7 +336,7 @@ def q_severity_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum."""
     ev = _events(spark, sf_dir)
     return (
-        ev.select(_severity_level_col().alias("level"), "value")
+        ev.select(literal_lookup(SEVERITY_MAP, "event_type").alias("level"), "value")
         .filter(F.col("level").isNotNull())
         .groupBy("level")
         .agg(
@@ -361,14 +360,14 @@ def q_severity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F8 user view (GetLogLeveldetails, details.go:187-194, served by the
     /loglevel route, main.go:110,129-134): give me every line at level X,
     in order. Level dictionary is a literal map lookup (≡ the broadcast
-    dim join, see _severity_level_col); the level predicate is a plain
+    dim join, see literal_lookup); the level predicate is a plain
     codegen'd filter on the looked-up value."""
     ev = _events(spark, sf_dir)
     return (
         ev.select(
             F.col("event_id").cast("long").alias("event_id"),
             "event_type",
-            _severity_level_col().alias("level"),
+            literal_lookup(SEVERITY_MAP, "event_type").alias("level"),
             F.col("user_id").cast("long").alias("user_id"),
         )
         .filter(F.col("level") == "I")
@@ -435,24 +434,20 @@ SELECT CAST(doc_id AS BIGINT) AS doc_id, text FROM documents WHERE doc_id BETWEE
 
 
 # --- F12: context-window segmentation via running match count --------------
-def q_context_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F12 (nonGroupDetails, details.go:128-153): alternating
-    [context block, matched line] segmentation = running sum of the match
-    flag over the ordinal; emits per-segment line counts."""
-    docs = _docs(spark, sf_dir)
-    flag = F.when(F.col("text").rlike(r"\bdup\b"), 1).otherwise(0)
-    flagged = docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"), flag.alias("flag")
-    )
-    # Two-phase distributed prefix sum — a global `sum over (order by)` would
-    # pull the whole table into ONE window partition (the r1 scale-killer).
-    # Phase 1: per-bucket partial counts (bucket = ordinal div 2^20: at
-    # 10^12 rows the bucket table is ~10^6 tiny rows — broadcastable, and
-    # its running-offset window is trivial). Phase 2: running offset over
-    # that bucket table. Phase 3: broadcast offsets back, intra-bucket
-    # running sum under a PARTITIONED window. segment = offset + intra.
+def exclusive_prefix_sum(df: DataFrame, value: str) -> DataFrame:
+    """`df` (doc_id long, `value`, ...) plus `excl`: the sum of `value` over
+    every row with a smaller doc_id. The one ordinal prefix sum of F12
+    (`q_context_segments`) and sequence packing (`llmprep.q_pack_sequences`).
+
+    Two-phase distributed prefix sum — a global `sum over (order by)` would
+    pull the whole table into ONE window partition (the r1 scale-killer).
+    Phase 1: per-bucket partial sums (bucket = ordinal div 2^20: at 10^12
+    rows the bucket table is ~10^6 tiny rows — broadcastable, and its
+    running-offset window is trivial). Phase 2: running offset over that
+    bucket table. Phase 3: broadcast offsets back, intra-bucket running sum
+    under a PARTITIONED window. excl = offset + intra."""
     bucket = (F.col("doc_id") / F.lit(1 << 20)).cast("long").alias("bucket")
-    per_bucket = flagged.groupBy(bucket).agg(F.sum("flag").alias("c"))
+    per_bucket = df.groupBy(bucket).agg(F.sum(value).alias("c"))
     # single-partition window is BOUNDED BY CONSTRUCTION: the bucket table
     # has n/2^20 rows (~10^6 at 10^12 input rows). The partition key
     # pmod(bucket, 1) is constant-valued but NOT constant-foldable, so
@@ -468,14 +463,30 @@ def q_context_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bucket", F.coalesce(F.sum("c").over(w_off), F.lit(0)).alias("offset")
     )
     w_intra = W.partitionBy("bucket").orderBy("doc_id").rowsBetween(
-        W.unboundedPreceding, 0
+        W.unboundedPreceding, -1
     )
-    seg = (
-        flagged.withColumn("bucket", bucket)
+    return (
+        df.withColumn("bucket", bucket)
         .join(F.broadcast(offsets), "bucket")
         .withColumn(
-            "segment", (F.col("offset") + F.sum("flag").over(w_intra)).cast("long")
+            "excl",
+            F.col("offset") + F.coalesce(F.sum(value).over(w_intra), F.lit(0)),
         )
+    )
+
+
+def q_context_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """F12 (nonGroupDetails, details.go:128-153): alternating
+    [context block, matched line] segmentation = running sum of the match
+    flag over the ordinal (`exclusive_prefix_sum` + the line's own flag);
+    emits per-segment line counts."""
+    docs = _docs(spark, sf_dir)
+    flag = F.when(F.col("text").rlike(r"\bdup\b"), 1).otherwise(0)
+    flagged = docs.select(
+        F.col("doc_id").cast("long").alias("doc_id"), flag.alias("flag")
+    )
+    seg = exclusive_prefix_sum(flagged, "flag").withColumn(
+        "segment", (F.col("excl") + F.col("flag")).cast("long")
     )
     return seg.groupBy("segment").agg(
         F.count("*").cast("long").alias("n_lines"),
@@ -562,12 +573,9 @@ def q_priority_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # literal map lookup ≡ the left broadcast dim join (unique keys; a
     # missing issue yields null priority exactly like the left join)
-    prio_pairs: list = []
-    for issue, p in PRIORITY:
-        prio_pairs += [F.lit(issue), F.lit(p)]
-    prio_col = F.element_at(F.create_map(*prio_pairs), F.col("issue"))
+    prio_col = literal_lookup(PRIORITY, "issue").cast("int")
     return (
-        out.select("issue", prio_col.cast("int").alias("priority"), "number")
+        out.select("issue", prio_col.alias("priority"), "number")
         .orderBy(F.desc("priority"), F.asc("issue"))
     )
 
@@ -590,7 +598,7 @@ ORDER BY priority DESC, issue ASC
 
 SPECS: list[QuerySpec] = [
     QuerySpec("specific_process", "F1+Q1 per-process filter, >1 keep rule",
-              q_specific_process, Q_SPECIFIC_PROCESS_SQL.format(union=_proc_union_sql(""))),
+              q_specific_process, Q_SPECIFIC_PROCESS_SQL.format(union=_proc_union_sql())),
     QuerySpec("nongrouped_count", "F3+A1 match count incl. duplicates",
               q_nongrouped_count, Q_NONGROUPED_COUNT_SQL),
     QuerySpec("grouped_tuples", "F4+A2 grouped distinct-tuple counts",

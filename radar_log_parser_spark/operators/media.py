@@ -2,9 +2,8 @@
 typed metadata; decode / feature-extract as Arrow-batched mapInPandas.
 
 The actual codec libraries (Pillow / libav / etc.) are NOT in this
-container, so the decode step is stubbed (`decode_image` raises
-NotImplementedError; `fake_decode` is the deterministic stand-in used by
-tests) — the Spark-side plumbing (schema, batch shape, partitioning, UDF
+container, so the decode step is `fake_decode`, a deterministic stand-in —
+the Spark-side plumbing (schema, batch shape, partitioning, UDF
 signature) is real and tested.
 
 At scale: media bytes live in the table as binary (or object-store
@@ -45,16 +44,6 @@ def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.encode("text", "utf-8").alias("media"),
         F.lit("application/octet-stream").alias("media_type"),
         F.octet_length(F.encode("text", "utf-8")).cast("long").alias("n_bytes"),
-    )
-
-
-def decode_image(data: bytes):  # pragma: no cover - by design
-    """Real image decode — requires an image codec library that is not in
-    this container. The pipeline calls `fake_decode` unless a codec is
-    installed and wired here."""
-    raise NotImplementedError(
-        "image decoding requires Pillow/libjpeg — not available in this "
-        "environment; use fake_decode for the deterministic test path"
     )
 
 

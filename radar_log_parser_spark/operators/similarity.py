@@ -3,17 +3,27 @@ brute-force cosine top-k (exact baseline) and an IVF-partitioned variant
 (the scale path: route each query to a few centroid cells instead of
 scanning all 10^12 vectors).
 
-Vector math stays JVM-side: `F.zip_with` dot products folded with
-`F.aggregate` — no Python per row.
+Vector math is the left fold of `dedup._dot`: JVM-side `F.zip_with` +
+`F.aggregate`, and its bit-identical numpy twin `dedup.fold_dots` in the
+IVF assignment kernel.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from radar_log_parser_spark.operators.dedup import _dot, _md5_hex15_parse, _norm_col
+from radar_log_parser_spark.operators.dedup import (
+    _dot,
+    _norm_col,
+    f64_rows,
+    fold_dots,
+    fold_norms,
+    md5_60,
+)
 from radar_log_parser_spark.operators.logquery import QuerySpec, _read_par
 
 TOP_K = 5
@@ -79,17 +89,6 @@ SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id FROM (
 """
 
 
-def _seed_hash(emb: DataFrame) -> DataFrame:
-    """`emb` plus `seed`, a deterministic uniform sample key computable
-    bit-identically in DuckDB (`('0x'||substr(md5(vec_id::VARCHAR),1,15))::BIGINT`)
-    — the same cross-engine md5 family and parser as the dedup operators,
-    which is what gives the IVF query a full oracle row (r3: rows-only).
-    The md5 is projected in its own select (see `_md5_hex15_parse`)."""
-    return emb.withColumn("seed", F.md5(F.col("vec_id").cast("string"))).withColumn(
-        "seed", _md5_hex15_parse(F.col("seed"))
-    )
-
-
 def ivf_centroids(emb: DataFrame, k: int = IVF_K) -> DataFrame:
     """K deterministic centroid seeds: the k vectors with the smallest
     md5-hash of vec_id — a uniform hash-sample whose size is FIXED at k no
@@ -97,13 +96,17 @@ def ivf_centroids(emb: DataFrame, k: int = IVF_K) -> DataFrame:
     centroid set O(n): an unbounded broadcast and an n×n/N assignment
     join). orderBy+limit compiles to TakeOrderedAndProject: one scan with
     per-partition top-k, k rows to the driver."""
-    # this window ranks exactly k (=64) rows — bounded by the limit(k)
+    # `seed` is a deterministic uniform sample key computable
+    # bit-identically in DuckDB — the dedup operators' cross-engine md5
+    # family (`md5_60`), which is what gives the IVF query a full oracle
+    # row (r3: rows-only).
+    # This window ranks exactly k (=64) rows — bounded by the limit(k)
     # above, never by table size. The partition key pmod(vec_id, 1) is
     # constant-valued but NOT constant-foldable, so WindowExec sees a real
     # partition spec instead of warning about an undefined one (r3's
     # partitionBy(lit(0)) was folded away — verified; the warning stayed)
     return (
-        _seed_hash(emb)
+        md5_60(emb, F.col("vec_id").cast("string"), "seed")
         .orderBy("seed", "vec_id")
         .limit(k)
         .select(
@@ -121,6 +124,18 @@ def ivf_centroids(emb: DataFrame, k: int = IVF_K) -> DataFrame:
     )
 
 
+def collect_centroids(centroids: DataFrame):
+    """The K-row centroid table on the driver, cell-ascending (the assign
+    kernel's argmax tiebreak relies on this order): (cells, C, c_nrm), C
+    the (K, d) float64 centroid matrix."""
+    crows = centroids.orderBy("cell").toArrow()
+    return (
+        crows.column("cell").to_numpy(zero_copy_only=False),
+        f64_rows(crows.column("c_emb")),
+        crows.column("c_nrm").to_numpy(zero_copy_only=False),
+    )
+
+
 def _ivf_assign_factory(cent_bc):
     """Vectorized nearest-centroid assignment (mapInArrow, guide §4.2):
     one kernel call scores a whole batch against the K-row broadcast
@@ -129,44 +144,26 @@ def _ivf_assign_factory(cent_bc):
     float32 values), so no re-attach join is needed downstream.
 
     Bit-identity with the JVM form, a broadcast join of the centroids
-    and a `max_by` argmax (`tests/test_round6.py::ivf_assignments`; same
-    argument as the dedup kernels): the batch-vs-centroid dots accumulate
-    `acc + E[:, i] ⊗ C[:, i]` dimension by dimension — the exact
-    left-fold order of `_dot`'s F.aggregate — the vector norms fold the
-    same way as `_norm_col` before one correctly-rounded sqrt, and the
-    centroid norms are the COLLECTED c_nrm doubles the JVM fold already
-    computed. The argmax tiebreak is preserved exactly: `max_by(cell,
-    struct(cos, -cell))` picks max cos then MIN cell among exact-double
-    ties; the centroid columns are ordered by cell ascending, and
-    np.argmax returns the FIRST maximal column — the same min-cell
-    winner (ties only occur on bit-equal cosines, which both sides
-    compute identically)."""
+    and a `max_by` argmax (`tests/test_round6.py::ivf_assignments`): the
+    batch-vs-centroid dots are `fold_dots` and the vector norms
+    `fold_norms` (the left folds of `_dot` and `_norm_col`, see
+    `dedup.fold_dots`), and the centroid norms are the COLLECTED c_nrm
+    doubles the JVM fold already computed. The argmax tiebreak is
+    preserved exactly: `max_by(cell, struct(cos, -cell))` picks max cos
+    then MIN cell among exact-double ties; the centroid columns are
+    ordered by cell ascending, and np.argmax returns the FIRST maximal
+    column — the same min-cell winner (ties only occur on bit-equal
+    cosines, which both sides compute identically)."""
     def _assign(it):
-        import numpy as np
-        import pyarrow as pa
-
         cells, C, cn = cent_bc.value  # cell-ascending; C: (K, d) float64
         for batch in it:
-            vid = batch.column("vec_id")
-            n = len(vid)
-            E = (
-                batch.column("embedding")
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .reshape(n, C.shape[1])
-                .astype(np.float64)
-            )
-            en = np.zeros(n, dtype=np.float64)
-            acc = np.zeros((n, C.shape[0]), dtype=np.float64)
-            for i in range(C.shape[1]):
-                en = en + E[:, i] * E[:, i]
-                acc = acc + np.multiply.outer(E[:, i], C[:, i])
-            en = np.sqrt(en)
-            cos = acc / np.multiply.outer(en, cn)
+            E = f64_rows(batch.column("embedding"))
+            en = fold_norms(E)
+            cos = fold_dots(E, C) / np.multiply.outer(en, cn)
             best = cos.argmax(axis=1)  # first max ⟺ min cell on ties
             yield pa.RecordBatch.from_arrays(
-                [vid, pa.array(cells[best]), batch.column("embedding"),
-                 pa.array(en)],
+                [batch.column("vec_id"), pa.array(cells[best]),
+                 batch.column("embedding"), pa.array(en)],
                 ["vec_id", "cell", "embedding", "nrm"],
             )
     return _assign
@@ -190,21 +187,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # argmax tiebreak relies on this order) and broadcast; the n×K
     # scoring never exists as Spark rows. Its JVM twin, which pytest pins
     # the kernel against, is tests/test_round6.py::ivf_assignments.
-    import numpy as np
-
-    crows = centroids.orderBy("cell").toArrow()
-    cells = crows.column("cell").to_numpy(zero_copy_only=False)
-    dim = len(crows.column("c_emb")[0])
-    C = (
-        crows.column("c_emb")
-        .combine_chunks()
-        .flatten()
-        .to_numpy(zero_copy_only=False)
-        .reshape(len(cells), dim)
-        .astype(np.float64)
-    )
-    cn = crows.column("c_nrm").to_numpy(zero_copy_only=False)
-    cent_bc = spark.sparkContext.broadcast((cells, C, cn))
+    cent_bc = spark.sparkContext.broadcast(collect_centroids(centroids))
     assigned = _read_par(spark, f"{sf_dir}/embeddings.parquet").select(
         F.col("vec_id").cast("long").alias("vec_id"), "embedding"
     ).mapInArrow(
@@ -230,7 +213,6 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = probed.join(assigned, "cell").filter(
         F.col("vec_id") != F.col("query_id")
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
     return (
         cand.select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos"))
         .withColumn("rank", F.row_number().over(

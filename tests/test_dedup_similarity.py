@@ -70,9 +70,7 @@ def test_ivf_recall(spark):
 
 def test_media_feature_extraction(spark):
     """The multimodal plumbing: binary column → Arrow batch → features;
-    histogram mass equals byte count; stubbed real-decode raises."""
-    import pytest
-
+    histogram mass equals byte count."""
     from radar_log_parser_spark.operators import media
 
     tbl = media.media_table(spark, SF_DIR)
@@ -82,8 +80,6 @@ def test_media_feature_extraction(spark):
         assert r["n_bytes"] > 0
         assert sum(r["histogram16"]) == r["n_bytes"]
         assert 0 <= r["byte_entropy_milli"] <= 8000
-    with pytest.raises(NotImplementedError):
-        media.decode_image(b"\x89PNG")
 
 
 def test_dedup_cluster_invariants(spark):

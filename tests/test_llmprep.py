@@ -67,6 +67,52 @@ def test_pack_sequences_invariants(spark):
         assert r["seq_tokens"] >= llmprep.PACK_BUDGET - max_doc + 1
 
 
+def test_prefix_sum_crosses_buckets(spark, tmp_path):
+    """Every testdata doc_id sits in bucket 0 (doc_id div 2^20), so only a
+    planted table runs `exclusive_prefix_sum`'s cross-bucket offset join:
+    doc_ids over buckets 0, 1, 3 and 5, lines with and without `dup`.
+    context_segments and pack_sequences must equal their DuckDB oracle
+    rows on it."""
+    import random
+
+    import duckdb
+
+    from radar_log_parser_spark.operators import llmprep, logquery
+
+    rng = random.Random(11)
+    ids = {0, 3, (1 << 20) - 1, 1 << 20, (1 << 20) + 9, 3 << 20, (5 << 20) + 2}
+    ids |= set(rng.sample(range(6 << 20), 40))
+    rows = []
+    for i in sorted(ids):
+        words = [rng.choice("abc") for _ in range(rng.randint(1, 120))]
+        if rng.random() < 0.5:
+            words[rng.randrange(len(words))] = "dup"
+        rows.append((i, " ".join(words)))
+    assert any("dup" in t.split() for _i, t in rows)
+    assert any("dup" not in t.split() for _i, t in rows)
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    duck = duckdb.connect()
+    duck.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/documents.parquet/*.parquet')"
+    )
+    for q, sql in (
+        (logquery.q_context_segments, logquery.Q_CONTEXT_SEGMENTS_SQL),
+        (llmprep.q_pack_sequences, llmprep.Q_PACK_SEQUENCES_SQL),
+    ):
+        sdf = q(spark, str(tmp_path))
+        rel = duck.sql(sql)
+        cols = sorted(sdf.columns)
+        assert cols == sorted(rel.columns)
+        got = sorted(tuple(r[c] for c in cols) for r in sdf.collect())
+        want = sorted(
+            tuple(dict(zip(rel.columns, r))[c] for c in cols) for r in rel.fetchall()
+        )
+        assert got == want and len(got) > 1
+
+
 def test_contamination_planted(spark, planted_dir):
     from radar_log_parser_spark.operators import llmprep
 

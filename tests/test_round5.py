@@ -96,8 +96,8 @@ def test_md5_hex15_parse_width(spark):
     from radar_log_parser_spark.operators import dedup
 
     assert all(len(t) == 3 for t in dedup.MD5_LINEAR)  # Carter-Wegman triples
-    df = spark.createDataFrame([("abc",), ("xyz shingle",)], "s string").select(
-        dedup._md5_hex15_parse(F.md5(F.col("s"))).alias("h")
+    df = dedup.md5_60(
+        spark.createDataFrame([("abc",), ("xyz shingle",)], "s string"), F.col("s"), "h"
     )
     vals = [r["h"] for r in df.collect()]
     assert all(0 <= v < (1 << 60) for v in vals)

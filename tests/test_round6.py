@@ -15,21 +15,17 @@ SF_DIR_MID = "/root/testdata/sf0.01"
 
 
 def test_md5_hex15_boundary_parse_equals_conv(spark):
-    """The projected-md5 shift-add parse (`_md5_hex15_parse` behind a
+    """The projected-md5 shift-add parse (`md5_60`, behind a
     CollapseProject-proof boundary) must equal the conv-based reference
     on every shingle of the corpus — same function, different plan."""
     from radar_log_parser_spark.operators.dedup import (
-        _md5_hex15_parse,
+        _shingled_docs,
+        md5_60,
         shingle_strings_exploded,
     )
 
-    docs = spark.read.parquet(f"{SF_DIR_MID}/documents.parquet").select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text"
-    )
-    ex = shingle_strings_exploded(docs.filter(F.size(F.split("text", " ")) >= 3))
-    fast = ex.select("doc_id", F.md5(F.col("shingle")).alias("m")).select(
-        "doc_id", _md5_hex15_parse(F.col("m")).alias("h")
-    )
+    ex = shingle_strings_exploded(_shingled_docs(spark, SF_DIR_MID)[1])
+    fast = md5_60(ex, F.col("shingle"), "h")
     ref = ex.select(
         "doc_id",
         F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10)
@@ -58,7 +54,7 @@ def test_minhash_string_verify_equals_struct_verify(spark):
         LSH_BANDS,
         MINHASH_PERMS,
         _band_pairs,
-        _docs_par,
+        _shingled_docs,
         minhash_bands,
         shingle_strings_exploded,
         shingle_structs,
@@ -70,8 +66,7 @@ def test_minhash_string_verify_equals_struct_verify(spark):
     }
     assert out, "fixture should contain near-dup pairs"
 
-    docs = _docs_par(spark, SF_DIR).filter(F.size(F.split("text", " ")) >= 3)
-    base = docs.select(F.col("doc_id").cast("long").alias("doc_id"), "text")
+    _, base = _shingled_docs(spark, SF_DIR)
     cand = _band_pairs(minhash_bands(
         shingle_strings_exploded(base),
         lambda i: F.hash("shingle", F.lit(i)),
@@ -256,6 +251,36 @@ def test_emb_bucket_kernel_blocking_invariant():
         assert got_set[key_] == c  # bit-identical, not approx
 
 
+def test_emb_sig_kernel_equals_jvm_fold(spark):
+    """`_emb_sig_map`'s signature bit j must equal the JVM left fold
+    `aggregate(zip_with(embedding, plane_j, x*y), 0.0, +) >= 0` for every
+    sf0.01 vector. The bucket-kernel tests take their signatures from the
+    kernel itself, so this is the one check of the signature."""
+    from radar_log_parser_spark.operators.dedup import EMB_PLANES, _dot, _emb_sig_map
+
+    emb = spark.read.parquet(f"{SF_DIR_MID}/embeddings.parquet").select(
+        F.col("vec_id").cast("long").alias("vec_id"), "embedding"
+    )
+    got = {
+        r["vec_id"]: r["sig"]
+        for r in emb.mapInArrow(
+            _emb_sig_map, "vec_id long, sig long, embedding array<float>"
+        ).select("vec_id", "sig").collect()
+    }
+    planes = spark.createDataFrame(
+        list(enumerate(EMB_PLANES)), "j int, plane array<double>"
+    )
+    want = {r["vec_id"]: 0 for r in emb.select("vec_id").collect()}
+    for r in (
+        emb.crossJoin(F.broadcast(planes))
+        .filter(_dot(F.col("embedding"), F.col("plane")) >= 0)
+        .select("vec_id", "j")
+        .collect()
+    ):
+        want[r["vec_id"]] |= 1 << r["j"]
+    assert got == want and len(got) == 500
+
+
 def test_simhash_packed_equals_bit_expansion(spark):
     """The packed per-bit-count aggregation must reproduce the r5 60-row
     ±1-vote broadcast expansion exactly (both hash families share
@@ -264,16 +289,14 @@ def test_simhash_packed_equals_bit_expansion(spark):
     from radar_log_parser_spark.operators import dedup
     from radar_log_parser_spark.operators.dedup import (
         SIMHASH_BITS,
-        _docs_par,
+        _shingled_docs,
         shingle_strings_exploded,
     )
 
-    docs = _docs_par(spark, SF_DIR).select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text"
+    docs, base = _shingled_docs(spark, SF_DIR)
+    hb = shingle_strings_exploded(base).select(
+        "doc_id", F.xxhash64("shingle").alias("h")
     )
-    hb = shingle_strings_exploded(
-        docs.filter(F.size(F.split("text", " ")) >= 3)
-    ).select("doc_id", F.xxhash64("shingle").alias("h"))
 
     bits = spark.range(SIMHASH_BITS).select(F.col("id").cast("int").alias("bit"))
     votes = hb.crossJoin(F.broadcast(bits)).select(
@@ -327,12 +350,11 @@ def test_ivf_assign_kernel_equals_jvm_twin(spark):
     """The vectorized nearest-centroid kernel must reproduce the JVM
     broadcast-join + max_by argmax assignment for EVERY vector (cells,
     pass-through embeddings, and the fold-computed norms)."""
-    import numpy as np
-
     from radar_log_parser_spark.operators.logquery import _read_par
     from radar_log_parser_spark.operators.similarity import (
         _emb,
         _ivf_assign_factory,
+        collect_centroids,
         ivf_centroids,
     )
 
@@ -343,16 +365,7 @@ def test_ivf_assign_kernel_equals_jvm_twin(spark):
         r["vec_id"]: (r["cell"], r["nrm"])
         for r in ivf_assignments(emb, cent).select("vec_id", "cell", "nrm").collect()
     }
-    crows = cent.orderBy("cell").toArrow()
-    cells = crows.column("cell").to_numpy(zero_copy_only=False)
-    dim = len(crows.column("c_emb")[0])
-    C = (
-        crows.column("c_emb").combine_chunks().flatten()
-        .to_numpy(zero_copy_only=False).reshape(len(cells), dim)
-        .astype(np.float64)
-    )
-    cn = crows.column("c_nrm").to_numpy(zero_copy_only=False)
-    bc = spark.sparkContext.broadcast((cells, C, cn))
+    bc = spark.sparkContext.broadcast(collect_centroids(cent))
     got = {
         r["vec_id"]: (r["cell"], r["nrm"])
         for r in _read_par(spark, f"{sf}/embeddings.parquet")
@@ -383,7 +396,7 @@ def test_simhash_overflow_guard(spark):
         F.lit(0).cast("long").alias("doc_id"), F.xxhash64("id").alias("h")
     )
     with pytest.raises(Exception, match="packed-count overflow"):
-        _simhash_from_hashes(spark, docs, hb).collect()
+        _simhash_from_hashes(docs, hb).collect()
 
 
 def test_simhash_guard_fires_before_sum_overflow(spark):
@@ -398,7 +411,7 @@ def test_simhash_guard_fires_before_sum_overflow(spark):
         F.lit((1 << 60) - 1).cast("long").alias("h"),
     )
     with pytest.raises(Exception, match="packed-count overflow"):
-        _simhash_from_hashes(spark, docs, hb).collect()
+        _simhash_from_hashes(docs, hb).collect()
 
 
 def test_simhash_packed_sum_safe_below_cap(spark):
@@ -415,7 +428,7 @@ def test_simhash_packed_sum_safe_below_cap(spark):
     hb = spark.range(n).select(
         F.lit(0).cast("long").alias("doc_id"), F.xxhash64("id").alias("h")
     )
-    got = _simhash_from_hashes(spark, docs, hb).collect()[0]["simhash"]
+    got = _simhash_from_hashes(docs, hb).collect()[0]["simhash"]
     hs = [r["h"] for r in hb.select("h").collect()]
     want = 0
     for bit in range(SIMHASH_BITS):

@@ -173,13 +173,40 @@ def _definitions(tree):
                         yield node, name
 
 
+def _unread_locals(tree):
+    """(line, name) of every parameter and every assigned local name of a
+    function or lambda that nothing in its body reads (nested scopes
+    included; an augmented assignment reads its target). Names starting
+    with `_` are exempt: that is the spelling of "deliberately unused"."""
+    for fn in ast.walk(tree):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+            continue
+        a = fn.args
+        params = [p for p in a.posonlyargs + a.args + a.kwonlyargs + [a.vararg, a.kwarg] if p]
+        stored: dict[str, int] = {}
+        read = set()
+        for stmt in fn.body if isinstance(fn.body, list) else [fn.body]:
+            for node in ast.walk(stmt):
+                if isinstance(node, ast.Name):
+                    if isinstance(node.ctx, ast.Load):
+                        read.add(node.id)
+                    else:
+                        stored.setdefault(node.id, node.lineno)
+                elif isinstance(node, ast.AugAssign) and isinstance(node.target, ast.Name):
+                    read.add(node.target.id)
+        for name, line in [(p.arg, fn.lineno) for p in params] + list(stored.items()):
+            if name not in read and not name.startswith("_"):
+                yield line, name
+
+
 def test_no_unreferenced_package_definitions():
     """Every top-level function, class and assigned name in the package,
     and every non-dunder method and class-level name of its classes, is
     referenced by name from some module of the package, the tests,
-    perfbench, tools or the root scripts, its own definition aside. Code
-    and constants that nothing uses are deleted, not kept as a second
-    form."""
+    perfbench, tools or the root scripts, its own definition aside; and
+    every parameter and local name of a package function is read inside
+    it. Code and constants that nothing uses are deleted, not kept as a
+    second form."""
     trees = [t for _rel, t in _modules(REPO_DIR, recurse=False)]
     for sub in ("radar_log_parser_spark", "tests", "perfbench", "tools"):
         trees += [t for _rel, t in _modules(os.path.join(REPO_DIR, sub))]
@@ -189,6 +216,11 @@ def test_no_unreferenced_package_definitions():
         for rel, tree in _modules()
         for node, name in _definitions(tree)
         if refs[name] == sum(1 for n in _referenced_names(node) if n == name)
+    ]
+    dead += [
+        f"{rel}:{line} {name}"
+        for rel, tree in _modules()
+        for line, name in _unread_locals(tree)
     ]
     assert not dead, dead
 

@@ -64,18 +64,21 @@ identical pre-registered control-clean filter.
   field extraction)** — 18 rounds, 1 control-clean: **clean
   median-of-best-3 0.665** (CPU 4.09 / DRAM 3.62), all-rounds
   median-of-best-3 0.668, best round 0.734. Raw:
-  BENCH/scaling_rounds_r5b.json.
+  BENCH/scaling_rounds_r5b.json (git history at commit `e2e60ac`).
 - **r5 main (pre-restructure: driver-sequenced kept→slim window)** —
   18 rounds, 2 control-clean: **clean median-of-best-3 0.517**,
-  all-rounds 0.560, best 0.607. Raw: BENCH/scaling_rounds_r5_merged.json.
+  all-rounds 0.560, best 0.607. Raw: BENCH/scaling_rounds_r5_merged.json
+  (git history at commit `e2e60ac`).
   The tiered fan-out lifted the control-clean efficiency 0.517 → 0.665
   on identical inputs — code-attributable (same estimator, same filter).
 
 e2e context across populations: the r5-main e2e distribution
-(BENCH/e2e_distribution_r5.json, 10 invocations across hours) put the
+(BENCH/e2e_distribution_r5.json, 10 invocations across hours; git
+history at commit `e2e60ac`) put the
 pre-restructure steady state at 12.16 s (sf0.1 fixture, local[32]);
 r5b's 8 invocations all landed in heavy steal windows (min 13.4 s =
-upper bound only, BENCH/e2e_distribution_r5b.json).
+upper bound only, BENCH/e2e_distribution_r5b.json in git history at
+commit `e2e60ac`).
 """
 
 
