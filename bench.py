@@ -218,6 +218,8 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
     spreads: dict[str, float] = {}
     runs_all: dict[str, list[float]] = {}
     calibs: dict[str, dict[str, float]] = {}
+    build_s: dict[str, float] = {}
+    build_jobs: dict[str, int] = {}
 
     # --- headline operator queries at the sf dir ---------------------------
     # warm once + time ≥3 with spread PER QUERY (VERDICT r4 #1: a single
@@ -225,19 +227,31 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
     # the same estimator the e2e leg uses). A fixed-work CPU + memcpy
     # micro-calibration runs immediately before each query so steal windows
     # are identifiable in the JSON (inflated calib wall == stolen window).
+    # The plan build (the `fn(spark, sf_dir)` call, before any action) is
+    # also timed on its own, with the Spark jobs it starts counted under a
+    # job group: a build that collects or infers a schema runs jobs.
     queries = entry.queries()
+    sc = spark.sparkContext
     for name in HEADLINERS:
         fn = queries[name]
         calibs[name] = _micro_calib()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
-        runs = []
-        for _ in range(HEADLINE_REPEATS):
+        runs, builds, jobs = [], [], []
+        for r in range(HEADLINE_REPEATS):
+            group = f"build-{name}-{r}"
+            sc.setJobGroup(group, group)
             t0 = time.monotonic()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            df = fn(spark, sf_dir)
+            builds.append(time.monotonic() - t0)
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            df.write.format("noop").mode("overwrite").save()
             runs.append(round(time.monotonic() - t0, 3))
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
         timings[name] = min(runs)
         spreads[name] = round(max(runs) - min(runs), 3)
         runs_all[name] = runs
+        build_s[name] = round(min(builds), 3)
+        build_jobs[name] = max(jobs)
     spark.stop()
 
     # --- north-rule metric: end-to-end parse→route→aggregate, measured in
@@ -266,6 +280,10 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
         "queries_runs": runs_all,
         "queries_spread": spreads,
         "queries_calib": calibs,
+        # per query: the plan build alone (min over the timed repeats) and
+        # the Spark jobs one build starts (max over the timed repeats)
+        "queries_build": build_s,
+        "queries_build_jobs": build_jobs,
         "headline_repeats": HEADLINE_REPEATS,
         "sf": sf,
         "cpus": cpus,

@@ -9,6 +9,18 @@ candidate verify), which shuffles only O(n·bands) rows and verifies only
 bucket-colliding candidates. All hashing is JVM-side and deterministic
 (murmur3 `F.hash` / `F.xxhash64`) — no per-row Python anywhere, SimHash
 included (explode + codegen'd bit-vote aggregates).
+
+The per-bit and per-permutation expressions are SQL text: `minhash_bands`
+and `_simhash_from_hashes` build their aggregate and its unpack as ONE
+`spark.sql` statement over the input frame (PySpark registers the frame as
+a temporary view while the statement is parsed and drops it before
+returning), and `md5_60` parses its 15 digits in one `F.expr`. Each `F.*`
+call is a Py4J round trip, and about ten on a thread with an active
+session, where PySpark also records the call site, so the Column trees
+these replace took up to 14k round trips per plan. The text holds only
+internal column names and integer constants, never a config string (the
+SimHash guard's message is a named parameter), and the optimized plans
+equal the Column forms', which `tests/test_round6.py` keeps and pins.
 """
 
 from __future__ import annotations
@@ -24,6 +36,7 @@ from radar_log_parser_spark.operators.logquery import (
     _docs_par,
     _read_par,
 )
+from radar_log_parser_spark.session import read_parquet
 
 JACCARD_NUM = 6  # threshold 0.6 as integer ratio (no float hash risk)
 JACCARD_DEN = 10
@@ -178,26 +191,23 @@ WHERE len(list_intersect(a.sh, b.sh)) * {JACCARD_DEN}
 
 
 # --- MinHash + LSH: the scale path ------------------------------------------
-def minhash_bands(hashed: DataFrame, perm, perms: int, bands: int, band_key) -> DataFrame:
+def minhash_bands(hashed: DataFrame, perm, perms: int, bands: int, band_key: str) -> DataFrame:
     """(doc_id, per-shingle hash columns) rows → band table (doc_id, band,
     bh), the one signature-and-band plan of both MinHash hash families.
-    ONE groupBy(doc_id) of `perms` min-aggregates `perm(i)` (map-side
-    partial aggregation), then `bands` band keys `band_key(rows...)` over
-    consecutive signature rows, posexploded."""
-    wide = hashed.groupBy("doc_id").agg(
-        *[F.min(perm(i)).alias(f"h{i}") for i in range(perms)]
+    ONE groupBy(doc_id) of `perms` min-aggregates of the SQL expression
+    `perm(i)` (map-side partial aggregation), then `bands` band keys, the
+    SQL function `band_key` over consecutive signature rows, posexploded.
+    One SQL statement (see the module docstring)."""
+    rows = perms // bands
+    mins = ", ".join(f"min({perm(i)}) AS h{i}" for i in range(perms))
+    keys = ", ".join(
+        f"{band_key}({', '.join(f'h{b * rows + r}' for r in range(rows))})"
+        for b in range(bands)
     )
-    rows_per_band = perms // bands
-    return wide.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[
-                band_key(*[
-                    F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)
-                ])
-                for b in range(bands)
-            ])
-        ).alias("band", "bh"),
+    return hashed.sparkSession.sql(
+        f"SELECT doc_id, posexplode(array({keys})) AS (band, bh) "
+        f"FROM (SELECT doc_id, {mins} FROM {{hashed}} GROUP BY doc_id)",
+        hashed=hashed,
     )
 
 
@@ -252,10 +262,10 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, base = _shingled_docs(spark, sf_dir)
     bands = minhash_bands(
         shingle_strings_exploded(base),
-        lambda i: F.hash("shingle", F.lit(i)),
+        lambda i: f"hash(shingle, {i})",
         MINHASH_PERMS,
         LSH_BANDS,
-        F.hash,
+        "hash",
     )
     return _jaccard_verify(base, _band_pairs(bands))
 
@@ -307,13 +317,12 @@ def md5_60(df: DataFrame, src, name: str) -> DataFrame:
     non-cheap expression referenced 15×, so the select boundary
     guarantees ONE md5 per row (measured 1.83 s → 0.79 s over the
     2.6M-shingle sf1like explode)."""
-    m = F.col(name)
     acc = None
     for i in range(1, 16):
-        a = F.ascii(F.substring(m, i, 1))
-        d = F.when(a >= 97, a - 87).otherwise(a - 48).cast("long")
-        acc = d if acc is None else F.shiftleft(acc, 4) + d
-    return df.withColumn(name, F.md5(src)).withColumn(name, acc)
+        a = f"ascii(substring(`{name}`, {i}, 1))"
+        d = f"CAST(CASE WHEN {a} >= 97 THEN {a} - 87 ELSE {a} - 48 END AS BIGINT)"
+        acc = d if acc is None else f"shiftleft({acc}, 4) + {d}"
+    return df.withColumn(name, F.md5(src)).withColumn(name, F.expr(acc))
 
 
 def q_dedup_minhash_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -334,14 +343,12 @@ def q_dedup_minhash_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, base = _shingled_docs(spark, sf_dir)
     ex = md5_60(shingle_strings_exploded(base), F.col("shingle"), "h")
 
-    def perm(i: int):
+    def perm(i: int) -> str:
         a, b, c = MD5_LINEAR[i]
-        hi = F.shiftright(F.col("h"), 30)
-        lo = F.col("h").bitwiseAND(F.lit(MD5_LO_MASK))
-        return (F.lit(a) * hi + F.lit(b) * lo + F.lit(c)) % F.lit(MD5_P)
+        return f"({a} * shiftright(h, 30) + {b} * (h & {MD5_LO_MASK}) + {c}) % {MD5_P}"
 
     # a band's key is its row array itself (DuckDB joins on the same list)
-    bands = minhash_bands(ex, perm, MD5_PERMS, MD5_BANDS, F.array)
+    bands = minhash_bands(ex, perm, MD5_PERMS, MD5_BANDS, "array")
     return _jaccard_verify(base, _band_pairs(bands))
 
 
@@ -424,47 +431,33 @@ def _simhash_from_hashes(docs: DataFrame, hb: DataFrame) -> DataFrame:
     ARITHMETIC_OVERFLOW, so the named guard fires at any document size. A
     million-distinct-shingle document means many megabytes of text in one
     row — re-shard upstream rather than silently truncate."""
-    packs = []
-    for j in range(_SIMHASH_PACKS):
-        p = None
-        for k in range(_SIMHASH_FIELDS):
-            bit = (
-                F.shiftright(F.col("h"), _SIMHASH_FIELDS * j + k)
-                .bitwiseAND(F.lit(1))
-                .cast("long")
-            )
-            term = F.shiftleft(bit, _SIMHASH_FIELD_BITS * k)
-            p = term if p is None else p + term
-        packs.append(p)
-    wide = hb.groupBy("doc_id").agg(
-        F.count("*").alias("nsh"),
-        *[F.try_sum(packs[j]).alias(f"p{j}") for j in range(_SIMHASH_PACKS)],
-    )
-    bitsum = None
-    for j in range(_SIMHASH_PACKS):
-        for k in range(_SIMHASH_FIELDS):
-            cnt = F.shiftright(F.col(f"p{j}"), _SIMHASH_FIELD_BITS * k).bitwiseAND(
-                F.lit((1 << _SIMHASH_FIELD_BITS) - 1)
-            )
-            term = (
-                F.when(cnt * 2 > F.col("nsh"), F.lit(1 << (_SIMHASH_FIELDS * j + k)).cast("long"))
-                .otherwise(F.lit(0).cast("long"))
-            )
-            bitsum = term if bitsum is None else bitsum + term
-    sim = wide.select(
-        "doc_id",
-        F.when(
-            F.col("nsh") > _SIMHASH_MAX_SHINGLES,
-            F.raise_error(
-                F.lit(
-                    "simhash packed-count overflow: a document carries more "
-                    f"than {_SIMHASH_MAX_SHINGLES} distinct shingles; "
-                    "re-shard the document upstream"
-                )
-            ).cast("long"),
+    packs = ", ".join(
+        "try_sum("
+        + " + ".join(
+            f"shiftleft(CAST((shiftright(h, {_SIMHASH_FIELDS * j + k}) & 1) AS BIGINT), "
+            f"{_SIMHASH_FIELD_BITS * k})"
+            for k in range(_SIMHASH_FIELDS)
         )
-        .otherwise(bitsum)
-        .alias("simhash"),
+        + f") AS p{j}"
+        for j in range(_SIMHASH_PACKS)
+    )
+    mask = (1 << _SIMHASH_FIELD_BITS) - 1
+    bitsum = " + ".join(
+        f"CASE WHEN (shiftright(p{j}, {_SIMHASH_FIELD_BITS * k}) & {mask}) * 2 > nsh "
+        f"THEN CAST({1 << (_SIMHASH_FIELDS * j + k)} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+        for j in range(_SIMHASH_PACKS)
+        for k in range(_SIMHASH_FIELDS)
+    )
+    sim = hb.sparkSession.sql(
+        f"SELECT doc_id, CASE WHEN nsh > {_SIMHASH_MAX_SHINGLES} "
+        f"THEN CAST(raise_error(:overflow) AS BIGINT) ELSE {bitsum} END AS simhash "
+        f"FROM (SELECT doc_id, count(*) AS nsh, {packs} FROM {{hb}} GROUP BY doc_id)",
+        args={
+            "overflow": "simhash packed-count overflow: a document carries more "
+            f"than {_SIMHASH_MAX_SHINGLES} distinct shingles; "
+            "re-shard the document upstream"
+        },
+        hb=hb,
     )
     # docs with <3 words carry fingerprint 0 (no shingles to vote)
     return docs.select("doc_id").join(sim, "doc_id", "left").select(
@@ -603,7 +596,7 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs (cos ≥ 0.45), exact pairwise over the
     normalized vectors. Scale path: LSH-bucket by random hyperplane signs or
     IVF-block (see similarity.py); this exact form is the oracle baseline."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet").select(
         F.col("vec_id").cast("long").alias("vec_id"),
         "embedding",
         _norm_col(F.col("embedding")).alias("nrm"),

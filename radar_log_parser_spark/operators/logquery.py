@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from radar_log_parser_spark.session import read_parquet
+
 
 @dataclass(frozen=True)
 class QuerySpec:
@@ -31,7 +33,7 @@ class QuerySpec:
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return read_parquet(spark, f"{sf_dir}/documents.parquet")
 
 
 def _docs_par(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -56,7 +58,7 @@ def _read_par(spark: SparkSession, path: str) -> DataFrame:
     shuffle is ever added where the scan can parallelize itself. Filters
     applied by callers still execute below the exchange (Catalyst pushes
     deterministic predicates through a round-robin repartition)."""
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     par = spark.sparkContext.defaultParallelism
     try:
         import glob
@@ -82,7 +84,7 @@ def _read_par(spark: SparkSession, path: str) -> DataFrame:
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
+    return read_parquet(spark, f"{sf_dir}/events.parquet")
 
 
 # --- the "config" for the documents-as-log analysis ------------------------

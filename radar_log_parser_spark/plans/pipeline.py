@@ -54,7 +54,13 @@ from radar_log_parser_spark.config import ConfigSpec
 from radar_log_parser_spark.functions.parse import parse_stage
 from radar_log_parser_spark.operators import aggregates as agg
 from radar_log_parser_spark.operators import routing
-from radar_log_parser_spark.session import codegen_compiles, local_frame
+from radar_log_parser_spark.session import (
+    _fingerprint,
+    codegen_compiles,
+    input_fingerprint,
+    local_frame,
+    read_parquet,
+)
 
 SALT_MOD = 16
 
@@ -69,14 +75,6 @@ def salted_repartition(df: DataFrame, key: str) -> DataFrame:
     source-skewed shards'.) The partition count is left to AQE, which
     coalesces it to the data size."""
     return df.repartition(F.col(key), F.pmod(F.xxhash64("doc_id"), F.lit(SALT_MOD)))
-
-
-def _fingerprint(*parts: str) -> str:
-    h = hashlib.sha256()
-    for p in parts:
-        h.update(p.encode())
-        h.update(b"\x00")
-    return h.hexdigest()[:24]
 
 
 def _py_sources(root, prefix: str = ""):
@@ -104,24 +102,6 @@ def code_fingerprint() -> str:
 
 def _config_hash(cfg: ConfigSpec) -> str:
     return _fingerprint(repr(cfg))
-
-
-def input_fingerprint(spark: SparkSession, path: str) -> str:
-    """The input's content fingerprint, read on the driver with no Spark
-    job: the relative path, size and modification time of every file under
-    `path` (or of `path` itself), listed through Hadoop's FileSystem, so any
-    scheme Spark reads is covered. A new file at the same path changes it,
-    and no stage resumes over rows of the old input."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    root = fs.makeQualified(hpath).toString().rstrip("/")
-    files = fs.listFiles(hpath, True)
-    parts = []
-    while files.hasNext():
-        st = files.next()
-        rel = st.getPath().toString()[len(root) :].lstrip("/")
-        parts.append(f"{rel}\t{st.getLen()}\t{st.getModificationTime()}")
-    return _fingerprint(*sorted(parts))
 
 
 @dataclass
@@ -413,7 +393,7 @@ class Pipeline:
         compiles0 = codegen_compiles(spark)
         t0 = time.monotonic()
 
-        raw = spark.read.parquet(self.input_path)
+        raw = read_parquet(spark, self.input_path)
 
         parsed = self._stage(
             "parsed",

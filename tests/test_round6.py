@@ -6,6 +6,7 @@ behind the corpus the optimization was tuned on."""
 from __future__ import annotations
 
 import random
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -69,10 +70,10 @@ def test_minhash_string_verify_equals_struct_verify(spark):
     _, base = _shingled_docs(spark, SF_DIR)
     cand = _band_pairs(minhash_bands(
         shingle_strings_exploded(base),
-        lambda i: F.hash("shingle", F.lit(i)),
+        lambda i: f"hash(shingle, {i})",
         MINHASH_PERMS,
         LSH_BANDS,
-        F.hash,
+        "hash",
     ))
     sh = base.select("doc_id", shingle_structs().alias("sh"))
     a = sh.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("a_sh"))
@@ -435,4 +436,140 @@ def test_simhash_packed_sum_safe_below_cap(spark):
         votes = sum(1 if (h >> bit) & 1 else -1 for h in hs)
         if votes > 0:
             want |= 1 << bit
+    assert got == want
+
+
+# --- the Column-API forms of dedup's SQL-text builders ----------------------
+# dedup.py writes these expressions as SQL text (one parse instead of a Py4J
+# round trip per expression node); the Column forms below are what the text
+# replaced, kept to pin that both analyze to the same optimized plans.
+def md5_60_columns(df, src, name):
+    m = F.col(name)
+    acc = None
+    for i in range(1, 16):
+        a = F.ascii(F.substring(m, i, 1))
+        d = F.when(a >= 97, a - 87).otherwise(a - 48).cast("long")
+        acc = d if acc is None else F.shiftleft(acc, 4) + d
+    return df.withColumn(name, F.md5(src)).withColumn(name, acc)
+
+
+def md5_perm_columns(i):
+    from radar_log_parser_spark.operators.dedup import MD5_LINEAR, MD5_LO_MASK, MD5_P
+
+    a, b, c = MD5_LINEAR[i]
+    hi = F.shiftright(F.col("h"), 30)
+    lo = F.col("h").bitwiseAND(F.lit(MD5_LO_MASK))
+    return (F.lit(a) * hi + F.lit(b) * lo + F.lit(c)) % F.lit(MD5_P)
+
+
+# the Column perm and band key of each MinHash family, by its SQL band key
+MINHASH_FAMILY_COLUMNS = {
+    "hash": (lambda i: F.hash("shingle", F.lit(i)), F.hash),
+    "array": (md5_perm_columns, F.array),
+}
+
+
+def minhash_bands_columns(hashed, _perm_sql, perms, bands, band_key):
+    perm, key = MINHASH_FAMILY_COLUMNS[band_key]
+    wide = hashed.groupBy("doc_id").agg(
+        *[F.min(perm(i)).alias(f"h{i}") for i in range(perms)]
+    )
+    rows_per_band = perms // bands
+    return wide.select(
+        "doc_id",
+        F.posexplode(
+            F.array(*[
+                key(*[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)])
+                for b in range(bands)
+            ])
+        ).alias("band", "bh"),
+    )
+
+
+def simhash_from_hashes_columns(docs, hb):
+    from radar_log_parser_spark.operators.dedup import (
+        _SIMHASH_FIELD_BITS,
+        _SIMHASH_FIELDS,
+        _SIMHASH_MAX_SHINGLES,
+        _SIMHASH_PACKS,
+    )
+
+    packs = []
+    for j in range(_SIMHASH_PACKS):
+        p = None
+        for k in range(_SIMHASH_FIELDS):
+            bit = (
+                F.shiftright(F.col("h"), _SIMHASH_FIELDS * j + k)
+                .bitwiseAND(F.lit(1))
+                .cast("long")
+            )
+            term = F.shiftleft(bit, _SIMHASH_FIELD_BITS * k)
+            p = term if p is None else p + term
+        packs.append(p)
+    wide = hb.groupBy("doc_id").agg(
+        F.count("*").alias("nsh"),
+        *[F.try_sum(packs[j]).alias(f"p{j}") for j in range(_SIMHASH_PACKS)],
+    )
+    bitsum = None
+    for j in range(_SIMHASH_PACKS):
+        for k in range(_SIMHASH_FIELDS):
+            cnt = F.shiftright(F.col(f"p{j}"), _SIMHASH_FIELD_BITS * k).bitwiseAND(
+                F.lit((1 << _SIMHASH_FIELD_BITS) - 1)
+            )
+            term = (
+                F.when(cnt * 2 > F.col("nsh"), F.lit(1 << (_SIMHASH_FIELDS * j + k)).cast("long"))
+                .otherwise(F.lit(0).cast("long"))
+            )
+            bitsum = term if bitsum is None else bitsum + term
+    sim = wide.select(
+        "doc_id",
+        F.when(
+            F.col("nsh") > _SIMHASH_MAX_SHINGLES,
+            F.raise_error(
+                F.lit(
+                    "simhash packed-count overflow: a document carries more "
+                    f"than {_SIMHASH_MAX_SHINGLES} distinct shingles; "
+                    "re-shard the document upstream"
+                )
+            ).cast("long"),
+        )
+        .otherwise(bitsum)
+        .alias("simhash"),
+    )
+    return docs.select("doc_id").join(sim, "doc_id", "left").select(
+        "doc_id", F.coalesce("simhash", F.lit(0).cast("long")).alias("simhash")
+    )
+
+
+def optimized_plan(df) -> str:
+    """The optimized logical plan with expression ids and lambda variable
+    numbers stripped: both count up per session, not per plan."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return re.sub(r"(lambda [a-z]+_)\d+", r"\1", re.sub(r"#\d+L?", "#", plan))
+
+
+@pytest.mark.parametrize("name", [
+    "dedup_simhash", "dedup_simhash_md5", "dedup_minhash_lsh",
+    "dedup_minhash_lsh_md5", "ann_ivf_topk", "dedup_cluster",
+])
+def test_sql_text_builders_keep_the_column_plans(spark, monkeypatch, name):
+    """Every query built on the SQL-text `_simhash_from_hashes`,
+    `minhash_bands` (and its perms) and `md5_60` has the optimized plan of
+    the same query built on their Column-API forms above, untruncated."""
+    import __spark_entry__ as entry
+
+    from radar_log_parser_spark.operators import dedup, similarity
+
+    build = entry.queries()[name]
+    spark.conf.set("spark.sql.debug.maxToStringFields", "100000")
+    try:
+        got = optimized_plan(build(spark, SF_DIR))
+        monkeypatch.setattr(dedup, "md5_60", md5_60_columns)
+        monkeypatch.setattr(similarity, "md5_60", md5_60_columns)
+        monkeypatch.setattr(dedup, "minhash_bands", minhash_bands_columns)
+        monkeypatch.setattr(dedup, "_simhash_from_hashes", simhash_from_hashes_columns)
+        want = optimized_plan(build(spark, SF_DIR))
+    finally:
+        spark.conf.unset("spark.sql.debug.maxToStringFields")
+    assert "more fields" not in got
     assert got == want

@@ -1,4 +1,5 @@
-"""session.py: the driver heap default, driver-local dimension tables
+"""session.py: the driver heap default, the parquet read path (the schema
+inferred once per file version), driver-local dimension tables
 (`local_frame`) — schema and value round trips, the plans that use them,
 source guards that keep Python-RDD scans of driver lists, env-var
 switches and unreferenced definitions out of the package — the codegen
@@ -21,11 +22,13 @@ import zipimport
 from collections import Counter
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql.types import LongType, StructType
 
 from radar_log_parser_spark import daemon, session
-from radar_log_parser_spark.session import local_frame
-from test_dedup_similarity import SF_DIR
+from radar_log_parser_spark.session import local_frame, read_parquet
+from test_dedup_similarity import SF_DIR, _jobs_run
+from test_round6 import SF_DIR_MID
 
 REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG_DIR = os.path.join(REPO_DIR, "radar_log_parser_spark")
@@ -37,6 +40,98 @@ def test_default_driver_mem_fits_the_host(monkeypatch):
     assert 1 <= gib <= max(1, session._host_mem_bytes() >> 30)
     monkeypatch.setenv("SPARK_DRIVER_MEM", "5g")
     assert session.default_driver_mem() == "5g"
+
+
+def _write(path, **cols):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table(cols), path)
+
+
+def test_input_fingerprint_equals_the_located_listing(spark, tmp_path):
+    """The `listStatus` walk hashes what `FileSystem.listFiles(path, true)`
+    lists: nested directories, hidden and marker files, a trailing slash,
+    a `file://` URI, a single file."""
+    from radar_log_parser_spark.session import _fingerprint, input_fingerprint
+
+    def located(path):
+        hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        root = fs.makeQualified(hpath).toString().rstrip("/")
+        files = fs.listFiles(hpath, True)
+        parts = []
+        while files.hasNext():
+            st = files.next()
+            rel = st.getPath().toString()[len(root) :].lstrip("/")
+            parts.append(f"{rel}\t{st.getLen()}\t{st.getModificationTime()}")
+        return _fingerprint(*sorted(parts))
+
+    for rel in ("t/a=1/b=2/x.parquet", "t/a=2/y.parquet", "t/_SUCCESS", "t/.x.crc", "one.parquet"):
+        (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / rel).write_text(rel)
+    for path in (tmp_path / "t", f"{tmp_path}/t/", f"file://{tmp_path}/t", tmp_path / "one.parquet"):
+        assert input_fingerprint(spark, str(path)) == located(str(path)), path
+
+
+def test_read_parquet_infers_once_per_file_version(spark, tmp_path):
+    """A repeated read of an unchanged file runs no Spark job and has the
+    schema Spark infers; a file rewritten at the same path with one more
+    column is inferred again, and the read shows the column."""
+    path = str(tmp_path / "t.parquet")
+    _write(path, a=[1, 2])
+    read_parquet(spark, path)
+    assert _jobs_run(spark, lambda: read_parquet(spark, path), "warm-read") == 0
+    assert read_parquet(spark, path).schema == spark.read.parquet(path).schema
+    _write(path, a=[1, 2], b=["x", "y"])
+    df = read_parquet(spark, path)
+    assert df.columns == ["a", "b"]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "x"), (2, "y")]
+
+
+def test_read_parquet_keeps_one_schema_per_path(spark, tmp_path):
+    """20 reads of 3 paths, one of them rewritten with a new column on the
+    way, leave one cache entry per path, holding the latest schema."""
+    paths = [str(tmp_path / f"t{i}.parquet") for i in range(3)]
+    for p in paths:
+        _write(p, a=[1])
+    for i in range(20):
+        if i == 10:
+            _write(paths[0], a=[1], b=[2])
+        read_parquet(spark, paths[i % 3])
+    cached = {p: entry for p, entry in session._SCHEMAS.items() if p.startswith(str(tmp_path))}
+    assert sorted(cached) == paths
+    assert cached[paths[0]][1].fieldNames() == ["a", "b"]
+
+
+def test_read_parquet_missing_path_raises_as_spark_does(spark, tmp_path):
+    """The file listing does not surface a Py4J error first: a missing
+    path raises Spark's own PATH_NOT_FOUND."""
+    missing = str(tmp_path / "missing.parquet")
+    with pytest.raises(AnalysisException) as want:
+        spark.read.parquet(missing)
+    with pytest.raises(AnalysisException) as got:
+        read_parquet(spark, missing)
+    assert got.value.getCondition() == want.value.getCondition() == "PATH_NOT_FOUND"
+
+
+def test_warm_headliner_builds_run_no_job(spark):
+    """Once each table's schema is cached, building a bench headliner runs
+    no Spark job: a read of a table that infers its schema runs one. Only
+    `dedup_cluster` (its label rounds) and `ann_ivf_topk` (its centroid
+    collect) run jobs to build."""
+    import __spark_entry__ as entry
+    from bench import HEADLINERS
+
+    queries = entry.queries()
+    names = [q for q in HEADLINERS if q not in ("dedup_cluster", "ann_ivf_topk")]
+    for q in names:
+        queries[q](spark, SF_DIR_MID)
+    jobs = {
+        q: _jobs_run(spark, lambda q=q: queries[q](spark, SF_DIR_MID), f"build-{q}")
+        for q in names
+    }
+    assert jobs == dict.fromkeys(names, 0)
 
 
 def test_local_frame_empty_keeps_schema(spark):
