@@ -160,11 +160,13 @@ class ConfigSpec:
 
 def summary_pairs(cfg: ConfigSpec) -> list[tuple[str, str, str]]:
     """(issue, field, pattern) triples in (issue asc, field asc) order — the
-    STATIC field catalog every consumer shares: the parse stage extracts one
-    per-line hit column per pair (functions/fieldex.py), the fused summary
-    (`aggregates.summary_aggregate`) aggregates those columns by position
-    k, and the assembly (`summary_frame`) renders them. The order is deterministic so
-    positional column names (schema.fld_col) mean the same pair everywhere."""
+    STATIC field catalog, in which a pair's position k is its index
+    everywhere: the parse stage tags each per-line hit with k
+    (functions/fieldex.py, the `fld_hits` column), `routing` keeps an
+    issue's contiguous k range on its scoped rows, and the summary
+    (`aggregates.summary_frame`) joins the aggregated hits back to the
+    pairs by k. Readers: `fieldex.FieldPlan`, `routing.issue_process_map`
+    and `summary_frame`'s pairs frame."""
     pairs: list[tuple[str, str, str]] = []
     for iname in sorted(cfg.issues):
         spec = cfg.issues[iname]

@@ -17,16 +17,17 @@ ONCE per line inside the embarrassingly-parallel parse pass:
 
 Extraction batches by UNIQUE pattern (the bench catalog reuses one Pid
 pattern across 9 issues): each unique grouped pattern runs once over the
-union of its issues' eligible lines; per-pair columns then mask the shared
-result. Every extraction goes through `findall`, the one place that picks
-the engine: RE2's `findall_kernel`, or Python `finditer` with re.ASCII
-when the kernel is unsound — the same engine-pinning contract as the rest
-of the parse kernel (ADVICE r3: RE2, Go, Java, DuckDB and Python-ASCII
-agree on the linted subset).
+union of its issues' eligible lines; per-pair masks then select from
+the shared result. Every extraction goes through `findall`, the one place
+that picks the engine: RE2's `findall_kernel`, or Python `finditer` with
+re.ASCII when the kernel is unsound — the same engine-pinning contract as
+the rest of the parse kernel (ADVICE r3: RE2, Go, Java, DuckDB and
+Python-ASCII agree on the linted subset).
 
-Output per pair k (order = config.summary_pairs): struct<n:int, j:string>,
-NULL when the line has no hits for that pair — so the fan-out summary is
-a pure aggregation with no regex and no full-text traffic.
+Output: one `fld_hits` list per line, an entry struct<k, n, j> for each
+pair k (its position in config.summary_pairs) with n > 0 hits on the
+line, in k order — so the fan-out summary is a pure aggregation with no
+regex and no full-text traffic, and the pair index travels as data.
 """
 
 from __future__ import annotations
@@ -50,11 +51,9 @@ class FieldPlan:
     """
 
     def __init__(self, cfg: ConfigSpec):
-        self.pairs = summary_pairs(cfg)
-        self.n_pairs = len(self.pairs)
         self.grouped_work: dict[str, dict] = {}
         self.ngrp_work: dict[tuple[str, str], dict] = {}
-        for k, (iname, _fname, pat) in enumerate(self.pairs):
+        for k, (iname, _fname, pat) in enumerate(summary_pairs(cfg)):
             spec = cfg.issues[iname]
             if spec.grouped:
                 procs = tuple(sorted(spec.specific_process))
@@ -145,17 +144,26 @@ def extract_field_columns(
     text_pa: pa.Array,
     proc_masks: dict[str, np.ndarray],
     ngrp_matches: dict[str, tuple[np.ndarray, pa.Array]],
-) -> list[pa.StructArray]:
-    """One struct<n,j> array per summary pair, order = plan.pairs.
+) -> pa.ListArray:
+    """The `fld_hits` column: per line, a struct<k,n,j> entry for each
+    summary pair k (config.summary_pairs) with hits on the line, in k order.
 
     proc_masks: per GLOBAL process name, the boolean line-hit mask the
         parse kernel already computed for the `procs` column.
     ngrp_matches: per non-grouped issue, (counts, flat match substrings) —
         the exact arrays backing the ngrp__<issue> column.
     """
-    n_cols = [np.zeros(n, dtype=np.int32) for _ in range(plan.n_pairs)]
-    j_cols: list[np.ndarray] = [np.full(n, None, dtype=object) for _ in range(plan.n_pairs)]
-    valid = [np.zeros(n, dtype=bool) for _ in range(plan.n_pairs)]
+    # (row, k, n, j) entry arrays, one per pair with hits
+    rows: list[np.ndarray] = []
+    ks: list[np.ndarray] = []
+    ns: list[np.ndarray] = []
+    js: list[np.ndarray] = []
+
+    def add(k: int, idx: np.ndarray, n_hits: np.ndarray, joined: np.ndarray) -> None:
+        rows.append(idx)
+        ks.append(np.full(len(idx), k, dtype=np.int32))
+        ns.append(n_hits[idx])
+        js.append(joined[idx])
 
     # grouped pairs: one extraction per unique pattern over the UNION of its
     # issues' eligible lines; per-pair masks select from the shared result
@@ -164,16 +172,12 @@ def extract_field_columns(
         if not len(idx):
             continue
         n_m, lists = findall(pc.take(text_pa, pa.array(idx, pa.int64())), w["crgx"])
-        hit = n_m > 0
-        pat_n = np.zeros(n, dtype=np.int32)
+        pat_n = np.zeros(n, dtype=np.int64)
         pat_j = np.full(n, None, dtype=object)
         pat_n[idx] = n_m
-        pat_j[idx[hit]] = pc.binary_join(lists, "\n").to_numpy(zero_copy_only=False)[hit]
+        pat_j[idx] = pc.binary_join(lists, "\n").to_numpy(zero_copy_only=False)
         for k, procs in w["ks"]:
-            sel = (pat_n > 0) & _any_of(proc_masks, procs, n)
-            n_cols[k][sel] = pat_n[sel]
-            j_cols[k][sel] = pat_j[sel]
-            valid[k] |= sel
+            add(k, np.flatnonzero((pat_n > 0) & _any_of(proc_masks, procs, n)), pat_n, pat_j)
 
     # non-grouped pairs: subjects are the issue's match substrings, hits
     # joined flat in (match_pos, hit) order — identical to the old
@@ -204,19 +208,18 @@ def extract_field_columns(
         ).to_numpy(zero_copy_only=False)
         rows_hit = np.flatnonzero(row_n)
         for k in w["ks"]:
-            n_cols[k][rows_hit] = row_n[rows_hit]
-            j_cols[k][rows_hit] = joined[rows_hit]
-            valid[k][rows_hit] = True
+            add(k, rows_hit, row_n, joined)
 
-    out = []
-    for k in range(plan.n_pairs):
-        jv = j_cols[k]
-        jv[~valid[k]] = ""  # struct children are non-null; validity is on the struct
-        out.append(
-            pa.StructArray.from_arrays(
-                [pa.array(n_cols[k], pa.int32()), pa.array(jv, pa.string())],
-                fields=list(HIT_TYPE),
-                mask=pa.array(~valid[k]),
-            )
-        )
-    return out
+    if not rows:
+        return list_array(np.zeros(n, dtype=np.int64), [], HIT_TYPE)
+    row, k = np.concatenate(rows), np.concatenate(ks)
+    order = np.lexsort((k, row))
+    entries = pa.StructArray.from_arrays(
+        [
+            pa.array(k[order], pa.int32()),
+            pa.array(np.concatenate(ns)[order], pa.int32()),
+            pa.array(np.concatenate(js)[order], pa.string()),
+        ],
+        fields=list(HIT_TYPE),
+    )
+    return list_array(np.bincount(row, minlength=n), entries, HIT_TYPE)

@@ -39,6 +39,10 @@ from radar_log_parser_spark.functions.fieldex import (
 from radar_log_parser_spark.functions.schema import parsed_arrow_schema
 
 
+# line numbers are packed into the summary's scan-order key below 2^53 with
+# the low 20 bits free (aggregates._line_ord); the parse rejects larger ones
+LINE_NO_LIMIT = 1 << 33
+
 _LINEWRAP = re.compile(r"^\(\?m\)\^\.\*(.+)\.\*\$$", re.DOTALL)
 
 
@@ -185,6 +189,12 @@ def match_batch_arrow(batch: pa.RecordBatch, cfg: ConfigSpec, vocab_pa: pa.Array
     # digits beyond 1M lines/file — a fixed {6} here silently truncated the
     # ordinal and corrupted every order-sensitive aggregate)
     line_no = pc.extract_regex(doc_id, r"-(?P<ln>\d+)$").field(0).cast(pa.int64())
+    if (pc.max(line_no).as_py() or 0) >= LINE_NO_LIMIT:
+        first = pc.index(pc.greater_equal(line_no, LINE_NO_LIMIT), True).as_py()
+        raise ValueError(
+            f"doc_id {doc_id[first].as_py()!r}: line number at or above 2^33, "
+            "past the summary's packed scan-order key (aggregates._line_ord)"
+        )
 
     # proc hit masks are retained: the per-line field extraction below
     # reuses them as eligibility prefilters for grouped-issue pairs
@@ -300,6 +310,6 @@ def match_batch_arrow(batch: pa.RecordBatch, cfg: ConfigSpec, vocab_pa: pa.Array
     # per-line field hits (A4/F5) — extracted HERE, in the embarrassingly-
     # parallel pass, instead of per scoped subject row inside the fan-out
     # window (see functions/fieldex.py for the rationale and semantics)
-    cols.extend(extract_field_columns(cc.fields, n, text, proc_masks, ngrp_matches))
+    cols.append(extract_field_columns(cc.fields, n, text, proc_masks, ngrp_matches))
 
     return pa.RecordBatch.from_arrays(cols, schema=parsed_arrow_schema(cfg))

@@ -10,30 +10,33 @@ downstream consumer read only what it needs.
   sev_levels / sev_counts        parallel arrays (F8; one entry per level
                                  that matched — extract-mode platforms emit
                                  at most one)
-  fld<k>__…      struct<n,j>     per-line field-pattern hits for summary
-                                 pair k (A4/F5): n = hit count, j = hits
-                                 joined "\n" in scan order; NULL when the
-                                 line has no hits for that pair. Extracted
-                                 AT PARSE TIME (r5): the summary previously
-                                 re-ran every field regex per scoped SUBJECT
-                                 row inside the fan-out window — the worst-
-                                 scaling, most DRAM-exposed stage — and a
-                                 line under two kept processes was extracted
-                                 once per copy. Line-grain extraction in the
-                                 embarrassingly-parallel parse pass runs each
-                                 regex ONCE per line and ships only the
-                                 (sparse) hits downstream.
+  fld_hits       list<struct<k,n,j>>
+                                 per-line field-pattern hits (A4/F5): one
+                                 entry per summary pair k (the pair's
+                                 position in config.summary_pairs) with
+                                 n > 0 hits on the line, in k order;
+                                 j = the hits joined "\n" in scan order.
+                                 Extracted AT PARSE TIME (r5): the summary
+                                 previously re-ran every field regex per
+                                 scoped SUBJECT row inside the fan-out
+                                 window — the worst-scaling, most DRAM-
+                                 exposed stage — and a line under two kept
+                                 processes was extracted once per copy.
+                                 Line-grain extraction in the embarrassingly-
+                                 parallel parse pass runs each regex ONCE
+                                 per line and ships only the (sparse) hits
+                                 downstream. The pair index is data, so
+                                 the schema does not grow with the number
+                                 of pairs.
 """
 
 from __future__ import annotations
-
-import re
 
 import pyarrow as pa
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import from_arrow_schema
 
-from radar_log_parser_spark.config import ConfigSpec, summary_pairs
+from radar_log_parser_spark.config import ConfigSpec
 
 
 def ngrp_issue_names(cfg: ConfigSpec) -> list[str]:
@@ -52,20 +55,13 @@ def grp_col(name: str) -> str:
     return f"grp__{name}"
 
 
-def fld_col(k: int, iname: str, fname: str) -> str:
-    """Column name for summary pair k — index-keyed (the canonical link is
-    the position in config.summary_pairs), issue/field appended sanitized
-    for debuggability."""
-    suffix = re.sub(r"[^0-9A-Za-z_]", "_", f"{iname}__{fname}")
-    return f"fld{k}__{suffix}"
-
-
-def fld_cols(cfg: ConfigSpec) -> list[str]:
-    return [fld_col(k, i, f) for k, (i, f, _p) in enumerate(summary_pairs(cfg))]
-
-
-# struct<n,j>: the per-line hits of one summary pair (module docstring)
-HIT_TYPE = pa.struct([pa.field("n", pa.int32(), False), pa.field("j", pa.string(), False)])
+# struct<k,n,j>: one entry of `fld_hits`, the line's hits of pair k
+# (module docstring)
+HIT_TYPE = pa.struct([
+    pa.field("k", pa.int32(), False),
+    pa.field("n", pa.int32(), False),
+    pa.field("j", pa.string(), False),
+])
 
 
 def parsed_arrow_schema(cfg: ConfigSpec) -> pa.Schema:
@@ -86,11 +82,9 @@ def parsed_arrow_schema(cfg: ConfigSpec) -> pa.Schema:
         ("sev_counts", pa.list_(pa.int32())),
         *[(ngrp_col(n), strings) for n in ngrp_issue_names(cfg)],
         *[(grp_col(n), strings) for n in grp_issue_names(cfg)],
+        ("fld_hits", pa.list_(HIT_TYPE)),
     ]
-    return pa.schema(
-        [pa.field(name, t, False) for name, t in fields]
-        + [pa.field(c, HIT_TYPE, True) for c in fld_cols(cfg)]
-    )
+    return pa.schema([pa.field(name, t, False) for name, t in fields])
 
 
 def parsed_schema(cfg: ConfigSpec) -> T.StructType:

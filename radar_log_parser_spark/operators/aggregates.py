@@ -22,7 +22,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from radar_log_parser_spark.config import ConfigSpec, summary_pairs
-from radar_log_parser_spark.functions.schema import fld_col, fld_cols
 from radar_log_parser_spark.session import local_frame
 
 
@@ -36,8 +35,8 @@ def _line_ord():
     Bounds: proc_rank < 2^10 processes/issue, line_no < 2^33 lines/file,
     and the low 20 bits stay free for a match position; ConfigSpec.validate()
     rejects issues with >1023 processes (config.py, the ">= 1024 processes"
-    lint), and the reference's own input cap (10 MiB uploads) keeps files
-    far under 2^33 lines."""
+    lint), and the parse kernel rejects line numbers at or above 2^33
+    (parse_arrow.LINE_NO_LIMIT)."""
     return F.col("proc_rank").cast("long") * F.lit(1 << 53) + F.col("line_no") * F.lit(1 << 20)
 
 
@@ -56,12 +55,12 @@ def grouped_counts(grouped_routed: DataFrame) -> DataFrame:
     )
 
 
-def slim_scope(cfg: ConfigSpec, scope: DataFrame) -> DataFrame:
-    """The one input form of `summary_aggregate`: the routed scope cut to
-    its aggregation keys (source, issue, proc_rank, grouped, line_no) and
-    line-local scalars.
+def slim_scope(scope: DataFrame) -> DataFrame:
+    """The one input form of `summary_aggregate` and `field_contents`: the
+    routed scope cut to its aggregation keys (source, issue, proc_rank,
+    grouped, line_no) and line-local scalars.
 
-    Field scanning needs no text here (the fld{k} hit columns come from
+    Field scanning needs no text here (the `fld_hits` entries come from
     the parse pass), so `text` survives only on grouped MATCHING rows, for
     the last-line Timestamp/LogLevel extract. match_arr is reduced to its
     count and first/last substring (it is in scan order); every match
@@ -78,41 +77,25 @@ def slim_scope(cfg: ConfigSpec, scope: DataFrame) -> DataFrame:
         F.try_element_at("match_arr", F.lit(1)).alias("first_m"),
         F.try_element_at("match_arr", F.lit(-1)).alias("last_m"),
         "grp_arr",
-        *fld_cols(cfg),
+        "fld_hits",
     )
 
 
-def summary_aggregate(cfg: ConfigSpec, scope_slim: DataFrame) -> DataFrame:
-    """ONE two-level aggregation producing EVERYTHING the summary needs per
-    (source, issue): the non-grouped totals + first/last match (A1/A5), the
-    grouped totals + last matching line (A3), and every field's count +
-    ordered joined content (A4/F5) — in a SINGLE pass over `slim_scope`.
+def _line_bucket():
+    """Level-1 bucket of the two-level aggregations, in scan order."""
+    return F.floor(F.col("line_no") / F.lit(65536)).alias("line_bucket")
 
-    r3 ran four scans over the materialized slim blocks; at 32M rows the
-    summary job was the fan-out straggler and scaled worst 4→16 cores
-    (memory-bandwidth-bound re-reads). r4 fused them into one grouped
-    aggregation. r5: the aggregation runs at LINE GRAIN over PARSE-TIME
-    hit columns (functions/fieldex.py) — no subject explode/union, no
-    regex, and no full-text traffic left in this job. This replaced a
-    subject-grain version that re-ran every field regex per scoped
-    subject row INSIDE the fan-out window — measured 75-85% of the fused
-    summary job's wall at 32M rows, in the worst-scaling, most
-    DRAM-exposed stage. The output has N{k} (hit count) and J{k}
-    (scan-ordered newline-joined hits) per (issue, field) pair k.
 
-    Two-level ordered aggregation: a single collect_list+sort per
-    (source, issue) would funnel every match through ONE reducer. Level 1
-    buckets by (proc_rank, line_no div 65536) — consistent with the scan
-    order — and builds per-bucket strings in parallel; level 2 merges the
-    few bucket strings in order.
+def summary_aggregate(scope_slim: DataFrame) -> DataFrame:
+    """ONE two-level aggregation producing the summary's scalars per
+    (source, issue): the non-grouped totals + first/last match (A1/A5) and
+    the grouped totals + last matching line (A3), in a SINGLE line-grain
+    pass over `slim_scope` (r3 ran four scans; at 32M rows that summary
+    job was the fan-out straggler).
 
-    Scalar packed sort key: sorting structs that CONTAIN nested data drops
-    the sort into interpreted ordering (measured: it dominated the whole
-    pipeline). The per-line hits are ALREADY one pre-joined string from
-    the parse pass, so the sorted structs are (bigint, string):
-    binary-comparable, codegen'd. A line under two kept processes of one
-    issue appears once per (proc_rank) copy with distinct packed ords —
-    the reference renders it once per process block (quirk Q3 order).
+    Two levels: level 1 groups by (proc_rank, line_no div 65536) —
+    consistent with the scan order — so one (source, issue) with many
+    lines spreads over many groups; level 2 merges the few partials.
 
     first/last selections merge across the two levels by carrying the
     packed scan-order key next to each partial min_by/max_by: the key is
@@ -122,25 +105,17 @@ def summary_aggregate(cfg: ConfigSpec, scope_slim: DataFrame) -> DataFrame:
     first match is the minimal line's first and the last is the maximal
     line's last.
     """
-    pairs = summary_pairs(cfg)
     is_match = F.size(F.coalesce(F.col("grp_arr"), F.array())) > 0
     ng_ord = F.when(~F.col("grouped") & (F.col("n_ng") > 0), _line_ord())
     g_ord = F.when(F.col("grouped") & is_match, _line_ord())
-    row_ord = _line_ord().alias("ord")
-    bucket = F.floor(F.col("line_no") / F.lit(65536)).alias("line_bucket")
     per_row = scope_slim.select(
         "source", "issue", "proc_rank",
         "n_ng", "grouped", "first_m", "last_m", "text",
         ng_ord.alias("ng_ord"),
         g_ord.alias("g_ord"),
-        row_ord, bucket,
-        *[
-            F.col(fld_col(k, iname, fname)).alias(f"h{k}")
-            for k, (iname, fname, _p) in enumerate(pairs)
-        ],
+        _line_bucket(),
     )
-
-    aggs1 = [
+    lvl1 = per_row.groupBy("source", "issue", "proc_rank", "line_bucket").agg(
         F.sum(F.when(~F.col("grouped"), F.col("n_ng")).otherwise(0)).alias("o_num1"),
         F.min("ng_ord").alias("o_ford1"),
         F.min_by("first_m", "ng_ord").alias("o_first1"),
@@ -149,92 +124,90 @@ def summary_aggregate(cfg: ConfigSpec, scope_slim: DataFrame) -> DataFrame:
         F.sum(F.when(F.col("g_ord").isNotNull(), 1).otherwise(0)).alias("g_num1"),
         F.max("g_ord").alias("g_lord1"),
         F.max_by("text", "g_ord").alias("g_last1"),
-    ]
-    for k in range(len(pairs)):
-        h = F.col(f"h{k}")
-        # h is null on rows of other issues and on zero-hit lines (the
-        # parse extraction only materializes n > 0); coalesce to 0 so the
-        # count never depends on null-skipping sum semantics
-        aggs1.append(F.sum(F.coalesce(h["n"], F.lit(0))).alias(f"n{k}"))
-        # collect_list skips nulls, so only owning, matching lines enter
-        # the sort buffer
-        aggs1.append(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                h.isNotNull(),
-                                F.struct(F.col("ord"), h["j"].alias("s")),
-                            )
-                        )
-                    ),
-                    lambda s: s["s"],
-                ),
-                "\n",
-            ).alias(f"j{k}")
-        )
-    lvl1 = per_row.groupBy("source", "issue", "proc_rank", "line_bucket").agg(*aggs1)
-
-    aggs2 = [
+    )
+    return lvl1.groupBy("source", "issue").agg(
         F.sum("o_num1").alias("o_number"),
         F.min_by("o_first1", "o_ford1").alias("first_match"),
         F.max_by("o_last1", "o_lord1").alias("last_match"),
         F.sum("g_num1").alias("g_number"),
         F.max_by("g_last1", "g_lord1").alias("last_line"),
-    ]
-    for k in range(len(pairs)):
-        aggs2.append(F.sum(F.col(f"n{k}")).alias(f"N{k}"))
-        # zero-hit buckets must not contribute empty lines to the join
-        aggs2.append(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                F.col(f"n{k}") > 0,
-                                F.struct(
-                                    "proc_rank", "line_bucket",
-                                    F.col(f"j{k}").alias("jp"),
-                                ),
-                            )
-                        )
-                    ),
-                    lambda s: s["jp"],
-                ),
-                "\n",
-            ).alias(f"J{k}")
-        )
-    return lvl1.groupBy("source", "issue").agg(*aggs2)
+    )
+
+
+def _ordered_join(value: str, *keys: str):
+    """The `value` strings of a group joined "\n" in `keys` order (the
+    keys are unique within the group, so `value` never breaks a tie)."""
+    return F.array_join(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct(*keys, F.col(value).alias("s")))),
+            lambda e: e["s"],
+        ),
+        "\n",
+    )
+
+
+def field_contents(scope_slim: DataFrame) -> DataFrame:
+    """Every field's count N and content J (A4/F5) per (source, issue, k),
+    k the summary pair index: N sums the parse-time hit counts, J joins the
+    hit strings "\n" in scan order. Only pairs with hits get a row;
+    `summary_frame` gives the others "0 :  ".
+
+    One `inline` turns the `fld_hits` entries into rows, so the plan is
+    the same for any number of pairs. Two levels, as in
+    `summary_aggregate`: one collect_list+sort per (source, issue, k)
+    would funnel a field's every hit through ONE reducer.
+
+    Scalar packed sort key: sorting structs that CONTAIN nested data drops
+    the sort into interpreted ordering (measured: it dominated the whole
+    pipeline). The per-line hits are ALREADY one pre-joined string from
+    the parse pass, so the sorted structs are (bigint, string):
+    binary-comparable, codegen'd. A line under two kept processes of one
+    issue appears once per (proc_rank) copy with distinct packed ords —
+    the reference renders it once per process block (quirk Q3 order)."""
+    hits = scope_slim.select(
+        "source", "issue", "proc_rank", _line_bucket(), _line_ord().alias("ord"),
+        F.inline("fld_hits"),
+    )
+    lvl1 = hits.groupBy("source", "issue", "k", "proc_rank", "line_bucket").agg(
+        F.sum("n").alias("n1"),
+        _ordered_join("j", "ord").alias("j1"),
+    )
+    return lvl1.groupBy("source", "issue", "k").agg(
+        F.sum("n1").alias("N"),
+        _ordered_join("j1", "proc_rank", "line_bucket").alias("J"),
+    )
 
 
 def summary_frame(
     spark: SparkSession,
     cfg: ConfigSpec,
     sources_df: DataFrame,
-    combined_df: DataFrame,
+    scope_slim: DataFrame,
 ) -> DataFrame:
     """Final summary sink (A8): one row per (source, issue) with the
     reference's report-table columns, ordered by priority desc then issue
     asc (sortIssue, analyzeLog.go:102-111 + quirk Q4 tiebreak).
 
-    FULLY DISTRIBUTED (r3) and now SINGLE-JOIN (r4): `combined_df` (one
-    fused two-level aggregation, see summary_aggregate) left-joins the
-    static (source × issue) base once; the per-issue field MAP is a
-    config-static `map_from_entries` CASE over the combined row's own
-    columns — no per-field explode, no fmap re-aggregation, no stack
-    (r3 assembled the same result through three joins + a groupBy).
-    Timestamp/LogLevel extracts run as JVM `regexp_extract`; the config
-    lint pins every engine (Go/RE2, Java, Python-ASCII, DuckDB) to the
-    RE2-subset ASCII semantics, so the extracts agree with the Python
-    oracle on any content (ADVICE r3: \\d/\\w/\\b are ASCII everywhere
-    now). Content never touches the driver unless the caller collects."""
-    pairs = summary_pairs(cfg)
+    FULLY DISTRIBUTED: `summary_aggregate` and `field_contents` over the
+    slim scope left-join the static (source × issue) base. The pairs enter
+    as data: an (issue, k, field) frame gives one cell per (source, pair)
+    and one `map_from_entries` per (source, issue) collects them in k order,
+    so the plan does not grow with the config's pairs. Timestamp/LogLevel
+    extracts run as JVM `regexp_extract`; the config lint pins every
+    engine (Go/RE2, Java, Python-ASCII, DuckDB) to the RE2-subset ASCII
+    semantics, so the extracts agree with the Python oracle on any content
+    (ADVICE r3: \\d/\\w/\\b are ASCII everywhere now). Content never
+    touches the driver unless the caller collects."""
     issues_rows = [
         (iname, cfg.issues[iname].grouped, int(cfg.priority.get(iname, 0)))
         for iname in sorted(cfg.issues)
     ]
     issues_dim = local_frame(spark, issues_rows, "issue string, grouped boolean, priority int")
+    pairs_dim = local_frame(
+        spark,
+        [(iname, k, fname) for k, (iname, fname, _p) in enumerate(summary_pairs(cfg))],
+        "issue string, k int, field string",
+    )
     base = sources_df.select("source").crossJoin(F.broadcast(issues_dim))
 
     ts = cfg.general.timestamp
@@ -251,38 +224,30 @@ def summary_frame(
         # (m.lastindex check) — mirror that statically
         return F.regexp_extract(col, lvl, 1) if lvl_has_group else F.lit("")
 
-    j = base.join(combined_df, ["source", "issue"], "left")
+    # one "<n> :  <joined>" cell per (source, pair), "0 :  " where the pair
+    # has no hits (analyzeLog.go:311) — also when the issue was never
+    # scoped, matching the reference's unconditional grouped-field scan
+    # over empty content; an issue without pairs gets an empty map
+    cell = F.when(
+        F.col("N") > 0, F.concat(F.col("N").cast("string"), F.lit(" :  "), F.col("J"))
+    ).otherwise(F.lit("0 :  "))
+    entry = F.when(F.col("k").isNotNull(), F.struct("k", "field", cell.alias("cell")))
+    field_map = F.map_from_entries(
+        F.transform(
+            F.array_sort(F.collect_list(entry)), lambda e: F.struct(e["field"], e["cell"])
+        )
+    )
+    j = (
+        base.join(F.broadcast(pairs_dim), "issue", "left")
+        .join(field_contents(scope_slim), ["source", "issue", "k"], "left")
+        .groupBy("source", "issue", "grouped", "priority")
+        .agg(field_map.alias("field_map"))
+        .join(summary_aggregate(scope_slim), ["source", "issue"], "left")
+    )
 
     empty_map = F.map_from_arrays(
         F.array().cast("array<string>"), F.array().cast("array<string>")
     )
-
-    # per-issue field map, built from the combined row's own N_k/J_k columns
-    # ("<n> :  <joined>" cells with "0 :  " defaults — analyzeLog.go:311);
-    # a missing combined row (issue never scoped) leaves N_k null → every
-    # cell defaults, matching the reference's unconditional grouped-field
-    # scan over empty content
-    def cell(k: int):
-        return F.when(
-            F.coalesce(F.col(f"N{k}"), F.lit(0)) > 0,
-            F.concat(F.col(f"N{k}").cast("string"), F.lit(" :  "), F.col(f"J{k}")),
-        ).otherwise(F.lit("0 :  "))
-
-    fields_expr = empty_map
-    for iname in sorted(cfg.issues):
-        ks = [k for k, (inm, _f, _p) in enumerate(pairs) if inm == iname]
-        if not ks:
-            continue
-        m = F.map_from_entries(
-            F.array(*[
-                F.struct(
-                    F.lit(pairs[k][1]).alias("key"), cell(k).alias("value")
-                )
-                for k in ks
-            ])
-        )
-        fields_expr = F.when(F.col("issue") == iname, m).otherwise(fields_expr)
-
     has_other = F.coalesce(F.col("o_number"), F.lit(0)) > 0
     number = (
         F.when(F.col("grouped"), F.coalesce("g_number", F.lit(0)))
@@ -303,9 +268,7 @@ def summary_frame(
     # grouped fields exist even with zero matches (analyzeLog.go:222-231
     # runs unconditionally); non-grouped fields only when matches exist
     # (analyzeLog.go:280-303)
-    fields_col = F.when(F.col("grouped"), fields_expr).otherwise(
-        F.when(has_other, fields_expr).otherwise(empty_map)
-    )
+    fields_col = F.when(F.col("grouped") | has_other, F.col("field_map")).otherwise(empty_map)
     return j.select(
         "source",
         "issue",

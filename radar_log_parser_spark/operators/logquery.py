@@ -270,7 +270,7 @@ def q_field_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the reference's '<n> :  <joined>' cell, split into typed columns).
 
     Two-level ordered aggregation (same bucket scheme as the engine-side
-    aggregates.summary_aggregate): a single collect_list+sort per source would
+    aggregates.field_contents): a single collect_list+sort per source would
     funnel every match of a source through ONE reducer's sort buffer — the
     scale-killer at 100×. Level 1 buckets by doc_id div 65536 and builds
     per-bucket joined strings in parallel (pre-joined per row, so the sorted

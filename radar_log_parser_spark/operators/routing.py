@@ -21,10 +21,12 @@ are the tiny keep-rule count and the events text-group (see events_sink).
 
 from __future__ import annotations
 
+import bisect
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from radar_log_parser_spark.config import ConfigSpec
+from radar_log_parser_spark.config import ConfigSpec, summary_pairs
 from radar_log_parser_spark.session import local_frame
 
 
@@ -55,18 +57,24 @@ def specific_issues(parsed: DataFrame, kept: DataFrame) -> DataFrame:
 
 
 def issue_process_map(spark: SparkSession, cfg: ConfigSpec) -> DataFrame:
-    """Broadcast dimension: (issue, process, proc_rank, grouped).
+    """Broadcast dimension: (issue, process, proc_rank, grouped, k_lo, k_hi).
 
     proc_rank = position of the process within the issue's process list
     sorted ascending — quirk Q3 pins the reference's nondeterministic Go
     map-order block concatenation (analyzeLog.go:158) to name order; it
-    drives every first/last-match ordering."""
+    drives every first/last-match ordering.
+
+    [k_lo, k_hi) = the issue's range of summary pair indices:
+    config.summary_pairs sorts the pairs by issue."""
+    pair_issues = [iname for iname, _f, _p in summary_pairs(cfg)]
     rows = []
     for iname in sorted(cfg.issues):
         spec = cfg.issues[iname]
+        k_range = (bisect.bisect_left(pair_issues, iname), bisect.bisect_right(pair_issues, iname))
         for rank, proc in enumerate(sorted(spec.specific_process)):
-            rows.append((iname, proc, rank, spec.grouped))
-    return local_frame(spark, rows, "issue string, process string, proc_rank int, grouped boolean")
+            rows.append((iname, proc, rank, spec.grouped, *k_range))
+    ddl = "issue string, process string, proc_rank int, grouped boolean, k_lo int, k_hi int"
+    return local_frame(spark, rows, ddl)
 
 
 def scoped_direct(
@@ -80,26 +88,23 @@ def scoped_direct(
     join. No wide shuffle anywhere.
 
     The per-issue match columns collapse to two narrow arrays here (a
-    config-sized CASE, codegen'd), so the scope frame's width no longer
-    depends on the config — cheap to checkpoint/cache."""
-    from radar_log_parser_spark.config import summary_pairs
+    config-sized CASE, codegen'd), and the field hits keep only the row
+    issue's pairs, so the scope frame's width does not depend on the
+    config — cheap to checkpoint/cache."""
     from radar_log_parser_spark.functions.schema import (
-        fld_col,
         grp_col,
         grp_issue_names,
         ngrp_col,
         ngrp_issue_names,
     )
 
-    pairs = summary_pairs(cfg)
-    fcols = [fld_col(k, i, f) for k, (i, f, _p) in enumerate(pairs)]
     keep_cols = ["source", "doc_id", "line_no", "tokens", "n_tok", "text"]
     exploded = parsed.select(
         *keep_cols,
         F.explode("procs").alias("process"),
         *[F.col(ngrp_col(n)) for n in ngrp_issue_names(cfg)],
         *[F.col(grp_col(n)) for n in grp_issue_names(cfg)],
-        *fcols,
+        "fld_hits",
     )
     kept_rows = exploded.join(
         F.broadcast(kept.select("source", "process")), ["source", "process"], "inner"
@@ -117,13 +122,12 @@ def scoped_direct(
         "doc_id", "line_no", "tokens", "n_tok", "text",
         case_over(ngrp_issue_names(cfg), ngrp_col).alias("match_arr"),
         case_over(grp_issue_names(cfg), grp_col).alias("grp_arr"),
-        # per-line parse-time field hits, nulled on rows of other issues:
-        # pair k is only meaningful where row.issue owns it (and the parse-
-        # side eligibility mask may be wider than this row's process)
-        *[
-            F.when(F.col("issue") == iname, F.col(c)).alias(c)
-            for c, (iname, _f, _p) in zip(fcols, pairs)
-        ],
+        # a line's hits cover every issue's pairs (the bench catalog
+        # shares one Pid pattern across 9 issues): keep the row issue's
+        # own pairs, [k_lo, k_hi)
+        F.filter(
+            "fld_hits", lambda h: (h["k"] >= F.col("k_lo")) & (h["k"] < F.col("k_hi"))
+        ).alias("fld_hits"),
     )
 
 

@@ -57,9 +57,8 @@ from radar_log_parser_spark.operators import routing
 from radar_log_parser_spark.session import (
     _fingerprint,
     codegen_compiles,
-    input_fingerprint,
     local_frame,
-    read_parquet,
+    read_parquet_and_fingerprint,
 )
 
 SALT_MOD = 16
@@ -322,7 +321,6 @@ class Pipeline:
         self.spark = spark
         self.cfg = cfg
         self.vocab = vocab
-        self.input_path = input_path
         self.ckpt = Checkpointer(spark, work_dir, fmt, sinks_dir)
         # N of Iceberg's bucket(N, doc_id) partition spec; parquet stage
         # writes take their partition count from AQE (module docstring)
@@ -333,8 +331,10 @@ class Pipeline:
             "\x00".join(vocab.id_to_token).encode()
         ).hexdigest()[:16]
         # input CONTENT fingerprint: a new file at the same input path must
-        # invalidate every checkpoint
-        self.input_fp = self.ckpt.input_fp = input_fingerprint(spark, input_path)
+        # invalidate every checkpoint. The one listing of the input serves
+        # both the fingerprint and the schema-cached read `run` parses.
+        self._raw, self.input_fp = read_parquet_and_fingerprint(spark, input_path)
+        self.ckpt.input_fp = self.input_fp
         self._root_fp = _fingerprint(
             code_fingerprint(),
             _config_hash(cfg),
@@ -393,11 +393,9 @@ class Pipeline:
         compiles0 = codegen_compiles(spark)
         t0 = time.monotonic()
 
-        raw = read_parquet(spark, self.input_path)
-
         parsed = self._stage(
             "parsed",
-            lambda: parse_stage(raw, cfg, self.vocab),
+            lambda: parse_stage(self._raw, cfg, self.vocab),
             parents=["input"],
             bucket_by="doc_id",
         )
@@ -463,21 +461,18 @@ class Pipeline:
         )
 
         # The summary reads the slim projection of the `scoped` checkpoint
-        # (agg.slim_scope): the parquet scan reads only the columns it keeps
-        # (never tokens or doc_id). Distributed summary (A8): a single fused
-        # two-level aggregation over that scan, assembled by one left join
-        # against the static (source × issue) base and formatted JVM-side,
-        # so nothing driver-side scales with the corpus. The source
-        # dimension comes from the raw parquet scan, which reads the
-        # dictionary-encoded source column alone (parse preserves source
-        # 1:1, so the sets are equal).
+        # (agg.slim_scope): the parquet scans read only the columns they
+        # keep (never tokens or doc_id). Distributed summary (A8): two-level
+        # aggregations over those scans — the scalars and the field
+        # contents — left-joined against the static (source × issue) base
+        # and formatted JVM-side, so nothing driver-side scales with the
+        # corpus. The source dimension comes from the raw parquet scan,
+        # which reads the dictionary-encoded source column alone (parse
+        # preserves source 1:1, so the sets are equal).
         summary = self._stage(
             "summary",
             lambda: agg.summary_frame(
-                spark,
-                cfg,
-                raw.select("source").distinct(),
-                agg.summary_aggregate(cfg, agg.slim_scope(cfg, scope)),
+                spark, cfg, self._raw.select("source").distinct(), agg.slim_scope(scope)
             ),
             parents=["scoped"],
         ).orderBy("source", F.desc("priority"), F.asc("issue"))

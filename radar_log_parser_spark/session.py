@@ -1,7 +1,8 @@
 """SparkSession factory with scale-oriented defaults, and the driver-side
 helpers every plan shares: the no-job input listing (`input_fingerprint`),
 the parquet read that infers a schema once per file version
-(`read_parquet`) and driver-local tables (`local_frame`).
+(`read_parquet`, and `read_parquet_and_fingerprint`, which also returns
+the listing's fingerprint) and driver-local tables (`local_frame`).
 
 local[N] is the sandbox stand-in for a multi-executor cluster; every setting
 here is chosen to behave identically on a real cluster (AQE, Arrow batching,
@@ -99,13 +100,14 @@ def get_spark(
         # collect_list/collect_set aggregations run in
         # ObjectHashAggregateExec, whose default in-memory key budget
         # (fallbackThreshold=128 distinct keys per task) silently degrades
-        # the whole aggregation to SORT-based once crossed — the fused
-        # summary's level-1 grain (issue × proc_rank × line_bucket) sits
-        # right at that boundary, so tasks flip between hash and full-sort
-        # plans run-to-run. The per-key buffers here are bounded (a few
-        # joined strings per pair), so a generous key budget is safe and
-        # keeps the agg hash-based at any corpus size (keys/task stays
-        # O(issues × buckets/task), independent of total rows).
+        # the whole aggregation to SORT-based once crossed — the summary's
+        # level-1 grains (issue × proc_rank × line_bucket, and the field
+        # contents' issue × k × proc_rank × line_bucket) sit right at that
+        # boundary, so tasks flip between hash and full-sort plans
+        # run-to-run. The per-key buffers here are bounded (one joined
+        # string per key), so a generous key budget is safe and keeps the
+        # agg hash-based at any corpus size (keys/task stays
+        # O(pairs × buckets/task), independent of total rows).
         .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
         # generated classes are cached in the driver JVM, least recently
         # used out first, in this many entries (default 100, which Guava
@@ -172,28 +174,37 @@ def input_fingerprint(spark: SparkSession, path: str) -> str:
 _SCHEMAS: dict[str, tuple[tuple[str, str], StructType]] = {}
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+def read_parquet_and_fingerprint(spark: SparkSession, path: str) -> tuple[DataFrame, str]:
     """`spark.read.parquet(path)` that infers the schema once per file
-    version. Inference is a Spark job on every read, even of one file; a
-    read that passes the schema runs none. The cache keeps one
-    entry per path, valid while the application and the files'
-    `input_fingerprint` are unchanged: a file rewritten at the same path
-    is inferred again. A path the listing cannot take (a glob, a missing
-    path) is read as Spark reads it, so Spark raises its own error.
+    version, and the `input_fingerprint` of the one listing that decides
+    it. Inference is a Spark job on every read, even of one file; a read
+    that passes the schema runs none. The cache keeps one entry per path,
+    valid while the application and the files' fingerprint are unchanged:
+    a file rewritten at the same path is inferred again. A path the
+    listing cannot take (a glob, a missing path) raises the listing's
+    Py4J error.
 
     The schema is not derived from the parquet footer: Spark infers a
     timestamp without `isAdjustedToUTC` as `timestamp_ntz`, where
     pyarrow's schema maps to `timestamp`."""
-    try:
-        key = (spark.sparkContext.applicationId, input_fingerprint(spark, path))
-    except Py4JJavaError:
-        return spark.read.parquet(path)
+    fp = input_fingerprint(spark, path)
+    key = (spark.sparkContext.applicationId, fp)
     hit = _SCHEMAS.get(path)
     if hit is not None and hit[0] == key:
-        return spark.read.schema(hit[1]).parquet(path)
+        return spark.read.schema(hit[1]).parquet(path), fp
     df = spark.read.parquet(path)
     _SCHEMAS[path] = (key, df.schema)
-    return df
+    return df, fp
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """The frame of `read_parquet_and_fingerprint`. A path the listing
+    cannot take is read as Spark reads it, so Spark raises its own error
+    (or reads the glob)."""
+    try:
+        return read_parquet_and_fingerprint(spark, path)[0]
+    except Py4JJavaError:
+        return spark.read.parquet(path)
 
 
 def codegen_compiles(spark: SparkSession) -> int:

@@ -124,6 +124,9 @@ def test_summary(pipeline_result, golden):
             assert str(r["number"]) == gi["Number"], (source, r["issue"])
             assert r["timestamp"] == gi.get("Timestamp", ""), (source, r["issue"])
             assert r["log_level"] == gi.get("LogLevel", ""), (source, r["issue"])
+            assert set(r["fields"] or {}) == set(gi) - {"Number", "Timestamp", "LogLevel"}, (
+                source, r["issue"],
+            )
             for fname, fval in (r["fields"] or {}).items():
                 assert gi.get(fname) == fval, (source, r["issue"], fname)
             assert r["priority"] == g["summary"]["priority"][r["issue"]]

@@ -6,6 +6,7 @@
   - non-grouped Number counts duplicates while the match set dedups
   - config lint rejects non-RE2 patterns
   - every parsed line agrees with the oracle's per-line regex semantics
+  - the parse rejects line numbers past the summary's scan-order key
 """
 
 from __future__ import annotations
@@ -27,8 +28,8 @@ def test_codec_roundtrip(corpus):
 
 def test_partition_invariance(spark, cfg, vocab, fx):
     """Pipeline result must not depend on input partitioning: run the
-    fused summary aggregate over the slim scope at 1 and at 13 input
-    partitions and compare."""
+    summary aggregates (the scalars and the field contents) over the slim
+    scope at 1 and at 13 input partitions and compare."""
     from radar_log_parser_spark.functions.parse import parse_stage
     from radar_log_parser_spark.operators import aggregates as agg
     from radar_log_parser_spark.operators import routing
@@ -38,15 +39,20 @@ def test_partition_invariance(spark, cfg, vocab, fx):
         parsed = parse_stage(raw, cfg, vocab)
         kept = routing.kept_processes(parsed)
         ipmap = routing.issue_process_map(spark, cfg)
-        scope = routing.scoped_direct(parsed, kept, ipmap, cfg)
-        rows = agg.summary_aggregate(cfg, agg.slim_scope(cfg, scope)).collect()
-        return sorted(
+        slim = agg.slim_scope(routing.scoped_direct(parsed, kept, ipmap, cfg))
+        scalars = sorted(
             (r["source"], r["issue"], r["o_number"], r["first_match"], r["last_match"])
-            for r in rows
+            for r in agg.summary_aggregate(slim).collect()
         )
+        fields = sorted(
+            (r["source"], r["issue"], r["k"], r["N"], r["J"])
+            for r in agg.field_contents(slim).collect()
+        )
+        return scalars, fields
 
     one = summarize(1)
-    assert any(n for _s, _i, n, _f, _l in one)
+    assert any(n for _s, _i, n, _f, _l in one[0])
+    assert any(n > 1 for _s, _i, _k, n, _j in one[1])
     assert one == summarize(13)
 
 
@@ -147,7 +153,6 @@ def _check_parsed_line(r, text: str, cfg) -> None:
     import re
 
     from radar_log_parser_spark.config import LOG_LEVELS, severity_pattern, summary_pairs
-    from radar_log_parser_spark.functions.schema import fld_cols
     from radar_log_parser_spark.sources.fixtures import doc_id
     from tests.oracle import go_findall
 
@@ -171,15 +176,44 @@ def _check_parsed_line(r, text: str, cfg) -> None:
     ]
     sev = [(lv, c) for lv, c in sev if c]
     assert list(zip(r["sev_levels"], r["sev_counts"])) == sev, r["doc_id"]
-    for col, (iname, _f, pat) in zip(fld_cols(cfg), summary_pairs(cfg)):
+    ks = [h["k"] for h in r["fld_hits"]]
+    assert ks == sorted(set(ks)), r["doc_id"]
+    fld = {h["k"]: (h["n"], h["j"]) for h in r["fld_hits"]}
+    for k, (iname, _f, pat) in enumerate(summary_pairs(cfg)):
         issue = cfg.issues[iname]
         if issue.grouped:
             scoped = any(p in r["procs"] for p in issue.specific_process)
             hits = go_findall(pat, text) if scoped else []
         else:
             hits = [h for m in go_findall(issue.regex, text) for h in go_findall(pat, m)]
-        got = r[col] and (r[col]["n"], r[col]["j"])
-        assert got == ((len(hits), "\n".join(hits)) if hits else None), (r["doc_id"], col)
+        got = fld.get(k)
+        assert got == ((len(hits), "\n".join(hits)) if hits else None), (r["doc_id"], k)
+
+
+@pytest.mark.parametrize("line_no, ok", [(2**33 - 1, True), (2**33, False)])
+def test_parse_rejects_line_numbers_past_the_scan_order_key(cfg, line_no, ok):
+    """The summary packs line_no into bits 20..52 of its scan-order key
+    (aggregates._line_ord): the parse kernel passes line 2^33 - 1 and
+    raises on 2^33, naming the doc_id, instead of ordering it wrongly."""
+    import pyarrow as pa
+
+    from radar_log_parser_spark.functions.parse_arrow import match_batch_arrow
+    from radar_log_parser_spark.sources.fixtures import corpus_to_table
+
+    corpus = {"src": ["CameraService boot", "AudioFlinger underrun"]}
+    vocab = Vocab.build(corpus["src"])
+    table = corpus_to_table(corpus, vocab)
+    planted = f"src-0000-{line_no}"
+    table = table.set_column(
+        table.schema.get_field_index("doc_id"), "doc_id", pa.array(["src-0000-000000", planted])
+    )
+    (batch,) = table.to_batches()
+    vocab_pa = pa.array(vocab.id_to_token, pa.string())
+    if ok:
+        assert match_batch_arrow(batch, cfg, vocab_pa).column("line_no").to_pylist() == [0, line_no]
+    else:
+        with pytest.raises(ValueError, match=planted):
+            match_batch_arrow(batch, cfg, vocab_pa)
 
 
 def test_parse_matches_oracle_per_line(spark, cfg, vocab, fx, corpus):

@@ -7,7 +7,6 @@ from __future__ import annotations
 import pytest
 
 from radar_log_parser_spark.config import ConfigError, parse_config
-from radar_log_parser_spark.functions.schema import fld_cols
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -51,15 +50,10 @@ def test_summary_is_distributed(spark):
     """The summary sink must be a distributed plan: no collect of the
     unbounded joined-field strings to the driver (the r2 driver-side
     assembly was both a serial tail and an OOM cliff at 10^12 rows).
-    summary_aggregate + summary_frame take DataFrames and return a lazy
-    DataFrame whose plan carries the aggregates — nothing driver-side
-    scales with the corpus (r4: the aggregates fused into ONE two-level
-    pass over the slim scope)."""
-    from radar_log_parser_spark.operators.aggregates import (
-        slim_scope,
-        summary_aggregate,
-        summary_frame,
-    )
+    summary_frame takes DataFrames and returns a lazy DataFrame whose plan
+    carries the aggregates over the slim scope — nothing driver-side
+    scales with the corpus."""
+    from radar_log_parser_spark.operators.aggregates import slim_scope, summary_frame
 
     cfg = parse_config(
         {
@@ -74,18 +68,17 @@ def test_summary_is_distributed(spark):
     sources = spark.createDataFrame([("s1",), ("s2",)], "source string")
     # scope rows: matches in scan order are "boom level=E xa" (line 10),
     # then "boom xb", "boom 12:34" (line 11, left-to-right); the parse
-    # pass's field hits ride along in the fld column
+    # pass's field hits of pair k=0 ride along in fld_hits
     scope = spark.createDataFrame(
         [
-            ("s1", "I1", 0, False, 10, "l10", ["boom level=E xa"], None, (1, "xa")),
-            ("s1", "I1", 0, False, 11, "l11", ["boom xb", "boom 12:34"], None, (1, "xb")),
+            ("s1", "I1", 0, False, 10, "l10", ["boom level=E xa"], None, [(0, 1, "xa")]),
+            ("s1", "I1", 0, False, 11, "l11", ["boom xb", "boom 12:34"], None, [(0, 1, "xb")]),
         ],
         "source string, issue string, proc_rank int, grouped boolean, "
         "line_no long, text string, match_arr array<string>, grp_arr array<string>, "
-        f"{fld_cols(cfg)[0]} struct<n:int,j:string>",
+        "fld_hits array<struct<k:int,n:int,j:string>>",
     )
-    slim = slim_scope(cfg, scope)
-    df = summary_frame(spark, cfg, sources, summary_aggregate(cfg, slim))
+    df = summary_frame(spark, cfg, sources, slim_scope(scope))
     rows = {(r["source"], r["issue"]): r for r in df.collect()}
     r1 = rows[("s1", "I1")]
     assert r1["number"] == 3
@@ -95,6 +88,62 @@ def test_summary_is_distributed(spark):
     r2 = rows[("s2", "I1")]
     assert r2["number"] == 0 and r2["timestamp"] == "" and r2["log_level"] == ""
     assert r2["fields"] == {}  # non-grouped issue with no matches
+
+
+def _pairs_config(n_pairs: int):
+    """Two issues under the same general fields, with `n_pairs` summary
+    pairs between them (half, rounded up, on the non-grouped one)."""
+    n1 = (n_pairs + 1) // 2
+    return parse_config(
+        {
+            "IssuesGeneralFields": {"Timestamp": r"\d\d:\d\d", "LogLevel": r"level=(\w)"},
+            "Issues": {
+                "I1": {
+                    "specific_process": {"p": "p"},
+                    "regex": "boom",
+                    "additional_fields": {f"F{i:02d}": rf"x{i}\w*" for i in range(n1)},
+                },
+                "I2": {
+                    "specific_process": {"q": "q"},
+                    "regex": "under",
+                    "detailing_mode": "group",
+                    "grouping": r"under (\w+) (\d+)",
+                    "additional_fields": {
+                        f"G{i:02d}": rf"y{i}\w*" for i in range(n_pairs - n1)
+                    },
+                },
+            },
+        }
+    )
+
+
+def test_parsed_schema_and_summary_plan_ignore_the_pair_count(spark):
+    """A 1-pair and a 20-pair config over the same issues and general
+    fields declare the same parsed schema, and the summary stage over a
+    `scoped`-shaped frame has the same optimized plan (expression ids and
+    lambda variable numbers stripped): the pairs enter the plan as data."""
+    from test_round6 import optimized_plan
+
+    from radar_log_parser_spark.config import summary_pairs
+    from radar_log_parser_spark.functions.schema import parsed_schema
+    from radar_log_parser_spark.operators.aggregates import slim_scope, summary_frame
+
+    one, twenty = _pairs_config(1), _pairs_config(20)
+    assert (len(summary_pairs(one)), len(summary_pairs(twenty))) == (1, 20)
+    assert parsed_schema(one) == parsed_schema(twenty)
+
+    sources = spark.createDataFrame([("s1",)], "source string")
+    scope = spark.createDataFrame(
+        [("s1", "I1", 0, False, 10, "boom x0a", ["boom x0a"], None, [(0, 1, "x0a")])],
+        "source string, issue string, proc_rank int, grouped boolean, "
+        "line_no long, text string, match_arr array<string>, grp_arr array<string>, "
+        "fld_hits array<struct<k:int,n:int,j:string>>",
+    )
+    plans = [
+        optimized_plan(summary_frame(spark, c, sources, slim_scope(scope)))
+        for c in (one, twenty)
+    ]
+    assert plans[0] == plans[1]
 
 
 def test_lsh_md5_equals_exact_pairs(spark):

@@ -115,6 +115,26 @@ def test_read_parquet_missing_path_raises_as_spark_does(spark, tmp_path):
     assert got.value.getCondition() == want.value.getCondition() == "PATH_NOT_FOUND"
 
 
+def test_pipeline_lists_its_input_once(spark, cfg, vocab, fx, tmp_path, monkeypatch):
+    """A fresh checkpointed run lists its input once: the listing that
+    fingerprints the input for the lineage also keys the schema-cached
+    read that the parse stage scans."""
+    from radar_log_parser_spark.plans.pipeline import Pipeline
+
+    listings = []
+    listed = session.input_fingerprint
+
+    def counting(spark, path):
+        listings.append(path)
+        return listed(spark, path)
+
+    for name, mod in list(sys.modules.items()):
+        if name.startswith("radar_log_parser_spark") and getattr(mod, "input_fingerprint", None) is listed:
+            monkeypatch.setattr(mod, "input_fingerprint", counting)
+    Pipeline(spark, cfg, vocab, fx.logs_path, work_dir=str(tmp_path / "w"), checkpoint=True).run()
+    assert listings == [fx.logs_path]
+
+
 def test_warm_headliner_builds_run_no_job(spark):
     """Once each table's schema is cached, building a bench headliner runs
     no Spark job: a read of a table that infers its schema runs one. Only
@@ -169,12 +189,13 @@ def test_bench_plans_use_local_tables(pipeline_run):
     no leaf is a Python RDD scan (`Scan ExistingRDD`)."""
     _res, written = pipeline_run
     keep_set = ("source", "process")
-    ipmap = ("issue", "process", "proc_rank", "grouped")
+    ipmap = ("issue", "process", "proc_rank", "grouped", "k_lo", "k_hi")
     issues_dim = ("issue", "grouped", "priority")
+    pairs_dim = ("issue", "k", "field")
     for stage, tables in (
         ("specific_issues", [keep_set]),
         ("scoped", [keep_set, ipmap]),
-        ("summary", [issues_dim]),
+        ("summary", [issues_dim, pairs_dim]),
     ):
         leaves = _scan_leaves(written[stage])
         assert [a for kind, a in leaves if kind == "Scan ExistingRDD"] == [], stage
