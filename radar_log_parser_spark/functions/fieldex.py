@@ -74,6 +74,23 @@ def list_array(counts: np.ndarray, values, value_type) -> pa.ListArray:
     return pa.ListArray.from_arrays(pa.array(offsets), pa.array(values, value_type))
 
 
+def keyed_list(n: int, parts: list[tuple], entry_type: pa.StructType) -> pa.ListArray:
+    """A list<entry_type> column of `n` rows from per-key parts, each
+    (rows, key, field arrays): the struct fields of the part's entries,
+    one per row in `rows` (ascending). Every row lists its entries in key
+    order — the `ngrp__hits`, `grp__hits` and `fld_hits` shape."""
+    if not parts:
+        return list_array(np.zeros(n, dtype=np.int64), [], entry_type)
+    row = np.concatenate([idx for idx, _k, _f in parts])
+    key = np.concatenate([np.full(len(idx), k) for idx, k, _f in parts])
+    order = pa.array(np.lexsort((key, row)))
+    entries = pa.StructArray.from_arrays(
+        [pc.take(pa.concat_arrays(col), order) for col in zip(*(f for _i, _k, f in parts))],
+        fields=list(entry_type),
+    )
+    return list_array(np.bincount(row, minlength=n), entries, entry_type)
+
+
 _SENT = "\x00"
 
 
@@ -143,27 +160,24 @@ def extract_field_columns(
     n: int,
     text_pa: pa.Array,
     proc_masks: dict[str, np.ndarray],
-    ngrp_matches: dict[str, tuple[np.ndarray, pa.Array]],
+    ngrp_matches: dict[str, tuple[np.ndarray, pa.ListArray]],
 ) -> pa.ListArray:
     """The `fld_hits` column: per line, a struct<k,n,j> entry for each
     summary pair k (config.summary_pairs) with hits on the line, in k order.
 
     proc_masks: per GLOBAL process name, the boolean line-hit mask the
         parse kernel already computed for the `procs` column.
-    ngrp_matches: per non-grouped issue, (counts, flat match substrings) —
-        the exact arrays backing the ngrp__<issue> column.
+    ngrp_matches: per non-grouped issue, (counts, match lists) — the
+        exact arrays behind the issue's `ngrp__hits` entries.
     """
-    # (row, k, n, j) entry arrays, one per pair with hits
-    rows: list[np.ndarray] = []
-    ks: list[np.ndarray] = []
-    ns: list[np.ndarray] = []
-    js: list[np.ndarray] = []
+    parts: list[tuple] = []
 
     def add(k: int, idx: np.ndarray, n_hits: np.ndarray, joined: np.ndarray) -> None:
-        rows.append(idx)
-        ks.append(np.full(len(idx), k, dtype=np.int32))
-        ns.append(n_hits[idx])
-        js.append(joined[idx])
+        parts.append((idx, k, [
+            pa.array(np.full(len(idx), k, dtype=np.int32)),
+            pa.array(n_hits[idx], pa.int32()),
+            pa.array(joined[idx], pa.string()),
+        ]))
 
     # grouped pairs: one extraction per unique pattern over the UNION of its
     # issues' eligible lines; per-pair masks select from the shared result
@@ -189,7 +203,7 @@ def extract_field_columns(
         ent = ngrp_matches.get(iname)
         if ent is None:
             continue
-        counts, flat = ent
+        counts, flat = ent[0], ent[1].values
         if not len(flat):
             continue
         n_f, lists = findall(flat, w["crgx"])
@@ -210,16 +224,4 @@ def extract_field_columns(
         for k in w["ks"]:
             add(k, rows_hit, row_n, joined)
 
-    if not rows:
-        return list_array(np.zeros(n, dtype=np.int64), [], HIT_TYPE)
-    row, k = np.concatenate(rows), np.concatenate(ks)
-    order = np.lexsort((k, row))
-    entries = pa.StructArray.from_arrays(
-        [
-            pa.array(k[order], pa.int32()),
-            pa.array(np.concatenate(ns)[order], pa.int32()),
-            pa.array(np.concatenate(js)[order], pa.string()),
-        ],
-        fields=list(HIT_TYPE),
-    )
-    return list_array(np.bincount(row, minlength=n), entries, HIT_TYPE)
+    return keyed_list(n, parts, HIT_TYPE)

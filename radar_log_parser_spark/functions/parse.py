@@ -13,11 +13,11 @@ The pass is a mapInArrow over RE2 C++ kernels, with Python only on hit rows
 (functions/parse_arrow.py). RE2 is the reference's Go regexp engine, so
 dialect parity is exact.
 
-Output schema: flat per-issue array columns (functions/schema.py) —
+Output schema: one constant for every config (functions/schema.py) —
   procs/events        matching pattern names per line       (F1, F9)
   sev_levels/counts   per-line severity matches             (F8)
-  ngrp__<issue>       all match substrings, in order        (F3)
-  grp__<issue>        first-match capture groups g1..gN     (F4)
+  ngrp__hits          per issue: all match substrings       (F3)
+  grp__hits           per issue: first-match capture groups (F4)
 """
 
 from __future__ import annotations
@@ -32,7 +32,7 @@ from radar_log_parser_spark.functions.schema import parsed_schema
 
 
 def parse_stage(df: DataFrame, cfg: ConfigSpec, vocab: Vocab) -> DataFrame:
-    """input table (doc_id, tokens, n_tok, source) → parsed_schema(cfg).
+    """input table (doc_id, tokens, n_tok, source) → parsed_schema().
 
     The vocabulary ships to executors once as a Spark broadcast
     (SURVEY.md §7: decode must not join against a vocab table).
@@ -45,4 +45,4 @@ def parse_stage(df: DataFrame, cfg: ConfigSpec, vocab: Vocab) -> DataFrame:
             if batch.num_rows:
                 yield match_batch_arrow(batch, cfg, varr)
 
-    return df.mapInArrow(run_arrow, schema=parsed_schema(cfg))
+    return df.mapInArrow(run_arrow, schema=parsed_schema())

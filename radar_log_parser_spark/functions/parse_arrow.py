@@ -12,8 +12,9 @@ engine as the reference's Go ``regexp`` (golden dialect parity for free):
 
 Python touches only HIT rows (building the per-row match lists) — on real
 logs a few percent of rows — so per-row Python cost scales with matches,
-not input size. Output is the flat per-issue-column schema of
-functions/schema.py (no map columns: 3× cheaper to materialize and prune).
+not input size. Output is the constant schema of functions/schema.py: the
+issue matches are keyed lists (one entry per issue with a match on the
+line), so no column is named after an issue.
 """
 
 from __future__ import annotations
@@ -34,9 +35,10 @@ from radar_log_parser_spark.functions.fieldex import (
     FieldPlan,
     extract_field_columns,
     findall,
+    keyed_list,
     list_array,
 )
-from radar_log_parser_spark.functions.schema import parsed_arrow_schema
+from radar_log_parser_spark.functions.schema import MATCH_TYPE, parsed_arrow_schema
 
 
 # line numbers are packed into the summary's scan-order key below 2^53 with
@@ -176,6 +178,16 @@ def _lists_from_masks(masks: dict[str, np.ndarray], patterns, n: int) -> pa.Arra
     return pa.ListArray.from_arrays(pa.array(offsets), pa.array(values, pa.string()))
 
 
+def _keyed_matches(n: int, matches: dict[str, tuple[np.ndarray, pa.ListArray]]) -> pa.ListArray:
+    """`ngrp__hits` / `grp__hits` from each issue's (counts, match lists),
+    issues in name order: per row, an entry for each issue it matched."""
+    parts = []
+    for key, (iname, (counts, lists)) in enumerate(matches.items()):
+        idx = np.flatnonzero(counts)
+        parts.append((idx, key, [pa.repeat(iname, len(idx)), lists.take(pa.array(idx))]))
+    return keyed_list(n, parts, MATCH_TYPE)
+
+
 def match_batch_arrow(batch: pa.RecordBatch, cfg: ConfigSpec, vocab_pa: pa.Array) -> pa.RecordBatch:
     cc = compiled(cfg)
     n = batch.num_rows
@@ -265,7 +277,7 @@ def match_batch_arrow(batch: pa.RecordBatch, cfg: ConfigSpec, vocab_pa: pa.Array
             batch_newline = bool(pc.any(pc.match_substring(text, "\n")).as_py())
         return batch_newline
 
-    ngrp_matches: dict[str, tuple[np.ndarray, pa.Array]] = {}
+    ngrp_matches: dict[str, tuple[np.ndarray, pa.ListArray]] = {}
     for iname, crgx, lit in cc.ngrp:
         if lit is not None and not has_newline():
             # full-line-containment idiom on one-line rows: at most one
@@ -276,11 +288,12 @@ def match_batch_arrow(batch: pa.RecordBatch, cfg: ConfigSpec, vocab_pa: pa.Array
             lists = list_array(counts, pc.filter(text, hit), pa.string())
         else:
             counts, lists = findall(text, crgx)
-        ngrp_matches[iname] = (counts, lists.values)
-        cols.append(lists)
+        ngrp_matches[iname] = (counts, lists)
+    cols.append(_keyed_matches(n, ngrp_matches))
 
     # grouped issues: first-match capture tuple per row (Go
     # FindStringSubmatch); Arrow extract_regex when all groups are named
+    grp_matches: dict[str, tuple[np.ndarray, pa.ListArray]] = {}
     for iname, crgx, all_named in cc.grp:
         counts = np.zeros(n, dtype=np.int64)
         values: list[str] = []
@@ -305,11 +318,12 @@ def match_batch_arrow(batch: pa.RecordBatch, cfg: ConfigSpec, vocab_pa: pa.Array
                     continue
                 counts[i] = crgx.groups
                 values.extend(g if g is not None else "" for g in m.groups())
-        cols.append(list_array(counts, values, pa.string()))
+        grp_matches[iname] = (counts, list_array(counts, values, pa.string()))
+    cols.append(_keyed_matches(n, grp_matches))
 
     # per-line field hits (A4/F5) — extracted HERE, in the embarrassingly-
     # parallel pass, instead of per scoped subject row inside the fan-out
     # window (see functions/fieldex.py for the rationale and semantics)
     cols.append(extract_field_columns(cc.fields, n, text, proc_masks, ngrp_matches))
 
-    return pa.RecordBatch.from_arrays(cols, schema=parsed_arrow_schema(cfg))
+    return pa.RecordBatch.from_arrays(cols, schema=parsed_arrow_schema())

@@ -70,10 +70,10 @@ def slim_scope(scope: DataFrame) -> DataFrame:
     return scope.select(
         "source", "issue", "proc_rank", "grouped", "line_no",
         F.when(
-            F.col("grouped") & (F.size(F.coalesce(F.col("grp_arr"), F.array())) > 0),
+            F.col("grouped") & (F.size("grp_arr") > 0),
             F.col("text"),
         ).alias("text"),
-        F.size(F.coalesce(F.col("match_arr"), F.array())).alias("n_ng"),
+        F.size("match_arr").alias("n_ng"),
         F.try_element_at("match_arr", F.lit(1)).alias("first_m"),
         F.try_element_at("match_arr", F.lit(-1)).alias("last_m"),
         "grp_arr",
@@ -105,7 +105,7 @@ def summary_aggregate(scope_slim: DataFrame) -> DataFrame:
     first match is the minimal line's first and the last is the maximal
     line's last.
     """
-    is_match = F.size(F.coalesce(F.col("grp_arr"), F.array())) > 0
+    is_match = F.size("grp_arr") > 0
     ng_ord = F.when(~F.col("grouped") & (F.col("n_ng") > 0), _line_ord())
     g_ord = F.when(F.col("grouped") & is_match, _line_ord())
     per_row = scope_slim.select(

@@ -5,7 +5,7 @@ One parsed DataFrame feeds several filtered writes (reference: the single
 analyzeLog.go:61-66 / report.html:53-97):
 
   specific_issues — per-process sub-logs            (F1, quirk Q1)
-  scoped_direct   — kept lines of each issue's processes (F2, quirk Q2)
+  scoped_direct   — the issue-scoped lines that carry a hit (F2, quirk Q2)
   other_routed    — non-grouped issue match rows    (F3)
   grouped_routed  — grouped issue match rows        (F4)
   events          — important-event lines           (F9, quirks Q6/Q7)
@@ -77,9 +77,15 @@ def issue_process_map(spark: SparkSession, cfg: ConfigSpec) -> DataFrame:
     return local_frame(spark, rows, ddl)
 
 
-def scoped_direct(
-    parsed: DataFrame, kept: DataFrame, ipmap: DataFrame, cfg: ConfigSpec
-) -> DataFrame:
+def _issue_matches(col: str):
+    """The row issue's match list from a keyed `ngrp__hits`/`grp__hits`
+    column: its one entry's `m`, or an empty array when it has none."""
+    return F.flatten(
+        F.transform(F.filter(col, lambda h: h["issue"] == F.col("issue")), lambda h: h["m"])
+    )
+
+
+def scoped_direct(parsed: DataFrame, kept: DataFrame, ipmap: DataFrame) -> DataFrame:
     """F2 issue scoping with Q2 semantics: an issue's search space is the
     concatenation of its kept processes' sub-logs and NOTHING else
     (reference: analyzeLog.go:156-178; the local re-scan cache there is dead
@@ -87,47 +93,36 @@ def scoped_direct(
     explode procs → Q1 keep-rule broadcast join → issue→process broadcast
     join. No wide shuffle anywhere.
 
-    The per-issue match columns collapse to two narrow arrays here (a
-    config-sized CASE, codegen'd), and the field hits keep only the row
-    issue's pairs, so the scope frame's width does not depend on the
-    config — cheap to checkpoint/cache."""
-    from radar_log_parser_spark.functions.schema import (
-        grp_col,
-        grp_issue_names,
-        ngrp_col,
-        ngrp_issue_names,
-    )
-
+    Each keyed hit list keeps only the row issue's entries (the issue's
+    match lists, its pairs' field hits), so the plan and the scope frame's
+    width do not depend on the config. Only the rows that carry a hit are
+    kept: every consumer (the F3/F4 routed rows, the summary's counts,
+    first/last selections and field contents) reads nothing from the
+    others, and the summary's (source × issue) base gives an issue without
+    rows the same defaults."""
     keep_cols = ["source", "doc_id", "line_no", "tokens", "n_tok", "text"]
     exploded = parsed.select(
         *keep_cols,
         F.explode("procs").alias("process"),
-        *[F.col(ngrp_col(n)) for n in ngrp_issue_names(cfg)],
-        *[F.col(grp_col(n)) for n in grp_issue_names(cfg)],
-        "fld_hits",
+        "ngrp__hits", "grp__hits", "fld_hits",
     )
     kept_rows = exploded.join(
         F.broadcast(kept.select("source", "process")), ["source", "process"], "inner"
     )
     scope = kept_rows.join(F.broadcast(ipmap), "process", "inner")
-
-    def case_over(names, col_of):
-        expr = F.lit(None).cast("array<string>")
-        for n in names:
-            expr = F.when(F.col("issue") == n, F.col(col_of(n))).otherwise(expr)
-        return expr
-
     return scope.select(
         "source", "process", "issue", "proc_rank", "grouped",
         "doc_id", "line_no", "tokens", "n_tok", "text",
-        case_over(ngrp_issue_names(cfg), ngrp_col).alias("match_arr"),
-        case_over(grp_issue_names(cfg), grp_col).alias("grp_arr"),
+        _issue_matches("ngrp__hits").alias("match_arr"),
+        _issue_matches("grp__hits").alias("grp_arr"),
         # a line's hits cover every issue's pairs (the bench catalog
         # shares one Pid pattern across 9 issues): keep the row issue's
         # own pairs, [k_lo, k_hi)
         F.filter(
             "fld_hits", lambda h: (h["k"] >= F.col("k_lo")) & (h["k"] < F.col("k_hi"))
         ).alias("fld_hits"),
+    ).filter(
+        (F.size("match_arr") > 0) | (F.size("grp_arr") > 0) | (F.size("fld_hits") > 0)
     )
 
 

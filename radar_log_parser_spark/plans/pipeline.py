@@ -443,7 +443,7 @@ class Pipeline:
         )
         scope = self._stage(
             "scoped",
-            lambda: routing.scoped_direct(parsed, kept(), ipmap, cfg),
+            lambda: routing.scoped_direct(parsed, kept(), ipmap),
             parents=["parsed"],
             bucket_by="doc_id",
         )

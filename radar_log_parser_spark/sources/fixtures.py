@@ -213,7 +213,6 @@ def write_scaled_fixture(
     n_rows: int,
     pool_rows: int = 50_000,
     seed: int = 7,
-    row_group_size: int = 1 << 20,
 ) -> Fixture:
     """Bench-scale fixture: numpy-sample `n_rows` lines from a `pool_rows`
     generated pool (line texts repeat; ordinals and doc_ids are fresh).
@@ -235,49 +234,48 @@ def write_scaled_fixture(
     # measurement reads as Amdahl overhead. 256 files ≈ 8 waves at 32 cores.
     logs_path = os.path.join(out_dir, "logs.parquet")
     os.makedirs(logs_path, exist_ok=True)
-    row_group_size = min(row_group_size, max(8192, n_rows // 256))
+    row_group_size = min(1 << 20, max(8192, n_rows // 256))
     part = 0
-    if True:
-        for source in sorted(corpus):
-            pool = corpus[source]
-            share = int(round(n_rows * len(pool) / len(all_lines)))
-            enc = [np.asarray(vocab.encode(t), dtype=np.int32) for t in pool]
-            lens = np.array([len(e) for e in enc], dtype=np.int32)
-            flat = np.concatenate(enc)
-            offs = np.zeros(len(enc) + 1, dtype=np.int64)
-            np.cumsum(lens, out=offs[1:])
-            written = 0
-            while written < share:
-                chunk = min(row_group_size, share - written)
-                idx = rng.integers(0, len(pool), size=chunk)
-                # gather variable-length token runs via a flat take-index:
-                # position-within-run + run start offset, fully vectorized
-                clens = lens[idx].astype(np.int64)
-                starts = offs[idx]
-                total = int(clens.sum())
-                run_starts = np.cumsum(clens) - clens  # start of each run in output
-                within = np.arange(total, dtype=np.int64) - np.repeat(run_starts, clens)
-                values = flat[np.repeat(starts, clens) + within]
-                offsets = np.concatenate(([0], np.cumsum(clens))).astype(np.int32)
-                tok_arr = pa.ListArray.from_arrays(pa.array(offsets), pa.array(values))
-                line_nos = np.arange(written, written + chunk)
-                ids = pa.array([doc_id(source, int(i)) for i in line_nos], pa.string())
-                batch = pa.Table.from_arrays(
-                    [
-                        ids,
-                        tok_arr.cast(pa.list_(pa.int32())),
-                        pa.array(clens.astype(np.int32)),
-                        pa.array(np.full(chunk, source, dtype=object), pa.string()),
-                    ],
-                    schema=ARROW_SCHEMA,
-                )
-                pq.write_table(
-                    batch,
-                    os.path.join(logs_path, f"part-{part:05d}.parquet"),
-                    compression="snappy",
-                )
-                part += 1
-                written += chunk
+    for source in sorted(corpus):
+        pool = corpus[source]
+        share = int(round(n_rows * len(pool) / len(all_lines)))
+        enc = [np.asarray(vocab.encode(t), dtype=np.int32) for t in pool]
+        lens = np.array([len(e) for e in enc], dtype=np.int32)
+        flat = np.concatenate(enc)
+        offs = np.zeros(len(enc) + 1, dtype=np.int64)
+        np.cumsum(lens, out=offs[1:])
+        written = 0
+        while written < share:
+            chunk = min(row_group_size, share - written)
+            idx = rng.integers(0, len(pool), size=chunk)
+            # gather variable-length token runs via a flat take-index:
+            # position-within-run + run start offset, fully vectorized
+            clens = lens[idx].astype(np.int64)
+            starts = offs[idx]
+            total = int(clens.sum())
+            run_starts = np.cumsum(clens) - clens  # start of each run in output
+            within = np.arange(total, dtype=np.int64) - np.repeat(run_starts, clens)
+            values = flat[np.repeat(starts, clens) + within]
+            offsets = np.concatenate(([0], np.cumsum(clens))).astype(np.int32)
+            tok_arr = pa.ListArray.from_arrays(pa.array(offsets), pa.array(values))
+            line_nos = np.arange(written, written + chunk)
+            ids = pa.array([doc_id(source, int(i)) for i in line_nos], pa.string())
+            batch = pa.Table.from_arrays(
+                [
+                    ids,
+                    tok_arr.cast(pa.list_(pa.int32())),
+                    pa.array(clens.astype(np.int32)),
+                    pa.array(np.full(chunk, source, dtype=object), pa.string()),
+                ],
+                schema=ARROW_SCHEMA,
+            )
+            pq.write_table(
+                batch,
+                os.path.join(logs_path, f"part-{part:05d}.parquet"),
+                compression="snappy",
+            )
+            part += 1
+            written += chunk
     return Fixture(logs_path, vocab_path, config_path, tuple(sorted(corpus)))
 
 

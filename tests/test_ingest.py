@@ -61,6 +61,10 @@ def test_ingested_log_analyzes(spark, cfg, tmp_path):
     parsed = parse_stage(df, cfg, vocab).collect()
     by_line = {r["line_no"]: r for r in parsed}
     assert by_line[0]["procs"] == ["CameraService"]
-    assert by_line[0]["ngrp__ConnTimeout"] == [LINES[0]]
-    assert by_line[3]["grp__BufferUnderrun"] == ["stream2", "512"]
+    assert {h["issue"]: h["m"] for h in by_line[0]["ngrp__hits"]} == {
+        "ConnTimeout": [LINES[0]]
+    }
+    assert {h["issue"]: h["m"] for h in by_line[3]["grp__hits"]} == {
+        "BufferUnderrun": ["stream2", "512"]
+    }
     assert by_line[1]["sev_levels"] == ["Info"]

@@ -7,6 +7,7 @@
   - config lint rejects non-RE2 patterns
   - every parsed line agrees with the oracle's per-line regex semantics
   - the parse rejects line numbers past the summary's scan-order key
+  - renaming an issue (any YAML key) changes no sink
 """
 
 from __future__ import annotations
@@ -39,7 +40,7 @@ def test_partition_invariance(spark, cfg, vocab, fx):
         parsed = parse_stage(raw, cfg, vocab)
         kept = routing.kept_processes(parsed)
         ipmap = routing.issue_process_map(spark, cfg)
-        slim = agg.slim_scope(routing.scoped_direct(parsed, kept, ipmap, cfg))
+        slim = agg.slim_scope(routing.scoped_direct(parsed, kept, ipmap))
         scalars = sorted(
             (r["source"], r["issue"], r["o_number"], r["first_match"], r["last_match"])
             for r in agg.summary_aggregate(slim).collect()
@@ -84,6 +85,41 @@ def test_nongrouped_number_vs_set(pipeline_result, golden):
             assert len(matches) == ov["number"]
             assert sorted(set(matches)) == ov["match_set"]
             assert len(matches) >= len(set(matches))
+
+
+@pytest.mark.parametrize("old, new", [
+    ("ConnTimeout", "Conn.Timeout"),
+    # differs only in case from ConnTimeout
+    ("MultiProcIssue", "connTIMEOUT"),
+])
+def test_issue_names_are_data(spark, vocab, fx, pipeline_result, tmp_path, old, new):
+    """Any YAML key is an issue name: with one issue renamed (in `Issues`
+    and in `Priority`), every sink equals the unit run's once the issue
+    column is mapped back, compared as multisets both ways (the summary's
+    `fields` map as its entries)."""
+    from pyspark.sql import functions as F
+
+    from radar_log_parser_spark.plans.pipeline import Pipeline
+
+    renamed = FIXTURE_CONFIG_YAML.replace(f"  {old}:", f"  {new}:")
+    assert renamed.count(f"  {new}:") == 2
+    cfg = parse_config(yaml.safe_load(renamed))
+    res = Pipeline(spark, cfg, vocab, fx.logs_path, work_dir=str(tmp_path), checkpoint=True).run()
+
+    def comparable(df, rename: bool):
+        if "issue" in df.columns and rename:
+            df = df.withColumn(
+                "issue", F.when(F.col("issue") == new, F.lit(old)).otherwise(F.col("issue"))
+            )
+        if "fields" in df.columns:
+            df = df.withColumn("fields", F.map_entries("fields"))
+        return df
+
+    for name, want in pipeline_result.sinks.items():
+        got = comparable(res.sinks[name], rename=True)
+        want = comparable(want, rename=False)
+        assert got.schema == want.schema, name
+        assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty(), name
 
 
 def test_lint_rejects_lookaround():
@@ -163,13 +199,22 @@ def _check_parsed_line(r, text: str, cfg) -> None:
     assert r["text"] == text, r["doc_id"]
     assert r["procs"] == names(cfg.specific_process), r["doc_id"]
     assert r["events"] == names(cfg.important_events), r["doc_id"]
+    # the keyed match lists: issues strictly increasing, no empty entry
+    keyed = {}
+    for col in ("ngrp__hits", "grp__hits"):
+        issues = [h["issue"] for h in r[col]]
+        assert issues == sorted(set(issues)), (r["doc_id"], col)
+        assert all(h["m"] for h in r[col]), (r["doc_id"], col)
+        keyed[col] = {h["issue"]: h["m"] for h in r[col]}
+    assert set(keyed["ngrp__hits"]) <= {n for n, s in cfg.issues.items() if not s.grouped}
+    assert set(keyed["grp__hits"]) <= {n for n, s in cfg.issues.items() if s.grouped}
     for n, s in cfg.issues.items():
         if not s.grouped and s.regex:
-            assert r[f"ngrp__{n}"] == go_findall(s.regex, text), (r["doc_id"], n)
+            assert keyed["ngrp__hits"].get(n, []) == go_findall(s.regex, text), (r["doc_id"], n)
         if s.grouped and s.grouping:
             m = re.search(s.grouping, text, re.ASCII)
             want = [g or "" for g in m.groups()] if m else []
-            assert r[f"grp__{n}"] == want, (r["doc_id"], n)
+            assert keyed["grp__hits"].get(n, []) == want, (r["doc_id"], n)
     sev = [
         (lv, len(go_findall(severity_pattern(r["source"], lv), text)))
         for lv in LOG_LEVELS.get(r["source"], [])

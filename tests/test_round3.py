@@ -71,8 +71,8 @@ def test_summary_is_distributed(spark):
     # pass's field hits of pair k=0 ride along in fld_hits
     scope = spark.createDataFrame(
         [
-            ("s1", "I1", 0, False, 10, "l10", ["boom level=E xa"], None, [(0, 1, "xa")]),
-            ("s1", "I1", 0, False, 11, "l11", ["boom xb", "boom 12:34"], None, [(0, 1, "xb")]),
+            ("s1", "I1", 0, False, 10, "l10", ["boom level=E xa"], [], [(0, 1, "xa")]),
+            ("s1", "I1", 0, False, 11, "l11", ["boom xb", "boom 12:34"], [], [(0, 1, "xb")]),
         ],
         "source string, issue string, proc_rank int, grouped boolean, "
         "line_no long, text string, match_arr array<string>, grp_arr array<string>, "
@@ -117,24 +117,41 @@ def _pairs_config(n_pairs: int):
     )
 
 
+def _parse_schemas(spark, cfg):
+    """The schema of the parse kernel's Arrow batches and of the Spark
+    parse stage under `cfg`, over a small generated corpus."""
+    import pyarrow as pa
+
+    from radar_log_parser_spark.codec import Vocab
+    from radar_log_parser_spark.functions.parse import parse_stage
+    from radar_log_parser_spark.functions.parse_arrow import match_batch_arrow
+    from radar_log_parser_spark.sources.fixtures import corpus_to_table, generate_corpus
+
+    corpus = generate_corpus(n_rows=200, seed=5)
+    vocab = Vocab.build([ln for lines in corpus.values() for ln in lines])
+    table = corpus_to_table(corpus, vocab)
+    batch = table.combine_chunks().to_batches()[0]
+    kernel = match_batch_arrow(batch, cfg, pa.array(vocab.id_to_token, pa.string()))
+    return kernel.schema, parse_stage(spark.createDataFrame(table), cfg, vocab).schema
+
+
 def test_parsed_schema_and_summary_plan_ignore_the_pair_count(spark):
     """A 1-pair and a 20-pair config over the same issues and general
-    fields declare the same parsed schema, and the summary stage over a
+    fields give the same parsed schema, and the summary stage over a
     `scoped`-shaped frame has the same optimized plan (expression ids and
     lambda variable numbers stripped): the pairs enter the plan as data."""
     from test_round6 import optimized_plan
 
     from radar_log_parser_spark.config import summary_pairs
-    from radar_log_parser_spark.functions.schema import parsed_schema
     from radar_log_parser_spark.operators.aggregates import slim_scope, summary_frame
 
     one, twenty = _pairs_config(1), _pairs_config(20)
     assert (len(summary_pairs(one)), len(summary_pairs(twenty))) == (1, 20)
-    assert parsed_schema(one) == parsed_schema(twenty)
+    assert _parse_schemas(spark, one) == _parse_schemas(spark, twenty)
 
     sources = spark.createDataFrame([("s1",)], "source string")
     scope = spark.createDataFrame(
-        [("s1", "I1", 0, False, 10, "boom x0a", ["boom x0a"], None, [(0, 1, "x0a")])],
+        [("s1", "I1", 0, False, 10, "boom x0a", ["boom x0a"], [], [(0, 1, "x0a")])],
         "source string, issue string, proc_rank int, grouped boolean, "
         "line_no long, text string, match_arr array<string>, grp_arr array<string>, "
         "fld_hits array<struct<k:int,n:int,j:string>>",
@@ -142,6 +159,36 @@ def test_parsed_schema_and_summary_plan_ignore_the_pair_count(spark):
     plans = [
         optimized_plan(summary_frame(spark, c, sources, slim_scope(scope)))
         for c in (one, twenty)
+    ]
+    assert plans[0] == plans[1]
+
+
+def test_parsed_schema_and_scope_plan_ignore_the_issues(spark):
+    """The 3-issue fixture config and the 11-issue bench config give the
+    parse kernel's and the parse stage's one constant schema, and
+    `scoped_direct` over a parsed-shaped frame has the same optimized plan
+    (ids and lambda numbers stripped) for both: no column or expression
+    is built per issue."""
+    import yaml
+    from test_round6 import optimized_plan
+
+    from radar_log_parser_spark.functions.schema import parsed_arrow_schema, parsed_schema
+    from radar_log_parser_spark.operators.routing import issue_process_map, scoped_direct
+    from radar_log_parser_spark.sources.fixtures import BENCH_CONFIG_YAML, FIXTURE_CONFIG_YAML
+
+    cfgs = [parse_config(yaml.safe_load(y)) for y in (FIXTURE_CONFIG_YAML, BENCH_CONFIG_YAML)]
+    assert [len(c.issues) for c in cfgs] == [3, 11]
+    for c in cfgs:
+        assert _parse_schemas(spark, c) == (parsed_arrow_schema(), parsed_schema())
+
+    parsed = spark.createDataFrame(
+        [("d-0", "s1", 0, [1], 1, "t", ["CameraService"], [], [], [],
+          [("ConnTimeout", ["t"])], [], [])],
+        parsed_schema(),
+    )
+    kept = spark.createDataFrame([("s1", "CameraService")], "source string, process string")
+    plans = [
+        optimized_plan(scoped_direct(parsed, kept, issue_process_map(spark, c))) for c in cfgs
     ]
     assert plans[0] == plans[1]
 

@@ -92,11 +92,11 @@ def test_parse_ascii_class_parity(spark):
     )
     parsed = parse_stage(df, cfg, vocab)
     hits = {
-        r["doc_id"]: r["ngrp__Death"]
-        for r in parsed.select("doc_id", "ngrp__Death").collect()
+        r["doc_id"]: {h["issue"]: h["m"] for h in r["ngrp__hits"]}
+        for r in parsed.select("doc_id", "ngrp__hits").collect()
     }
-    assert hits["Ios-0000-000001"] == ["pid=123"]
-    assert hits["Ios-0000-000000"] == []  # Unicode digits: no match (Go parity)
+    assert hits["Ios-0000-000001"] == {"Death": ["pid=123"]}
+    assert hits["Ios-0000-000000"] == {}  # Unicode digits: no match (Go parity)
 
 
 def test_oracle_ascii_parity():
