@@ -153,6 +153,14 @@ class ConfigSpec:
                         f"{issue.n_groups()} capture groups; ≥2 required "
                         f"(group 1 = key, groups 2.. = detail tuple)"
                     )
+                # Spark column names ignore case: two such names of one
+                # issue would share its g_<Name> column (routing.grouped_routed)
+                named = [n.lower() for n in issue.group_names() if n]
+                if len(set(named)) < len(named):
+                    raise ConfigError(
+                        f"grouped issue {iname!r}: capture-group names that "
+                        "differ only in case would share one g_<Name> column"
+                    )
             for fname, rgx in issue.additional_fields.items():
                 _lint_pattern(f"Issues.{iname}.additional_fields.{fname}", rgx)
         return self

@@ -41,9 +41,11 @@ from radar_log_parser_spark.functions.fieldex import (
 from radar_log_parser_spark.functions.schema import MATCH_TYPE, parsed_arrow_schema
 
 
-# line numbers are packed into the summary's scan-order key below 2^53 with
-# the low 20 bits free (aggregates._line_ord); the parse rejects larger ones
+# the summary's scan-order key packs a line number into bits 20..52 and a
+# match's position in its line into the low 20 bits (aggregates._line_ord);
+# the parse rejects line numbers and per-line match counts past them
 LINE_NO_LIMIT = 1 << 33
+MATCH_POS_LIMIT = 1 << 20
 
 _LINEWRAP = re.compile(r"^\(\?m\)\^\.\*(.+)\.\*\$$", re.DOTALL)
 
@@ -288,6 +290,13 @@ def match_batch_arrow(batch: pa.RecordBatch, cfg: ConfigSpec, vocab_pa: pa.Array
             lists = list_array(counts, pc.filter(text, hit), pa.string())
         else:
             counts, lists = findall(text, crgx)
+            over = np.flatnonzero(counts >= MATCH_POS_LIMIT)
+            if len(over):
+                raise ValueError(
+                    f"doc_id {doc_id[int(over[0])].as_py()!r}: issue {iname!r} matches "
+                    "2^20 or more times on one line, past the summary's packed "
+                    "scan-order key (aggregates._line_ord)"
+                )
         ngrp_matches[iname] = (counts, lists)
     cols.append(_keyed_matches(n, ngrp_matches))
 

@@ -6,6 +6,11 @@ the reference's implicit string-scan order (SURVEY.md §2.4). Spark performs
 partial (map-side) aggregation for all of these automatically, so skewed
 sources do not concentrate pre-aggregation rows on one reducer.
 
+The summary's counts and first/last selections (A1/A3/A5) are
+aggregations over the routed rows, `other_routed` and `grouped_routed`:
+the rows that `match_sets` and `grouped_issues` count too, so every count
+of a match is taken over one definition of its row.
+
 Field contents (A4/F5) aggregate the per-line hits that the parse pass
 extracts (functions/fieldex.py): sum of counts + order-preserving collect.
 This equals the reference's findall-over-joined-content (getFieldContent,
@@ -18,7 +23,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from radar_log_parser_spark.config import ConfigSpec, summary_pairs
@@ -32,11 +37,13 @@ def _line_ord():
 
     Packed into ONE BIGINT — min_by/max_by over a struct key drops the
     aggregate into interpreted struct ordering (measured ~5× slower).
-    Bounds: proc_rank < 2^10 processes/issue, line_no < 2^33 lines/file,
-    and the low 20 bits stay free for a match position; ConfigSpec.validate()
+    Bits: proc_rank from bit 53 (< 2^10 processes/issue), line_no in bits
+    20..52 (< 2^33 lines/file), and the low 20 bits are left for a match's
+    position in its line, which `routed_scalars` adds. ConfigSpec.validate()
     rejects issues with >1023 processes (config.py, the ">= 1024 processes"
-    lint), and the parse kernel rejects line numbers at or above 2^33
-    (parse_arrow.LINE_NO_LIMIT)."""
+    lint); the parse kernel rejects line numbers at or above 2^33
+    (parse_arrow.LINE_NO_LIMIT) and lines with 2^20 or more matches of one
+    non-grouped issue (parse_arrow.MATCH_POS_LIMIT)."""
     return F.col("proc_rank").cast("long") * F.lit(1 << 53) + F.col("line_no") * F.lit(1 << 20)
 
 
@@ -55,107 +62,61 @@ def grouped_counts(grouped_routed: DataFrame) -> DataFrame:
     )
 
 
-def slim_scope(scope: DataFrame) -> DataFrame:
-    """The one input form of `summary_aggregate` and `field_contents`: the
-    routed scope cut to its aggregation keys (source, issue, proc_rank,
-    grouped, line_no) and line-local scalars.
+def routed_scalars(other_routed: DataFrame, grouped_routed: DataFrame) -> DataFrame:
+    """The summary's scalars per (source, issue), counted over the routed
+    rows: a non-grouped issue's Number is its match substrings (A1,
+    analyzeLog.go:271-278) with the first and last of them in scan order
+    (A5); a grouped issue's Number is its matching lines (A3,
+    analyzeLog.go:258-264) with the last of them. An issue has rows in
+    one sink only, so the union holds one row per (source, issue).
 
-    Field scanning needs no text here (the `fld_hits` entries come from
-    the parse pass), so `text` survives only on grouped MATCHING rows, for
-    the last-line Timestamp/LogLevel extract. match_arr is reduced to its
-    count and first/last substring (it is in scan order); every match
-    substring reaches `match_sets` through the `other_routed` rows. try_: ANSI
-    element_at throws on the empty arrays of non-matching lines, and the
-    projection evaluates every row."""
-    return scope.select(
-        "source", "issue", "proc_rank", "grouped", "line_no",
-        F.when(
-            F.col("grouped") & (F.size("grp_arr") > 0),
-            F.col("text"),
-        ).alias("text"),
-        F.size("match_arr").alias("n_ng"),
-        F.try_element_at("match_arr", F.lit(1)).alias("first_m"),
-        F.try_element_at("match_arr", F.lit(-1)).alias("last_m"),
-        "grp_arr",
-        "fld_hits",
+    One level each: count, min_by and max_by all combine map-side, so a
+    skewed (source, issue) never funnels its rows through one reducer. The
+    key of a match is its line's packed scan-order key plus its match_pos,
+    unique within (source, issue)."""
+    match_ord = _line_ord() + F.col("match_pos")
+    other = other_routed.groupBy("source", "issue").agg(
+        F.count("*").alias("number"),
+        F.min_by("match", match_ord).alias("first_match"),
+        F.max_by("match", match_ord).alias("last_match"),
     )
+    grouped = grouped_routed.groupBy("source", "issue").agg(
+        F.count("*").alias("number"),
+        F.max_by("text", _line_ord()).alias("last_line"),
+    )
+    return other.unionByName(grouped, allowMissingColumns=True)
 
 
 def _line_bucket():
-    """Level-1 bucket of the two-level aggregations, in scan order."""
+    """Level-1 bucket of the two-level field contents, in scan order."""
     return F.floor(F.col("line_no") / F.lit(65536)).alias("line_bucket")
 
 
-def summary_aggregate(scope_slim: DataFrame) -> DataFrame:
-    """ONE two-level aggregation producing the summary's scalars per
-    (source, issue): the non-grouped totals + first/last match (A1/A5) and
-    the grouped totals + last matching line (A3), in a SINGLE line-grain
-    pass over `slim_scope` (r3 ran four scans; at 32M rows that summary
-    job was the fan-out straggler).
-
-    Two levels: level 1 groups by (proc_rank, line_no div 65536) —
-    consistent with the scan order — so one (source, issue) with many
-    lines spreads over many groups; level 2 merges the few partials.
-
-    first/last selections merge across the two levels by carrying the
-    packed scan-order key next to each partial min_by/max_by: the key is
-    unique per slim row within (source, issue), so lvl2's
-    min_by(partial_value, partial_key) reproduces the global selection.
-    Non-grouped first/last are the line-local first_m/last_m: the issue's
-    first match is the minimal line's first and the last is the maximal
-    line's last.
-    """
-    is_match = F.size("grp_arr") > 0
-    ng_ord = F.when(~F.col("grouped") & (F.col("n_ng") > 0), _line_ord())
-    g_ord = F.when(F.col("grouped") & is_match, _line_ord())
-    per_row = scope_slim.select(
-        "source", "issue", "proc_rank",
-        "n_ng", "grouped", "first_m", "last_m", "text",
-        ng_ord.alias("ng_ord"),
-        g_ord.alias("g_ord"),
-        _line_bucket(),
-    )
-    lvl1 = per_row.groupBy("source", "issue", "proc_rank", "line_bucket").agg(
-        F.sum(F.when(~F.col("grouped"), F.col("n_ng")).otherwise(0)).alias("o_num1"),
-        F.min("ng_ord").alias("o_ford1"),
-        F.min_by("first_m", "ng_ord").alias("o_first1"),
-        F.max("ng_ord").alias("o_lord1"),
-        F.max_by("last_m", "ng_ord").alias("o_last1"),
-        F.sum(F.when(F.col("g_ord").isNotNull(), 1).otherwise(0)).alias("g_num1"),
-        F.max("g_ord").alias("g_lord1"),
-        F.max_by("text", "g_ord").alias("g_last1"),
-    )
-    return lvl1.groupBy("source", "issue").agg(
-        F.sum("o_num1").alias("o_number"),
-        F.min_by("o_first1", "o_ford1").alias("first_match"),
-        F.max_by("o_last1", "o_lord1").alias("last_match"),
-        F.sum("g_num1").alias("g_number"),
-        F.max_by("g_last1", "g_lord1").alias("last_line"),
-    )
-
-
-def _ordered_join(value: str, *keys: str):
+def ordered_join(value: Column | str, *keys: Column | str):
     """The `value` strings of a group joined "\n" in `keys` order (the
     keys are unique within the group, so `value` never breaks a tie)."""
+    value = F.col(value) if isinstance(value, str) else value
     return F.array_join(
         F.transform(
-            F.array_sort(F.collect_list(F.struct(*keys, F.col(value).alias("s")))),
+            F.array_sort(F.collect_list(F.struct(*keys, value.alias("s")))),
             lambda e: e["s"],
         ),
         "\n",
     )
 
 
-def field_contents(scope_slim: DataFrame) -> DataFrame:
+def field_contents(scope: DataFrame) -> DataFrame:
     """Every field's count N and content J (A4/F5) per (source, issue, k),
     k the summary pair index: N sums the parse-time hit counts, J joins the
     hit strings "\n" in scan order. Only pairs with hits get a row;
     `summary_frame` gives the others "0 :  ".
 
     One `inline` turns the `fld_hits` entries into rows, so the plan is
-    the same for any number of pairs. Two levels, as in
-    `summary_aggregate`: one collect_list+sort per (source, issue, k)
-    would funnel a field's every hit through ONE reducer.
+    the same for any number of pairs. Two levels: one collect_list+sort
+    per (source, issue, k) would funnel a field's every hit through ONE
+    reducer, so level 1 groups by (proc_rank, line_no div 65536) —
+    consistent with the scan order — and level 2 joins the few partial
+    strings in that order.
 
     Scalar packed sort key: sorting structs that CONTAIN nested data drops
     the sort into interpreted ordering (measured: it dominated the whole
@@ -164,17 +125,17 @@ def field_contents(scope_slim: DataFrame) -> DataFrame:
     binary-comparable, codegen'd. A line under two kept processes of one
     issue appears once per (proc_rank) copy with distinct packed ords —
     the reference renders it once per process block (quirk Q3 order)."""
-    hits = scope_slim.select(
+    hits = scope.select(
         "source", "issue", "proc_rank", _line_bucket(), _line_ord().alias("ord"),
         F.inline("fld_hits"),
     )
     lvl1 = hits.groupBy("source", "issue", "k", "proc_rank", "line_bucket").agg(
         F.sum("n").alias("n1"),
-        _ordered_join("j", "ord").alias("j1"),
+        ordered_join("j", "ord").alias("j1"),
     )
     return lvl1.groupBy("source", "issue", "k").agg(
         F.sum("n1").alias("N"),
-        _ordered_join("j1", "proc_rank", "line_bucket").alias("J"),
+        ordered_join("j1", "proc_rank", "line_bucket").alias("J"),
     )
 
 
@@ -182,14 +143,17 @@ def summary_frame(
     spark: SparkSession,
     cfg: ConfigSpec,
     sources_df: DataFrame,
-    scope_slim: DataFrame,
+    scope: DataFrame,
+    other_routed: DataFrame,
+    grouped_routed: DataFrame,
 ) -> DataFrame:
     """Final summary sink (A8): one row per (source, issue) with the
     reference's report-table columns, ordered by priority desc then issue
     asc (sortIssue, analyzeLog.go:102-111 + quirk Q4 tiebreak).
 
-    FULLY DISTRIBUTED: `summary_aggregate` and `field_contents` over the
-    slim scope left-join the static (source × issue) base. The pairs enter
+    FULLY DISTRIBUTED: `field_contents` over the scope and
+    `routed_scalars` over the routed rows left-join the static
+    (source × issue) base. The pairs enter
     as data: an (issue, k, field) frame gives one cell per (source, pair)
     and one `map_from_entries` per (source, issue) collects them in k order,
     so the plan does not grow with the config's pairs. Timestamp/LogLevel
@@ -239,21 +203,17 @@ def summary_frame(
     )
     j = (
         base.join(F.broadcast(pairs_dim), "issue", "left")
-        .join(field_contents(scope_slim), ["source", "issue", "k"], "left")
+        .join(field_contents(scope), ["source", "issue", "k"], "left")
         .groupBy("source", "issue", "grouped", "priority")
         .agg(field_map.alias("field_map"))
-        .join(summary_aggregate(scope_slim), ["source", "issue"], "left")
+        .join(routed_scalars(other_routed, grouped_routed), ["source", "issue"], "left")
     )
 
     empty_map = F.map_from_arrays(
         F.array().cast("array<string>"), F.array().cast("array<string>")
     )
-    has_other = F.coalesce(F.col("o_number"), F.lit(0)) > 0
-    number = (
-        F.when(F.col("grouped"), F.coalesce("g_number", F.lit(0)))
-        .otherwise(F.coalesce("o_number", F.lit(0)))
-        .cast("long")
-    )
+    number = F.coalesce("number", F.lit(0))
+    has_other = number > 0
     # grouped: Timestamp/LogLevel from the LAST matching line; non-grouped:
     # LogLevel from the FIRST match substring, Timestamp from the LAST
     # (analyzeLog.go:285,299); "" when the issue never matched

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from radar_log_parser_spark.operators.aggregates import ordered_join
 from radar_log_parser_spark.session import read_parquet
 
 
@@ -284,30 +285,11 @@ def q_field_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket = F.floor(F.col("doc_id") / F.lit(65536)).alias("bucket")
     lvl1 = per_row.groupBy("source", bucket).agg(
         F.sum(F.size("hits")).cast("long").alias("n1"),
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col("doc_id").cast("long").alias("ord"),
-                            F.array_join("hits", "\n").alias("s"),
-                        )
-                    )
-                ),
-                lambda s: s["s"],
-            ),
-            "\n",
-        ).alias("j1"),
+        ordered_join(F.array_join("hits", "\n"), F.col("doc_id").cast("long")).alias("j1"),
     )
     return lvl1.groupBy("source").agg(
         F.sum("n1").cast("long").alias("n"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("bucket", F.col("j1").alias("jp")))),
-                lambda s: s["jp"],
-            ),
-            "\n",
-        ).alias("joined"),
+        ordered_join("j1", "bucket").alias("joined"),
     )
 
 

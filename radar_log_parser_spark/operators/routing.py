@@ -11,8 +11,9 @@ analyzeLog.go:61-66 / report.html:53-97):
   events          — important-event lines           (F9, quirks Q6/Q7)
   severity        — per-line severity classification (F8, quirk Q8)
 
-The F3/F4 rows are defined here once: the counts over them (the
-`match_sets` and `grouped_issues` aggregates) read these sinks back.
+The F3/F4 rows are defined here once: every count over them reads these
+sinks back — the `match_sets` and `grouped_issues` aggregates, and the
+summary's Number and first/last columns (aggregates.routed_scalars).
 
 Scale notes: the issue→process mapping and the Q1 keep-set are config-sized
 and per-(source,process) — both broadcast; the only shuffles in this module
@@ -151,9 +152,11 @@ def grouped_routed(scope: DataFrame, cfg: ConfigSpec) -> DataFrame:
     as a typed `g_<Name>` column (F10 — the reference renders named groups
     as report columns, analyzeLog.go:201-203 / details.html:101-108); a
     row of a different issue holds null. The statically-known names come
-    from IssueSpec.group_names()."""
+    from IssueSpec.group_names(). Spark resolves column names without
+    regard to case, so names that differ only in case share one column,
+    spelled as the first issue (in name order) spells it."""
     rows = scope.filter(F.col("grouped") & (F.size("grp_arr") > 0))
-    merged: dict[str, object] = {}
+    merged: dict[str, tuple[str, object]] = {}
     for iname in sorted(cfg.issues):
         spec = cfg.issues[iname]
         if not spec.grouped:
@@ -166,10 +169,11 @@ def grouped_routed(scope: DataFrame, cfg: ConfigSpec) -> DataFrame:
             e = F.when(
                 F.col("issue") == F.lit(iname), F.element_at("grp_arr", gi)
             )
-            # at most one issue's when() fires per row, so a shared name
-            # across issues coalesces safely
-            merged[nm] = e if nm not in merged else F.coalesce(merged[nm], e)
-    named_cols = [v.alias(f"g_{k}") for k, v in sorted(merged.items())]
+            # at most one issue's when() fires per row, so a name shared
+            # across issues, in any case, coalesces safely
+            first, prev = merged.get(nm.lower(), (nm, None))
+            merged[nm.lower()] = (first, e if prev is None else F.coalesce(prev, e))
+    named_cols = [v.alias(f"g_{nm}") for nm, v in sorted(merged.values(), key=lambda t: t[0])]
     return rows.select(
         "source", "issue", "process", "proc_rank", "doc_id", "line_no",
         "tokens", "text",

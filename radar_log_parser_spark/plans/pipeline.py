@@ -460,21 +460,21 @@ class Pipeline:
             bucket_by="doc_id",
         )
 
-        # The summary reads the slim projection of the `scoped` checkpoint
-        # (agg.slim_scope): the parquet scans read only the columns they
-        # keep (never tokens or doc_id). Distributed summary (A8): two-level
-        # aggregations over those scans — the scalars and the field
-        # contents — left-joined against the static (source × issue) base
-        # and formatted JVM-side, so nothing driver-side scales with the
+        # Distributed summary (A8): its counts and first/last selections
+        # are one-level aggregations over the routed checkpoints, its field
+        # contents a two-level aggregation over the `scoped` checkpoint's
+        # hits; column pruning keeps each scan to the columns it
+        # aggregates. Both left-join the static (source × issue) base and
+        # are formatted JVM-side, so nothing driver-side scales with the
         # corpus. The source dimension comes from the raw parquet scan,
         # which reads the dictionary-encoded source column alone (parse
         # preserves source 1:1, so the sets are equal).
         summary = self._stage(
             "summary",
             lambda: agg.summary_frame(
-                spark, cfg, self._raw.select("source").distinct(), agg.slim_scope(scope)
+                spark, cfg, self._raw.select("source").distinct(), scope, other, grouped
             ),
-            parents=["scoped"],
+            parents=["scoped", "other_routed", "grouped_routed"],
         ).orderBy("source", F.desc("priority"), F.asc("issue"))
 
         # the counts over the routed rows read the routed checkpoints they

@@ -6,7 +6,8 @@
   - non-grouped Number counts duplicates while the match set dedups
   - config lint rejects non-RE2 patterns
   - every parsed line agrees with the oracle's per-line regex semantics
-  - the parse rejects line numbers past the summary's scan-order key
+  - the parse rejects line numbers and per-line match counts past the
+    summary's scan-order key
   - renaming an issue (any YAML key) changes no sink
 """
 
@@ -29,8 +30,8 @@ def test_codec_roundtrip(corpus):
 
 def test_partition_invariance(spark, cfg, vocab, fx):
     """Pipeline result must not depend on input partitioning: run the
-    summary aggregates (the scalars and the field contents) over the slim
-    scope at 1 and at 13 input partitions and compare."""
+    summary aggregates (the scalars over the routed rows and the field
+    contents over the scope) at 1 and at 13 input partitions and compare."""
     from radar_log_parser_spark.functions.parse import parse_stage
     from radar_log_parser_spark.operators import aggregates as agg
     from radar_log_parser_spark.operators import routing
@@ -40,19 +41,23 @@ def test_partition_invariance(spark, cfg, vocab, fx):
         parsed = parse_stage(raw, cfg, vocab)
         kept = routing.kept_processes(parsed)
         ipmap = routing.issue_process_map(spark, cfg)
-        slim = agg.slim_scope(routing.scoped_direct(parsed, kept, ipmap))
+        scope = routing.scoped_direct(parsed, kept, ipmap)
+        routed = agg.routed_scalars(
+            routing.other_routed(scope), routing.grouped_routed(scope, cfg)
+        )
         scalars = sorted(
-            (r["source"], r["issue"], r["o_number"], r["first_match"], r["last_match"])
-            for r in agg.summary_aggregate(slim).collect()
+            (r["source"], r["issue"], r["number"], r["first_match"], r["last_match"],
+             r["last_line"])
+            for r in routed.collect()
         )
         fields = sorted(
             (r["source"], r["issue"], r["k"], r["N"], r["J"])
-            for r in agg.field_contents(slim).collect()
+            for r in agg.field_contents(scope).collect()
         )
         return scalars, fields
 
     one = summarize(1)
-    assert any(n for _s, _i, n, _f, _l in one[0])
+    assert any(n for _s, _i, n, _f, _l, _ll in one[0])
     assert any(n > 1 for _s, _i, _k, n, _j in one[1])
     assert one == summarize(13)
 
@@ -142,6 +147,22 @@ def test_lint_rejects_undergrouped_grouping():
         }
     }
     with pytest.raises(ConfigError):
+        parse_config(raw)
+
+
+def test_lint_rejects_group_names_equal_but_for_case():
+    """Spark column names ignore case, so one issue's `a` and `A` groups
+    could only share a g_<Name> column and one would lose its values."""
+    raw = {
+        "Issues": {
+            "X": {
+                "specific_process": {"P": "p"},
+                "detailing_mode": "group",
+                "grouping": "(?P<a>x)(?P<A>y)",
+            }
+        }
+    }
+    with pytest.raises(ConfigError, match="differ only in case"):
         parse_config(raw)
 
 
@@ -258,6 +279,30 @@ def test_parse_rejects_line_numbers_past_the_scan_order_key(cfg, line_no, ok):
         assert match_batch_arrow(batch, cfg, vocab_pa).column("line_no").to_pylist() == [0, line_no]
     else:
         with pytest.raises(ValueError, match=planted):
+            match_batch_arrow(batch, cfg, vocab_pa)
+
+
+@pytest.mark.parametrize("n, ok", [(2**20 - 1, True), (2**20, False)])
+def test_parse_rejects_match_counts_past_the_scan_order_key(n, ok):
+    """The summary adds a match's position in its line into the low 20
+    bits of its scan-order key (aggregates._line_ord): the parse kernel
+    passes a line with 2^20 - 1 matches of one non-grouped issue and
+    raises on 2^20, naming the doc_id, instead of ordering them wrongly."""
+    import pyarrow as pa
+
+    from radar_log_parser_spark.functions.parse_arrow import match_batch_arrow
+    from radar_log_parser_spark.sources.fixtures import corpus_to_table
+
+    cfg = parse_config({"Issues": {"A": {"specific_process": {"p": "p"}, "regex": "a"}}})
+    corpus = {"src": [" ".join(["a"] * n)]}
+    vocab = Vocab.build(corpus["src"])
+    (batch,) = corpus_to_table(corpus, vocab).to_batches()
+    vocab_pa = pa.array(vocab.id_to_token, pa.string())
+    if ok:
+        (hit,) = match_batch_arrow(batch, cfg, vocab_pa).column("ngrp__hits").to_pylist()[0]
+        assert (hit["issue"], len(hit["m"])) == ("A", n)
+    else:
+        with pytest.raises(ValueError, match=batch.column("doc_id")[0].as_py()):
             match_batch_arrow(batch, cfg, vocab_pa)
 
 

@@ -34,11 +34,12 @@ def test_checkpoint_resume(spark, cfg, vocab, fx, tmp_path):
     assert {"parsed", "specific_issues", "scoped", "other_routed",
             "grouped_routed", "events", "severity", "grouped_issues",
             "summary"} <= executed
-    # each stage's lineage names the stage it reads
+    # each stage's lineage names the stages it reads
     parents = {
         "parsed": ["input"],
         **dict.fromkeys(("events", "severity", "specific_issues", "scoped"), ["parsed"]),
-        **dict.fromkeys(("other_routed", "grouped_routed", "summary"), ["scoped"]),
+        **dict.fromkeys(("other_routed", "grouped_routed"), ["scoped"]),
+        "summary": ["scoped", "other_routed", "grouped_routed"],
         "grouped_issues": ["grouped_routed"],
     }
     for stage, want in parents.items():

@@ -5,7 +5,11 @@ write path gate, and the compiled-config cache under id reuse."""
 from __future__ import annotations
 
 import pytest
+import yaml
 from pyspark.sql import functions as F
+
+from radar_log_parser_spark.config import parse_config
+from radar_log_parser_spark.sources.fixtures import FIXTURE_CONFIG_YAML
 
 
 def _has_iceberg(spark) -> bool:
@@ -37,29 +41,57 @@ def test_line_no_beyond_1m_parity(spark, cfg, vocab):
     assert got == sorted(ordinals)
 
 
-def test_grouped_sink_typed_group_columns(pipeline_result, cfg):
+# the fixture config plus a copy of BufferUnderrun whose group names differ
+# from BufferUnderrun's only in case
+_BUFFER_UNDERRUN = FIXTURE_CONFIG_YAML[
+    FIXTURE_CONFIG_YAML.index("  BufferUnderrun:\n"):FIXTURE_CONFIG_YAML.index("  MultiProcIssue:\n")
+]
+CASE_COLLIDING_YAML = FIXTURE_CONFIG_YAML.replace(
+    _BUFFER_UNDERRUN,
+    _BUFFER_UNDERRUN
+    + _BUFFER_UNDERRUN.replace("BufferUnderrun:", "BufferUnderrunCopy:")
+    .replace("<Stream>", "<stream>")
+    .replace("<Frames>", "<frames>"),
+)
+
+
+def test_grouped_sink_typed_group_columns(spark, vocab, fx, pipeline_result, cfg, tmp_path):
     """F10: every named capture group of a grouped issue appears as a typed
     g_<Name> column in the grouped sink (reference renders named groups as
-    report columns, analyzeLog.go:201-203 / details.html:101-108)."""
-    sink = pipeline_result.sinks["grouped_routed"]
-    expected = set()
-    for spec in cfg.issues.values():
-        if spec.grouped:
-            expected |= {f"g_{n}" for n in spec.group_names() if n}
-    assert expected, "fixture config should have named groups"
-    assert expected <= set(sink.columns)
+    report columns, analyzeLog.go:201-203 / details.html:101-108). Spark
+    resolves column names without regard to case, so names are compared
+    that way: two issues whose group names differ only in case share a
+    column, which holds each issue's own values.
 
-    # value parity: group 1 == group_key, groups 2.. == details positions
-    for iname, spec in cfg.issues.items():
-        if not spec.grouped:
-            continue
-        names = spec.group_names()
-        rows = sink.filter(F.col("issue") == iname).limit(20).collect()
-        for r in rows:
-            seq = [r["group_key"], *r["details"]]
-            for gi in range(1, len(names)):
-                if names[gi]:
-                    assert r[f"g_{names[gi]}"] == seq[gi - 1]
+    Two cases: the unit run, and a run under CASE_COLLIDING_YAML."""
+    from radar_log_parser_spark.plans.pipeline import Pipeline
+
+    colliding = parse_config(yaml.safe_load(CASE_COLLIDING_YAML))
+    colliding_run = Pipeline(
+        spark, colliding, vocab, fx.logs_path, work_dir=str(tmp_path), checkpoint=True
+    ).run()
+    for case_cfg, result in ((cfg, pipeline_result), (colliding, colliding_run)):
+        sink = result.sinks["grouped_routed"]
+        columns = {c.lower(): c for c in sink.columns}
+        expected = set()
+        for spec in case_cfg.issues.values():
+            if spec.grouped:
+                expected |= {f"g_{n}".lower() for n in spec.group_names() if n}
+        assert expected, "fixture config should have named groups"
+        assert expected <= set(columns)
+
+        # value parity: group 1 == group_key, groups 2.. == details positions
+        for iname, spec in case_cfg.issues.items():
+            if not spec.grouped:
+                continue
+            names = spec.group_names()
+            rows = sink.filter(F.col("issue") == iname).limit(20).collect()
+            assert rows, iname
+            for r in rows:
+                seq = [r["group_key"], *r["details"]]
+                for gi in range(1, len(names)):
+                    if names[gi]:
+                        assert r[columns[f"g_{names[gi]}".lower()]] == seq[gi - 1]
 
 
 def test_vocab_content_change_invalidates_checkpoint(spark, cfg, vocab, fx, tmp_path):

@@ -46,14 +46,24 @@ def test_important_events_auto_anchor():
     assert cfg.important_events["E"] == r"(?m)^boot.*$"
 
 
+# the `scoped` columns that the summary's aggregates and the routed rows read
+SCOPE_DDL = (
+    "source string, process string, issue string, proc_rank int, grouped boolean, "
+    "doc_id string, line_no long, tokens array<int>, text string, "
+    "match_arr array<string>, grp_arr array<string>, "
+    "fld_hits array<struct<k:int,n:int,j:string>>"
+)
+
+
 def test_summary_is_distributed(spark):
     """The summary sink must be a distributed plan: no collect of the
     unbounded joined-field strings to the driver (the r2 driver-side
     assembly was both a serial tail and an OOM cliff at 10^12 rows).
     summary_frame takes DataFrames and returns a lazy DataFrame whose plan
-    carries the aggregates over the slim scope — nothing driver-side
-    scales with the corpus."""
-    from radar_log_parser_spark.operators.aggregates import slim_scope, summary_frame
+    carries the aggregates over the scope and the routed rows — nothing
+    driver-side scales with the corpus."""
+    from radar_log_parser_spark.operators import routing
+    from radar_log_parser_spark.operators.aggregates import summary_frame
 
     cfg = parse_config(
         {
@@ -71,14 +81,17 @@ def test_summary_is_distributed(spark):
     # pass's field hits of pair k=0 ride along in fld_hits
     scope = spark.createDataFrame(
         [
-            ("s1", "I1", 0, False, 10, "l10", ["boom level=E xa"], [], [(0, 1, "xa")]),
-            ("s1", "I1", 0, False, 11, "l11", ["boom xb", "boom 12:34"], [], [(0, 1, "xb")]),
+            ("s1", "p", "I1", 0, False, "s1-10", 10, [1], "l10",
+             ["boom level=E xa"], [], [(0, 1, "xa")]),
+            ("s1", "p", "I1", 0, False, "s1-11", 11, [2], "l11",
+             ["boom xb", "boom 12:34"], [], [(0, 1, "xb")]),
         ],
-        "source string, issue string, proc_rank int, grouped boolean, "
-        "line_no long, text string, match_arr array<string>, grp_arr array<string>, "
-        "fld_hits array<struct<k:int,n:int,j:string>>",
+        SCOPE_DDL,
     )
-    df = summary_frame(spark, cfg, sources, slim_scope(scope))
+    df = summary_frame(
+        spark, cfg, sources, scope,
+        routing.other_routed(scope), routing.grouped_routed(scope, cfg),
+    )
     rows = {(r["source"], r["issue"]): r for r in df.collect()}
     r1 = rows[("s1", "I1")]
     assert r1["number"] == 3
@@ -143,7 +156,8 @@ def test_parsed_schema_and_summary_plan_ignore_the_pair_count(spark):
     from test_round6 import optimized_plan
 
     from radar_log_parser_spark.config import summary_pairs
-    from radar_log_parser_spark.operators.aggregates import slim_scope, summary_frame
+    from radar_log_parser_spark.operators import routing
+    from radar_log_parser_spark.operators.aggregates import summary_frame
 
     one, twenty = _pairs_config(1), _pairs_config(20)
     assert (len(summary_pairs(one)), len(summary_pairs(twenty))) == (1, 20)
@@ -151,13 +165,15 @@ def test_parsed_schema_and_summary_plan_ignore_the_pair_count(spark):
 
     sources = spark.createDataFrame([("s1",)], "source string")
     scope = spark.createDataFrame(
-        [("s1", "I1", 0, False, 10, "boom x0a", ["boom x0a"], [], [(0, 1, "x0a")])],
-        "source string, issue string, proc_rank int, grouped boolean, "
-        "line_no long, text string, match_arr array<string>, grp_arr array<string>, "
-        "fld_hits array<struct<k:int,n:int,j:string>>",
+        [("s1", "p", "I1", 0, False, "s1-10", 10, [1], "boom x0a",
+          ["boom x0a"], [], [(0, 1, "x0a")])],
+        SCOPE_DDL,
     )
     plans = [
-        optimized_plan(summary_frame(spark, c, sources, slim_scope(scope)))
+        optimized_plan(summary_frame(
+            spark, c, sources, scope,
+            routing.other_routed(scope), routing.grouped_routed(scope, c),
+        ))
         for c in (one, twenty)
     ]
     assert plans[0] == plans[1]
